@@ -1,18 +1,17 @@
-"""Driver contract for the spark-graft builder (PySpark target).
+"""Driver contract for the crawl loop's relational operators (PySpark).
 
 ``entry(spark)`` — flagship crawl-round pipeline on sf0.001.
-``queries()``    — one entry per implemented operator (SURVEY.md §2),
+``queries()``    — one entry per crawl-loop operator (SURVEY.md §2),
                    each (spark, sf_dir) -> DataFrame.
 ``oracle_sql()`` — DuckDB-runnable ANSI SQL twins (same column names, same
-                   aliases). Ops that SQL can't express (MinHash/SimHash
-                   signatures, LSH ANN, multimodal decode) have no oracle
-                   entry — the driver records a rows-only check for them.
+                   aliases). The incremental Bloom and the full crawl
+                   roundtrip have no SQL twin — the driver records a
+                   rows-only check for them.
 
 Cross-engine determinism rules used throughout:
-* no xxhash64 in compared outputs (DuckDB lacks it) — md5 for fingerprints;
-* float comparisons via floor(x * 10^k) to kill rounding-mode differences;
+* no xxhash64 in compared outputs (DuckDB lacks it);
 * every computed column aliased identically on both sides;
-* embeddings cast to double before cosine so both engines do double math.
+* decimal sums, so summation order cannot change a compared value.
 """
 
 from __future__ import annotations
@@ -24,45 +23,28 @@ from pyspark.sql import functions as F
 
 from bbcrawl_spark import pagers
 from bbcrawl_spark.functions import udfs
-from bbcrawl_spark.operators import (
-    graphops,
-    linkgraph,
-    politeness,
-    priority,
-    similarity,
-    textops,
-)
-from bbcrawl_spark.sources import sitemap as sitemap_mod
+from bbcrawl_spark.operators import politeness, priority
+
 
 # ---------------------------------------------------------------------------
 # helpers
 # ---------------------------------------------------------------------------
 
 
-def _read(
-    spark: SparkSession, sf_dir: str, table: str, spread: bool = True
-) -> DataFrame:
+def _read(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     df = spark.read.parquet(f"{sf_dir}/{table}.parquet")
-    if not spread:
-        # opt-out for queries whose per-row work is a hash or a filter:
-        # there the exchange costs more than the parallelism buys
-        # (measured on incremental_dedup: 0.31s unspread vs 0.76s spread
-        # at sf0.1, a wash at sf1.0)
-        return df
     # The sf tables are single parquet files, so the scan yields 1-2 input
-    # splits and every expression-heavy query riding it runs near-serial
-    # (r6 profile: q_corpus_clean spent 15 s of CPU in a 2-task stage at
-    # sf1.0 — the whole quality+langid pass on 2 of 32 cores). Spread
-    # under-split scans to cluster parallelism; a scan already at or
-    # above defaultParallelism (the many-file 100-TB case) is returned
-    # untouched, so no exchange is ever added to a properly-split input.
-    # Row placement does not affect any declared query's output: every
-    # query orders/ranks by deterministic keys (oracle-checked across
-    # scale factors, i.e. across differing input splits).
+    # splits and every query riding it runs near-serial. Spread under-split
+    # scans to cluster parallelism; a scan already at or above
+    # defaultParallelism (the many-file case) is returned untouched, so no
+    # exchange is ever added to a properly-split input. Row placement does
+    # not affect any declared query's output: every query orders/ranks by
+    # deterministic keys.
     parallelism = spark.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < parallelism:
         df = df.repartition(parallelism)
     return df
+
 
 
 #: deterministic synthetic URL built from the events table — used by the
@@ -104,45 +86,9 @@ _CANON_SQL = """
     END ||
     CASE WHEN regexp_extract(url, '^[A-Za-z][A-Za-z0-9+.\\-]*://[^/?#]*([^?#]*)', 1) = ''
          THEN '/' ELSE regexp_extract(url, '^[A-Za-z][A-Za-z0-9+.\\-]*://[^/?#]*([^?#]*)', 1) END ||
-    CASE WHEN regexp_extract(url, '^[^#]*\\?([^#]*)', 1) = ''
-         THEN '' ELSE '?' || regexp_extract(url, '^[^#]*\\?([^#]*)', 1) END
+    CASE WHEN regexp_extract(url, '^[^#?]*\\?([^#]*)', 1) = ''
+         THEN '' ELSE '?' || regexp_extract(url, '^[^#?]*\\?([^#]*)', 1) END
 """
-
-# normalized text (twin of textops.normalized)
-_NORM_SQL = "trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))"
-
-_STOP_EN = textops._STOPWORDS["en"]
-
-
-def _sw_list(lang: str) -> str:
-    return "[" + ", ".join(f"'{w}'" for w in textops._STOPWORDS[lang]) + "]"
-
-
-#: shared DuckDB CTE chain producing ``jpairs(id_a, id_b, jac)`` — the
-#: ngram-Jaccard near-dup edges over ``documents``; reused by the pair
-#: oracle and the cluster-resolution oracle so both stay in lockstep
-_JACCARD_CTES = f"""
-            toks AS (
-              SELECT doc_id, string_split_regex({_NORM_SQL}, '\\s+') AS t FROM documents),
-            sh AS (
-              SELECT doc_id, unnest(list_distinct(
-                CASE WHEN len(t) >= 3
-                     THEN list_transform(generate_series(1, len(t) - 2),
-                                         i -> array_to_string(t[i:i+2], ' '))
-                     ELSE [array_to_string(t, ' ')] END)) AS shingle
-              FROM toks),
-            sizes AS (SELECT doc_id, COUNT(*) AS n_sh FROM sh GROUP BY doc_id),
-            inter AS (
-              SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS n_inter
-              FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-              GROUP BY a.doc_id, b.doc_id),
-            jpairs AS (
-              SELECT id_a, id_b,
-                     n_inter::DOUBLE / (sa.n_sh + sb.n_sh - n_inter) AS jac
-              FROM inter
-              JOIN sizes sa ON sa.doc_id = id_a
-              JOIN sizes sb ON sb.doc_id = id_b
-              WHERE n_inter::DOUBLE / (sa.n_sh + sb.n_sh - n_inter) >= 0.2)"""
 
 
 # ---------------------------------------------------------------------------
@@ -172,30 +118,6 @@ def q_url_canonicalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     return u.select("event_id", udfs.canonicalize_col("url").alias("canon_url"))
 
 
-#: appends campaign/session trackers to the synthetic URLs — after the '?'
-#: when a query exists, as the query otherwise — so the alias-folding pass
-#: has both join points to clean (shared verbatim with the DuckDB oracle)
-_ALIAS_DECO_SQL = (
-    "CASE WHEN instr(url, '?') > 0 "
-    "THEN url || '&utm_source=feed&gclid=g' || CAST(event_id % 3 AS STRING) "
-    "ELSE url || '?b=2&utm_campaign=x&a=1' END"
-)
-
-
-def q_url_alias_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """URL alias folding (udfs.normalize_query_col): strip tracking/session
-    query params and byte-sort the survivors, so campaign-tagged and
-    re-ordered variants of one page share a seen-set key. Oracle replays
-    the identical regex filter + sort with DuckDB's list primitives
-    (list_filter/list_sort/array_to_string — empty-list join coalesced to
-    '' where Spark already returns '')."""
-    u = _events_urls(spark, sf_dir)
-    deco = u.select("event_id", F.expr(_ALIAS_DECO_SQL).alias("durl"))
-    return deco.select(
-        "event_id", udfs.normalize_query_col("durl").alias("norm_url")
-    )
-
-
 def q_seen_dedup_antijoin(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P2/J1 over events: candidate urls (clicks) anti-joined against the
     seen set (urls of error events)."""
@@ -214,42 +136,6 @@ def q_seen_dedup_antijoin(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
     return cand.join(seen, "canon_url", "left_anti")
-
-
-def q_bucketed_seen_antijoin(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """P2/J1 at the 10^10-seen-set shape (sources/bucketed.py): the seen
-    urls are WRITTEN as a hash-bucketed EXTERNAL table on
-    ``xxhash64(canon_url)`` and the frontier anti-joins against the
-    catalog's bucketed scan — ONE exchange total, frontier side only,
-    pinned in tests/test_bucketed.py. Logical result is identical to the
-    plain anti-join (bucketing is a physical property), so the oracle
-    replays ``seen_dedup_antijoin``'s SQL verbatim; hashing the join key is
-    result-neutral (deterministic, and a 64-bit collision among ~10^4 urls
-    is ~1e-12)."""
-    import os
-    import tempfile
-
-    from bbcrawl_spark.sources import bucketed
-
-    u = _events_urls(spark, sf_dir)
-    ev = _read(spark, sf_dir, "events").select("event_id", "event_type")
-    cand = (
-        u.join(ev, "event_id")
-        .filter(F.col("event_type") == "click")
-        .select(udfs.canonicalize_col("url").alias("canon_url"))
-        .distinct()
-        .withColumn("url_hash", F.xxhash64("canon_url"))
-    )
-    seen = (
-        u.join(ev, "event_id")
-        .filter(F.col("event_type") == "error")
-        .select(udfs.canonicalize_col("url").alias("canon_url"))
-        .distinct()
-        .select(F.xxhash64("canon_url").alias("url_hash"))
-    )
-    tmp = tempfile.mkdtemp(prefix="drv_bkt_seen_")
-    bucketed.write_bucketed(seen, "_drv_seen_bkt", os.path.join(tmp, "seen"), 8)
-    return bucketed.anti_join_new(cand, spark, "_drv_seen_bkt").select("canon_url")
 
 
 def q_exclude_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -497,602 +383,7 @@ def q_priority_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- training-data ops ------------------------------------------------------
-
-
-def q_exact_dedup_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _read(spark, sf_dir, "documents")
-    w = Window.partitionBy(textops.normalized("text")).orderBy("doc_id")
-    return (
-        d.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .select("doc_id", "text", "lang", "source")
-    )
-
-
-def q_token_count_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _read(spark, sf_dir, "documents")
-    return textops.token_stats(d).select(
-        "doc_id", "n_chars_raw", "n_tokens_ws", "n_tokens_bpeish"
-    )
-
-
-def q_quality_score_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _read(spark, sf_dir, "documents")
-    q = textops.quality_score(d)
-    return q.select(
-        "doc_id",
-        "q_n_tokens",
-        F.floor(F.col("q_mean_token_len") * 1000).alias("mean_tok_len_m"),
-        F.floor(F.col("q_punct_ratio") * 1000).alias("punct_ratio_m"),
-        F.floor(F.col("q_stopword_ratio") * 1000).alias("sw_ratio_m"),
-        F.col("q_keep").alias("keep"),
-    )
-
-
-def q_langid_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _read(spark, sf_dir, "documents")
-    return textops.langid(d).select("doc_id", "lang_pred")
-
-
-def q_fingerprint_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _read(spark, sf_dir, "documents")
-    return textops.fingerprint(d).select("doc_id", "fp_md5")
-
-
-def q_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _read(spark, sf_dir, "documents")
-    pairs = textops.ngram_jaccard_pairs(d, n=3, threshold=0.2)
-    return pairs.select(
-        "id_a", "id_b", F.floor(F.col("jaccard") * 100000).alias("jaccard_100k")
-    )
-
-
-def q_top_ngram_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gopher most-frequent token / bigram shares (textops.top_ngram_stats).
-    Spark computes a sort + longest-run JVM fold; the oracle computes the
-    SAME numbers via unnest -> group-by -> max — independent paths."""
-    d = _read(spark, sf_dir, "documents")
-    return textops.top_ngram_stats(d.select("doc_id", "text")).drop("text")
-
-
-def q_repetition_stats_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gopher-style line-repetition signals (textops.repetition_stats).
-
-    The synthetic documents are single-line, so the query derives a
-    deterministic multi-line view first — token-per-line plus bullet /
-    ellipsis decorations keyed on doc_id — identically in both engines;
-    every output column has teeth (non-constant over the corpus)."""
-    d = _read(spark, sf_dir, "documents")
-    bullets = F.when(
-        F.col("doc_id") % 3 == 0, F.lit("- bullet point\n- bullet point\n")
-    ).otherwise(F.lit(""))
-    tail = F.when(
-        F.col("doc_id") % 4 == 0, F.lit("trailing thought...\n")
-    ).otherwise(F.lit(""))
-    decorated = F.concat(
-        bullets, tail, F.regexp_replace(F.col("text"), " ", "\n")
-    )
-    return textops.repetition_stats(
-        d.select("doc_id", decorated.alias("text"))
-    ).drop("text")
-
-
-def q_vocab_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corpus vocabulary statistics — the tokenizer-training-prep pass:
-    global term frequency + document frequency, deterministic top-200 by
-    (tf desc, token). One explode + one agg; at 100 TB this is the classic
-    map-side-combine wordcount shape (partial aggs per partition, one
-    exchange on the token)."""
-    d = _read(spark, sf_dir, "documents")
-    toks = d.select(
-        "doc_id",
-        F.explode(F.split(textops.normalized("text"), r"\s+")).alias("tok"),
-    ).filter(F.col("tok") != "")
-    out = toks.groupBy("tok").agg(
-        F.count("*").alias("tf"),
-        F.countDistinct("doc_id").alias("df"),
-    )
-    return out.orderBy(F.desc("tf"), "tok").limit(200)
-
-
-def q_dedup_clusters_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Near-dup CLUSTER resolution: ngram-Jaccard pairs -> transitive
-    closure (connected components, min-label + pointer jumping) -> keep
-    manifest. The step every pair-producing dedup needs before a corpus can
-    actually be deduplicated (A≈B, B≈C => one survivor of {A,B,C})."""
-    d = _read(spark, sf_dir, "documents")
-    pairs = textops.ngram_jaccard_pairs(d, n=3, threshold=0.2)
-    out = graphops.dedup_clusters(d, pairs)
-    return out.select(
-        "doc_id", "cluster_id", F.col("keep").cast("int").alias("keep_int")
-    )
-
-
-def q_corpus_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Flagship training-data curation chain over documents: quality gate
-    (Gopher-style) -> language ID -> exact dedup (first doc_id per
-    normalized text wins) -> per-language corpus rollup. One scan, one
-    window, one agg — the shape a 100-TB curation pass wants."""
-    d = _read(spark, sf_dir, "documents")
-    scored = textops.langid(textops.quality_score(d)).filter("q_keep")
-    # Window key is the 8-byte xxhash64 of the normalized text, NOT the
-    # full text: at 100 TB the dedup exchange would otherwise ship every
-    # document body as its own shuffle key (same choice as
-    # textops.exact_dedup:57). The DuckDB oracle partitions by the
-    # normalized text itself — identical survivor set absent 64-bit
-    # collisions, and deliberately not the same expression, so the check
-    # isn't circular. Measured at sf0.1 (UI stage metrics, post-q_keep
-    # window exchange): shuffle write 835 KB -> 97 KB (-88%), identical
-    # rollup output; at 100 TB the full-text key would ship every
-    # surviving document body through the exchange.
-    w = Window.partitionBy(
-        F.xxhash64(textops.normalized("text"))
-    ).orderBy("doc_id")
-    ded = (
-        scored.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") == 1)
-    )
-    return ded.groupBy("lang_pred").agg(
-        F.count("*").alias("n_docs"),
-        F.sum("q_n_tokens").cast("long").alias("n_tokens"),
-    )
-
-
-def q_strip_boilerplate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cross-corpus boilerplate-line removal (textops.strip_boilerplate_lines).
-
-    The synthetic docs are single-line, so the query builds a deterministic
-    multi-line view with a REAL document-frequency spectrum: a banner line
-    shared by every doc (df=500 -> stripped), a promo line per doc_id%7
-    class (df≈71 -> stripped at cap 50), the original text (low df ->
-    kept), and a signature line per doc_id%97 class (df≈5 -> kept). The
-    oracle recomputes the whole pass in SQL."""
-    d = _read(spark, sf_dir, "documents")
-    deco = d.select(
-        "doc_id",
-        F.concat(
-            F.lit("cookie banner accept all\n"),
-            F.lit("promo "), (F.col("doc_id") % 7).cast("string"), F.lit("\n"),
-            F.col("text"),
-            F.lit("\nsig "), (F.col("doc_id") % 97).cast("string"),
-        ).alias("text"),
-    )
-    return textops.strip_boilerplate_lines(deco, max_line_df=50)
-
-
-def q_strip_boilerplate_norm(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """strip_boilerplate_lines with ``normalize=True`` (CCNet-style
-    normalized-line matching), decorated so the flag has TEETH: the promo
-    line is case/space-varied by doc_id parity ('promo X' vs 'PROMO   X '),
-    so each RAW variant's df is ~36 (<= cap 50, kept byte-exact) while the
-    NORMALIZED line pools to df ~71 (> 50, stripped). The oracle recomputes
-    the pass in SQL with the same normalization expression; surviving lines
-    stay raw in both engines."""
-    d = _read(spark, sf_dir, "documents")
-    cls = (F.col("doc_id") % 7).cast("string")
-    promo = F.when(
-        F.col("doc_id") % 2 == 0, F.concat(F.lit("promo "), cls)
-    ).otherwise(F.concat(F.lit("PROMO   "), cls, F.lit(" ")))
-    deco = d.select(
-        "doc_id",
-        F.concat(
-            promo, F.lit("\n"),
-            F.col("text"),
-            F.lit("\nsig "), (F.col("doc_id") % 97).cast("string"),
-        ).alias("text"),
-    )
-    return textops.strip_boilerplate_lines(deco, max_line_df=50, normalize=True)
-
-
-def q_token_budget_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic per-source token-budget mixing (greedy ordered prefix,
-    textops.token_budget_sample): keep each source's docs in doc_id order
-    while the running whitespace-token total stays <= 500
-    (non-vacuous: sources average ~1300 tokens at sf0.01)."""
-    d = _read(spark, sf_dir, "documents")
-    return textops.token_budget_sample(
-        d.select("doc_id", "source", "text"), budget=500
-    ).select("doc_id", "source", "cum_tokens")
-
-
-def q_corpus_clean_full(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """corpus_clean plus the round-4 repetition gate: docs whose most
-    frequent token exceeds 12% of all tokens (keyword stuffing / template
-    chrome — corpus p75-p90 sits at 11-14%, so the gate has teeth) are
-    dropped before dedup. Still one scan, one window, one agg."""
-    d = _read(spark, sf_dir, "documents")
-    scored = textops.top_ngram_stats(textops.langid(textops.quality_score(d)))
-    kept = scored.filter("q_keep AND t_top_token_frac_e4 <= 1200")
-    # hashed 8-byte window key, not full text — see q_corpus_clean
-    w = Window.partitionBy(
-        F.xxhash64(textops.normalized("text"))
-    ).orderBy("doc_id")
-    ded = kept.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") == 1)
-    return ded.groupBy("lang_pred").agg(
-        F.count("*").alias("n_docs"),
-        F.sum("q_n_tokens").cast("long").alias("n_tokens"),
-    )
-
-
-def q_pii_redaction(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PII masking pass (textops.redact_pii) with deterministic planted
-    PII so every category is non-vacuous: doc_id%3==0 gets an email,
-    %3==1 an IPv4, %5==0 a phone number (so %15==0 docs carry two kinds,
-    exercising the sequential contract). The oracle replays the IDENTICAL
-    patterns (Java-regex ∩ RE2 dialect) in the same order."""
-    d = _read(spark, sf_dir, "documents")
-    did = F.col("doc_id")
-    deco = d.select(
-        "doc_id",
-        F.concat(
-            F.col("text"),
-            F.when(
-                did % 3 == 0,
-                F.concat(F.lit(" contact user"), did.cast("string"),
-                         F.lit("@example.com")),
-            ).otherwise(F.lit("")),
-            F.when(
-                did % 3 == 1,
-                F.concat(F.lit(" host 10.0."), (did % 256).cast("string"),
-                         F.lit(".7")),
-            ).otherwise(F.lit("")),
-            F.when(
-                did % 5 == 0,
-                F.concat(F.lit(" tel +1 555 01"), (did % 100).cast("string"),
-                         F.lit(" 99")),
-            ).otherwise(F.lit("")),
-        ).alias("text"),
-    )
-    return textops.redact_pii(deco).select(
-        "doc_id", "pii_email_n", "pii_ip_n", "pii_phone_n", "redacted_text"
-    )
-
-
-def q_contamination_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Benchmark-decontamination screen (textops.contamination_check):
-    every 50th document plays the benchmark suite; docs sharing any
-    5-gram shingle with it are flagged. Non-vacuous: the benchmark docs
-    themselves are in the corpus (full overlap) and the corpus's natural
-    near-dups drag in more. Benchmark side broadcast (the production
-    shape — the 100-TB corpus side ships zero bytes)."""
-    d = _read(spark, sf_dir, "documents")
-    bench = d.filter(F.col("doc_id") % 50 == 0).select("text")
-    out = textops.contamination_check(d.select("doc_id", "text"), bench, n=5)
-    return out.select(
-        "doc_id", "n_overlap",
-        F.col("contaminated").cast("int").alias("contaminated_int"),
-    )
-
-
-def q_embedding_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _read(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
-    )
-    queries = e.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    knn = similarity.brute_force_knn(e, queries, k=10)
-    return knn.select(
-        "query_id", "vec_id", F.floor(F.col("cos_sim") * 10000).alias("cos_sim_e4")
-    )
-
-
-def q_embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Near-dup pairs with TEETH: threshold 0.35 yields ~100 natural pairs on
-    the synthetic embeddings (0.5 matched on zero rows — a vacuous check),
-    plus 5 PLANTED near-duplicates (vec_id+1000, linearly perturbed copies,
-    cos ≈ 0.99) so the high-similarity regime is exercised too."""
-    e = _read(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
-    )
-    base = e.filter(F.col("vec_id") < 300)
-    planted = e.filter(F.col("vec_id") < 5).select(
-        (F.col("vec_id") + 1000).alias("vec_id"),
-        F.transform("embedding", lambda x: x * 0.9 + 0.01).alias("embedding"),
-    )
-    pairs = similarity.cosine_near_dup_pairs(
-        base.unionByName(planted), threshold=0.35, exact=True
-    )
-    return pairs.select(
-        "id_a", "id_b", F.floor(F.col("cos_sim") * 10000).alias("cos_sim_e4")
-    )
-
-
-# --- rows-only (non-SQL-expressible) ----------------------------------------
-
-
-def q_near_dup_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pair recall of the LSH near-dup SCALE path vs the exact path, one
-    row per threshold regime — rows-only (hyperplane RNG is not
-    SQL-expressible), so the driver log carries the number every round, the
-    way `ann_recall` does for kNN. `embedding_near_dup`'s oracle pins the
-    exact path; this row pins how much of it the path a 100-TB run would
-    actually use keeps.
-
-    Two regimes on purpose: 0.90 is the regime hyperplane-LSH targets
-    (planted cos≈0.99 near-dups; tests floor recall at 1.0), and 0.35 is an
-    HONEST NEGATIVE — at low thresholds bucket collisions are rare by
-    design (P ≈ (1-θ/π)^planes per table), so the row records that the LSH
-    path is the wrong tool there and low-threshold similarity belongs to
-    the shingle/exact paths."""
-    e = _read(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
-    )
-    base = e.filter(F.col("vec_id") < 300)
-    planted = e.filter(F.col("vec_id") < 5).select(
-        (F.col("vec_id") + 1000).alias("vec_id"),
-        F.transform("embedding", lambda x: x * 0.9 + 0.01).alias("embedding"),
-    )
-    corpus = base.unionByName(planted)
-    out = None
-    for thr in (0.90, 0.35):
-        exact = similarity.cosine_near_dup_pairs(
-            corpus, threshold=thr, exact=True
-        ).select("id_a", "id_b")
-        lsh = similarity.cosine_near_dup_pairs(
-            corpus, threshold=thr, dim=64, num_planes=12
-        ).select("id_a", "id_b", F.lit(1).alias("_hit"))
-        rec = (
-            exact.join(lsh, ["id_a", "id_b"], "left")
-            .agg(
-                F.count("*").alias("n_exact"),
-                F.sum(F.coalesce("_hit", F.lit(0))).cast("long").alias("n_lsh_hit"),
-            )
-            .select(
-                F.lit(int(thr * 100)).alias("threshold_e2"),
-                "n_exact",
-                "n_lsh_hit",
-                F.floor(
-                    F.col("n_lsh_hit") * 10000 / F.greatest(F.col("n_exact"), F.lit(1))
-                ).alias("recall_e4"),
-            )
-        )
-        out = rec if out is None else out.unionByName(rec)
-    return out
-
-
-def q_minhash_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pair recall of the MinHash-LSH SCALE path (textops.minhash_lsh_pairs,
-    the flagship 100-TB dedup candidate generator) vs the EXACT
-    ngram-Jaccard path, one row per threshold regime — rows-only (the
-    minhash kernel is not SQL-expressible), the way `near_dup_recall` pins
-    the embedding-LSH path and `ann_recall` pins kNN.
-
-    The natural sf0.01 corpus has only 25 near-dup pairs, all J >= 0.9 —
-    every regime below that would be vacuous — so the corpus is augmented
-    with DETERMINISTIC planted variants: for doc_id < 120, every k-th token
-    is replaced with a position marker (k = 20/10/6 by doc_id%3), which
-    breaks ~3/k of the 3-shingles and lands true Jaccard near
-    (k-3)/(k+3) ~ 0.74 / 0.54 / 0.33. Markers embed the position only, and
-    k >= 6 means no 3-shingle spans two markers, so no cross-doc similarity
-    is fabricated. Ground truth is the exact path on the SAME corpus.
-
-    Regimes (64 hashes x 16 bands, r=4; collision P = 1-(1-s^4)^16):
-      * 70: true J >= 0.7 vs the PRODUCTION generator (threshold 0.5, as
-        q_minhash_dedup_docs runs it). Banding math gives P >= 0.988 here —
-        the test floors recall at 0.95; measured 1.0.
-      * 50: true J >= 0.5, same generator. The marginal band regime
-        (P ~ 0.65 at s = 0.5, plus est-filter noise at the boundary) —
-        measured ~0.86; floored loosely at 0.75 as a drift alarm.
-      * 30: true J >= 0.3, generator threshold 0.3 — HONEST NEGATIVE: at
-        s ~ 0.33, P ~ 0.15-0.2, so banding retrieves only the upper tail.
-        Low-threshold similarity belongs to the exact shingle path
-        (ngram_jaccard_pairs), not LSH; the row records that honestly."""
-    d = _read(spark, sf_dir, "documents").select("doc_id", "text")
-    base = d.filter(F.col("doc_id") < 120)
-    toks = F.split(F.col("text"), r"\s+")
-    k = (
-        F.when(F.col("doc_id") % 3 == 0, F.lit(20))
-        .when(F.col("doc_id") % 3 == 1, F.lit(10))
-        .otherwise(F.lit(6))
-    )
-    mut = F.transform(
-        toks,
-        lambda t, i: F.when(
-            i % k == 0, F.concat(F.lit("zzqq"), i.cast("string"))
-        ).otherwise(t),
-    )
-    planted = base.select(
-        (F.col("doc_id") + 100_000).alias("doc_id"),
-        F.concat_ws(" ", mut).alias("text"),
-    )
-    corpus = d.unionByName(planted)
-    exact = textops.ngram_jaccard_pairs(corpus, n=3, threshold=0.25)
-    out = None
-    for thr_e2, gen_thr in ((70, 0.5), (50, 0.5), (30, 0.3)):
-        lsh = textops.minhash_lsh_pairs(
-            corpus, threshold=gen_thr, max_bucket_size=2_000
-        ).select("id_a", "id_b", F.lit(1).alias("_hit"))
-        rec = (
-            exact.filter(F.col("jaccard") >= thr_e2 / 100.0)
-            .join(lsh, ["id_a", "id_b"], "left")
-            .agg(
-                F.count("*").alias("n_exact"),
-                F.sum(F.coalesce("_hit", F.lit(0))).cast("long").alias("n_lsh_hit"),
-            )
-            .select(
-                F.lit(thr_e2).alias("threshold_e2"),
-                "n_exact",
-                "n_lsh_hit",
-                F.floor(
-                    F.col("n_lsh_hit") * 10000 / F.greatest(F.col("n_exact"), F.lit(1))
-                ).alias("recall_e4"),
-            )
-        )
-        out = rec if out is None else out.unionByName(rec)
-    return out
-
-
-def q_minhash_dedup_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # max_bucket_size mirrors the simhash row: the production hot-bucket
-    # default (2,000 bounds the in-bucket pair array at ~48 MB — see the
-    # operator's memory model), far above any bucket this corpus produces
-    d = _read(spark, sf_dir, "documents")
-    return textops.minhash_dedup(
-        d, threshold=0.5, max_bucket_size=2_000
-    ).select("doc_id", "lang", "source")
-
-
-def q_simhash_pairs_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # max_bucket_size is the production default: 16-bit bands give only
-    # 65,536 buckets/band, so boilerplate clusters need the hot-bucket cap
-    # (lower-bound contract; well above any bucket this synthetic corpus
-    # produces, so the row's output is unchanged). 2,000 keeps the
-    # in-bucket pair array ≤ ~48 MB — see the operator's memory model.
-    d = _read(spark, sf_dir, "documents")
-    return textops.simhash_pairs(d, max_hamming=3, max_bucket_size=2_000)
-
-
-def q_simhash_closure_check(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cross-engine check of the SimHash dedup CLOSURE: the Spark-produced
-    simhash pairs (the signature kernel itself is not SQL-expressible —
-    accepted rows-only) are fed into DuckDB's recursive-CTE label-flooding
-    closure, and the survivor/cluster assignment is compared against the
-    Spark `graphops.dedup_clusters` closure over the SAME pairs. This
-    oracle-checks the composed simhash_dedup result the way
-    `dedup_clusters_docs` does for ngram pairs: the closure — the part
-    that decides which documents a 100-TB dedup DROPS — is verified by an
-    independent engine; only the pair source stays rows-only.
-
-    Emits ONE row: pair count, per-engine dropped-doc counts, and two
-    booleans (identical dropped set, identical per-node min-id cluster
-    labels). Isolated docs are their own survivors in both engines by
-    construction, so the comparison over pair-touched nodes is complete.
-    The pair collect is a CHECK-harness step, bounded by the verification
-    corpus (28 pairs at sf0.01) and guarded at 100k rows."""
-    import duckdb as _duck
-    import pandas as _pd
-
-    from bbcrawl_spark.operators import graphops
-
-    d = _read(spark, sf_dir, "documents")
-    pairs = textops.simhash_pairs(d, max_hamming=3, max_bucket_size=2_000)
-    pairs_pd = pairs.select("id_a", "id_b").toPandas()
-    if len(pairs_pd) > 100_000:
-        raise ValueError("closure check is a small-scale harness; got "
-                         f"{len(pairs_pd)} pairs")
-    spark_clusters = {
-        r["doc_id"]: r["cluster_id"]
-        for r in graphops.dedup_clusters(d, pairs).filter("NOT keep")
-        .select("doc_id", "cluster_id").collect()
-    }
-    con = _duck.connect()
-    con.register("sp", pairs_pd if len(pairs_pd) else _pd.DataFrame(
-        {"id_a": _pd.Series(dtype="int64"), "id_b": _pd.Series(dtype="int64")}))
-    oracle = con.execute("""
-        WITH RECURSIVE
-        edges AS (SELECT id_a AS u, id_b AS v FROM sp
-                  UNION SELECT id_b, id_a FROM sp),
-        nodes AS (SELECT DISTINCT u AS id FROM edges),
-        reach(id, lbl) AS (
-          SELECT id, id FROM nodes
-          UNION
-          SELECT e.u, r.lbl FROM reach r JOIN edges e ON e.v = r.id)
-        SELECT id, MIN(lbl) AS cluster_id FROM reach GROUP BY id
-    """).fetchall()
-    con.close()
-    duck_clusters = {int(i): int(c) for i, c in oracle if i != c}
-    return spark.createDataFrame(
-        [(
-            len(pairs_pd),
-            len(spark_clusters),
-            len(duck_clusters),
-            int(set(spark_clusters) == set(duck_clusters)),
-            int(spark_clusters == duck_clusters),
-        )],
-        "n_pairs long, n_dropped_spark long, n_dropped_oracle long, "
-        "dropped_set_match int, cluster_labels_match int",
-    )
-
-
-def q_ann_lsh_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _read(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
-    )
-    queries = e.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    dim = 64
-    # planes=3 (8 buckets/table) x 16 tables: recall@10 = 1.0 on the sf
-    # embeddings (pinned in tests); at larger corpora raise planes with
-    # log2(n) to keep bucket sizes bounded
-    return similarity.lsh_knn(e, queries, dim=dim, k=10, num_planes=3, num_tables=16)
-
-
-def q_ann_ivf_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _read(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
-    )
-    queries = e.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    cents = similarity.train_ivf_centroids(e, dim=64, n_centroids=16)
-    return similarity.ivf_knn(
-        e, queries, dim=64, k=10, n_centroids=16, n_probe=8, centroids=cents
-    )
-
-
-def q_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Recall@10 of both ANN variants vs exact brute force, per query —
-    rows-only, so the driver log carries the number every round; tests pin
-    recall >= 0.9 at sf0.01 (tests/test_textops.py)."""
-    e = _read(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
-    )
-    queries = e.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    return similarity.ann_recall(e, queries, dim=64, k=10)
-
-
-def _fake_media(spark: SparkSession, sf_dir: str, encoder, mime: str,
-                a_col, b_col) -> DataFrame:
-    """64 deterministic fake-media rows generated spark-side: ``encoder``
-    (encode_fake_image / encode_fake_audio) runs in a pandas UDF over the
-    two per-row int params (width/height or sample_rate/n_samples)."""
-    import pandas as pd
-    from pyspark.sql.types import BinaryType
-
-    d = _read(spark, sf_dir, "documents").select("doc_id").limit(64)
-    media = d.select(
-        F.col("doc_id").alias("media_id"),
-        F.lit(mime).alias("mime"),
-        a_col.cast("int").alias("width"),
-        b_col.cast("int").alias("height"),
-    )
-
-    # no type hints: `from __future__ import annotations` stringifies them,
-    # which breaks pandas_udf signature inference in this module
-    def _gen(mid, a, b):
-        return pd.Series(
-            [encoder(int(x), int(y), seed=int(m)) for m, x, y in zip(mid, a, b)]
-        )
-
-    gen = F.pandas_udf(_gen, BinaryType())
-    return media.withColumn("blob", gen("media_id", "width", "height"))
-
-
-def q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from bbcrawl_spark.operators import multimodal
-
-    media = _fake_media(
-        spark, sf_dir, multimodal.encode_fake_image, "image/fake",
-        8 + F.col("doc_id") % 8, 4 + F.col("doc_id") % 4,
-    )
-    return multimodal.image_features(media)
-
-
-def q_multimodal_audio(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Audio modality twin of q_multimodal_features: deterministic FAKEAUD
-    blobs generated spark-side, featurized through the mapInPandas audio
-    pipeline (rows-only — binary codecs are not SQL-expressible)."""
-    from bbcrawl_spark.operators import multimodal
-
-    media = _fake_media(
-        spark, sf_dir, multimodal.encode_fake_audio, "audio/fake",
-        8000 + (F.col("doc_id") % 2) * 8000, 400 + (F.col("doc_id") % 8) * 100,
-    )
-    return multimodal.audio_features(media)
+# --- rows-only (no SQL twin) ---------------------------------------------
 
 
 def q_bloom_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1164,721 +455,13 @@ def entry(spark: SparkSession) -> DataFrame:
     return q_fetch_slot_assignment(spark, sf_dir)
 
 
-def q_paragraph_dedup_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cross-document keep-first paragraph dedup (textops.paragraph_dedup,
-    the RefinedWeb exact-segment pass). The synthetic docs are single-line,
-    so the query decorates them the way strip_boilerplate does: a banner
-    line shared by EVERY doc survives only in the min-doc_id document, a
-    'promo k' line per doc_id%7 class survives only in that class's first
-    document, and each unique body line survives everywhere. The oracle
-    replays keep-first in SQL partitioned by the segment STRING — Spark
-    keys the 8-byte xxhash64, so the identity is checked across
-    representations, not circularly."""
-    d = _read(spark, sf_dir, "documents")
-    deco = d.select(
-        "doc_id",
-        F.concat(
-            F.lit("cookie banner accept all\n"),
-            F.lit("promo "), (F.col("doc_id") % 7).cast("string"), F.lit("\n"),
-            F.col("text"),
-        ).alias("text"),
-    )
-    return textops.paragraph_dedup(deco)
-
-
-def q_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incremental corpus update (textops.dedup_against, exact screen):
-    ref = the standing documents corpus; the new batch resubmits every doc
-    under a shifted id, where doc_id%5==0 carries the SAME text (screened
-    out against the ref side) and the rest append a delta marker (kept).
-    The ref corpus is never rewritten — maintenance cost ∝ |delta|, the
-    same contract as the incremental Bloom seen-set. Oracle: NOT EXISTS
-    anti-join on the normalized text itself (Spark anti-joins the 8-byte
-    hash — cross-representation)."""
-    d = _read(spark, sf_dir, "documents", spread=False)
-    new = d.select(
-        (F.col("doc_id") + 1000000).alias("doc_id"),
-        F.when(F.col("doc_id") % 5 == 0, F.col("text"))
-        .otherwise(
-            F.concat(F.col("text"), F.lit(" :: delta "), F.col("doc_id").cast("string"))
-        )
-        .alias("text"),
-        "source",
-    )
-    return textops.dedup_against(new, d).select("doc_id", "source")
-
-
-def q_incremental_dedup_near(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """dedup_against with the MinHash near screen (rows-only: signature
-    kernels are numpy, not SQL): every 4th doc resubmits a near-identical
-    variant (text + a 3-token tail — Jaccard ≥ ~0.9 for any doc past a few
-    dozen tokens, well inside the banding-recall regime pinned by
-    minhash_lsh_recall), the rest resubmit genuinely fresh text. Expected:
-    the variants drop via the near screen (they are NOT exact dups), the
-    fresh docs survive. test_incremental_dedup_near pins the exact
-    survivor set at sf0.001."""
-    d = _read(spark, sf_dir, "documents")
-    new = d.select(
-        (F.col("doc_id") + 1000000).alias("doc_id"),
-        F.when(
-            F.col("doc_id") % 4 == 0,
-            F.concat(F.col("text"), F.lit(" tail marker zz")),
-        )
-        .otherwise(
-            F.concat(
-                F.lit("fresh document "), F.col("doc_id").cast("string"),
-                F.lit(" entirely unrelated replacement content"),
-            )
-        )
-        .alias("text"),
-        "source",
-    )
-    return (
-        textops.dedup_against(new, d, near=True, threshold=0.5)
-        .select("doc_id", "source")
-        .orderBy("doc_id")
-    )
-
-
-def q_source_reputation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-source reputation rollup (textops.source_stats): volume,
-    duplication rate, mean tokens, quality-gate pass rate — the signals a
-    RefinedWeb-style domain filter ranks on. Decorated so duplication is
-    non-vacuous: every 4th doc's text becomes a per-source filler block,
-    creating within-source exact dup groups. All stats are integer-exact
-    (`div` scaling) so both engines agree bit-for-bit; the oracle counts
-    distinct NORMALIZED TEXT where Spark counts distinct xxhash64."""
-    d = _read(spark, sf_dir, "documents")
-    deco = d.select(
-        "doc_id",
-        F.when(
-            F.col("doc_id") % 4 == 0,
-            F.concat(F.lit("duplicate filler block for source "), F.col("source")),
-        )
-        .otherwise(F.col("text"))
-        .alias("text"),
-        "source",
-    )
-    return textops.source_stats(deco)
-
-
-def q_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic per-source subsampling (textops.stratified_sample):
-    even-numbered sources kept at 0.5, odd at 0.25, drawn from
-    md5(doc_id || salt) — no RNG state, so the oracle replays the EXACT
-    same sample (md5 is ubiquitous; xxhash64 is not). The fractions config
-    is built from the table's distinct sources (a P-row driver collect,
-    the config-table pattern)."""
-    d = _read(spark, sf_dir, "documents")
-    sources = [r["source"] for r in d.select("source").distinct().collect()]
-    fractions = {
-        s: 0.5 if int(s.removeprefix("src")) % 2 == 0 else 0.25 for s in sources
-    }
-    return textops.stratified_sample(
-        d.select("doc_id", "source"), fractions, salt="r5"
-    )
-
-
-def q_chunk_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fixed-window training-sequence chunking (textops.chunk_documents):
-    32-token windows, 8-token overlap (stride 24), so a typical synthetic
-    doc yields several rows and the tail window is shorter — non-vacuous at
-    every doc length. Oracle replays the same windows via generate_series +
-    list slicing; both engines tokenize the normalized text with empty
-    tokens dropped."""
-    d = _read(spark, sf_dir, "documents")
-    return textops.chunk_documents(d.select("doc_id", "text"), chunk_tokens=32, overlap=8)
-
-
-#: NFC fixture tails — explicit escapes so composed-vs-decomposed is
-#: unambiguous in source; the oracle embeds the SAME Python strings
-_NFC_DECOMPOSED_TAIL = " cafe\u0301 re\u0301sume\u0301"  # NFC-composable
-_NFC_COMPOSED_TAIL = " caf\u00e9 plain"  # already NFC (fixpoint)
-
-
-def q_unicode_nfc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Unicode NFC normalization (textops.normalize_unicode — the one
-    corpus pass SQL can't express, so the Arrow kernel is cross-checked
-    against DuckDB's ICU-backed nfc_normalize, like the stratified md5
-    draw). Decoration makes both flag values non-vacuous: doc_id%3==0 gets
-    a DECOMPOSED tail (e + U+0301, composed by NFC -> changed=1), the rest
-    a precomposed tail (NFC fixpoint -> changed=0). The decomposed/composed
-    literals are built from the same Python escapes on both sides."""
-    d = _read(spark, sf_dir, "documents")
-    deco = d.select(
-        "doc_id",
-        F.when(
-            F.col("doc_id") % 3 == 0,
-            F.concat(F.col("text"), F.lit(_NFC_DECOMPOSED_TAIL)),
-        )
-        .otherwise(F.concat(F.col("text"), F.lit(_NFC_COMPOSED_TAIL)))
-        .alias("text"),
-    )
-    return textops.normalize_unicode(deco).select(
-        "doc_id", "nfc_text", "nfc_text_changed_int"
-    )
-
-
-def q_hashed_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hashing-trick linear quality model (textops.hashed_linear_score):
-    every token md5-hashes to one of 256 buckets whose integer weights sum
-    to the document score — the fasttext-style model-filter plumbing with a
-    deterministic stand-in weight table (textops.hash_weights). Integer
-    arithmetic end to end, so the oracle reproduces score_sum bit-for-bit
-    from the same bucket math and the same regenerated table."""
-    d = _read(spark, sf_dir, "documents")
-    return textops.hashed_linear_score(d.select("doc_id", "text"))
-
-
-def q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Concatenate-and-split sequence packing (textops.pack_sequences):
-    docs laid end to end in doc_id order, the token stream cut every 32
-    tokens across doc boundaries, emitted as the (doc, sequence) piece
-    manifest. Uses the slice-local running-sum path (slice_size=64) — the
-    scale shape — while the oracle replays the semantics directly with one
-    global window cumsum + generate_series over the crossed bins; the
-    identity between the two IS the slice-path correctness check, run
-    cross-engine. Integer arithmetic throughout."""
-    d = _read(spark, sf_dir, "documents")
-    return textops.pack_sequences(
-        d.select("doc_id", "text"), seq_tokens=32, slice_size=64
-    )
-
-
-def q_rebalance_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Target-mixture rebalancing (textops.rebalance_corpus): even-numbered
-    sources weighted 3, odd-numbered 1; the scarcest group relative to its
-    weight binds, everything else downsamples via the md5 draw. The keep
-    test is the cross-multiplied integer comparison draw·D·c < w·T·2³²
-    (DECIMAL(38,0) in Spark), which the oracle replays in HUGEINT from
-    its own counts CTE — same md5, same integers, exact row-set equality."""
-    d = _read(spark, sf_dir, "documents")
-    sources = sorted(r["source"] for r in d.select("source").distinct().collect())
-    targets = {
-        s: 3 if int(s.removeprefix("src")) % 2 == 0 else 1 for s in sources
-    }
-    return textops.rebalance_corpus(
-        d.select("doc_id", "source"), targets, salt="r5mix"
-    )
-
-
-def q_corpus_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic global shuffle rank (textops.corpus_shuffle): position
-    in md5(id‖salt) order, computed WITHOUT a global window (draw-prefix
-    bucket ranks + tiny offsets table — the crawl_order two-level design).
-    The oracle computes the same permutation the naive way (one global
-    row_number) — the equality pins that the distributed ranking matches
-    the sequential definition."""
-    d = _read(spark, sf_dir, "documents")
-    return textops.corpus_shuffle(d.select("doc_id"), salt="r5sh")
-
-
-def q_cdx_latest_captures(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Common-Crawl index pipeline (sources/cdx.py): synthesize CDXJ lines
-    deterministically from the documents table (recrawl captures: ~12
-    doc_ids map to each URL via ``doc_id % 400``; every 17th capture a
-    404), then run the REAL path under test — ``surt_key_col`` →
-    ``parse_cdx_lines`` (limit-3 split, JSON payload, ts14) → status
-    filter → ``latest_captures`` recrawl dedup. The oracle rebuilds the
-    lines independently (its own SURT/string primitives) and replays the
-    parse with DuckDB's split_part/json_extract_string/strptime — so the
-    limit-split semantics, JSON extraction, timestamp round-trip, and the
-    keep-newest window are all checked cross-engine. ``fetch_ts`` is
-    emitted as the ts14 string via ``date_format`` (parse∘format is the
-    identity in any fixed session timezone)."""
-    from bbcrawl_spark.sources import cdx
-
-    d = _read(spark, sf_dir, "documents")
-    doc_id = F.col("doc_id")
-    url = F.concat(
-        F.lit("http://www."), F.col("source"), F.lit(".example.com/doc/"),
-        (doc_id % 400).cast("string"),
-    )
-    ts14 = F.concat(
-        F.lit("202401"),
-        F.lpad(((doc_id % 28) + 1).cast("string"), 2, "0"),
-        F.lpad((doc_id % 24).cast("string"), 2, "0"),
-        F.lpad(((doc_id * 7) % 60).cast("string"), 2, "0"),
-        F.lit("00"),
-    )
-    status = F.when(doc_id % 17 == 0, F.lit("404")).otherwise(F.lit("200"))
-    line = F.concat(
-        cdx.surt_key_col(url), F.lit(" "), ts14,
-        F.lit(' {"url": "'), url,
-        F.lit('", "mime": "text/html", "status": "'), status,
-        F.lit('", "digest": "sha1:'), F.upper(F.md5(F.col("text").cast("binary"))),
-        F.lit('", "length": "'), F.col("n_chars").cast("string"),
-        F.lit('", "offset": "'), (doc_id * 1000).cast("string"),
-        F.lit('", "filename": "crawl-'), F.col("source"), F.lit('.warc.gz"}'),
-    )
-    parsed = cdx.parse_cdx_lines(d.select(line.alias("line")))
-    kept = cdx.latest_captures(parsed.filter(F.col("status") == 200))
-    return kept.select(
-        "surt", "url",
-        F.date_format("fetch_ts", "yyyyMMddHHmmss").alias("ts14"),
-        "digest", "warc_filename", "warc_offset", "warc_length",
-    )
-
-
-def q_recrawl_due(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Recrawl planning from capture history (cdx.recrawl_schedule):
-    synthesize per-URL capture rows from documents (url key = doc_id % 400;
-    digest changes at a per-URL rate — never / every capture / every 2nd —
-    so n_versions, the span/changes estimator, the max clamp, and both due
-    outcomes are exercised at the gate SF; the min clamp needs sub-day
-    spans and is pinned in tests/test_cdx.py instead), then the
-    integer-seconds scheduler under test. Oracle
-    replays the same grouping with epoch()/``//``/greatest/least and the
-    interval-add via DuckDB's own timestamp arithmetic; timestamps compare
-    as ts14 strings (the parse∘format identity used by cdx_latest_captures)."""
-    from bbcrawl_spark.sources import cdx
-
-    d = _read(spark, sf_dir, "documents")
-    doc_id = F.col("doc_id")
-    u = doc_id % 400
-    ts14 = F.concat(
-        F.lit("202401"),
-        F.lpad(((doc_id % 28) + 1).cast("string"), 2, "0"),
-        F.lpad((doc_id % 24).cast("string"), 2, "0"),
-        F.lpad(((doc_id * 7) % 60).cast("string"), 2, "0"),
-        F.lit("00"),
-    )
-    version = (
-        F.when(u % 4 == 1, F.expr("doc_id div 400"))
-        .when(u % 4 == 0, F.lit(0))
-        .otherwise(F.expr("(doc_id div 400) div 2"))
-    )
-    caps = d.select(
-        F.concat(F.lit("com,example,www)/doc/"), u.cast("string")).alias("surt"),
-        F.to_timestamp(ts14, "yyyyMMddHHmmss").alias("fetch_ts"),
-        F.md5(
-            F.concat(u.cast("string"), F.lit(":"), version.cast("string"))
-        ).alias("digest"),
-    )
-    sched = cdx.recrawl_schedule(caps, "2024-02-10 00:00:00")
-    return sched.select(
-        "surt", "n_captures", "n_versions", "interval_s",
-        F.date_format("last_ts", "yyyyMMddHHmmss").alias("last14"),
-        F.date_format("next_due_ts", "yyyyMMddHHmmss").alias("next_due14"),
-        F.col("due").cast("int").alias("due_int"),
-    )
-
-
-def q_warc_fetch_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Index-driven range-fetch planning (cdx.fetch_plan): chosen captures
-    cut into per-WARC-segment offset-ordered task runs (read_seq /
-    task_id) with per-segment totals. Oracle replays both windows with
-    DuckDB's own row_number/count/sum over the same synthesized
-    (filename, offset, length) captures."""
-    from bbcrawl_spark.sources import cdx
-
-    d = _read(spark, sf_dir, "documents")
-    doc_id = F.col("doc_id")
-    caps = d.select(
-        F.concat(
-            F.lit("http://www."), F.col("source"), F.lit(".example.com/doc/"),
-            (doc_id % 400).cast("string"),
-        ).alias("url"),
-        F.concat(F.lit("crawl-"), F.col("source"), F.lit(".warc.gz")).alias(
-            "warc_filename"
-        ),
-        (doc_id * 1000).alias("warc_offset"),
-        F.col("n_chars").cast("long").alias("warc_length"),
-    )
-    # offsets stride 20,000 within a file and lengths span 48-553, so a
-    # 19,700 gap threshold coalesces roughly half the consecutive pairs —
-    # both request outcomes exercised at the gate SF
-    plan = cdx.fetch_plan(caps, ranges_per_task=10, coalesce_gap=19_700)
-    return plan.select(
-        "url", "warc_filename", "warc_offset", "read_seq", "task_id",
-        "n_file_ranges", "file_bytes", "request_id",
-    )
-
-
-# --- link-graph ops ---------------------------------------------------------
-
-#: deterministic synthetic link extraction built from the events table —
-#: (page_url, link_url, anchor_text) rows for the link-graph operators.
-#: Shape: every user is a forum host; 1/6 of links are same-host pagination
-#: (dropped by host_edges), 1/6 same-host with case/port variation (also
-#: dropped after canonical host fold), the rest fan out to a neighbor ring,
-#: a hub everyone cites, a small CDN pool, and a modular forum subset.
-#: hub/cdn/over-range forum hosts never appear as sources — DANGLING nodes,
-#: exercising PageRank's dangling-mass redistribution.
-_LINK_SRC_SQL = (
-    "'http://forum' || CAST(user_id AS STRING) || '.example.com/t' "
-    "|| CAST(event_id % 40 AS STRING)"
-)
-_LINK_DST_SQL = (
-    "CASE CAST(event_id % 6 AS INT) "
-    " WHEN 0 THEN 'http://forum' || CAST(user_id AS STRING) || '.example.com/t' "
-    "   || CAST(event_id % 40 AS STRING) || '/page2' "
-    " WHEN 1 THEN 'http://forum' || CAST(user_id + 1 + (event_id % 5) AS STRING) "
-    "   || '.example.com/t' || CAST(event_id % 40 AS STRING) "
-    " WHEN 2 THEN 'http://hub.example.com/index' "
-    " WHEN 3 THEN 'http://cdn' || CAST(event_id % 5 AS STRING) "
-    "   || '.example.net:8080/i' || CAST(event_id % 9 AS STRING) || '.jpg' "
-    " WHEN 4 THEN 'http://forum' || CAST(event_id % 23 AS STRING) || '.example.com/t0' "
-    " ELSE 'HTTPS://Forum' || CAST(user_id AS STRING) || '.Example.com:443/about' "
-    "END"
-)
-_ANCHOR_SQL = (
-    "CASE CAST(event_id % 4 AS INT) WHEN 0 THEN 'next page' WHEN 1 THEN 'click here' "
-    "WHEN 2 THEN 'Thread ' || CAST(event_id % 40 AS STRING) ELSE 'home' END"
-)
-_LINK_CTE = (
-    f"WITH l AS (SELECT event_id, user_id, {_LINK_SRC_SQL} AS page_url, "
-    f"{_LINK_DST_SQL} AS link_url, {_ANCHOR_SQL} AS anchor_text FROM events)"
-)
-
-#: DuckDB twin of linkgraph.host_of_url (same regexes, 'g' flag per dialect)
-def _host_sql(col: str) -> str:
-    return linkgraph.HOST_SQL.format(col=col).replace(
-        "':[0-9]+$', ''", "':[0-9]+$', '', 'g'"
-    )
-
-
-#: shared DuckDB CTE tail producing ``he(src_host, dst_host, weight)`` —
-#: the host_edges twin over the synthesized links
-_HOST_EDGE_CTE = f""",
-        hx AS (SELECT {_host_sql('page_url')} AS src_host,
-                      {_host_sql('link_url')} AS dst_host FROM l),
-        he AS (SELECT src_host, dst_host, COUNT(*) AS weight FROM hx
-               WHERE src_host <> '' AND dst_host <> '' AND src_host <> dst_host
-               GROUP BY src_host, dst_host)"""
-
-
-def _pagerank_oracle_sql(iterations: int = 5) -> str:
-    """Unrolled-CTE DuckDB replay of linkgraph.pagerank's INTEGER
-    recurrence — one (contrib, dangling, rank) CTE triple per iteration,
-    bit-exact against the Spark loop because every step is integer
-    division (Spark ``div`` == DuckDB ``//`` on non-negative bigints)."""
-    base = "(SELECT 1000000000000 // n FROM nn)"
-    n = "(SELECT n FROM nn)"
-    ctes = [
-        "ed AS (SELECT src_host AS s, dst_host AS d FROM he)",
-        "nodes AS (SELECT s AS h FROM ed UNION SELECT d FROM ed)",
-        "nn AS (SELECT COUNT(*) AS n FROM nodes)",
-        "od AS (SELECT s, CAST(COUNT(*) AS BIGINT) AS od FROM ed GROUP BY s)",
-        f"r0 AS (SELECT h, CAST({base} AS BIGINT) AS r FROM nodes)",
-    ]
-    for k in range(iterations):
-        ctes.append(
-            f"c{k} AS (SELECT ed.d AS h, CAST(SUM(r{k}.r // od.od) AS BIGINT) AS sum_c"
-            f" FROM ed JOIN r{k} ON r{k}.h = ed.s JOIN od ON od.s = ed.s"
-            f" GROUP BY ed.d)"
-        )
-        ctes.append(
-            f"g{k} AS (SELECT CAST(COALESCE(SUM(r{k}.r), 0) AS BIGINT) AS dang"
-            f" FROM r{k} LEFT JOIN od ON od.s = r{k}.h WHERE od.s IS NULL)"
-        )
-        ctes.append(
-            f"r{k + 1} AS (SELECT nodes.h, CAST((15 * {base} + 85 * "
-            f"(COALESCE(c{k}.sum_c, 0) + ((SELECT dang FROM g{k}) // {n})))"
-            f" // 100 AS BIGINT) AS r"
-            f" FROM nodes LEFT JOIN c{k} ON c{k}.h = nodes.h)"
-        )
-    body = ",\n            ".join(ctes)
-    return (
-        f"{_LINK_CTE}{_HOST_EDGE_CTE},\n            {body}\n"
-        f"            SELECT h AS host, r AS rank_scaled FROM r{iterations}"
-    )
-
-
-def _hits_oracle_sql(iterations: int = 3) -> str:
-    """Unrolled-CTE DuckDB replay of linkgraph.hits' INTEGER recurrence —
-    per iteration: authority raw sums + total + rescale, then hub raw sums
-    + total + rescale; final authorities recomputed from the final hubs,
-    exactly as the Spark loop does. Bit-exact because every step is
-    non-negative integer floor division (Spark ``div`` == DuckDB ``//``).
-
-    Every CTE is ``AS MATERIALIZED``: HITS has TWO rescale layers per
-    iteration (vs pagerank's one), and DuckDB's default CTE inlining
-    re-expands the doubly-referenced chain exponentially — the un-hinted
-    query hangs at sf0.001 while the materialized one runs in 0.2 s at
-    sf0.01."""
-    s = 1_000_000_000
-    ctes = [
-        "ed AS MATERIALIZED (SELECT src_host AS s, dst_host AS d FROM he)",
-        "nodes AS MATERIALIZED (SELECT s AS h FROM ed UNION SELECT d FROM ed)",
-        "nn AS MATERIALIZED (SELECT COUNT(*) AS n FROM nodes)",
-        f"h0 AS MATERIALIZED (SELECT h, CAST((SELECT {s} // n FROM nn) AS BIGINT) AS hs FROM nodes)",
-    ]
-    for k in range(iterations):
-        ctes.append(
-            f"ar{k} AS MATERIALIZED (SELECT ed.d AS h, CAST(SUM(h{k}.hs) AS BIGINT) AS raw"
-            f" FROM ed JOIN h{k} ON h{k}.h = ed.s GROUP BY ed.d)"
-        )
-        ctes.append(f"at{k} AS MATERIALIZED (SELECT CAST(SUM(raw) AS BIGINT) AS tot FROM ar{k})")
-        ctes.append(
-            f"a{k} AS MATERIALIZED (SELECT nodes.h, CAST(COALESCE(ar{k}.raw, 0) * {s}"
-            f" // (SELECT tot FROM at{k}) AS BIGINT) AS au"
-            f" FROM nodes LEFT JOIN ar{k} ON ar{k}.h = nodes.h)"
-        )
-        ctes.append(
-            f"hr{k} AS MATERIALIZED (SELECT ed.s AS h, CAST(SUM(a{k}.au) AS BIGINT) AS raw"
-            f" FROM ed JOIN a{k} ON a{k}.h = ed.d GROUP BY ed.s)"
-        )
-        ctes.append(f"ht{k} AS MATERIALIZED (SELECT CAST(SUM(raw) AS BIGINT) AS tot FROM hr{k})")
-        ctes.append(
-            f"h{k + 1} AS MATERIALIZED (SELECT nodes.h, CAST(COALESCE(hr{k}.raw, 0) * {s}"
-            f" // (SELECT tot FROM ht{k}) AS BIGINT) AS hs"
-            f" FROM nodes LEFT JOIN hr{k} ON hr{k}.h = nodes.h)"
-        )
-    K = iterations
-    ctes.append(
-        f"arF AS MATERIALIZED (SELECT ed.d AS h, CAST(SUM(h{K}.hs) AS BIGINT) AS raw"
-        f" FROM ed JOIN h{K} ON h{K}.h = ed.s GROUP BY ed.d)"
-    )
-    ctes.append("atF AS MATERIALIZED (SELECT CAST(SUM(raw) AS BIGINT) AS tot FROM arF)")
-    ctes.append(
-        f"aF AS MATERIALIZED (SELECT nodes.h, CAST(COALESCE(arF.raw, 0) * {s}"
-        f" // (SELECT tot FROM atF) AS BIGINT) AS au"
-        f" FROM nodes LEFT JOIN arF ON arF.h = nodes.h)"
-    )
-    body = ",\n            ".join(ctes)
-    return (
-        f"{_LINK_CTE}{_HOST_EDGE_CTE},\n            {body}\n"
-        f"            SELECT h{K}.h AS host, h{K}.hs AS hub_scaled,"
-        f" aF.au AS auth_scaled FROM h{K} JOIN aF ON aF.h = h{K}.h"
-    )
-
-
-def _events_links(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _read(spark, sf_dir, "events")
-    ev.createOrReplaceTempView("_events_tmp")
-    return spark.sql(
-        f"SELECT event_id, user_id, {_LINK_SRC_SQL} AS page_url, "
-        f"{_LINK_DST_SQL} AS link_url, {_ANCHOR_SQL} AS anchor_text "
-        "FROM _events_tmp"
-    )
-
-
-def q_link_graph_degrees(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Host-graph degree/volume stats (linkgraph.host_edges +
-    degree_stats): the in-link quality prior a curation pipeline joins
-    against and the out-link fanout the scheduler budgets by."""
-    e = linkgraph.host_edges(_events_links(spark, sf_dir))
-    return linkgraph.degree_stats(e)
-
-
-def q_pagerank_hosts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Integer-exact fixed-iteration PageRank (linkgraph.pagerank, 5
-    rounds, d=0.85) over the host graph — bit-exact vs the oracle's
-    unrolled-CTE replay of the same integer recurrence, which is what
-    makes a graph ALGORITHM value-hash-checkable cross-engine."""
-    e = linkgraph.host_edges(_events_links(spark, sf_dir))
-    return linkgraph.pagerank(e, iterations=5, assume_distinct=True)
-
-
-def q_hits_hosts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Integer-exact fixed-iteration HITS (linkgraph.hits, 3 rounds,
-    L1-normalized to 10^9 each half-step) over the host graph — the
-    hub/authority pair complementing the pagerank prior. Bit-exact vs the
-    oracle's unrolled-CTE replay (same non-negative floor divisions)."""
-    e = linkgraph.host_edges(_events_links(spark, sf_dir))
-    return linkgraph.hits(e, iterations=3, assume_distinct=True)
-
-
-def q_seed_expansion_hosts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bounded seed expansion (linkgraph.k_hop_hosts): hosts within 2 link
-    hops of a two-seed list over the synthetic host graph, labeled with
-    min-hop BFS levels. Oracle: DuckDB recursive CTE over the SAME
-    host-edge CTE the degree/pagerank oracles use, bounded by hop < k,
-    MIN(hop) per host — the label-flood pattern the CC oracle established,
-    here directed and depth-bounded."""
-    e = linkgraph.host_edges(_events_links(spark, sf_dir))
-    return linkgraph.k_hop_hosts(
-        e, ["forum1.example.com", "forum2.example.com"], 2
-    )
-
-
-def q_crawl_trap_hosts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Crawler-trap detection (linkgraph.crawl_trap_stats) over the
-    synthetic URL corpus: cdn hosts collapse ~25 URLs onto ONE digit
-    template (ratio 25x -> flagged); forum hosts keep 3 templates
-    (ratio <= ~20x -> clean). Thresholds chosen so both outcomes occur
-    at the gate's sf0.01 (non-vacuous both ways)."""
-    u = _events_urls(spark, sf_dir)
-    stats = linkgraph.crawl_trap_stats(
-        u, min_urls=10, ratio_e4_threshold=220_000
-    )
-    return stats.select(
-        "host", "n_urls", "n_templates", "ratio_e4",
-        F.col("is_trap").cast("int").alias("is_trap_int"),
-    )
-
-
-def q_anchor_text_top(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Most frequent anchor text per target host (linkgraph.top_anchor),
-    deterministic tie-break (count desc, anchor asc)."""
-    return linkgraph.top_anchor(_events_links(spark, sf_dir))
-
-
-# --- sitemap planning + domain quota -----------------------------------------
-
-#: deterministic robots.txt bodies from events (one per user/host):
-#: canonical-case directive for user%3==0, lowercase+indented for %3==1
-#: (case/whitespace laxity under test), none for %3==2.
-_ROBOTS_TXT_SQL = (
-    "'User-agent: *' || chr(10) || 'Disallow: /private' || chr(10) || "
-    "CASE WHEN user_id % 3 = 0 THEN 'Sitemap: http://forum' "
-    "  || CAST(user_id AS STRING) || '.example.com/sitemap.xml' || chr(10) "
-    "  ELSE '' END || "
-    "'Allow: /' || chr(10) || "
-    "CASE WHEN user_id % 3 = 1 THEN '  sitemap:   http://forum' "
-    "  || CAST(user_id AS STRING) || '.example.com/sitemap_index.xml' || chr(10) "
-    "  ELSE '' END"
-)
-
-#: deterministic sitemap entry blocks: index-shard blocks for every 10th
-#: user (sitemapindex files), page blocks otherwise — with whitespace
-#: inside <loc> and lastmod only on every 3rd event (NULL-path coverage)
-_SM_BLOCK_SQL = (
-    "CASE WHEN user_id % 10 = 0 THEN "
-    "  '<sitemap><loc>http://forum' || CAST(user_id AS STRING) "
-    "  || '.example.com/sm' || CAST(event_id % 5 AS STRING) "
-    "  || '.xml</loc></sitemap>' "
-    "ELSE "
-    "  '<url><loc> http://forum' || CAST(user_id AS STRING) "
-    "  || '.example.com/t' || CAST(event_id % 40 AS STRING) || ' </loc>' || "
-    "  CASE WHEN event_id % 3 = 0 THEN '<lastmod>2024-01-' "
-    "    || lpad(CAST((event_id % 28) + 1 AS STRING), 2, '0') || '</lastmod>' "
-    "    ELSE '' END || '</url>' "
-    "END"
-)
-
-
-def q_robots_sitemaps(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sitemap discovery from robots.txt (sitemap.sitemaps_from_robots):
-    RFC 9309 Sitemap: directives — canonical case, lowercase+indented, and
-    absent — extracted per host. Oracle replays the IDENTICAL (?im) regex
-    (Java ∩ RE2 dialect) through DuckDB's regexp_extract_all."""
-    from bbcrawl_spark.sources import sitemap
-
-    ev = _read(spark, sf_dir, "events")
-    ev.createOrReplaceTempView("_events_tmp")
-    robots = spark.sql(
-        f"SELECT DISTINCT user_id, {_ROBOTS_TXT_SQL} AS robots_txt "
-        "FROM _events_tmp"
-    )
-    return sitemap.sitemaps_from_robots(robots, host_col="user_id")
-
-
-def q_sitemap_urls(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sitemap XML parse (sitemap.parse_sitemaps): per-user urlset /
-    sitemapindex files assembled deterministically (array_sort ==
-    string_agg ORDER BY — same binary string order in both engines), then
-    the regex/split parse under test. lastmod coalesced to '' for the
-    hash compare (NULL renders differently across the two pandas
-    bridges)."""
-    from bbcrawl_spark.sources import sitemap
-
-    ev = _read(spark, sf_dir, "events")
-    ev.createOrReplaceTempView("_events_tmp")
-    blocks = spark.sql(
-        f"SELECT user_id, {_SM_BLOCK_SQL} AS blk FROM _events_tmp"
-    )
-    head = F.when(F.col("user_id") % 10 == 0, F.lit("<sitemapindex>")).otherwise(
-        F.lit("<urlset>")
-    )
-    tail = F.when(F.col("user_id") % 10 == 0, F.lit("</sitemapindex>")).otherwise(
-        F.lit("</urlset>")
-    )
-    xml = blocks.groupBy("user_id").agg(
-        F.concat_ws("", F.array_sort(F.collect_list("blk"))).alias("_body")
-    ).select("user_id", F.concat(head, F.col("_body"), tail).alias("xml"))
-    parsed = sitemap.parse_sitemaps(xml, src_col="user_id")
-    return parsed.select(
-        "user_id", "kind", "loc",
-        F.coalesce("lastmod", F.lit("")).alias("lastmod_s"),
-    )
-
-
-#: deterministic host mix exercising every registrable-domain branch:
-#: deep subdomains under a plain gTLD, sld.cc public suffixes (co.uk /
-#: com.au), IPv4 literals, and single-label hosts
-_DOMAIN_HOST_SQL = (
-    "CASE CAST(event_id % 6 AS INT) "
-    " WHEN 0 THEN 'www.board' || CAST(user_id AS STRING) || '.example.com' "
-    " WHEN 1 THEN 'a.b.site' || CAST(user_id % 40 AS STRING) || '.co.uk' "
-    " WHEN 2 THEN 'news' || CAST(user_id % 25 AS STRING) || '.com.au' "
-    " WHEN 3 THEN '10.0.' || CAST(user_id % 256 AS STRING) || '.7' "
-    " WHEN 4 THEN 'cdn' || CAST(user_id % 5 AS STRING) || '.static.example.net' "
-    " ELSE 'localhost' END"
-)
-
-
-def q_registrable_domains(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """eTLD+1 extraction (linkgraph.registrable_domain) + per-domain host
-    rollup — the grouping key the per-domain quota/reputation/politeness
-    policies use. The oracle replays the IDENTICAL Java∩RE2 regexes through
-    linkgraph.domain_sql, so the suffix logic is checked cross-engine on
-    every branch (sld.cc collapse, deep-subdomain fold, IP/single-label
-    passthrough)."""
-    ev = _read(spark, sf_dir, "events")
-    ev.createOrReplaceTempView("_events_tmp")
-    hosts = spark.sql(f"SELECT {_DOMAIN_HOST_SQL} AS host FROM _events_tmp")
-    return (
-        hosts.select(
-            linkgraph.registrable_domain("host").alias("domain"), "host"
-        )
-        .groupBy("domain")
-        .agg(
-            F.count("*").alias("n_rows"),
-            F.count_distinct("host").alias("n_hosts"),
-        )
-    )
-
-
-def q_domain_quota_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """C4-style per-domain volume cap (textops.quota_cap): at most 10 docs
-    per source, selected by the deterministic md5 draw — binds on every
-    source (25 docs each), keeping 10/25 per source at the gate SF."""
-    d = _read(spark, sf_dir, "documents")
-    return textops.quota_cap(d, quota=10).select("doc_id", "source")
-
-
-def q_frontier_cardinality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sketch-based frontier metrics: per-host distinct-URL cardinality via
-    HyperLogLog++ (approx_count_distinct, rsd 1%) NEXT TO the exact
-    count-distinct. At 10^10 URLs the exact count is itself a full
-    shuffle of the key space per metric refresh; the HLL sketch
-    aggregates in fixed memory per host and merges associatively — the
-    same replace-exact-state-with-a-sketch move the seen-set makes with
-    Bloom. Rows-only (the sketch estimate is engine-specific, not
-    SQL-replayable): the row carries BOTH values plus the scaled relative
-    error, and the test floor asserts max error <= 5% at rsd 1%
-    (measured max 3.03% at sf0.01; 2% rsd measured up to 5.7% on
-    small-cardinality hosts, where HLL++'s nominal rsd understates the
-    bias-corrected small-range error) — the `bloom_incremental`
-    self-check pattern."""
-    u = _events_urls(spark, sf_dir)
-    return (
-        u.select(linkgraph.host_of_url(F.col("url")).alias("host"), "url")
-        .groupBy("host")
-        .agg(
-            F.count_distinct("url").alias("n_exact"),
-            F.approx_count_distinct("url", 0.01).alias("n_approx"),
-        )
-        .select(
-            "host", "n_exact", "n_approx",
-            F.expr(
-                "abs(n_approx - n_exact) * 10000 div greatest(n_exact, 1L)"
-            ).alias("abs_err_e4"),
-        )
-    )
-
-
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     return {
         "frontier_cutter": q_frontier_cutter,
         "frontier_vb4": q_frontier_vb4,
         "frontier_query": q_frontier_query,
         "url_canonicalize": q_url_canonicalize,
-        "url_alias_fold": q_url_alias_fold,
         "seen_dedup_antijoin": q_seen_dedup_antijoin,
-        "bucketed_seen_antijoin": q_bucketed_seen_antijoin,
         "exclude_filter": q_exclude_filter,
         "politeness_topk": q_politeness_topk,
         "politeness_host_budgets": q_politeness_host_budgets,
@@ -1892,118 +475,13 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "header_filename": q_header_filename,
         "vb_headername_complete": q_vb_headername_complete,
         "priority_score": q_priority_score,
-        "exact_dedup_docs": q_exact_dedup_docs,
-        "token_count_docs": q_token_count_docs,
-        "quality_score_docs": q_quality_score_docs,
-        "langid_docs": q_langid_docs,
-        "fingerprint_docs": q_fingerprint_docs,
-        "ngram_jaccard_pairs": q_ngram_jaccard_pairs,
-        "vocab_stats": q_vocab_stats,
-        "repetition_stats_docs": q_repetition_stats_docs,
-        "top_ngram_docs": q_top_ngram_docs,
-        "dedup_clusters_docs": q_dedup_clusters_docs,
-        "corpus_clean": q_corpus_clean,
-        "corpus_clean_full": q_corpus_clean_full,
-        "token_budget_sample": q_token_budget_sample,
-        "strip_boilerplate": q_strip_boilerplate,
-        "strip_boilerplate_norm": q_strip_boilerplate_norm,
-        "pii_redaction": q_pii_redaction,
-        "contamination_screen": q_contamination_screen,
-        "paragraph_dedup_docs": q_paragraph_dedup_docs,
-        "incremental_dedup": q_incremental_dedup,
-        "source_reputation": q_source_reputation,
-        "stratified_sample": q_stratified_sample,
-        "chunk_docs": q_chunk_docs,
-        "unicode_nfc": q_unicode_nfc,
-        "hashed_quality": q_hashed_quality,
-        "pack_sequences": q_pack_sequences,
-        "rebalance_mixture": q_rebalance_mixture,
-        "corpus_shuffle": q_corpus_shuffle,
-        "cdx_latest_captures": q_cdx_latest_captures,
-        "recrawl_due": q_recrawl_due,
-        "warc_fetch_plan": q_warc_fetch_plan,
-        "link_graph_degrees": q_link_graph_degrees,
-        "pagerank_hosts": q_pagerank_hosts,
-        "seed_expansion_hosts": q_seed_expansion_hosts,
-        "hits_hosts": q_hits_hosts,
-        "crawl_trap_hosts": q_crawl_trap_hosts,
-        "anchor_text_top": q_anchor_text_top,
-        "robots_sitemaps": q_robots_sitemaps,
-        "sitemap_urls": q_sitemap_urls,
-        "domain_quota_sample": q_domain_quota_sample,
-        "registrable_domains": q_registrable_domains,
-        "embedding_knn": q_embedding_knn,
-        "embedding_near_dup": q_embedding_near_dup,
         # rows-only (no SQL equivalent):
-        "frontier_cardinality": q_frontier_cardinality,
-        "minhash_dedup_docs": q_minhash_dedup_docs,
-        "simhash_pairs_docs": q_simhash_pairs_docs,
-        "near_dup_recall": q_near_dup_recall,
-        "minhash_lsh_recall": q_minhash_lsh_recall,
-        "simhash_closure_check": q_simhash_closure_check,
-        "incremental_dedup_near": q_incremental_dedup_near,
-        "ann_lsh_knn": q_ann_lsh_knn,
-        "ann_ivf_knn": q_ann_ivf_knn,
-        "ann_recall": q_ann_recall,
-        "multimodal_features": q_multimodal_features,
-        "multimodal_audio": q_multimodal_audio,
         "bloom_incremental": q_bloom_incremental,
         "crawl_roundtrip": q_crawl_roundtrip,
     }
 
 
 def oracle_sql() -> dict[str, str]:
-    sw_en = _sw_list("en")
-    langid_ratio = {
-        lang: (
-            f"len(list_filter(string_split_regex({_NORM_SQL}, '\\s+'), "
-            f"t -> list_contains({_sw_list(lang)}, t)))::DOUBLE / "
-            f"greatest(len(string_split_regex({_NORM_SQL}, '\\s+')), 1)"
-        )
-        for lang in sorted(textops._STOPWORDS)
-    }
-    best = "greatest(" + ", ".join(f"r_{lang}" for lang in sorted(textops._STOPWORDS)) + ")"
-
-    # PII oracle: replay textops.PII_PATTERNS — the SAME pattern strings the
-    # Spark pass compiles (they're written in the Java-regex ∩ RE2 dialect
-    # for exactly this) — sequentially, counting before each replace. Built
-    # by .replace, not f-string, because the patterns contain regex braces.
-    _pii_pats = {name: pat for name, pat, _ in textops.PII_PATTERNS}
-    pii_sql = """
-            WITH deco AS (
-              SELECT doc_id, text ||
-                CASE WHEN doc_id % 3 = 0
-                     THEN ' contact user' || CAST(doc_id AS STRING) || '@example.com'
-                     ELSE '' END ||
-                CASE WHEN doc_id % 3 = 1
-                     THEN ' host 10.0.' || CAST(doc_id % 256 AS STRING) || '.7'
-                     ELSE '' END ||
-                CASE WHEN doc_id % 5 = 0
-                     THEN ' tel +1 555 01' || CAST(doc_id % 100 AS STRING) || ' 99'
-                     ELSE '' END AS text
-              FROM documents),
-            s1 AS (
-              SELECT doc_id,
-                     len(regexp_extract_all(text, '@EMAILPAT@')) AS pii_email_n,
-                     regexp_replace(text, '@EMAILPAT@', '<EMAIL>', 'g') AS t1
-              FROM deco),
-            s2 AS (
-              SELECT doc_id, pii_email_n,
-                     len(regexp_extract_all(t1, '@IPPAT@')) AS pii_ip_n,
-                     regexp_replace(t1, '@IPPAT@', '<IP>', 'g') AS t2
-              FROM s1)
-            SELECT doc_id, pii_email_n, pii_ip_n,
-                   len(regexp_extract_all(t2, '@PHONEPAT@')) AS pii_phone_n,
-                   regexp_replace(t2, '@PHONEPAT@', '<PHONE>', 'g') AS redacted_text
-            FROM s2
-    """.replace("@EMAILPAT@", _pii_pats["email"]).replace(
-        "@IPPAT@", _pii_pats["ip"]
-    ).replace("@PHONEPAT@", _pii_pats["phone"])
-
-    # hashed_quality: regenerate the SAME deterministic weight table the
-    # Spark op defaults to (textops.hash_weights — pure integer formula)
-    _wlist = "[" + ", ".join(str(x) for x in textops.hash_weights()) + "]"
-
     return {
         "frontier_cutter": """
             SELECT CAST(0 AS BIGINT) AS seed_id, CAST(p - 1 AS BIGINT) AS ord,
@@ -2028,37 +506,7 @@ def oracle_sql() -> dict[str, str]:
             {_URL_CTE}
             SELECT event_id, {_CANON_SQL} AS canon_url FROM u
         """,
-        "url_alias_fold": f"""
-            {_URL_CTE},
-            deco AS (SELECT event_id, {_ALIAS_DECO_SQL} AS durl FROM u),
-            p AS (SELECT event_id,
-                    regexp_extract(durl, '^([^?#]*)', 1) AS pre,
-                    regexp_extract(durl, '^[^#]*\\?([^#]*)', 1) AS q,
-                    regexp_extract(durl, '^[^#]*(#.*)', 1) AS frag
-                  FROM deco),
-            c AS (SELECT event_id, pre, frag,
-                    coalesce(array_to_string(list_sort(list_filter(
-                      string_split(q, '&'),
-                      x -> NOT regexp_matches(x, '{udfs.TRACKING_PARAMS_RE}'))), '&'), '')
-                    AS cleaned
-                  FROM p)
-            SELECT event_id,
-                   pre || CASE WHEN cleaned = '' THEN ''
-                               ELSE '?' || cleaned END || frag AS norm_url
-            FROM c
-        """,
         "seen_dedup_antijoin": f"""
-            {_URL_CTE}
-            SELECT DISTINCT {_CANON_SQL} AS canon_url
-            FROM u JOIN events USING (event_id)
-            WHERE events.event_type = 'click'
-            AND {_CANON_SQL} NOT IN (
-                SELECT {_CANON_SQL} FROM u JOIN events USING (event_id)
-                WHERE events.event_type = 'error')
-        """,
-        # same logical result as seen_dedup_antijoin: the bucketed layout is
-        # a physical property (one-sided exchange), never a semantic one
-        "bucketed_seen_antijoin": f"""
             {_URL_CTE}
             SELECT DISTINCT {_CANON_SQL} AS canon_url
             FROM u JOIN events USING (event_id)
@@ -2210,8 +658,8 @@ def oracle_sql() -> dict[str, str]:
                 regexp_replace(lower(regexp_extract(link_url, '^[A-Za-z][A-Za-z0-9+.\\-]*://([^/?#]*)', 1)), ':[0-9]+$', '') AS l_host,
                 regexp_extract(page_url, '^[A-Za-z][A-Za-z0-9+.\\-]*://[^/?#]*([^?#]*)', 1) AS p_path,
                 regexp_extract(link_url, '^[A-Za-z][A-Za-z0-9+.\\-]*://[^/?#]*([^?#]*)', 1) AS l_path,
-                regexp_extract(page_url, '^[^#]*\\?([^#]*)', 1) AS p_q,
-                regexp_extract(link_url, '^[^#]*\\?([^#]*)', 1) AS l_q
+                regexp_extract(page_url, '^[^#?]*\\?([^#]*)', 1) AS p_q,
+                regexp_extract(link_url, '^[^#?]*\\?([^#]*)', 1) AS l_q
               FROM pairs)
             SELECT event_id, page_url, link_url,
               CAST(CASE
@@ -2228,759 +676,5 @@ def oracle_sql() -> dict[str, str]:
                 WHEN p_host = l_host THEN 1
                 ELSE 2 END AS INT) AS priority
             FROM parts
-        """,
-        "exact_dedup_docs": f"""
-            SELECT doc_id, text, lang, source FROM (
-                SELECT doc_id, text, lang, source,
-                       ROW_NUMBER() OVER (PARTITION BY {_NORM_SQL} ORDER BY doc_id) AS rn
-                FROM documents) WHERE rn = 1
-        """,
-        "top_ngram_docs": f"""
-            WITH tok AS (
-              SELECT doc_id, unnest(string_split_regex({_NORM_SQL}, '\\s+')) AS tok
-              FROM documents),
-            tc AS (SELECT doc_id, max(n) AS top_n, sum(n) AS n_tok
-                   FROM (SELECT doc_id, tok, count(*) AS n FROM tok GROUP BY doc_id, tok)
-                   GROUP BY doc_id),
-            big AS (
-              SELECT doc_id,
-                     unnest(CASE WHEN len(t) >= 2
-                            THEN list_transform(range(1, len(t)), i -> t[i] || ' ' || t[i+1])
-                            ELSE [] END) AS bg
-              FROM (SELECT doc_id, string_split_regex({_NORM_SQL}, '\\s+') AS t FROM documents)),
-            bc AS (SELECT doc_id, max(n) AS top_b, sum(n) AS n_big
-                   FROM (SELECT doc_id, bg, count(*) AS n FROM big GROUP BY doc_id, bg)
-                   GROUP BY doc_id)
-            SELECT d.doc_id,
-                   CAST(floor(tc.top_n * 10000 / greatest(tc.n_tok, 1)) AS BIGINT) AS t_top_token_frac_e4,
-                   CAST(floor(COALESCE(bc.top_b, 0) * 10000 / greatest(COALESCE(bc.n_big, 1), 1)) AS BIGINT) AS t_top_bigram_frac_e4
-            FROM documents d
-            JOIN tc ON d.doc_id = tc.doc_id
-            LEFT JOIN bc ON d.doc_id = bc.doc_id
-        """,
-        "repetition_stats_docs": """
-            WITH deco AS (
-              SELECT doc_id,
-                     (CASE WHEN doc_id % 3 = 0
-                           THEN '- bullet point' || chr(10) || '- bullet point' || chr(10)
-                           ELSE '' END)
-                  || (CASE WHEN doc_id % 4 = 0
-                           THEN 'trailing thought...' || chr(10) ELSE '' END)
-                  || replace(text, ' ', chr(10)) AS text
-              FROM documents),
-            l AS (
-              SELECT doc_id,
-                     list_filter(list_transform(string_split(text, chr(10)), x -> trim(x)),
-                                 x -> x <> '') AS lines
-              FROM deco),
-            m AS (
-              SELECT doc_id, lines,
-                     len(lines) AS n_lines,
-                     greatest(len(lines), 1) AS n1,
-                     COALESCE(list_sum(list_transform(lines, x -> length(x))), 0) AS c_total,
-                     COALESCE(list_sum(list_transform(list_distinct(lines), x -> length(x))), 0) AS c_dist
-              FROM l)
-            SELECT doc_id,
-                   CAST(n_lines AS INT) AS r_n_lines,
-                   CAST(floor((n_lines - len(list_distinct(lines))) * 10000 / n1) AS BIGINT) AS r_dup_line_frac_e4,
-                   CAST(floor((c_total - c_dist) * 10000 / greatest(c_total, 1)) AS BIGINT) AS r_dup_line_char_frac_e4,
-                   CAST(floor(len(list_filter(lines, x -> starts_with(x, '- ') OR starts_with(x, '* '))) * 10000 / n1) AS BIGINT) AS r_bullet_line_frac_e4,
-                   CAST(floor(len(list_filter(lines, x -> ends_with(x, '...'))) * 10000 / n1) AS BIGINT) AS r_ellipsis_line_frac_e4
-            FROM m
-        """,
-        "token_count_docs": f"""
-            SELECT doc_id, CAST(length(text) AS INT) AS n_chars_raw,
-                   CAST(len(string_split_regex({_NORM_SQL}, '\\s+')) AS INT) AS n_tokens_ws,
-                   CAST(len(regexp_extract_all(text, '[A-Za-z]+|[0-9]|[^A-Za-z0-9\\s]')) AS INT) AS n_tokens_bpeish
-            FROM documents
-        """,
-        "quality_score_docs": f"""
-            SELECT doc_id,
-                   CAST(n_tok AS INT) AS q_n_tokens,
-                   CAST(floor(n_chars / greatest(n_tok, 1) * 1000) AS BIGINT) AS mean_tok_len_m,
-                   CAST(floor(n_punct / greatest(length(text), 1) * 1000) AS BIGINT) AS punct_ratio_m,
-                   CAST(floor(sw / greatest(n_tok, 1) * 1000) AS BIGINT) AS sw_ratio_m,
-                   (n_tok >= 5 AND n_chars / greatest(n_tok, 1) >= 2.0
-                    AND n_chars / greatest(n_tok, 1) <= 12.0
-                    AND n_punct / greatest(length(text), 1) <= 0.3
-                    AND sw / greatest(n_tok, 1) >= 0.01) AS keep
-            FROM (
-                SELECT doc_id, text,
-                       len(string_split_regex({_NORM_SQL}, '\\s+')) AS n_tok,
-                       length({_NORM_SQL})::DOUBLE AS n_chars,
-                       len(regexp_extract_all(text, '[^\\w\\s]'))::DOUBLE AS n_punct,
-                       len(list_filter(string_split_regex({_NORM_SQL}, '\\s+'),
-                                       t -> list_contains({sw_en}, t)))::DOUBLE AS sw
-                FROM documents)
-        """,
-        # generated from _STOPWORDS so added language profiles keep the twin
-        # in lockstep; tie-break = earliest language code (both engines)
-        "langid_docs": f"""
-            SELECT doc_id,
-                   CASE WHEN {best} <= 0 THEN 'und'
-                        {' '.join(f"WHEN r_{lang} = {best} THEN '{lang}'" for lang in sorted(textops._STOPWORDS)[:-1])}
-                        ELSE '{sorted(textops._STOPWORDS)[-1]}' END AS lang_pred
-            FROM (
-                SELECT doc_id,
-                       {", ".join(f"{langid_ratio[lang]} AS r_{lang}" for lang in sorted(textops._STOPWORDS))}
-                FROM documents)
-        """,
-        "fingerprint_docs": f"""
-            SELECT doc_id, md5({_NORM_SQL}) AS fp_md5 FROM documents
-        """,
-        "vocab_stats": f"""
-            WITH toks AS (
-              SELECT doc_id, unnest(string_split_regex({_NORM_SQL}, '\\s+')) AS tok
-              FROM documents)
-            SELECT tok, COUNT(*) AS tf, COUNT(DISTINCT doc_id) AS df
-            FROM toks WHERE tok != ''
-            GROUP BY tok ORDER BY tf DESC, tok LIMIT 200
-        """,
-        "ngram_jaccard_pairs": f"""
-            WITH {_JACCARD_CTES}
-            SELECT id_a, id_b,
-                   CAST(floor(jac * 100000) AS BIGINT) AS jaccard_100k
-            FROM jpairs
-        """,
-        # transitive closure by recursive label flooding: every node collects
-        # every label in its component; MIN per node = the component's min id
-        # (exactly the Spark operator's cluster_id). Terminates because the
-        # recursive UNION dedups (reach rows are a finite set).
-        "dedup_clusters_docs": f"""
-            WITH RECURSIVE {_JACCARD_CTES},
-            edges AS (
-              SELECT id_a AS u, id_b AS v FROM jpairs
-              UNION
-              SELECT id_b AS u, id_a AS v FROM jpairs),
-            reach(id, lbl) AS (
-              SELECT doc_id, doc_id FROM documents
-              UNION
-              SELECT e.u, r.lbl FROM reach r JOIN edges e ON e.v = r.id)
-            SELECT id AS doc_id, MIN(lbl) AS cluster_id,
-                   CAST(id = MIN(lbl) AS INT) AS keep_int
-            FROM reach GROUP BY id
-        """,
-        # the flagship curation chain: quality gate -> langid -> exact dedup
-        # (first doc_id per normalized text) -> per-language rollup; composed
-        # from the same expressions as the individual oracles above
-        "corpus_clean": f"""
-            WITH base AS (
-              SELECT doc_id, text,
-                     len(string_split_regex({_NORM_SQL}, '\\s+')) AS n_tok,
-                     length({_NORM_SQL})::DOUBLE AS n_chars,
-                     len(regexp_extract_all(text, '[^\\w\\s]'))::DOUBLE AS n_punct,
-                     len(list_filter(string_split_regex({_NORM_SQL}, '\\s+'),
-                                     t -> list_contains({sw_en}, t)))::DOUBLE AS sw,
-                     {", ".join(f"{langid_ratio[lang]} AS r_{lang}" for lang in sorted(textops._STOPWORDS))}
-              FROM documents),
-            scored AS (
-              SELECT doc_id, text, n_tok,
-                     (n_tok >= 5 AND n_chars / greatest(n_tok, 1) >= 2.0
-                      AND n_chars / greatest(n_tok, 1) <= 12.0
-                      AND n_punct / greatest(length(text), 1) <= 0.3
-                      AND sw / greatest(n_tok, 1) >= 0.01) AS keep,
-                     CASE WHEN {best} <= 0 THEN 'und'
-                          {' '.join(f"WHEN r_{lang} = {best} THEN '{lang}'" for lang in sorted(textops._STOPWORDS)[:-1])}
-                          ELSE '{sorted(textops._STOPWORDS)[-1]}' END AS lang_pred
-              FROM base),
-            ded AS (
-              SELECT lang_pred, n_tok,
-                     ROW_NUMBER() OVER (PARTITION BY {_NORM_SQL} ORDER BY doc_id) AS rn
-              FROM scored WHERE keep)
-            SELECT lang_pred, COUNT(*) AS n_docs,
-                   CAST(SUM(n_tok) AS BIGINT) AS n_tokens
-            FROM ded WHERE rn = 1 GROUP BY lang_pred
-        """,
-        "strip_boilerplate": """
-            WITH deco AS (
-              SELECT doc_id,
-                     'cookie banner accept all' || chr(10) ||
-                     'promo ' || CAST(doc_id % 7 AS STRING) || chr(10) ||
-                     text ||
-                     chr(10) || 'sig ' || CAST(doc_id % 97 AS STRING) AS text
-              FROM documents),
-            l AS (
-              SELECT doc_id, u.pos AS pos, u.line AS line FROM (
-                SELECT doc_id,
-                       unnest(list_transform(range(1, len(ls) + 1),
-                              i -> struct_pack(pos := i, line := ls[i]))) AS u
-                FROM (SELECT doc_id, string_split(text, chr(10)) AS ls FROM deco))),
-            hot AS (
-              SELECT line FROM (
-                SELECT line, count(DISTINCT doc_id) AS line_df FROM l GROUP BY line)
-              WHERE line_df > 50),
-            kept AS (SELECT * FROM l WHERE line NOT IN (SELECT line FROM hot)),
-            reb AS (
-              SELECT doc_id, string_agg(line, chr(10) ORDER BY pos) AS clean_text
-              FROM kept GROUP BY doc_id)
-            SELECT d.doc_id, COALESCE(reb.clean_text, '') AS clean_text
-            FROM documents d LEFT JOIN reb ON d.doc_id = reb.doc_id
-        """,
-        # keep-first per segment STRING (Spark keys the xxhash64 of the
-        # segment — cross-representation); min_chars=1 ⇒ empty segments are
-        # never dedup candidates
-        "paragraph_dedup_docs": """
-            WITH deco AS (
-              SELECT doc_id,
-                     'cookie banner accept all' || chr(10) ||
-                     'promo ' || CAST(doc_id % 7 AS STRING) || chr(10) ||
-                     text AS text
-              FROM documents),
-            l AS (
-              SELECT doc_id, u.pos AS pos, u.seg AS seg FROM (
-                SELECT doc_id, unnest(list_transform(range(1, len(ls) + 1),
-                       i -> struct_pack(pos := i, seg := ls[i]))) AS u
-                FROM (SELECT doc_id, string_split(text, chr(10)) AS ls FROM deco))),
-            r AS (
-              SELECT *, ROW_NUMBER() OVER (PARTITION BY seg ORDER BY doc_id, pos) AS rn
-              FROM l),
-            kept AS (SELECT * FROM r WHERE length(seg) < 1 OR rn = 1),
-            reb AS (
-              SELECT doc_id, string_agg(seg, chr(10) ORDER BY pos) AS clean_text
-              FROM kept GROUP BY doc_id)
-            SELECT d.doc_id, COALESCE(reb.clean_text, '') AS clean_text
-            FROM documents d LEFT JOIN reb ON d.doc_id = reb.doc_id
-        """,
-        # NOT EXISTS on the normalized text itself (Spark anti-joins the
-        # 8-byte xxhash64 — cross-representation); the +1000000 id shift is
-        # divisible by 5, so alias-vs-column binding of doc_id % 5 cannot
-        # diverge between engines
-        "incremental_dedup": f"""
-            WITH newb AS (
-              SELECT doc_id + 1000000 AS doc_id,
-                     CASE WHEN doc_id % 5 = 0 THEN text
-                          ELSE text || ' :: delta ' || CAST(doc_id AS STRING) END AS text,
-                     source
-              FROM documents)
-            SELECT n.doc_id, n.source FROM newb n
-            WHERE NOT EXISTS (
-              SELECT 1 FROM documents r
-              WHERE {_NORM_SQL.replace("(text)", "(r.text)")} =
-                    {_NORM_SQL.replace("(text)", "(n.text)")})
-        """,
-        # integer-exact rollup (// = DuckDB int division, `div` on the Spark
-        # side); n_unique counts distinct NORMALIZED TEXT where Spark counts
-        # distinct xxhash64 — cross-representation
-        "source_reputation": f"""
-            WITH deco AS (
-              SELECT doc_id, source,
-                     CASE WHEN doc_id % 4 = 0
-                          THEN 'duplicate filler block for source ' || source
-                          ELSE text END AS text
-              FROM documents),
-            f AS (
-              SELECT source, text,
-                     {_NORM_SQL} AS norm,
-                     len(string_split_regex({_NORM_SQL}, '\\s+')) AS n_tok,
-                     length({_NORM_SQL})::DOUBLE AS n_chars,
-                     len(regexp_extract_all(text, '[^\\w\\s]'))::DOUBLE AS n_punct,
-                     len(list_filter(string_split_regex({_NORM_SQL}, '\\s+'),
-                                     t -> list_contains({sw_en}, t)))::DOUBLE AS sw
-              FROM deco),
-            g AS (
-              SELECT source, norm, n_tok,
-                     (n_tok >= 5 AND n_chars / greatest(n_tok, 1) >= 2.0
-                      AND n_chars / greatest(n_tok, 1) <= 12.0
-                      AND n_punct / greatest(length(text), 1) <= 0.3
-                      AND sw / greatest(n_tok, 1) >= 0.01) AS keep
-              FROM f)
-            SELECT source,
-                   CAST(count(*) AS BIGINT) AS n_docs,
-                   CAST(count(DISTINCT norm) AS BIGINT) AS n_unique,
-                   CAST((count(*) - count(DISTINCT norm)) * 10000 // count(*) AS BIGINT) AS dup_rate_e4,
-                   CAST(sum(n_tok) * 1000 // count(*) AS BIGINT) AS mean_tokens_m,
-                   CAST(sum(CASE WHEN keep THEN 1 ELSE 0 END) * 10000 // count(*) AS BIGINT) AS keep_rate_e4
-            FROM g GROUP BY source
-        """,
-        # identical md5 draw replayed in SQL — same hex prefix, same
-        # thresholds (0.5 -> '80000000', 0.25 -> '40000000')
-        "stratified_sample": """
-            SELECT doc_id, source FROM documents
-            WHERE substring(md5(CAST(doc_id AS STRING) || 'r5'), 1, 8) <
-                  CASE WHEN CAST(substring(source, 4) AS INT) % 2 = 0
-                       THEN '80000000' ELSE '40000000' END
-        """,
-        # same 32-token/8-overlap windows via generate_series (step 24) +
-        # 1-based inclusive list slices (both engines clamp at the tail)
-        "chunk_docs": f"""
-            WITH t AS (
-              SELECT doc_id,
-                     list_filter(string_split_regex({_NORM_SQL}, '\\s+'),
-                                 x -> x != '') AS toks
-              FROM documents),
-            nz AS (SELECT * FROM t WHERE len(toks) > 0),
-            s AS (SELECT doc_id, toks,
-                         unnest(generate_series(0, len(toks) - 1, 24)) AS cs
-                  FROM nz)
-            SELECT doc_id,
-                   CAST(cs // 24 AS INT) AS chunk_id,
-                   CAST(cs AS BIGINT) AS chunk_start,
-                   CAST(len(toks[cs + 1 : cs + 32]) AS INT) AS n_chunk_tokens,
-                   array_to_string(toks[cs + 1 : cs + 32], ' ') AS chunk_text
-            FROM s
-        """,
-        # ICU nfc_normalize vs the pandas/ICU Arrow kernel — the tails are
-        # the SAME Python strings the Spark query decorates with
-        "unicode_nfc": f"""
-            WITH deco AS (
-              SELECT doc_id,
-                     text || CASE WHEN doc_id % 3 = 0
-                                  THEN '{_NFC_DECOMPOSED_TAIL}'
-                                  ELSE '{_NFC_COMPOSED_TAIL}' END AS text
-              FROM documents)
-            SELECT doc_id, nfc_normalize(text) AS nfc_text,
-                   CAST(nfc_normalize(text) != text AS INT) AS nfc_text_changed_int
-            FROM deco
-        """,
-        # identical bucket math (two md5 hex chars -> 0..255) over the
-        # regenerated integer weight table; integer sums, so bit-exact
-        "hashed_quality": f"""
-            WITH t AS (
-              SELECT doc_id, text,
-                     list_filter(string_split_regex({_NORM_SQL}, '\\s+'),
-                                 x -> x != '') AS toks
-              FROM documents),
-            s AS (
-              SELECT doc_id, text, toks,
-                     CAST(COALESCE(list_sum(list_transform(toks, x -> {_wlist}[
-                       ((instr('0123456789abcdef', substring(md5(x), 1, 1)) - 1) * 16 +
-                        (instr('0123456789abcdef', substring(md5(x), 2, 1)) - 1)) % 256 + 1])),
-                       0) AS BIGINT) AS score_sum
-              FROM t)
-            SELECT doc_id, text, CAST(len(toks) AS INT) AS n_tokens_scored,
-                   score_sum, CAST(score_sum > 0 AS INT) AS keep_int
-            FROM s
-        """,
-        # one global window cumsum + generate_series over crossed bins —
-        # the sequential definition the slice-local Spark path must match
-        "pack_sequences": f"""
-            WITH t AS (
-              SELECT doc_id,
-                     len(list_filter(string_split_regex({_NORM_SQL}, '\\s+'),
-                                     x -> x != '')) AS n_tokens
-              FROM documents),
-            nz AS (SELECT * FROM t WHERE n_tokens > 0),
-            c AS (SELECT doc_id, n_tokens,
-                         CAST(SUM(n_tokens) OVER (ORDER BY doc_id
-                           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                           AS BIGINT) AS cum
-                  FROM nz),
-            s AS (SELECT doc_id, n_tokens, cum, cum - n_tokens AS gs,
-                         unnest(generate_series((cum - n_tokens) // 32,
-                                                (cum - 1) // 32)) AS seq_id
-                  FROM c)
-            SELECT doc_id,
-                   CAST(n_tokens AS BIGINT) AS n_tokens,
-                   CAST(seq_id AS BIGINT) AS seq_id,
-                   CAST(greatest(gs, seq_id * 32) - seq_id * 32 AS BIGINT)
-                     AS seq_pos,
-                   CAST(greatest(gs, seq_id * 32) - gs AS BIGINT)
-                     AS doc_tok_start,
-                   CAST(least(cum, (seq_id + 1) * 32)
-                        - greatest(gs, seq_id * 32) AS BIGINT) AS piece_tokens
-            FROM s
-        """,
-        # same md5 draw, same integer feasibility math (T = min(c*D div w)),
-        # keep test replayed as the HUGEINT cross-multiplied comparison
-        "rebalance_mixture": """
-            WITH w AS (
-              SELECT source,
-                     CASE WHEN CAST(substring(source, 4) AS INT) % 2 = 0
-                          THEN 3 ELSE 1 END AS wt,
-                     COUNT(*) AS c
-              FROM documents GROUP BY source),
-            dd AS (SELECT SUM(wt) AS d FROM w),
-            tt AS (SELECT MIN(c * (SELECT d FROM dd) // wt) AS t FROM w)
-            SELECT doc_id, source
-            FROM documents JOIN w USING (source)
-            WHERE ('0x' || substring(md5(CAST(doc_id AS STRING) || 'r5mix'),
-                                     1, 8))::BIGINT::HUGEINT
-                    * (SELECT d FROM dd) * c
-                  < wt::HUGEINT * (SELECT t FROM tt) * 4294967296
-        """,
-        # the sequential definition of the shuffle permutation — one global
-        # row_number the distributed two-level ranking must reproduce
-        "corpus_shuffle": """
-            SELECT doc_id,
-                   CAST(ROW_NUMBER() OVER (
-                     ORDER BY md5(CAST(doc_id AS STRING) || 'r5sh'), doc_id)
-                     - 1 AS BIGINT) AS shuffle_rank
-            FROM documents
-        """,
-        # CDXJ lines rebuilt with DuckDB's own primitives (the SURT here
-        # replays the host-reverse/path form these portless, userinfo-free
-        # URLs exercise — the full port/userinfo/default-port branches are
-        # pinned in tests/test_cdx.py), then PARSED back independently:
-        # split_part for the two head fields + a length-offset substring
-        # for the JSON (DuckDB has no limit-split), json_extract_string,
-        # strptime/strftime for the ts14 round-trip, and the keep-newest
-        # window — every stage of the Spark path cross-checked
-        "cdx_latest_captures": """
-            WITH u AS (
-              SELECT doc_id, text, source, n_chars,
-                     'http://www.' || source || '.example.com/doc/'
-                       || CAST(doc_id % 400 AS VARCHAR) AS url,
-                     '202401'
-                       || lpad(CAST((doc_id % 28) + 1 AS VARCHAR), 2, '0')
-                       || lpad(CAST(doc_id % 24 AS VARCHAR), 2, '0')
-                       || lpad(CAST((doc_id * 7) % 60 AS VARCHAR), 2, '0')
-                       || '00' AS ts14,
-                     CASE WHEN doc_id % 17 = 0 THEN '404' ELSE '200' END
-                       AS status
-              FROM documents),
-            lines AS (
-              SELECT array_to_string(list_reverse(string_split(
-                       lower(regexp_extract(url,
-                         '^[A-Za-z][A-Za-z0-9+.\\-]*://([^/?#]*)', 1)), '.')), ',')
-                     || ')'
-                     || regexp_extract(url,
-                          '^[A-Za-z][A-Za-z0-9+.\\-]*://[^/?#]*([^#]*)', 1)
-                     || ' ' || ts14
-                     || ' {"url": "' || url
-                     || '", "mime": "text/html", "status": "' || status
-                     || '", "digest": "sha1:' || upper(md5(text))
-                     || '", "length": "' || CAST(n_chars AS VARCHAR)
-                     || '", "offset": "' || CAST(doc_id * 1000 AS VARCHAR)
-                     || '", "filename": "crawl-' || source || '.warc.gz"}'
-                     AS line
-              FROM u),
-            p AS (
-              SELECT split_part(line, ' ', 1) AS surt,
-                     strptime(split_part(line, ' ', 2), '%Y%m%d%H%M%S')
-                       AS fetch_ts,
-                     substring(line, len(split_part(line, ' ', 1))
-                                     + len(split_part(line, ' ', 2)) + 3)
-                       AS js
-              FROM lines),
-            q AS (
-              SELECT surt, fetch_ts,
-                     json_extract_string(js, '$.url') AS url,
-                     CAST(json_extract_string(js, '$.status') AS INT)
-                       AS status,
-                     json_extract_string(js, '$.digest') AS digest,
-                     json_extract_string(js, '$.filename') AS warc_filename,
-                     CAST(json_extract_string(js, '$.offset') AS BIGINT)
-                       AS warc_offset,
-                     CAST(json_extract_string(js, '$.length') AS BIGINT)
-                       AS warc_length
-              FROM p),
-            k AS (
-              SELECT *, ROW_NUMBER() OVER (
-                       PARTITION BY surt
-                       ORDER BY fetch_ts DESC, warc_offset DESC,
-                                warc_filename DESC) AS rn
-              FROM q WHERE status = 200)
-            SELECT surt, url, strftime(fetch_ts, '%Y%m%d%H%M%S') AS ts14,
-                   digest, warc_filename, warc_offset, warc_length
-            FROM k WHERE rn = 1
-        """,
-        # change-rate estimator replayed with DuckDB's own primitives:
-        # epoch() seconds + integer //, greatest/least clamps, and the
-        # interval-add done as native timestamp arithmetic (Spark does
-        # timestamp_seconds(epoch + interval) — cross-checked shapes)
-        "recrawl_due": """
-            WITH caps AS (
-              SELECT 'com,example,www)/doc/' || CAST(doc_id % 400 AS STRING) AS surt,
-                     strptime('202401'
-                       || lpad(CAST((doc_id % 28) + 1 AS STRING), 2, '0')
-                       || lpad(CAST(doc_id % 24 AS STRING), 2, '0')
-                       || lpad(CAST((doc_id * 7) % 60 AS STRING), 2, '0')
-                       || '00', '%Y%m%d%H%M%S') AS fetch_ts,
-                     md5(CAST(doc_id % 400 AS STRING) || ':' ||
-                         CAST(CASE WHEN (doc_id % 400) % 4 = 1 THEN doc_id // 400
-                                   WHEN (doc_id % 400) % 4 = 0 THEN 0
-                                   ELSE (doc_id // 400) // 2 END AS STRING)) AS digest
-              FROM documents),
-            agg AS (
-              SELECT surt, COUNT(*) AS n_captures,
-                     COUNT(DISTINCT digest) AS n_versions,
-                     CAST(epoch(MIN(fetch_ts)) AS BIGINT) AS first_s,
-                     CAST(epoch(MAX(fetch_ts)) AS BIGINT) AS last_s,
-                     MAX(fetch_ts) AS last_ts
-              FROM caps GROUP BY surt),
-            iv AS (
-              SELECT *, greatest(86400, least(2592000,
-                       CASE WHEN n_versions > 1
-                            THEN (last_s - first_s) // (n_versions - 1)
-                            ELSE 2592000 END)) AS interval_s
-              FROM agg)
-            SELECT surt, n_captures, n_versions, interval_s,
-                   strftime(last_ts, '%Y%m%d%H%M%S') AS last14,
-                   strftime(last_ts + interval_s * INTERVAL 1 SECOND,
-                            '%Y%m%d%H%M%S') AS next_due14,
-                   CAST(last_ts + interval_s * INTERVAL 1 SECOND
-                        <= TIMESTAMP '2024-02-10 00:00:00' AS INT) AS due_int
-            FROM iv
-        """,
-        "warc_fetch_plan": """
-            WITH caps AS (
-              SELECT 'http://www.' || source || '.example.com/doc/'
-                       || CAST(doc_id % 400 AS STRING) AS url,
-                     'crawl-' || source || '.warc.gz' AS warc_filename,
-                     doc_id * 1000 AS warc_offset,
-                     CAST(n_chars AS BIGINT) AS warc_length
-              FROM documents),
-            p1 AS (
-              SELECT *, ROW_NUMBER() OVER w - 1 AS rs,
-                     lag(warc_offset + warc_length) OVER w AS prev_end,
-                     COUNT(*) OVER (PARTITION BY warc_filename) AS nfr,
-                     SUM(warc_length) OVER (PARTITION BY warc_filename) AS fb
-              FROM caps
-              WINDOW w AS (PARTITION BY warc_filename
-                           ORDER BY warc_offset, warc_length, url)),
-            p2 AS (
-              SELECT *, CASE WHEN prev_end IS NULL
-                               OR warc_offset - prev_end > 19700
-                             THEN 1 ELSE 0 END AS brk
-              FROM p1)
-            SELECT url, warc_filename, warc_offset,
-                   CAST(rs AS INT) AS read_seq,
-                   rs // 10 AS task_id,
-                   CAST(nfr AS BIGINT) AS n_file_ranges,
-                   CAST(fb AS BIGINT) AS file_bytes,
-                   CAST(SUM(brk) OVER (
-                     PARTITION BY warc_filename
-                     ORDER BY warc_offset, warc_length, url
-                     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - 1
-                     AS BIGINT) AS request_id
-            FROM p2
-        """,
-        "pii_redaction": pii_sql,
-        # 5-gram shingles (same short-doc whole-text fallback as the Spark
-        # shingles(); every 50th doc is the benchmark suite); join on the
-        # shingle STRING — Spark joins on its xxhash64, so the identity is
-        # checked across representations, not circularly
-        "contamination_screen": f"""
-            WITH toks AS (
-              SELECT doc_id, string_split_regex({_NORM_SQL}, '\\s+') AS t
-              FROM documents),
-            sh AS (
-              SELECT doc_id, unnest(list_distinct(
-                CASE WHEN len(t) >= 5
-                     THEN list_transform(generate_series(1, len(t) - 4),
-                                         i -> array_to_string(t[i:i+4], ' '))
-                     ELSE [array_to_string(t, ' ')] END)) AS shingle
-              FROM toks),
-            bsh AS (SELECT DISTINCT shingle FROM sh WHERE doc_id % 50 = 0),
-            ov AS (
-              SELECT s.doc_id, COUNT(*) AS n_overlap
-              FROM sh s JOIN bsh USING (shingle) GROUP BY s.doc_id)
-            SELECT d.doc_id,
-                   CAST(COALESCE(ov.n_overlap, 0) AS BIGINT) AS n_overlap,
-                   CAST(COALESCE(ov.n_overlap, 0) >= 1 AS INT) AS contaminated_int
-            FROM documents d LEFT JOIN ov ON d.doc_id = ov.doc_id
-        """,
-        "strip_boilerplate_norm": """
-            WITH deco AS (
-              SELECT doc_id,
-                     CASE WHEN doc_id % 2 = 0
-                          THEN 'promo ' || CAST(doc_id % 7 AS STRING)
-                          ELSE 'PROMO   ' || CAST(doc_id % 7 AS STRING) || ' '
-                     END || chr(10) ||
-                     text ||
-                     chr(10) || 'sig ' || CAST(doc_id % 97 AS STRING) AS text
-              FROM documents),
-            l AS (
-              SELECT doc_id, u.pos AS pos, u.line AS line FROM (
-                SELECT doc_id,
-                       unnest(list_transform(range(1, len(ls) + 1),
-                              i -> struct_pack(pos := i, line := ls[i]))) AS u
-                FROM (SELECT doc_id, string_split(text, chr(10)) AS ls FROM deco))),
-            hot AS (
-              SELECT key FROM (
-                SELECT trim(regexp_replace(lower(line), '\\s+', ' ', 'g')) AS key,
-                       count(DISTINCT doc_id) AS line_df
-                FROM l GROUP BY key)
-              WHERE line_df > 50),
-            kept AS (
-              SELECT * FROM l
-              WHERE trim(regexp_replace(lower(line), '\\s+', ' ', 'g'))
-                    NOT IN (SELECT key FROM hot)),
-            reb AS (
-              SELECT doc_id, string_agg(line, chr(10) ORDER BY pos) AS clean_text
-              FROM kept GROUP BY doc_id)
-            SELECT d.doc_id, COALESCE(reb.clean_text, '') AS clean_text
-            FROM documents d LEFT JOIN reb ON d.doc_id = reb.doc_id
-        """,
-        "token_budget_sample": f"""
-            SELECT doc_id, source, cum_tokens FROM (
-              SELECT doc_id, source,
-                     CAST(SUM(len(string_split_regex({_NORM_SQL}, '\\s+')))
-                          OVER (PARTITION BY source ORDER BY doc_id
-                                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                          AS BIGINT) AS cum_tokens
-              FROM documents)
-            WHERE cum_tokens <= 500
-        """,
-        "corpus_clean_full": f"""
-            WITH base AS (
-              SELECT doc_id, text,
-                     len(string_split_regex({_NORM_SQL}, '\\s+')) AS n_tok,
-                     length({_NORM_SQL})::DOUBLE AS n_chars,
-                     len(regexp_extract_all(text, '[^\\w\\s]'))::DOUBLE AS n_punct,
-                     len(list_filter(string_split_regex({_NORM_SQL}, '\\s+'),
-                                     t -> list_contains({sw_en}, t)))::DOUBLE AS sw,
-                     {", ".join(f"{langid_ratio[lang]} AS r_{lang}" for lang in sorted(textops._STOPWORDS))}
-              FROM documents),
-            tg AS (
-              SELECT doc_id,
-                     CAST(floor(max(n) * 10000 / sum(n)) AS BIGINT) AS top_frac
-              FROM (SELECT doc_id, tok, count(*) AS n
-                    FROM (SELECT doc_id,
-                                 unnest(string_split_regex({_NORM_SQL}, '\\s+')) AS tok
-                          FROM documents)
-                    GROUP BY doc_id, tok)
-              GROUP BY doc_id),
-            scored AS (
-              SELECT b.doc_id, b.text, b.n_tok,
-                     (b.n_tok >= 5 AND b.n_chars / greatest(b.n_tok, 1) >= 2.0
-                      AND b.n_chars / greatest(b.n_tok, 1) <= 12.0
-                      AND b.n_punct / greatest(length(b.text), 1) <= 0.3
-                      AND b.sw / greatest(b.n_tok, 1) >= 0.01
-                      AND tg.top_frac <= 1200) AS keep,
-                     CASE WHEN {best} <= 0 THEN 'und'
-                          {' '.join(f"WHEN r_{lang} = {best} THEN '{lang}'" for lang in sorted(textops._STOPWORDS)[:-1])}
-                          ELSE '{sorted(textops._STOPWORDS)[-1]}' END AS lang_pred
-              FROM base b JOIN tg ON b.doc_id = tg.doc_id),
-            ded AS (
-              SELECT lang_pred, n_tok,
-                     ROW_NUMBER() OVER (PARTITION BY {_NORM_SQL} ORDER BY doc_id) AS rn
-              FROM scored WHERE keep)
-            SELECT lang_pred, COUNT(*) AS n_docs,
-                   CAST(SUM(n_tok) AS BIGINT) AS n_tokens
-            FROM ded WHERE rn = 1 GROUP BY lang_pred
-        """,
-        "link_graph_degrees": f"""
-            {_LINK_CTE}{_HOST_EDGE_CTE}
-            SELECT host, CAST(SUM(od) AS BIGINT) AS out_degree,
-                   CAST(SUM(idg) AS BIGINT) AS in_degree,
-                   CAST(SUM(ow) AS BIGINT) AS out_links,
-                   CAST(SUM(iw) AS BIGINT) AS in_links
-            FROM (
-              SELECT src_host AS host, 1 AS od, 0 AS idg, weight AS ow, 0 AS iw
-              FROM he
-              UNION ALL
-              SELECT dst_host AS host, 0 AS od, 1 AS idg, 0 AS ow, weight AS iw
-              FROM he)
-            GROUP BY host
-        """,
-        "pagerank_hosts": _pagerank_oracle_sql(iterations=5),
-        "hits_hosts": _hits_oracle_sql(iterations=3),
-        "seed_expansion_hosts": f"""
-            {_LINK_CTE.replace("WITH l AS", "WITH RECURSIVE l AS", 1)}{_HOST_EDGE_CTE},
-            reach(host, hop) AS (
-              SELECT * FROM (VALUES ('forum1.example.com', 0),
-                                    ('forum2.example.com', 0)) t(host, hop)
-              UNION
-              SELECT he.dst_host, r.hop + 1
-              FROM reach r JOIN he ON he.src_host = r.host
-              WHERE r.hop < 2)
-            SELECT host, MIN(hop) AS hop FROM reach GROUP BY host
-        """,
-        "crawl_trap_hosts": f"""
-            {_URL_CTE},
-            h AS (SELECT {_host_sql('url')} AS host, url,
-                         regexp_replace(regexp_extract(url,
-                           '^[A-Za-z][A-Za-z0-9+.\\-]*://[^/?#]*([^#]*)', 1),
-                           '[0-9]+', 'N', 'g') AS tpl
-                  FROM u),
-            g AS (SELECT host, COUNT(DISTINCT url) AS n_urls,
-                         COUNT(DISTINCT tpl) AS n_templates
-                  FROM h WHERE host <> '' GROUP BY host)
-            SELECT host, n_urls, n_templates,
-                   CAST(n_urls * 10000 // n_templates AS BIGINT) AS ratio_e4,
-                   CAST(CASE WHEN n_urls >= 10
-                              AND (n_urls * 10000 // n_templates) >= 220000
-                             THEN 1 ELSE 0 END AS INT) AS is_trap_int
-            FROM g
-        """,
-        "anchor_text_top": f"""
-            {_LINK_CTE},
-            ga AS (SELECT {_host_sql('link_url')} AS dst_host,
-                          anchor_text AS anchor FROM l),
-            gc AS (SELECT dst_host, anchor, COUNT(*) AS n_top FROM ga
-                   WHERE dst_host <> '' AND anchor <> ''
-                   GROUP BY dst_host, anchor),
-            w AS (SELECT dst_host, anchor, n_top,
-                         CAST(SUM(n_top) OVER (PARTITION BY dst_host) AS BIGINT)
-                           AS n_links,
-                         ROW_NUMBER() OVER (PARTITION BY dst_host
-                           ORDER BY n_top DESC, anchor ASC) AS rn
-                  FROM gc)
-            SELECT dst_host, anchor AS top_anchor, n_links, n_top
-            FROM w WHERE rn = 1
-        """,
-        "robots_sitemaps": f"""
-            WITH r AS (SELECT DISTINCT user_id, {_ROBOTS_TXT_SQL} AS robots_txt
-                       FROM events)
-            SELECT user_id,
-                   unnest(regexp_extract_all(robots_txt,
-                     '{sitemap_mod.SITEMAP_DIRECTIVE_PATTERN}', 1)) AS sitemap_url
-            FROM r
-        """,
-        "sitemap_urls": f"""
-            WITH b AS (SELECT user_id, {_SM_BLOCK_SQL} AS blk FROM events),
-            x AS (SELECT user_id,
-                         CASE WHEN user_id % 10 = 0 THEN '<sitemapindex>'
-                              ELSE '<urlset>' END
-                         || string_agg(blk, '' ORDER BY blk)
-                         || CASE WHEN user_id % 10 = 0 THEN '</sitemapindex>'
-                                 ELSE '</urlset>' END AS xml
-                  FROM b GROUP BY user_id),
-            e AS (SELECT user_id,
-                         CASE WHEN xml LIKE '%<sitemapindex%' THEN 'sitemap'
-                              ELSE 'url' END AS kind,
-                         unnest(string_split_regex(xml, '</url>|</sitemap>'))
-                           AS blk2
-                  FROM x)
-            SELECT user_id, kind,
-                   regexp_extract(blk2, '{sitemap_mod.LOC_PATTERN}', 1) AS loc,
-                   regexp_extract(blk2, '{sitemap_mod.LASTMOD_PATTERN}', 1)
-                     AS lastmod_s
-            FROM e
-            WHERE regexp_extract(blk2, '{sitemap_mod.LOC_PATTERN}', 1) <> ''
-        """,
-        "domain_quota_sample": """
-            SELECT doc_id, source FROM (
-              SELECT doc_id, source,
-                     ROW_NUMBER() OVER (
-                       PARTITION BY source
-                       ORDER BY md5(CAST(doc_id AS STRING) || '') ASC,
-                                doc_id ASC) AS rn
-              FROM documents)
-            WHERE rn <= 10
-        """,
-        # eTLD+1 replayed through the identical regexes (linkgraph.domain_sql)
-        "registrable_domains": f"""
-            WITH h AS (SELECT {_DOMAIN_HOST_SQL} AS host FROM events),
-            d AS (SELECT host, {linkgraph.domain_sql('host')} AS domain FROM h)
-            SELECT domain, COUNT(*) AS n_rows, COUNT(DISTINCT host) AS n_hosts
-            FROM d GROUP BY domain
-        """,
-        "embedding_knn": """
-            SELECT query_id, vec_id,
-                   CAST(floor(cos_sim * 10000) AS BIGINT) AS cos_sim_e4
-            FROM (
-                SELECT q.vec_id AS query_id, c.vec_id AS vec_id,
-                       list_cosine_similarity(q.embedding::DOUBLE[], c.embedding::DOUBLE[]) AS cos_sim,
-                       ROW_NUMBER() OVER (
-                         PARTITION BY q.vec_id
-                         ORDER BY list_cosine_similarity(q.embedding::DOUBLE[], c.embedding::DOUBLE[]) DESC,
-                                  c.vec_id ASC) AS knn_rank
-                FROM embeddings q CROSS JOIN embeddings c
-                WHERE q.vec_id < 5)
-            WHERE knn_rank <= 10
-        """,
-        "embedding_near_dup": """
-            WITH u AS (
-              SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings WHERE vec_id < 300
-              UNION ALL
-              SELECT vec_id + 1000 AS vec_id,
-                     list_transform(embedding::DOUBLE[], x -> x * 0.9 + 0.01) AS emb
-              FROM embeddings WHERE vec_id < 5)
-            SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-                   CAST(floor(list_cosine_similarity(a.emb, b.emb) * 10000) AS BIGINT) AS cos_sim_e4
-            FROM u a JOIN u b ON a.vec_id < b.vec_id
-            WHERE list_cosine_similarity(a.emb, b.emb) >= 0.35
         """,
     }

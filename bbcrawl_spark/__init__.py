@@ -13,13 +13,12 @@ urlkit      Go net/url-parity URL functions + xxhash64 (pure Python)
 htmlkit     minimal DOM + walkTree-parity traversal (pure Python)
 extract     vB4-attachment / src / link / text extraction (pure Python core)
 pagers      pager -> frontier DataFrame generators (query / cutter / vb4)
-config      crawl configuration (pager/crawler specs, politeness budget)
-cli         the reference's positional CLI grammar -> CrawlConfig
-operators/  dedup (bloom + anti-join), politeness windows, robots, priority,
-            text ops (minhash/simhash/quality/langid), similarity search
-sources/    pages tables, synthetic board-site generator, warehouse layer
-plans/      the per-round crawl batch job + multi-round driver loop
-functions/  pandas UDFs + column-expression builders
+cmdline     the reference's positional CLI grammar -> CrawlConfig
+__main__    the crawl CLI (``python -m bbcrawl_spark``)
+operators/  dedup (Bloom + anti-join), politeness windows, robots, priority
+sources/    WARC -> pages table, synthetic board-site generator, warehouse
+plans/      the per-round crawl batch job + multi-round driver; session
+functions/  the fused extraction pandas UDF + column-expression builders
 oracle      sequential pure-Python crawl oracle (reference-loop semantics)
 """
 

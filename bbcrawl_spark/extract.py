@@ -67,7 +67,7 @@ def _resolve(page_url: str, link: str) -> tuple[str, str]:
 # ---------------------------------------------------------------------------
 
 def extract_vb_attachments(
-    html_text: str, page_url: str, headernames: bool = False, parser=None
+    html_text: str, page_url: str, headernames: bool = False
 ) -> list[ExtractedFile]:
     """Mirror of ``VBAttachmentCrawler.Crawl``.
 
@@ -79,7 +79,7 @@ def extract_vb_attachments(
     (afterdownload.go:27-46).
     """
     return extract_vb_attachments_from_doc(
-        htmlkit.parse_html(html_text, parser=parser), page_url, headernames
+        htmlkit.parse_html(html_text), page_url, headernames
     )
 
 
@@ -179,13 +179,12 @@ def extract_srcs(
     page_num: int,
     tags: tuple[str, ...] = SRC_TAGS,
     attrs: list[tuple[str, str]] | None = None,
-    parser=None,
 ) -> list[ExtractedFile]:
     """Mirror of ``SrcCrawler.Crawl``: img -> src; audio/video -> scrapeAV
     (root src + child source/track srcs; 1 source = flat file, >1 =
     "{page}-{fileid}/" subdir with avTag-dedup'd names)."""
     return extract_srcs_from_doc(
-        htmlkit.parse_html(html_text, parser=parser), page_url, page_num, tags, attrs
+        htmlkit.parse_html(html_text), page_url, page_num, tags, attrs
     )
 
 
@@ -332,12 +331,12 @@ def deterministic_name(src: str, name: str) -> str:
 # H10: text extraction + frontier link extraction (graft ops)
 # ---------------------------------------------------------------------------
 
-def extract_text(html_text: str, parser=None) -> str:
+def extract_text(html_text: str) -> str:
     """Deterministic text serialization: concatenation of text-node data in
     walkTree DFS document order, skipping script/style subtrees. This IS the
     byte-identical text contract (north_star) — pinned by golden fixtures
     and shared verbatim between the Spark UDF and the oracle."""
-    return extract_text_from_doc(htmlkit.parse_html(html_text, parser=parser))
+    return extract_text_from_doc(htmlkit.parse_html(html_text))
 
 
 def extract_text_from_doc(doc: Node) -> str:
@@ -366,11 +365,11 @@ class ExtractedLink:
     anchor_text: str = ""
 
 
-def extract_links(html_text: str, page_url: str, parser=None) -> list[ExtractedLink]:
+def extract_links(html_text: str, page_url: str) -> list[ExtractedLink]:
     """All <a href> links in document order, resolved with the reference's
     rel2abs semantics — frontier growth for the crawl loop (graft; the
     reference generates next pages via pagers instead of extracting them)."""
-    return extract_links_from_doc(htmlkit.parse_html(html_text, parser=parser), page_url)
+    return extract_links_from_doc(htmlkit.parse_html(html_text), page_url)
 
 
 def extract_links_from_doc(doc: Node, page_url: str) -> list[ExtractedLink]:

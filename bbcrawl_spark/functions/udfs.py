@@ -20,13 +20,12 @@ from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import (
     ArrayType,
     IntegerType,
-    LongType,
     StringType,
     StructField,
     StructType,
 )
 
-from .. import extract, urlkit
+from .. import extract
 from ..htmlkit import decode_html, parse_html
 
 # ---------------------------------------------------------------------------
@@ -57,7 +56,7 @@ def canonicalize_col(url: Column | str) -> Column:
     )
     path = F.regexp_extract(url, r"^[A-Za-z][A-Za-z0-9+.\-]*://[^/?#]*([^?#]*)", 1)
     path = F.when(path == "", F.lit("/")).otherwise(path)
-    query = F.regexp_extract(url, r"^[^#]*\?([^#]*)", 1)
+    query = F.regexp_extract(url, r"^[^#?]*\?([^#]*)", 1)
     return F.concat(
         scheme,
         F.lit("://"),
@@ -73,111 +72,12 @@ def url_hash_col(url: Column | str) -> Column:
     return F.xxhash64(canonicalize_col(url))
 
 
-#: query parameters that identify a CLICK, not a PAGE — ad/campaign and
-#: session trackers every large crawl strips before frontier dedup, or the
-#: same document enters the corpus once per referral campaign. Kept as a
-#: regex alternation in the Java ∩ RE2 dialect so DuckDB oracles replay it.
-TRACKING_PARAMS_RE = (
-    r"^(utm_[a-z]+|gclid|gclsrc|dclid|fbclid|msclkid|twclid|igshid|mc_cid"
-    r"|mc_eid|yclid|_hsenc|_hsmi|hsCtaTracking|ref_src|ref_url|spm|sessionid"
-    r"|phpsessid|jsessionid|sid)="
-)
-
-
-def normalize_query_col(
-    url: Column | str,
-    drop_re: str = TRACKING_PARAMS_RE,
-    sort_params: bool = True,
-) -> Column:
-    """URL-aliasing reduction for frontier dedup: drop tracking/session
-    query parameters and (by default) sort the survivors by byte order, so
-    ``?b=2&utm_source=x&a=1`` and ``?a=1&b=2`` collapse to one seen-set key.
-
-    Composes in FRONT of ``canonicalize_col``/``url_hash_col`` — the crawl
-    keys on ``xxhash64(canonicalize(normalize_query(url)))`` when alias
-    folding is wanted. Pure JVM array expressions (split → filter →
-    array_sort → rejoin) riding the scan: zero exchanges, zero Python, and
-    the regex dialect lets a DuckDB oracle replay the identical pass.
-
-    Deliberately NOT part of ``canonicalize_col`` itself: the reference's
-    canonical form keeps the query verbatim (F13 parity, bit-exact hash
-    contract), so alias folding is an opt-in layer above it. Parameter
-    order is meaningful to some endpoints — ``sort_params=False`` keeps
-    order and only strips trackers.
-    """
-    url = F.col(url) if isinstance(url, str) else url
-    pre = F.regexp_extract(url, r"^([^?#]*)", 1)
-    query = F.regexp_extract(url, r"^[^#]*\?([^#]*)", 1)
-    frag = F.regexp_extract(url, r"^[^#]*(#.*)", 1)
-    kept = F.filter(F.split(query, "&"), lambda p: ~p.rlike(drop_re))
-    if sort_params:
-        kept = F.array_sort(kept)
-    cleaned = F.array_join(kept, "&")
-    return F.concat(
-        pre,
-        F.when(cleaned == "", F.lit("")).otherwise(F.concat(F.lit("?"), cleaned)),
-        frag,
-    )
-
-
 # ---------------------------------------------------------------------------
-# pandas UDFs (Arrow-batched; each wraps the pure extraction core)
+# pandas UDF (Arrow-batched; wraps the pure extraction core)
 # ---------------------------------------------------------------------------
-
-
-@pandas_udf(StringType())
-def canonicalize_udf(url: pd.Series) -> pd.Series:
-    return url.map(lambda u: urlkit.canonicalize(u) if u else "")
-
-
-@pandas_udf(LongType())
-def url_hash_udf(url: pd.Series) -> pd.Series:
-    return url.map(lambda u: urlkit.url_hash(u) if u else 0)
-
-
-@pandas_udf(StringType())
-def resolve_links_udf(page_url: pd.Series, link: pd.Series) -> pd.Series:
-    """F3: reference rel2absURL semantics (NOT urljoin)."""
-
-    def _res(p, l):
-        if not l:
-            return ""
-        try:
-            return urlkit.rel2abs(p, l)
-        except ValueError:
-            return ""
-
-    return pd.Series([_res(p, l) for p, l in zip(page_url, link)])
-
-
-@pandas_udf(StringType())
-def decode_html_udf(html: pd.Series, content_type: pd.Series) -> pd.Series:
-    """F10: charset -> UTF-8 (BOM > Content-Type > <meta> > cp1252)."""
-    return pd.Series(
-        [
-            decode_html(bytes(b), ct) if b is not None else ""
-            for b, ct in zip(html, content_type)
-        ]
-    )
-
 
 #: default when the pages table carries no Content-Type column
 CT_DEFAULT = "text/html; charset=utf-8"
-
-
-@pandas_udf(StringType())
-def extract_text_udf(html: pd.Series, content_type: pd.Series) -> pd.Series:
-    """H10: byte-identical text per url. content_type drives the F10 decode
-    ladder (BOM > Content-Type charset > <meta> > cp1252); pass
-    ``F.lit(CT_DEFAULT)`` when the pages table has no Content-Type column."""
-    return pd.Series(
-        [
-            extract.extract_text(decode_html(bytes(b), ct or CT_DEFAULT))
-            if b is not None
-            else ""
-            for b, ct in zip(html, content_type)
-        ]
-    )
 
 
 LINK_SCHEMA = ArrayType(
@@ -190,27 +90,6 @@ LINK_SCHEMA = ArrayType(
         ]
     )
 )
-
-
-@pandas_udf(LINK_SCHEMA)
-def extract_links_udf(html: pd.Series, url: pd.Series, content_type: pd.Series) -> pd.Series:
-    """Frontier growth: all <a href>, doc order, rel2abs-resolved."""
-
-    def _one(b, u, ct):
-        if b is None:
-            return []
-        text = decode_html(bytes(b), ct or CT_DEFAULT)
-        return [
-            {
-                "link": l.link,
-                "abs_url": l.abs_url,
-                "element_index": l.element_index,
-                "anchor_text": l.anchor_text,
-            }
-            for l in extract.extract_links(text, u)
-        ]
-
-    return pd.Series([_one(b, u, ct) for b, u, ct in zip(html, url, content_type)])
 
 
 EXTRACTED_FILE_SCHEMA = ArrayType(
@@ -247,66 +126,6 @@ def _rows(files) -> list[dict]:
     ]
 
 
-def make_extract_vb_udf(headernames: bool = False):
-    """H9 flagship extraction: vB4 posts -> attachments -> named downloads.
-
-    ``headernames`` mirrors the reference's ``-names-from-header`` flag
-    (crawlers.go:295-305): out_name is the ``{postid}-{attid}`` prefix, to be
-    completed from the download's Content-Disposition header afterwards
-    (afterdownload.go:27-46) — see ``complete_headernames`` in plans/round.py.
-
-    Captures the ``htmlkit.set_parser`` registry at construction, like
-    ``make_extract_fused_udf``.
-    """
-    from .. import htmlkit
-
-    html_parser = htmlkit.resolve_parser()  # resolved + captured NOW — ships via cloudpickle
-
-    @pandas_udf(EXTRACTED_FILE_SCHEMA)
-    def extract_vb(html: pd.Series, url: pd.Series, content_type: pd.Series) -> pd.Series:
-        def _one(b, u, ct):
-            if b is None:
-                return []
-            text = decode_html(bytes(b), ct or CT_DEFAULT)
-            return _rows(extract.extract_vb_attachments(
-                text, u, headernames=headernames, parser=html_parser))
-
-        return pd.Series([_one(b, u, ct) for b, u, ct in zip(html, url, content_type)])
-
-    return extract_vb
-
-
-#: default (URL-derived names) variant, kept for existing call sites
-extract_vb_udf = make_extract_vb_udf(False)
-
-
-def make_extract_srcs_udf(tags: tuple[str, ...] = extract.SRC_TAGS,
-                          attrs: list[tuple[str, str]] | None = None):
-    """H7/H8: src crawler as a pandas UDF; tags/attrs are config-time
-    (the reference parses them from -tags/-attrs flags). Captures the
-    ``htmlkit.set_parser`` registry at construction."""
-    from .. import htmlkit
-
-    html_parser = htmlkit.resolve_parser()  # resolved + captured NOW — ships via cloudpickle
-
-    @pandas_udf(EXTRACTED_FILE_SCHEMA)
-    def extract_srcs_udf(
-        html: pd.Series, url: pd.Series, page_num: pd.Series, content_type: pd.Series
-    ) -> pd.Series:
-        def _one(b, u, p, ct):
-            if b is None:
-                return []
-            text = decode_html(bytes(b), ct or CT_DEFAULT)
-            return _rows(extract.extract_srcs(
-                text, u, int(p), tags, attrs, parser=html_parser))
-
-        return pd.Series(
-            [_one(b, u, p, ct) for b, u, p, ct in zip(html, url, page_num, content_type)]
-        )
-
-    return extract_srcs_udf
-
-
 #: fused per-page extraction result: ONE decode + ONE parse feeds all three
 #: consumers (text sink, frontier link growth, crawler-family downloads)
 PAGE_EXTRACT_SCHEMA = StructType(
@@ -329,25 +148,14 @@ def make_extract_fused_udf(
     """Fused page extraction: decode + parse each fetched page ONCE, then run
     the text / link / download walks over the same tree.
 
-    The round loop previously invoked ``extract_text_udf``,
-    ``extract_links_udf`` and the crawler-family UDF as three separate
-    ArrowEvalPython stages — each re-decoding and re-parsing the same HTML
-    blob. Parsing dominates extraction CPU, so at 100 TB that tripled the
-    hottest stage. One struct-returning UDF consumed by three selects keeps
-    the outputs identical at a single parse.
+    Parsing dominates extraction CPU, so one struct-returning UDF consumed by
+    three selects (text sink, frontier link growth, crawler-family downloads)
+    keeps a single Python stage and a single parse per page.
 
     ``crawler`` selects the downloads walk ('' / 'file' -> none here — the
     file crawler derives downloads from the frontier row itself, see
     plans/round.py); ``want_text``/``want_links`` skip walks no sink consumes.
-
-    The ``htmlkit.set_parser`` registry (a C-parser seam for real clusters)
-    is read HERE, at UDF construction, so the registered builder ships to
-    executors inside this closure — same capture rule as the multimodal
-    decoder registry.
     """
-    from .. import htmlkit
-
-    html_parser = htmlkit.resolve_parser()  # resolved + captured NOW — ships via cloudpickle
 
     def _files(doc, u, p) -> list[dict]:
         if crawler == "vb-attachments":
@@ -382,7 +190,7 @@ def make_extract_fused_udf(
                 links.append([])
                 files.append([])
                 continue
-            doc = parse_html(decode_html(bytes(b), ct or CT_DEFAULT), parser=html_parser)
+            doc = parse_html(decode_html(bytes(b), ct or CT_DEFAULT))
             texts.append(extract.extract_text_from_doc(doc) if want_text else "")
             links.append(_links(doc, u) if want_links else [])
             files.append(_files(doc, u, p))

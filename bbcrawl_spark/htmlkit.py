@@ -27,9 +27,6 @@ from html.parser import HTMLParser
 __all__ = [
     "Node",
     "parse_html",
-    "set_parser",
-    "get_parser",
-    "reset_parser",
     "walk_tree",
     "element_by_id",
     "elements_by_attr_match",
@@ -102,74 +99,18 @@ class _TreeBuilder(HTMLParser):
             self.stack[-1].append(Node(TEXT, data=data))
 
 
-#: registered tree builder (driver-side), mirroring
-#: ``operators.multimodal.set_decoder``. A cluster wires a C parser
-#: (selectolax/lxml) here instead of editing this module; the registered
-#: function is captured into the extraction-UDF FACTORIES' closures at
-#: UDF-CONSTRUCTION time (``make_extract_fused_udf`` — the round-loop path —
-#: plus ``make_extract_vb_udf`` / ``make_extract_srcs_udf``) and ships to
-#: executors via cloudpickle — mutating this module global alone would never
-#: reach the separate worker processes. The two MODULE-LEVEL udfs
-#: (``extract_text_udf`` / ``extract_links_udf``) are constructed at import
-#: time and therefore always use the stdlib parser; they exist as the
-#: split-path comparison rows in bench.py, not as production paths.
-_PARSER: list = []
-
-
-def set_parser(fn) -> None:
-    """Register a replacement HTML tree builder: ``fn(text: str) -> Node``
-    returning a root ``#document`` ``Node`` (document-order ``index``
-    numbering is applied by ``parse_html`` afterwards, so builders need not
-    assign it). E.g. on a cluster with lxml, walk ``lxml.html.fromstring``
-    events into the same ``Node`` shape. The function must be picklable
-    (top-level def, or a lambda over picklable state); the Go-parity
-    fixtures (tests/test_extraction.py) pin the TREE contract any
-    replacement must satisfy, not the parser library."""
-    _PARSER[:] = [fn]
-
-
-def get_parser():
-    return _PARSER[0] if _PARSER else None
-
-
-def resolve_parser():
-    """The builder a UDF factory should CAPTURE at construction time: the
-    registered parser if any, else the stdlib builder. Capturing the
-    *resolved* function (not ``None``) keeps the documented
-    construction-time-capture contract even when driver and execution share
-    a process (driver-side calls, thread-based workers): a UDF built before
-    ``set_parser`` must keep the stdlib parser, never pick up a
-    later-registered one via the runtime registry fallback in
-    ``parse_html``."""
-    return get_parser() or _parse_html_stdlib
-
-
-def reset_parser() -> None:
-    _PARSER.clear()
-
-
-def _parse_html_stdlib(text: str) -> Node:
-    builder = _TreeBuilder()
-    builder.feed(text)
-    builder.close()
-    return builder.root
-
-
-def parse_html(text: str, parser=None) -> Node:
+def parse_html(text: str) -> Node:
     """Parse HTML into a DOM rooted at a synthetic ``#document`` node and
     assign document-order element indices (DFS pre-order, elements only) —
     the order ``walkTree`` visits nodes in the reference.
 
-    PERFORMANCE SWAP POINT: the default is the stdlib ``html.parser`` (pure
-    Python, ~70k pages/s/32c) because no C parser (lxml/selectolax) is
-    installable in this sandbox. On a real cluster, register one with
-    ``set_parser`` (or pass ``parser=``) — parsing dominates extraction
-    CPU, so this is the single highest-leverage swap. Extraction UDFs
-    capture the registered parser at construction time, exactly like the
-    multimodal decoder registry.
+    The builder is the stdlib ``html.parser`` (pure Python); parsing
+    dominates extraction CPU.
     """
-    fn = parser if parser is not None else get_parser()
-    root = fn(text) if fn is not None else _parse_html_stdlib(text)
+    builder = _TreeBuilder()
+    builder.feed(text)
+    builder.close()
+    root = builder.root
     i = 0
 
     def number(n: Node) -> bool:

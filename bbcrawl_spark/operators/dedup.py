@@ -432,11 +432,3 @@ def dedup_against_seen(
     confirmed_new = maybe.join(seen.select(hash_col), on=hash_col, how="left_anti")
     return definitely_new.unionByName(confirmed_new)
 
-
-def union_seen(seen: DataFrame, newly_fetched: DataFrame, hash_col: str = "url_hash") -> DataFrame:
-    """A6: seen ∪ new, exact-once on url_hash."""
-    return (
-        seen.select(hash_col)
-        .unionByName(newly_fetched.select(hash_col))
-        .dropDuplicates([hash_col])
-    )

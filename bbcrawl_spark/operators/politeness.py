@@ -8,16 +8,11 @@ round" becomes a ranking window: rows ranked per host by the deterministic
 crawl-order key; ranks ≤ budget are scheduled this round, the rest spill to
 the next round's frontier (W1/O4 in SURVEY.md §2.6-2.7).
 
-Why single-pass is the default (round-2 redesign): every frontier row must
-be OUTPUT either way — scheduled rows go to the fetch join, unscheduled
-rows are carried to the next round's frontier. The round-1 'group_limit'
-mode computed the scheduled set through a WindowGroupLimit filter and then
-reconstructed the (usually much larger) unscheduled complement with an
-anti-join: two full passes over the frontier and two exchanges (sort +
-hash). 'single_pass' ranks once and FLAGS instead of filtering: one scan,
-one exchange, and the deferred majority flows through the plan exactly
-once.  Measured 2→8-core scaling efficiency of the crawl pipeline rose from
-0.30 to ≥0.8 with this change (BENCH.md).
+Single pass: every frontier row must be OUTPUT either way — scheduled rows
+go to the fetch join, unscheduled rows are carried to the next round's
+frontier. So the ranker ranks once and FLAGS instead of filtering: one scan,
+one exchange, and the deferred majority flows through the plan exactly once
+(no anti-join reconstructing the unscheduled complement).
 
 Hot-host skew (north_rule): one host holding 10^8 frontier URLs would pin a
 single reducer in the per-host sort. The explicit **salted pre-rank**
@@ -77,34 +72,12 @@ def rank_fetch_slots(
         ≤ S·budget survivors per host re-rank; salted-out rows are flagged
         unscheduled directly (provably outside the top-budget), never
         reconstructed via a join.
-      'group_limit' — round-1 design, kept for comparison/benchmarks: the
-        scheduled set via ``row_number() <= budget`` filters (Catalyst
-        rewrites them to WindowGroupLimit with map-side partial limiting),
-        the unscheduled complement via an anti-join on ``key_col`` (rows
-        must be unique on it). Two scans + two exchanges: loses to
-        single_pass whenever the deferred side is large — which at crawl
-        scale is always.
       'full_rank' — exact rank for EVERY row (unscheduled included). Ignores
         ``salt_partitions``: a salted pre-rank cannot produce exact global
         ranks beyond the budget without re-ranking everything, and silently
         wrong ranks in (budget, S·B] are worse than a full sort.
-      'broadcast_topk' — the wide frontier NEVER shuffles. The rank runs over
-        a narrow projection (host + order cols, ~40 bytes/row vs the full
-        frontier row) and ``row_number() <= budget`` compiles to
-        WindowGroupLimit, whose map-side Partial phase forwards at most
-        budget rows per host per input partition into the exchange. The
-        surviving ≤ hosts×budget (url_hash, rank) pairs broadcast back onto
-        the frontier as a map-side hash join. Exchange bytes drop from
-        O(|frontier| × row_width) to O(mappers × hosts × budget × 40B).
-        Requires ``key_col`` unique across the frontier (true after the
-        url_hash dedup) and hosts×budget small enough to broadcast —
-        ~10^6 hosts at budget 5 is ~50 MB, fine; beyond that use
-        'single_pass', which holds at any host count. Ignores
-        ``salt_partitions``: WindowGroupLimit's partial phase already caps
-        what a hot host can push into the exchange at budget×mappers rows,
-        which is the same defense salting buys the sort.
 
-    The scheduled set and its ranks are provably identical in all modes —
+    The scheduled set and its ranks are provably identical in both modes —
     asserted by tests.
     """
     order = [F.col(c) for c in order_cols]
@@ -113,10 +86,8 @@ def rank_fetch_slots(
 
     # per-host budget overrides (robots Crawl-delay, host reputation, ...):
     # a tiny broadcast dim (host, budget); hosts not listed keep the default.
-    # Flag-style modes compare rank against a COLUMN, which WindowGroupLimit
-    # modes cannot (the partial-limit rewrite needs a literal) — so overrides
-    # are restricted to the flag-style modes, where they are exact. That
-    # INCLUDES the salted single-pass ranker: its phase-1 prune and phase-2
+    # Both modes compare rank against this COLUMN, exactly. That INCLUDES
+    # the salted single-pass ranker: its phase-1 prune and phase-2
     # regroup are per-host expressions, and b(h) is constant within a host,
     # so the pigeonhole argument (a row in the host's true top-b(h) is in
     # its salt's top-b(h)) holds per host with the broadcast column exactly
@@ -124,11 +95,6 @@ def rank_fetch_slots(
     # BOTH its tiny budget and the salted skew defense.
     budget_col: Column = F.lit(budget)
     if host_budgets is not None:
-        if mode not in ("single_pass", "full_rank"):
-            raise ValueError(
-                "host_budgets requires a flag-style mode "
-                "(single_pass or full_rank)"
-            )
         hb = host_budgets.select(
             F.col("host").alias("_hb_host"),
             F.col("budget").cast("int").alias("_hb_budget"),
@@ -155,14 +121,6 @@ def rank_fetch_slots(
                 .otherwise(F.lit(-1))
                 .cast("int"),
             )
-        )
-
-    def _mark_unscheduled(df: DataFrame) -> DataFrame:
-        return (
-            df.withColumn("fetch_rank", F.lit(0))
-            .withColumn("scheduled", F.lit(False))
-            .withColumn("slot", F.lit(-1).cast("int"))
-            .withColumn("wave", F.lit(-1).cast("int"))
         )
 
     def _finalize(df: DataFrame) -> DataFrame:
@@ -220,66 +178,7 @@ def rank_fetch_slots(
         )
         return out.drop("_salt", "_r1", "_h2", "_r2", "_hb_budget")
 
-    if mode == "broadcast_topk":
-        narrow_cols = [host_col] + [c for c in order_cols if c != host_col]
-        if key_col not in narrow_cols:
-            narrow_cols.append(key_col)
-        topb = (
-            frontier.select(*narrow_cols)
-            .withColumn("_rn", rank)
-            .filter(F.col("_rn") <= budget)  # -> WindowGroupLimit (partial)
-            .select(F.col(key_col).alias("_k"), "_rn")
-        )
-        joined = frontier.join(
-            F.broadcast(topb), frontier[key_col] == topb["_k"], "left"
-        )
-        r = F.col("_rn")
-        sched = r.isNotNull()
-        return (
-            joined.withColumn(
-                "fetch_rank", F.when(sched, r).otherwise(F.lit(0)).cast("int")
-            )
-            .withColumn("scheduled", sched)
-            .withColumn(
-                "slot",
-                F.when(sched, ((r - 1) % concurrency)).otherwise(F.lit(-1)).cast("int"),
-            )
-            .withColumn(
-                "wave",
-                F.when(sched, F.floor((r - 1) / concurrency))
-                .otherwise(F.lit(-1))
-                .cast("int"),
-            )
-            .drop("_k", "_rn")
-        )
-
-    if mode == "group_limit":
-        pre = frontier
-        if salt_partitions > 1:
-            salted = pre.withColumn(
-                "_salt", F.pmod(F.col(key_col), F.lit(salt_partitions)).cast("int")
-            )
-            w1 = Window.partitionBy(host_col, "_salt").orderBy(*order)
-            pre = (
-                salted.withColumn("_r1", F.row_number().over(w1))
-                .filter(F.col("_r1") <= budget)  # -> WindowGroupLimit (partial)
-                .drop("_r1", "_salt")
-            )
-        scheduled = _finalize(pre).filter(
-            F.col("fetch_rank") <= budget  # -> WindowGroupLimit (partial)
-        )
-        unscheduled = _mark_unscheduled(
-            frontier.join(scheduled.select(key_col), key_col, "left_anti")
-        )
-        return scheduled.unionByName(unscheduled)
-
     if mode != "full_rank":
         raise ValueError(f"unknown mode: {mode!r}")
     return _finalize(frontier).drop("_hb_budget")
 
-
-def crawl_order_key(round_col: Column | str = "round") -> list[Column]:
-    """The global deterministic crawl order (W2): round, then priority,
-    then per-pager emission order, then stable hash tiebreak."""
-    r = F.col(round_col) if isinstance(round_col, str) else round_col
-    return [r, F.col("priority"), F.col("page_num"), F.col("url_hash")]

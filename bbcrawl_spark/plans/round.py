@@ -33,6 +33,7 @@ lineage + metrics").
 from __future__ import annotations
 
 from dataclasses import dataclass, field
+from collections.abc import Iterator
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -253,20 +254,30 @@ class CrawlDriver:
         )
         self.wh.commit_round(-1, {"frontier": f_sid, "seen": s_sid}, {"bootstrap": True})
 
-    def run(self, max_rounds: int | None = None) -> dict[str, Any]:
-        """Run (or resume) the crawl until the frontier drains or the round
-        cap is hit. Returns a summary dict."""
+    def rounds(self, max_rounds: int | None = None) -> Iterator[dict[str, Any]]:
+        """Run (or resume) the crawl one round per step, yielding each
+        committed round's meta, until the frontier drains or the round cap
+        is hit. Each round's commit is the exactly-once barrier, so a
+        consumer driving this from a streaming trigger (one round per
+        micro-batch) resumes from a new driver over the same warehouse."""
         self.bootstrap()
         cap = max_rounds if max_rounds is not None else self.cfg.max_rounds
         last = self.wh.last_committed_round()
         log = self.wh.round_log()
         if last is not None and log.get(str(last), {}).get("meta", {}).get("done"):
-            return self._summary()
+            return
         start = (last if last is not None else -1) + 1
         for r in range(start, cap):
             meta = self.run_round(r)
+            yield meta
             if meta["done"]:
-                break
+                return
+
+    def run(self, max_rounds: int | None = None) -> dict[str, Any]:
+        """Run (or resume) the crawl until the frontier drains or the round
+        cap is hit. Returns a summary dict."""
+        for _ in self.rounds(max_rounds):
+            pass
         return self._summary()
 
     def run_round(self, r: int) -> dict[str, Any]:

@@ -33,11 +33,9 @@ __all__ = [
     "parse_warc",
     "parse_warc_stream",
     "build_warc",
-    "build_wet",
     "http_response_parts",
     "open_warc_stream",
     "read_warc_pages",
-    "read_wet_text",
 ]
 
 _CRLF = b"\r\n"
@@ -170,46 +168,6 @@ def build_warc(
     return out.getvalue()
 
 
-def build_wet(
-    records: list[tuple[str, str, str]],
-    gzipped: bool = False,
-) -> bytes:
-    """Test/fixture writer for WET extracts: ``(uri, iso_date, text)``
-    tuples -> a valid WET byte stream — one leading ``warcinfo`` record
-    (as Common Crawl's ``*.warc.wet.gz`` files carry) followed by one
-    ``conversion`` record per page with a UTF-8 ``text/plain`` body.
-    Per-record gzip members when ``gzipped``."""
-    info_body = b"software: bbcrawl-spark-fixture\r\nformat: WARC File Format 1.0\r\n"
-    info = _CRLF.join(
-        [
-            b"WARC/1.0",
-            b"WARC-Type: warcinfo",
-            b"Content-Type: application/warc-fields",
-            f"Content-Length: {len(info_body)}".encode(),
-        ]
-    ) + _CRLF + _CRLF + info_body + _CRLF + _CRLF
-    out_members: list[bytes] = [info]
-    for uri, date, text in records:
-        body = text.encode("utf-8")
-        head = _CRLF.join(
-            [
-                b"WARC/1.0",
-                b"WARC-Type: conversion",
-                f"WARC-Target-URI: {uri}".encode(),
-                f"WARC-Date: {date}".encode(),
-                b"Content-Type: text/plain",
-                f"Content-Length: {len(body)}".encode(),
-            ]
-        )
-        out_members.append(head + _CRLF + _CRLF + body + _CRLF + _CRLF)
-    if not gzipped:
-        return b"".join(out_members)
-    out = io.BytesIO()
-    for rec in out_members:
-        out.write(gzip.compress(rec))
-    return out.getvalue()
-
-
 def _warc_date_to_ts(date: str) -> datetime.datetime | None:
     try:
         return datetime.datetime.fromisoformat(date.replace("Z", "+00:00"))
@@ -229,8 +187,7 @@ def open_warc_stream(path: str):
     On a real cluster with object-store segments, pass
     ``opener=lambda p: fsspec.open(p, "rb").open()`` (or a
     Hadoop-FS-backed equivalent) to ``read_warc_pages`` — the seam is the
-    whole integration surface, like ``htmlkit.set_parser`` /
-    ``multimodal.set_decoder``.
+    whole integration surface.
     """
     p = path
     if p.startswith("file:"):
@@ -274,20 +231,14 @@ def _record_rows(records: Iterator[dict]) -> Iterator[dict]:
 
 
 def _records_df(
-    spark: SparkSession,
-    path: str,
-    from_paths: bool,
-    opener,
-    row_fn,
-    schema: str,
-    cols: list[str],
+    spark: SparkSession, path: str, from_paths: bool, opener
 ) -> DataFrame:
-    """Shared WARC-family ingest core: list files with ``binaryFile``,
-    explode each segment's records through ``row_fn`` (WARC-record dicts ->
-    output row dicts) in bounded Arrow batches. ``from_paths=True`` prunes
-    the scan to ``path`` and streams each file worker-side (peak O(read
-    buffer + one batch)); ``from_paths=False`` ships whole file contents
-    through the scan for filesystems workers cannot open directly."""
+    """WARC ingest core: list files with ``binaryFile``, explode each
+    segment's ``response`` records into pages rows (``_record_rows``) in
+    bounded Arrow batches. ``from_paths=True`` prunes the scan to ``path``
+    and streams each file worker-side (peak O(read buffer + one batch));
+    ``from_paths=False`` ships whole file contents through the scan for
+    filesystems workers cannot open directly."""
     import pandas as pd
 
     files = spark.read.format("binaryFile").load(path)
@@ -298,10 +249,6 @@ def _records_df(
     # first (CC segments mix many small pages with the odd 100 MB binary).
     max_rows, max_bytes = 512, 64 << 20
 
-    def _size(row: dict) -> int:
-        v = row.get("html") or row.get("text") or b""
-        return len(v)
-
     def _explode_paths(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             for p in pdf["path"]:
@@ -309,14 +256,14 @@ def _records_df(
                 try:
                     rows: list[dict] = []
                     pending = 0
-                    for row in row_fn(parse_warc_stream(f)):
+                    for row in _record_rows(parse_warc_stream(f)):
                         rows.append(row)
-                        pending += _size(row)
+                        pending += len(row["html"])
                         if len(rows) >= max_rows or pending >= max_bytes:
-                            yield pd.DataFrame(rows, columns=cols)
+                            yield pd.DataFrame(rows, columns=_PAGES_COLS)
                             rows, pending = [], 0
                     if rows:
-                        yield pd.DataFrame(rows, columns=cols)
+                        yield pd.DataFrame(rows, columns=_PAGES_COLS)
                 finally:
                     f.close()
 
@@ -324,12 +271,12 @@ def _records_df(
         for pdf in batches:
             rows = []
             for blob in pdf["content"]:
-                rows.extend(row_fn(parse_warc(bytes(blob))))
-            yield pd.DataFrame(rows, columns=cols)
+                rows.extend(_record_rows(parse_warc(bytes(blob))))
+            yield pd.DataFrame(rows, columns=_PAGES_COLS)
 
     if from_paths:
-        return files.select("path").mapInPandas(_explode_paths, schema)
-    return files.select("content").mapInPandas(_explode, schema)
+        return files.select("path").mapInPandas(_explode_paths, _PAGES_SCHEMA)
+    return files.select("content").mapInPandas(_explode, _PAGES_SCHEMA)
 
 
 def read_warc_pages(
@@ -362,9 +309,7 @@ def read_warc_pages(
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
-    recs = _records_df(
-        spark, path, from_paths, opener, _record_rows, _PAGES_SCHEMA, _PAGES_COLS
-    )
+    recs = _records_df(spark, path, from_paths, opener)
     # redirect-hop evidence: count this url's 3xx records; keep the last
     # 200 row per url (WARC order within a crawl = fetch order; ties broken
     # by warc_ts then content hash for determinism)
@@ -392,47 +337,3 @@ def read_warc_pages(
         .drop("_hops")
     )
 
-
-_WET_SCHEMA = "url string, warc_ts timestamp, text string"
-_WET_COLS = ["url", "warc_ts", "text"]
-
-
-def _wet_rows(records: Iterator[dict]) -> Iterator[dict]:
-    """WARC records -> WET text rows (``conversion`` records only; the
-    leading ``warcinfo`` record and any ``request``/``metadata`` records
-    are skipped). WET bodies are UTF-8 by the Common Crawl contract;
-    decode is ``errors="replace"`` so a malformed byte cannot kill a
-    segment-sized task."""
-    for rec in records:
-        if rec["type"] != "conversion" or not rec["uri"]:
-            continue
-        yield {
-            "url": rec["uri"],
-            "warc_ts": _warc_date_to_ts(rec["date"]),
-            "text": rec["block"].decode("utf-8", "replace"),
-        }
-
-
-def read_wet_text(
-    spark: SparkSession,
-    path: str,
-    from_paths: bool = True,
-    opener=None,
-) -> DataFrame:
-    """Read Common-Crawl WET extracts (``*.warc.wet`` / ``*.warc.wet.gz``
-    — WARC files whose ``conversion`` records carry the pre-extracted
-    plain text) into ``(url, warc_ts, text)`` — the documents-table entry
-    point for corpora that skip HTML fetching entirely.
-
-    Same two modes and the same bounded-batch streaming core as
-    :func:`read_warc_pages`: ``from_paths=True`` (default, the 100-TB
-    shape) prunes the ``binaryFile`` scan to the ``path`` column and
-    streams each segment record-at-a-time through ``opener``; WET segments
-    are ~150 MB gz / ~400 MB text, thousands per dump, so file-level
-    parallelism is the natural partitioning. One row per conversion
-    record — WET carries exactly one capture per page, so no dedup window
-    is needed (recrawl dedup belongs to the corpus dedup operators).
-    """
-    return _records_df(
-        spark, path, from_paths, opener, _wet_rows, _WET_SCHEMA, _WET_COLS
-    )

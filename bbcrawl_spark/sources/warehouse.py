@@ -25,12 +25,7 @@ Iceberg semantics the crawl loop needs:
 
 On a real cluster, swap this class for ``spark.read.format("iceberg")`` /
 ``df.writeTo(...)`` — the crawl loop only touches the four methods
-``write / append / read / commit_round``.  For the seen table specifically,
-sources/bucketed.py provides the hash-bucketed layout (Iceberg's
-``bucket(n, url_hash)`` partition transform) that makes the per-round
-exact-confirm anti-join read the 10^10-row side in place; equivalence with
-``dedup_against_seen`` over a snapshot read from here is pinned in
-tests/test_bucketed.py.
+``write / append / read / commit_round``.
 
 Layout:
     root/<table>/data/s<NNNN>/part-*.parquet   one dir per snapshot's new files

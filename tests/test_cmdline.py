@@ -242,3 +242,102 @@ class TestParseCommand:
         assert rc == 0
         # the crawl state landed under -o
         assert (out / "_rounds.json").exists()
+
+
+class TestFlagValueTables:
+    @pytest.mark.parametrize(
+        "s,want", [("true", True), ("TRUE", True), ("False", False), ("fAlSe", False)]
+    )
+    def test_bool(self, s, want):
+        assert cmdline.parse_bool(s) is want
+
+    @pytest.mark.parametrize("s", ["yes", "1", "", "t"])
+    def test_bool_rejects(self, s):
+        with pytest.raises(ValueError, match="Invalid input for Boolean flag"):
+            cmdline.parse_bool(s)
+
+    @pytest.mark.parametrize("s,want", [("1,2", (1, 2)), (" 3 , 3 ", (3, 3)), ("-2,0", (-2, 0))])
+    def test_int_range(self, s, want):
+        assert cmdline.parse_int_range(s) == want
+
+    @pytest.mark.parametrize(
+        "s,msg",
+        [
+            ("2,1", "greater or equal"),
+            ("1", "needs 2 values"),
+            ("1,2,3", "needs 2 values"),
+            ("a,b", "invalid literal"),
+        ],
+    )
+    def test_int_range_rejects(self, s, msg):
+        with pytest.raises(ValueError, match=msg):
+            cmdline.parse_int_range(s)
+
+    def test_int_tuple(self):
+        assert cmdline.parse_int_tuple("1, 2,3") == [1, 2, 3]
+
+    @pytest.mark.parametrize(
+        "s,want",
+        [
+            ("debug", "DEBUG"),
+            ("info", "INFO"),
+            ("notice", "INFO"),
+            ("warning", "WARN"),
+            ("error", "ERROR"),
+            ("panic", "FATAL"),
+            (" Warning ", "WARN"),
+        ],
+    )
+    def test_loglevel(self, s, want):
+        assert cmdline.parse_loglevel(s) == want
+
+    @pytest.mark.parametrize("s", ["warn", "trace", ""])
+    def test_loglevel_rejects(self, s):
+        with pytest.raises(ValueError, match="Invalid loglevel"):
+            cmdline.parse_loglevel(s)
+
+    @pytest.mark.parametrize(
+        "s,start,msg",
+        [("0", 1, "0 is an invalid start page."), ("3", 5, r"End \(3\) is greater than start \(5\)\.")],
+    )
+    def test_end_page_rejects(self, s, start, msg):
+        with pytest.raises(ValueError, match=msg):
+            cmdline.parse_end_page(s, start)
+
+    def test_start_page_rejects_zero(self):
+        with pytest.raises(ValueError, match="0 is an invalid start page."):
+            cmdline.parse_start_page("0")
+
+    @pytest.mark.parametrize(
+        "s,want",
+        [
+            ("http://a/x,http://b/y", ["http://a/x", "http://b/y"]),
+            ("HTTP://A/x", ["http://A/x"]),  # only the scheme is case-folded
+            ("http://a/x?q=1#f", ["http://a/x?q=1#f"]),
+        ],
+    )
+    def test_url_collection(self, s, want):
+        assert cmdline.parse_url_collection(s) == want
+
+    @pytest.mark.parametrize(
+        "s,ok", [("img,video", True), ("img", True), ("img,gif", False), ("", False)]
+    )
+    def test_whitelist(self, s, ok):
+        wl = ["img", "audio", "video"]
+        if ok:
+            assert cmdline.parse_whitelist(s, ",", wl) == s.split(",")
+        else:
+            with pytest.raises(ValueError, match="not in whitelist"):
+                cmdline.parse_whitelist(s, ",", wl)
+
+    @pytest.mark.parametrize(
+        "s,want",
+        [
+            ("class=a,b/id=x", {"class": ["a", "b"], "id": ["x"]}),
+            ("k=", {"k": [""]}),
+            ("k=a=b", {"k": ["a=b"]}),  # only the first '=' splits
+            ("a\\/b=c", {"a/b": ["c"]}),  # escaped splitter stays in the key
+        ],
+    )
+    def test_attrs(self, s, want):
+        assert cmdline.parse_attrs(s) == want

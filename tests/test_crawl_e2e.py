@@ -96,28 +96,6 @@ class TestCrawlEquivalence:
         assert all("/b0/secret" not in u for u in urls)
         assert all(u not in site.excludes for u in urls)
 
-    def test_crawl_output_feeds_curation_chain(self, run):
-        """System integration: the crawl's fetched texts flow straight into
-        the training-data curation operators — the 100-TB pipeline this
-        engine exists for (crawl -> quality -> langid -> dedup -> repetition
-        signals) runs end-to-end on real crawl output, not synthetic docs."""
-        from bbcrawl_spark.operators import textops
-
-        texts = run[0].fetched_texts().withColumnRenamed("url", "doc_url")
-        docs = texts.selectExpr("xxhash64(doc_url) AS doc_id", "text")
-        n = docs.count()
-        assert n > 0
-        scored = textops.repetition_stats(
-            textops.langid(textops.quality_score(docs))
-        )
-        rows = scored.collect()
-        assert len(rows) == n
-        assert {"q_keep", "lang_pred", "r_n_lines"} <= set(rows[0].asDict())
-        deduped = textops.exact_dedup(docs).count()
-        assert 0 < deduped <= n
-        cleaned = textops.strip_boilerplate_lines(docs, max_line_df=n)
-        assert cleaned.count() == n  # cap above corpus size: nothing stripped
-
     def test_budget_enforced_every_round(self, run):
         per = (
             run[0]._last("fetch_log")
@@ -532,7 +510,7 @@ class TestRobotsFullE2E:
 
 
 class TestStreamingAdapter:
-    """§2.11: the micro-batch adapter drives the same rounds with the same
+    """§2.11: ``CrawlDriver.rounds`` drives the same rounds with the same
     commit barrier — including a mid-stream kill + resume — and can be wired
     into a real Structured Streaming foreachBatch trigger."""
 
@@ -543,8 +521,6 @@ class TestStreamingAdapter:
     def test_generator_rounds_with_midstream_resume(
         self, spark, msite, tmp_path
     ):
-        from bbcrawl_spark.streaming import micro_batch_rounds
-
         pages = str(tmp_path / "pages")
         msite.to_df(spark).write.parquet(pages)
         robots = {h: parse_robots_txt(t) for h, t in msite.robots.items()}
@@ -560,10 +536,10 @@ class TestStreamingAdapter:
                 excludes=tuple(msite.excludes), robots=msite.robots,
             ))
 
-        gen = micro_batch_rounds(mk())
+        gen = mk().rounds()
         first = next(gen)  # one micro-batch, then 'kill' the stream
         assert first["round"] == 0
-        metas = list(micro_batch_rounds(mk()))  # new driver resumes
+        metas = list(mk().rounds())  # new driver resumes
         assert metas and metas[-1]["done"]
         assert [m["round"] for m in metas][0] == 1  # no round re-ran
         drv = mk()
@@ -572,9 +548,7 @@ class TestStreamingAdapter:
 
     def test_foreachbatch_trigger_drives_rounds(self, spark, msite, tmp_path):
         """A real readStream rate source triggers the crawl: each streaming
-        micro-batch advances one round via the adapter generator."""
-        from bbcrawl_spark.streaming import micro_batch_rounds
-
+        micro-batch advances one round via the driver's round generator."""
         pages = str(tmp_path / "pages")
         msite.to_df(spark).write.parquet(pages)
         drv = CrawlDriver(spark, CrawlConfig(
@@ -582,7 +556,7 @@ class TestStreamingAdapter:
             seeds=msite.seeds, budget=2, max_rounds=20,
             excludes=tuple(msite.excludes), robots=msite.robots,
         ))
-        gen = micro_batch_rounds(drv)
+        gen = drv.rounds()
         done = {"v": False}
 
         def one_round(_df, _bid):

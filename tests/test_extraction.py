@@ -303,124 +303,157 @@ class TestFusedExtraction:
         assert row["text"] == "" and row["links"] == [] and row["files"] == []
 
 
-def _rewrite_att9_parser(text):
-    """Registry fixture for the vb factory: hides attachment9 before tree
-    building, so the row count proves WHICH parser built the tree."""
-    return htmlkit._parse_html_stdlib(text.replace("attachment9", "notanatt"))
+
+class TestHeaderFilenameTable:
+    """``NameFromHeader`` branches: the first ``filename="`` field wins,
+    the match is case-sensitive, '=' or '/' in the value is malformed, and
+    the malformed message formats the untrimmed field."""
+
+    NONE = extract.NO_HEADER_FIELD_ERR
+    BAD = "malformed filename in Content-disposition header: "
+
+    @pytest.mark.parametrize(
+        "header,name,err",
+        [
+            ('attachment; filename="a.jpg"', "a.jpg", ""),
+            ('filename="a.jpg"', "a.jpg", ""),
+            ('attachment;filename="b.png"', "b.png", ""),
+            ('attachment; filename="a.jpg"; size=5', "a.jpg", ""),
+            ('attachment; filename="a b.jpg"', "a b.jpg", ""),
+            ('attachment; filename="""x"""', "x", ""),
+            ('  filename="t.gif"  ', "t.gif", ""),
+            ('attachment; filename="first.jpg"; filename="second.jpg"', "first.jpg", ""),
+            ("attachment; filename*=UTF-8''x.jpg; filename=\"y.jpg\"", "y.jpg", ""),
+            ("inline; filename=a.jpg", "", NONE),
+            ('attachment; FILENAME="a.jpg"', "", NONE),
+            (None, "", NONE),
+            ("", "", NONE),
+            ('attachment; filename="a=b.jpg"', "", BAD + ' filename="a=b.jpg"'),
+            ('attachment; filename="dir/a.jpg"', "", BAD + ' filename="dir/a.jpg"'),
+            ('attachment;filename=""', "", BAD + 'filename=""'),
+        ],
+    )
+    def test_name_or_error(self, header, name, err):
+        assert extract.header_filename(header) == (name, err)
+
+    @pytest.mark.parametrize(
+        "prefix,header,want",
+        [
+            ("12-1", 'attachment; filename="a.jpg"', ("12-1-a.jpg", "")),
+            ("", 'attachment; filename="a.jpg"', ("a.jpg", "")),
+            ("12-1", None, ("", extract.NO_HEADER_FIELD_ERR)),
+        ],
+    )
+    def test_complete_headername(self, prefix, header, want):
+        assert extract.complete_headername(prefix, header) == want
 
 
-def _shout_parser(text):
-    """Registry fixture: a replacement tree builder (stands in for
-    selectolax/lxml on a real cluster) that uppercases every text node —
-    recognizable in extracted output, provably NOT the stdlib default."""
-    root = htmlkit._parse_html_stdlib(text)
+class TestUniqueNameSuffix:
+    @pytest.mark.parametrize(
+        "path,want",
+        [
+            ("/a/b.jpg", "jpg"),
+            ("/x.tar.gz", "gz"),
+            ("/a/b", "/a/b"),  # no dot: Go's li = -1 keeps the whole path
+            ("/a.b/c", "b/c"),
+            ("/a/b.", None),
+            ("", None),
+        ],
+    )
+    def test_suffix(self, path, want):
+        assert extract.unique_name_suffix(path) == want
 
-    def up(n):
-        if n.type == htmlkit.TEXT:
-            n.data = n.data.upper()
-        return True
 
-    htmlkit.walk_tree(root, up, None)
-    return root
+class TestFileCrawlerNameTable:
+    @pytest.mark.parametrize(
+        "url,page,dl_id,want",
+        [
+            ("http://h/a/f.zip", 3, None, "3 - f.zip"),
+            ("http://h/a/x%20y.pdf", 1, None, "1 - x y.pdf"),
+            ("http://h/a/", 3, 7, "7.download"),
+            ("http://h/a/", 3, None, ""),
+        ],
+    )
+    def test_name(self, url, page, dl_id, want):
+        assert extract.file_crawler_name(url, page, dl_id) == want
 
 
-class TestPluggableParser:
-    """htmlkit.set_parser: the C-parser seam for real clusters, mirroring
-    operators.multimodal.set_decoder (VERDICT r3 item 4). Parsing dominates
-    extraction CPU — the registry lets a cluster wire lxml/selectolax
-    without editing htmlkit; extraction UDFs capture the registered builder
-    at CONSTRUCTION time (closure ships via cloudpickle)."""
+class TestDeterministicName:
+    """Collision names: 64 letters from 'a'..'y' derived from the source URL,
+    then '.' + the extension with its own dot (Go's double dot)."""
 
-    def teardown_method(self):
-        htmlkit.reset_parser()
+    @pytest.mark.parametrize(
+        "src,name,tail",
+        [
+            ("http://h/a/x.jpg", "x.jpg", "..jpg"),
+            ("http://h/b/x.jpg", "x.jpg", "..jpg"),
+            ("http://h/a/clip.tar.gz", "clip.tar.gz", "..gz"),
+            ("http://h/a/noext", "noext", ""),
+        ],
+    )
+    def test_shape(self, src, name, tail):
+        out = extract.deterministic_name(src, name)
+        assert out == extract.deterministic_name(src, name)
+        assert len(out) == 64 + len(tail) and out.endswith(tail)
+        assert set(out[:64]) <= set("abcdefghijklmnopqrstuvwxy")
 
-    def test_parse_html_uses_registered_parser(self):
-        htmlkit.set_parser(_shout_parser)
-        doc = htmlkit.parse_html("<p>hello</p>")
-        assert extract.extract_text_from_doc(doc) == "HELLO"
-        # indices are still numbered by parse_html, not the builder
-        assert htmlkit.elements_by_tag(doc, "p")[0].index == 0
-        htmlkit.reset_parser()
-        assert extract.extract_text_from_doc(htmlkit.parse_html("<p>hello</p>")) == "hello"
+    def test_distinct_sources_distinct_names(self):
+        a = extract.deterministic_name("http://h/a/x.jpg", "x.jpg")
+        b = extract.deterministic_name("http://h/b/x.jpg", "x.jpg")
+        assert a != b
 
-    def test_registered_parser_through_spark(self, spark):
-        from pyspark.sql import functions as F
-
-        from bbcrawl_spark.functions.udfs import CT_DEFAULT, make_extract_fused_udf
-
-        df = spark.createDataFrame(
-            [("http://h/t", bytearray(b"<p>hello</p><a href='/x'>link</a>"), 0)],
-            "url string, html binary, page_num int",
+    def test_avtag_directory_src_is_error(self):
+        tag = extract.AvTag()
+        assert tag.add_src("http://h/dir/", 0) == (
+            'Could not derive a filename from input path "/dir/"'
         )
-        htmlkit.set_parser(_shout_parser)
-        fused = make_extract_fused_udf("")  # captures the registry NOW
-        htmlkit.reset_parser()  # construction-time capture: reset must not matter
-        row = df.select(
-            fused("html", "url", "page_num", F.lit(CT_DEFAULT)).alias("_ex")
-        ).first()["_ex"]
-        assert row["text"] == "HELLOLINK"
-        assert [l["anchor_text"] for l in row["links"]] == ["LINK"]
+        assert tag.entries == {}
 
-    def test_vb_factory_honors_registry(self, spark):
-        from pyspark.sql import functions as F
 
-        from bbcrawl_spark.functions.udfs import CT_DEFAULT, make_extract_vb_udf
+class TestTextTable:
+    @pytest.mark.parametrize(
+        "html,want",
+        [
+            ("<p>a</p><p>b</p>", "ab"),
+            ("<div>x<script>var a=1;</script>y</div>", "xy"),
+            ("<style>p{color:red}</style>z", "z"),
+            ("<SCRIPT>x</SCRIPT>y", "y"),  # tag names are case-folded
+            ("a &amp; b", "a & b"),
+            ("&lt;tag&gt;", "<tag>"),
+            ("<p>&#233;</p>", "é"),
+            ("<p>a<br>b</p>", "ab"),
+            ("<!-- c -->t", "t"),
+            ("<p>  spaced\n</p>", "  spaced\n"),
+            ("<ul><li>1<li>2</ul>", "12"),
+            ("", ""),
+        ],
+    )
+    def test_text(self, html, want):
+        assert extract.extract_text(html) == want
 
-        df = spark.createDataFrame(
-            [("http://f.ex/t/1", bytearray(VB4_PAGE.encode()), 0)],
-            "url string, html binary, page_num int",
-        )
 
-        def _attr_ids(vb):
-            rows = df.select(
-                F.explode(vb("html", "url", F.lit(CT_DEFAULT))).alias("f")
-            ).select("f.*").collect()
-            return sorted(r["att_id"] for r in rows if not r["err"])
-
-        default_ids = _attr_ids(make_extract_vb_udf())
-        htmlkit.set_parser(_rewrite_att9_parser)
-        vb = make_extract_vb_udf()  # captures the registry NOW
-        htmlkit.reset_parser()
-        mutated_ids = _attr_ids(vb)
-        # the registered parser hid attachment9 BEFORE tree building, so the
-        # vb walk provably ran over ITS tree: one fewer extracted attachment
-        assert len(mutated_ids) == len(default_ids) - 1
-
-    def test_resolve_parser_captures_driver_side(self):
-        # The factories capture htmlkit.resolve_parser() — the RESOLVED
-        # builder, never None. This pins the contract in the sharp case the
-        # Spark test below can't see: when driver and execution share a
-        # process (driver-side calls, thread workers), a builder resolved
-        # BEFORE set_parser must stay the stdlib one — parse_html must not
-        # re-consult the registry for an already-constructed UDF.
-        captured = htmlkit.resolve_parser()  # registry empty -> stdlib
-        htmlkit.set_parser(_shout_parser)  # too late for `captured`
-        try:
-            root = htmlkit.parse_html("<p>hello</p>", parser=captured)
-            texts = []
-            htmlkit.walk_tree(
-                root,
-                lambda n: (texts.append(n.data) if n.type == htmlkit.TEXT else True)
-                or True,
-                None,
-            )
-            assert "hello" in texts  # not "HELLO"
-            assert htmlkit.resolve_parser() is _shout_parser
-        finally:
-            htmlkit.reset_parser()
-
-    def test_udf_built_before_registration_keeps_default(self, spark):
-        from pyspark.sql import functions as F
-
-        from bbcrawl_spark.functions.udfs import CT_DEFAULT, make_extract_fused_udf
-
-        df = spark.createDataFrame(
-            [("http://h/t", bytearray(b"<p>hello</p>"), 0)],
-            "url string, html binary, page_num int",
-        )
-        fused = make_extract_fused_udf("")  # registry empty at construction
-        htmlkit.set_parser(_shout_parser)  # too late for this UDF
-        row = df.select(
-            fused("html", "url", "page_num", F.lit(CT_DEFAULT)).alias("_ex")
-        ).first()["_ex"]
-        assert row["text"] == "hello"
+class TestLinksTable:
+    @pytest.mark.parametrize(
+        "html,page,want",
+        [
+            ('<a href="/x">X</a>', "http://h/p", [("/x", "http://h/x", "X")]),
+            ('<a>no</a><a href="">e</a>', "http://h/p", []),
+            ('<a href="http://o/y">Y</a>', "http://h/p", [("http://o/y", "http://o/y", "Y")]),
+            (
+                '<a href="r.html"><b>bold</b> t</a>',
+                "http://h:81/d/p",
+                [("r.html", "http://h/r.html", "bold t")],
+            ),
+            ('<a href="#frag">f</a>', "http://h/p", [("#frag", "http://h/", "f")]),
+            (
+                '<a name="n">x</a><a href="/a">1</a><a href="/b">2</a>',
+                "http://h/p",
+                [("/a", "http://h/a", "1"), ("/b", "http://h/b", "2")],
+            ),
+            ('<A HREF="/Up">U</A>', "http://h/p", [("/Up", "http://h/Up", "U")]),
+        ],
+    )
+    def test_links(self, html, page, want):
+        got = extract.extract_links(html, page)
+        assert [(x.link, x.abs_url, x.anchor_text) for x in got] == want
+        assert [x.element_index for x in got] == sorted(x.element_index for x in got)

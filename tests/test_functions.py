@@ -37,15 +37,6 @@ class TestCanonicalizeParity:
         for u in URLS:
             assert got[u] == urlkit.url_hash(u), u
 
-    def test_udf_matches_col(self, spark):
-        df = spark.createDataFrame([(u,) for u in URLS], "url string")
-        rows = df.select(
-            udfs.canonicalize_col("url").alias("c1"),
-            udfs.canonicalize_udf("url").alias("c2"),
-        ).collect()
-        for r in rows:
-            assert r["c1"] == r["c2"]
-
 
 HEADER_CASES = [
     'attachment; filename="report.pdf"',
@@ -126,18 +117,24 @@ class TestHeaderFilenameParity:
         assert raws == [' filename="a=b"', 'filename="a=b"']
 
 
+def _fused(df, crawler="", ct=None, **kw):
+    """Run the fused extraction UDF over (url, html, page_num) rows."""
+    fused = udfs.make_extract_fused_udf(crawler, **kw)
+    ct = F.lit(udfs.CT_DEFAULT) if ct is None else ct
+    return df.select(fused("html", "url", "page_num", ct).alias("_ex"))
+
+
 class TestExtractUDFs:
+    """The fused extraction UDF through Spark, one walk at a time."""
+
     def test_vb_udf_through_spark(self, spark):
         df = spark.createDataFrame(
-            [("http://forum.example:8080/t/1", VB4_PAGE.encode("utf-8"))],
-            "url string, html binary",
+            [("http://forum.example:8080/t/1", VB4_PAGE.encode("utf-8"), 1)],
+            "url string, html binary, page_num int",
         )
         rows = (
-            df.select(
-                F.explode(
-                    udfs.extract_vb_udf("html", "url", F.lit(udfs.CT_DEFAULT))
-                ).alias("f")
-            )
+            _fused(df, "vb-attachments")
+            .select(F.explode("_ex.files").alias("f"))
             .select("f.*")
             .where(F.col("err") == "")
             .orderBy("element_index")
@@ -151,62 +148,70 @@ class TestExtractUDFs:
         ]
 
     def test_srcs_udf_through_spark(self, spark):
-        udf = udfs.make_extract_srcs_udf()
         df = spark.createDataFrame(
             [("http://media.example:444/g/p9", SRC_PAGE.encode("utf-8"), 7)],
             "url string, html binary, page_num int",
         )
-        rows = (
-            df.select(
-                F.explode(
-                    udf("html", "url", "page_num", F.lit(udfs.CT_DEFAULT))
-                ).alias("f")
+
+        def names(**kw):
+            rows = (
+                _fused(df, "src", **kw)
+                .select(F.explode("_ex.files").alias("f"))
+                .select("f.*")
+                .where(F.col("err") == "")
+                .collect()
             )
-            .select("f.*")
-            .where(F.col("err") == "")
-            .collect()
-        )
-        names = {r["link"]: r["out_name"] for r in rows}
-        assert names["/pics/a.jpg"] == "7-1.jpg"
-        assert names["/v/single.mkv"] == "7-5.mkv"
+            return {r["link"]: r["out_name"] for r in rows}
+
+        default = names()
+        assert default["/pics/a.jpg"] == "7-1.jpg"
+        assert default["/v/single.mkv"] == "7-5.mkv"
+        # -tags / -attrs reach the executors through the UDF closure
+        assert names(tags=("img",), attrs=[("class", "skip-me")]) == {
+            "relative/b.png": "7-1.png"
+        }
 
     def test_text_udf_matches_core(self, spark):
         from bbcrawl_spark import extract
 
         html = "<body>a<script>no</script>b ü</body>"
-        df = spark.createDataFrame([(html.encode("utf-8"),)], "html binary")
-        [r] = df.select(
-            udfs.extract_text_udf("html", F.lit(udfs.CT_DEFAULT)).alias("t")
-        ).collect()
-        assert r["t"] == extract.extract_text(html) == "ab ü"
+        df = spark.createDataFrame(
+            [("http://h/", html.encode("utf-8"), 0)],
+            "url string, html binary, page_num int",
+        )
+        [r] = _fused(df).select("_ex.text").collect()
+        assert r["text"] == extract.extract_text(html) == "ab ü"
         # the decode ladder through the UDF: cp1252 body + charset header
         df2 = spark.createDataFrame(
-            [(html.encode("cp1252"), "text/html; charset=windows-1252")],
-            "html binary, ct string",
+            [("http://h/", html.encode("cp1252"), 0, "text/html; charset=windows-1252")],
+            "url string, html binary, page_num int, ct string",
         )
-        [r2] = df2.select(udfs.extract_text_udf("html", "ct").alias("t")).collect()
-        assert r2["t"] == "ab ü"
+        [r2] = _fused(df2, ct=F.col("ct")).select("_ex.text").collect()
+        assert r2["text"] == "ab ü"
 
     def test_links_udf(self, spark):
         html = b'<a href="/x">l</a><a href="p2">n</a>'
-        df = spark.createDataFrame([("http://h:9/a/b", html)], "url string, html binary")
+        df = spark.createDataFrame(
+            [("http://h:9/a/b", html, 0)], "url string, html binary, page_num int"
+        )
         rows = (
-            df.select(
-                F.explode(
-                    udfs.extract_links_udf("html", "url", F.lit(udfs.CT_DEFAULT))
-                ).alias("l")
-            )
+            _fused(df)
+            .select(F.explode("_ex.links").alias("l"))
             .select("l.abs_url")
             .collect()
         )
         assert [r["abs_url"] for r in rows] == ["http://h/x", "http://h/p2"]
 
     def test_resolve_udf(self, spark):
+        # rel2abs semantics (port dropped, absolute links kept verbatim)
         df = spark.createDataFrame(
-            [("http://h:8080/t/p1", "a/b.jpg"), ("http://h/t", "http://abs/x")],
-            "page string, link string",
+            [
+                ("http://h:8080/t/p1", b'<a href="a/b.jpg">x</a>', 0),
+                ("http://h/t", b'<a href="http://abs/x">y</a>', 0),
+            ],
+            "url string, html binary, page_num int",
         )
-        rows = df.select(udfs.resolve_links_udf("page", "link").alias("r")).collect()
+        rows = _fused(df).select(F.col("_ex.links")[0]["abs_url"].alias("r")).collect()
         assert [r["r"] for r in rows] == ["http://h/a/b.jpg", "http://abs/x"]
 
 
@@ -232,89 +237,3 @@ class TestHostOf:
         rows = df.select(udfs.host_of("url").alias("h")).collect()
         assert [r["h"] for r in rows] == ["a.example.com", "h"]
 
-
-class TestNormalizeQuery:
-    CASES = [
-        # trackers stripped, survivors sorted
-        ("http://h.example/p?b=2&utm_source=x&a=1", "http://h.example/p?a=1&b=2"),
-        ("http://h.example/p?gclid=abc&fbclid=def", "http://h.example/p"),
-        ("http://h.example/p?a=1&jsessionid=Z9", "http://h.example/p?a=1"),
-        # no query / already clean
-        ("http://h.example/p", "http://h.example/p"),
-        ("http://h.example/p?a=1", "http://h.example/p?a=1"),
-        # fragment preserved (canonicalize drops it later, separately)
-        ("http://h.example/p?utm_medium=m&z=1#sec", "http://h.example/p?z=1#sec"),
-        # a '?' inside the fragment is NOT a query
-        ("http://h.example/p#frag?utm_source=x", "http://h.example/p#frag?utm_source=x"),
-        # utm_ prefix must be a parameter NAME, not a value
-        ("http://h.example/p?q=utm_source", "http://h.example/p?q=utm_source"),
-    ]
-
-    def test_expected(self, spark):
-        df = spark.createDataFrame([(u,) for u, _ in self.CASES], "u string")
-        got = [
-            r["n"]
-            for r in df.select(udfs.normalize_query_col("u").alias("n")).collect()
-        ]
-        assert got == [want for _, want in self.CASES]
-
-    def test_sort_off_keeps_order(self, spark):
-        df = spark.createDataFrame(
-            [("http://h/p?b=2&utm_source=x&a=1",)], "u string"
-        )
-        got = df.select(
-            udfs.normalize_query_col("u", sort_params=False).alias("n")
-        ).collect()[0]["n"]
-        assert got == "http://h/p?b=2&a=1"
-
-    def test_folds_aliases_onto_one_seen_key(self, spark):
-        # the point of the pass: campaign-tagged and re-ordered variants of
-        # one page hash to ONE url_hash after normalize -> canonicalize
-        variants = [
-            "http://h.example/p?a=1&b=2",
-            "http://h.example/p?b=2&a=1",
-            "http://h.example/p?utm_campaign=news&a=1&b=2",
-            "HTTP://h.example:80/p?gclid=x&b=2&a=1#top",
-        ]
-        df = spark.createDataFrame([(u,) for u in variants], "u string")
-        hashes = {
-            r["h"]
-            for r in df.select(
-                udfs.url_hash_col(udfs.normalize_query_col("u")).alias("h")
-            ).collect()
-        }
-        assert len(hashes) == 1
-
-    def test_stays_jvm(self, spark):
-        df = spark.createDataFrame([("http://h/p?a=1",)], "u string")
-        plan = (
-            df.select(udfs.normalize_query_col("u").alias("n"))
-            ._jdf.queryExecution().executedPlan().toString()
-        )
-        assert "EvalPython" not in plan and "Exchange" not in plan
-
-    def test_duckdb_replays_identically(self, spark):
-        import duckdb
-
-        con = duckdb.connect()
-        urls = "[" + ", ".join(f"'{u}'" for u, _ in self.CASES) + "]"
-        duck = [
-            r[0]
-            for r in con.execute(f"""
-                WITH u AS (SELECT unnest({urls}) AS url),
-                p AS (SELECT url,
-                        regexp_extract(url, '^([^?#]*)', 1) AS pre,
-                        regexp_extract(url, '^[^#]*\\?([^#]*)', 1) AS q,
-                        regexp_extract(url, '^[^#]*(#.*)', 1) AS frag
-                      FROM u),
-                -- coalesce: DuckDB's array_to_string([]) is NULL, Spark's is ''
-                c AS (SELECT *, coalesce(array_to_string(list_sort(list_filter(
-                        string_split(q, '&'),
-                        x -> NOT regexp_matches(x, '{udfs.TRACKING_PARAMS_RE}'))), '&'), '') AS cleaned
-                      FROM p)
-                SELECT pre || CASE WHEN cleaned = '' THEN ''
-                                   ELSE '?' || cleaned END || frag
-                FROM c
-            """).fetchall()
-        ]
-        assert duck == [want for _, want in self.CASES]

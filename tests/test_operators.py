@@ -55,11 +55,6 @@ class TestBloomDedup:
         got = sorted(r["url"] for r in dedup.dedup_against_seen(cands, seen).collect())
         assert got == sorted(f"http://h/{i}" for i in range(100, 150))
 
-    def test_union_seen_exactly_once(self, spark):
-        seen = _url_df(spark, ["http://h/a", "http://h/b"])
-        new = _url_df(spark, ["http://h/b", "http://h/c"])
-        assert dedup.union_seen(seen, new).count() == 3
-
 
 class TestIncrementalBloom:
     P = 8
@@ -229,20 +224,16 @@ class TestPoliteness:
         assert [r["page_num"] for r in rows] == [0, 1, 2, 3, 4]
 
     def test_modes_identical(self, spark):
-        # single_pass (default), salted single_pass, group_limit (anti-join
-        # deferred) and full_rank all produce the same scheduled set/ranks
-        # and the same unscheduled membership
+        # single_pass (default), salted single_pass and full_rank all
+        # produce the same scheduled set/ranks and the same unscheduled
+        # membership
         f = self._frontier(spark)
         variants = {
             "single_pass": politeness.rank_fetch_slots(f, budget=5),
             "single_pass_salted": politeness.rank_fetch_slots(
                 f, budget=5, salt_partitions=4
             ),
-            "group_limit": politeness.rank_fetch_slots(f, budget=5, mode="group_limit"),
             "full_rank": politeness.rank_fetch_slots(f, budget=5, mode="full_rank"),
-            "broadcast_topk": politeness.rank_fetch_slots(
-                f, budget=5, mode="broadcast_topk"
-            ),
         }
         sched = lambda df: sorted(
             (r["url"], r["fetch_rank"], r["slot"], r["wave"])
@@ -259,30 +250,18 @@ class TestPoliteness:
 
     def test_salted_identical_schedule(self, spark):
         f = self._frontier(spark)
-        plain = politeness.rank_fetch_slots(f, budget=5)
-        salted = politeness.rank_fetch_slots(f, budget=5, salt_partitions=8)
-        a = sorted(
-            (r["url"], r["fetch_rank"]) for r in plain.filter("scheduled").collect()
+        key = lambda df: sorted(
+            (r["url"], r["fetch_rank"]) for r in df.filter("scheduled").collect()
         )
-        b = sorted(
-            (r["url"], r["fetch_rank"]) for r in salted.filter("scheduled").collect()
-        )
-        assert a == b
+        want = key(politeness.rank_fetch_slots(f, budget=5, mode="full_rank"))
+        assert key(politeness.rank_fetch_slots(f, budget=5)) == want
+        assert key(politeness.rank_fetch_slots(f, budget=5, salt_partitions=8)) == want
 
     def test_slots_and_waves(self, spark):
         ranked = politeness.rank_fetch_slots(self._frontier(spark), budget=12)
         rows = ranked.filter("host = 'hot.ex' and scheduled").orderBy("fetch_rank").collect()
         assert [r["slot"] for r in rows[:7]] == [0, 1, 2, 3, 4, 0, 1]
         assert [r["wave"] for r in rows[:7]] == [0, 0, 0, 0, 0, 1, 1]
-
-    def test_window_group_limit_in_plan(self, spark):
-        # Spark >=3.5 turns row_number<=k filters into WindowGroupLimit with
-        # a map-side Partial mode — group_limit mode's hot-host defense.
-        ranked = politeness.rank_fetch_slots(
-            self._frontier(spark), budget=5, mode="group_limit"
-        )
-        plan = ranked.filter("fetch_rank <= 5")._jdf.queryExecution().executedPlan().toString()
-        assert "WindowGroupLimit" in plan
 
     def test_single_pass_plan_has_one_exchange_no_join(self, spark):
         """The default mode's whole point: ONE shuffle over the frontier,
@@ -298,29 +277,6 @@ class TestPoliteness:
         )
         plan = ranked._jdf.queryExecution().executedPlan().toString()
         assert "Join" not in plan, plan
-
-    def test_broadcast_topk_plan_never_shuffles_frontier(self, spark):
-        """broadcast_topk's whole point: the only shuffle Exchange carries
-        the NARROW projection (through a WindowGroupLimit partial), and the
-        frontier re-attaches via a broadcast hash join — the wide rows never
-        cross an exchange."""
-        ranked = politeness.rank_fetch_slots(
-            self._frontier(spark), budget=5, mode="broadcast_topk"
-        )
-        plan = ranked._jdf.queryExecution().executedPlan().toString()
-        assert "WindowGroupLimit" in plan, plan
-        assert "BroadcastHashJoin" in plan, plan
-        # exactly one shuffle exchange (the narrow rank); the broadcast
-        # exchange is not a shuffle
-        import re
-
-        assert len(re.findall(r"Exchange hashpartitioning|Exchange rangepartitioning", plan)) <= 1, plan
-        # the shuffle exchange must not carry the url string column: only the
-        # narrow projection (host/priority/page_num/url_hash) is ranked
-        shuffle_lines = [
-            l for l in plan.splitlines() if "Exchange" in l and "Broadcast" not in l
-        ]
-        assert shuffle_lines and all("url#" not in l for l in shuffle_lines), plan
 
 
 class TestRobots:
@@ -538,19 +494,16 @@ class TestHostBudgets:
         assert "c.ex" not in sched               # override 0: fully deferred
         assert "_hb_budget" not in out.columns
 
-    def test_override_rejected_outside_flag_modes(self, spark):
+    def test_unknown_mode_rejected(self, spark):
         f = spark.createDataFrame(
             [("a.ex", 0, 0, 1)], "host string, priority int, page_num int, url_hash long"
         )
         budgets = spark.createDataFrame([("a.ex", 1)], "host string, budget int")
-        with pytest.raises(ValueError, match="flag-style"):
-            politeness.rank_fetch_slots(
-                f, budget=2, mode="broadcast_topk", host_budgets=budgets
-            )
-        with pytest.raises(ValueError, match="flag-style"):
-            politeness.rank_fetch_slots(
-                f, budget=2, mode="group_limit", host_budgets=budgets
-            )
+        for mode in ("broadcast_topk", "group_limit"):
+            with pytest.raises(ValueError, match="unknown mode"):
+                politeness.rank_fetch_slots(
+                    f, budget=2, mode=mode, host_budgets=budgets
+                )
 
     def test_override_composes_with_salting(self, spark):
         # Crawl-delay × skew defense (round-3 verdict item 5): the salted

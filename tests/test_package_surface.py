@@ -1,0 +1,81 @@
+"""Package-surface guard: every module under ``bbcrawl_spark`` must be
+reachable, through static imports, from the crawl loop, its CLI or its
+inputs. A module nothing on those paths imports is dead weight in the
+``--py-files`` zip; delete it instead of keeping it "for later"."""
+
+from __future__ import annotations
+
+import ast
+import importlib.util
+import pkgutil
+from pathlib import Path
+
+import bbcrawl_spark
+
+PKG = "bbcrawl_spark"
+
+#: the crawl loop, its CLI, its spec, and its input paths
+ROOTS = (
+    "plans.round",
+    "__main__",
+    "oracle",
+    "sources.warc",
+    "sources.boardsite",
+    "plans.session",
+)
+
+
+def _modules() -> dict[str, Path]:
+    mods = {PKG: Path(bbcrawl_spark.__file__)}
+    for info in pkgutil.walk_packages(bbcrawl_spark.__path__, PKG + "."):
+        mods[info.name] = Path(importlib.util.find_spec(info.name).origin)
+    return mods
+
+
+def _imports(name: str, path: Path, mods: dict[str, Path]) -> set[str]:
+    """Package modules ``name`` imports anywhere in its body (function-local
+    imports included), plus the parent packages each import initializes."""
+    is_pkg = path.name == "__init__.py"
+    here = name if is_pkg else name.rpartition(".")[0]
+    out: set[str] = set()
+    for node in ast.walk(ast.parse(path.read_text(), str(path))):
+        if isinstance(node, ast.Import):
+            out.update(a.name for a in node.names)
+        elif isinstance(node, ast.ImportFrom):
+            if node.level:
+                base = here.split(".")
+                base = base[: len(base) - (node.level - 1)]
+                mod = ".".join(base + ([node.module] if node.module else []))
+            else:
+                mod = node.module or ""
+            out.add(mod)
+            # ``from pkg import sub`` imports the submodule ``pkg.sub``
+            out.update(f"{mod}.{a.name}" for a in node.names)
+    reached = set()
+    for m in out:
+        while m:
+            if m in mods:
+                reached.add(m)
+            m = m.rpartition(".")[0]
+    return reached
+
+
+def test_every_module_reachable_from_roots():
+    mods = _modules()
+    roots = [f"{PKG}.{r}" for r in ROOTS]
+    assert set(roots) <= set(mods), sorted(set(roots) - set(mods))
+    seen: set[str] = set()
+    todo = list(roots)
+    while todo:
+        m = todo.pop()
+        if m in seen:
+            continue
+        seen.add(m)
+        todo.extend(_imports(m, mods[m], mods) - seen)
+        parent = m.rpartition(".")[0]
+        if parent:
+            todo.append(parent)
+    unreachable = sorted(set(mods) - seen)
+    assert not unreachable, (
+        f"modules not imported by the crawl loop, CLI or inputs: {unreachable}"
+    )

@@ -168,3 +168,115 @@ class TestVB4Pager:
         assert [u for _, _, u in pagers.pager_sequence(spec)] == _collect_urls(
             pagers.vb4_frontier(spark, spec)
         )
+
+
+class TestPagerValidationTable:
+    """Every SetOptions / SetUrl error branch, one row each."""
+
+    @pytest.mark.parametrize(
+        "kw,msg",
+        [
+            (dict(start=-1, end=2, cut=(9, 1)), "start not set or set to an illegal value"),
+            (dict(start=5, end=4, cut=(9, 1)), "end must not be smaller than start"),
+            (dict(start=1, end=2, cut=(9, 1), step=0), "step set to an illegal value"),
+            (dict(start=1, end=2, cut=(9,)), "cut needs 2 integers"),
+            (dict(start=1, end=2, cut=(0, 1)), "cut: first argument cannot be 0"),
+            (dict(start=1, end=2, cut=(9, -1)), "negative amount of characters"),
+            (dict(start=1, end=10, cut=(9, 1), digits=1), "not enough space"),
+            (dict(start=1, end=2, cut=(11, 1)), "cutoff index out of range"),
+            (dict(start=1, end=2, cut=(-99, 1)), "cutoff index out of range"),
+            (dict(url="ftp://h/1", start=1, end=2, cut=(9, 1)), "unsupported url scheme"),
+        ],
+    )
+    def test_cutter(self, kw, msg):
+        kw.setdefault("url", "http://h/1")
+        with pytest.raises(ValueError, match=msg):
+            CutterPagerSpec(**kw)
+
+    @pytest.mark.parametrize(
+        "kw,msg",
+        [
+            (dict(url="http://h/b", start=0, end=2), "Start page not set"),
+            (dict(url="http://h/b", start=3, end=2), "End page not set"),
+            (dict(url="http://h/b", start=1, end=2, name=""), "Page identifier not set"),
+            (dict(url="/b?x=1", start=1, end=2), '"/b" is not an absolute URL'),
+        ],
+    )
+    def test_query(self, kw, msg):
+        with pytest.raises(ValueError, match=msg):
+            QueryPagerSpec(**kw)
+
+    @pytest.mark.parametrize(
+        "kw,msg",
+        [
+            (dict(url="http://h/t", start=0, end=2), "Start page not set"),
+            (dict(url="http://h/t", start=3, end=2), "End page not set"),
+            (dict(url="ftp://h/t", start=1, end=2), "unsupported url scheme"),
+        ],
+    )
+    def test_vb4(self, kw, msg):
+        with pytest.raises(ValueError, match=msg):
+            VB4PagerSpec(**kw)
+
+
+class TestPageUrlTable:
+    @pytest.mark.parametrize(
+        "url,name,page,want",
+        [
+            ("http://h/b?z=1&a=2", "page", 2, "http://h/b?a=2&page=2&z=1"),
+            ("http://h/b?z=1&a=2", "p", 2, "http://h/b?a=2&p=2&z=1"),
+            ("http://h/b?page=9&x=1", "page", 3, "http://h/b?page=3&x=1"),
+            ("http://h/b?k=2&k=1", "page", 1, "http://h/b?k=2&k=1&page=1"),
+            ("http://h/b?q=a+b", "page", 1, "http://h/b?page=1&q=a+b"),
+            ("http://h/b?q=%7E", "page", 1, "http://h/b?page=1&q=~"),
+            ("http://h/b?x=1?y=2", "page", 1, "http://h/b?page=1&x=1%3Fy%3D2"),
+        ],
+    )
+    def test_query(self, url, name, page, want):
+        assert QueryPagerSpec(url=url, start=1, end=9, name=name).page_url(page) == want
+
+    @pytest.mark.parametrize(
+        "cut,digits,page,want",
+        [
+            ((-3, 1), 0, 5, "http://h/t/5/x"),
+            ((-3, 1), 3, 5, "http://h/t/005/x"),
+            ((12, 0), 0, 7, "http://h/t/71/x"),  # zero-width cut inserts
+            ((12, 3), 0, 2, "http://h/t/2"),  # cut runs to the end
+        ],
+    )
+    def test_cutter(self, cut, digits, page, want):
+        spec = CutterPagerSpec(url="http://h/t/1/x", start=1, end=9, cut=cut, digits=digits)
+        assert spec.page_url(page) == want
+
+    @pytest.mark.parametrize(
+        "url,page,want",
+        [
+            ("http://h/t/5", 1, "http://h/t/5"),
+            ("http://h/t/5", 3, "http://h/t/5/page3"),
+            ("http://h/t/5/", 2, "http://h/t/5/page2"),
+        ],
+    )
+    def test_vb4(self, url, page, want):
+        assert VB4PagerSpec(url=url, start=1, end=9).page_url(page) == want
+
+
+SPECS = [
+    QueryPagerSpec(url="http://h/b?z=1&a=x+y", start=3, end=7, seed_id=1),
+    QueryPagerSpec(url="http://h/b", start=1, end=4, name="p", seed_id=2),
+    CutterPagerSpec(url="http://h/t/1/x", start=0, end=5, cut=(-3, 1), step=3, digits=2, seed_id=3),
+    CutterPagerSpec(url="http://h/t/1/x", start=2, end=4, cut=(12, 1), startpage="http://h/t/", adjust=2, seed_id=4),
+    VB4PagerSpec(url="http://h/t/5", start=1, end=4, seed_id=5),
+    VB4PagerSpec(url="http://h/t/5/", start=3, end=6, seed_id=6),
+]
+
+
+class TestFrontierForMatchesSequence:
+    """The Spark frontier carries exactly the oracle sequence: same ord,
+    page_num and url, and the spec's seed_id on every row."""
+
+    @pytest.mark.parametrize("spec", SPECS, ids=[f"seed{s.seed_id}" for s in SPECS])
+    def test_rows(self, spark, spec):
+        rows = pagers.frontier_for(spark, spec, parallelism=2).orderBy("ord").collect()
+        assert [(r["ord"], r["page_num"], r["url"]) for r in rows] == pagers.pager_sequence(spec)
+        assert {r["seed_id"] for r in rows} == {spec.seed_id}
+        assert spec.num_pages() == len(rows)

@@ -154,42 +154,6 @@ class TestIncrementalBloomLaws:
         assert np.array_equal(blob, ref)
 
 
-class TestBatchHashLaws:
-    """Laws of the vectorized signature hash: values must not depend on the
-    batch a string arrives in (minhash/simhash reduceat grouping relies on
-    this), and the family must be seeded-deterministic and well-spread."""
-
-    @given(st.lists(st.text(min_size=0, max_size=90), min_size=1, max_size=60))
-    @settings(max_examples=100, deadline=None)
-    def test_batch_composition_invariant(self, strs):
-        from bbcrawl_spark.operators.textops import _hash_strings_np
-
-        whole = _hash_strings_np(strs)
-        split = np.concatenate(
-            [_hash_strings_np(strs[:1]), _hash_strings_np(strs[1:])]
-        ) if len(strs) > 1 else _hash_strings_np(strs)
-        assert np.array_equal(whole, split)
-        assert np.array_equal(whole, _hash_strings_np(list(strs)))
-
-    def test_spread_and_distinct(self):
-        from bbcrawl_spark.operators.textops import _hash_strings_np
-
-        strs = [f"tok{i} gram{i % 7}" for i in range(20000)]
-        h = _hash_strings_np(strs)
-        assert len(np.unique(h)) == len(strs)  # no collisions on this set
-        # bits look uniform-ish: each of the 64 bit positions near 50% set
-        bits = ((h[:, None] >> np.arange(64, dtype=np.uint64)) & np.uint64(1)).mean(0)
-        assert (np.abs(bits - 0.5) < 0.05).all()
-
-    def test_long_strings_fold_not_truncate(self):
-        from bbcrawl_spark.operators.textops import _hash_strings_np
-
-        a = "x" * 64 + "tail-one"
-        b = "x" * 64 + "tail-two"
-        ha, hb = _hash_strings_np([a, b])
-        assert ha != hb  # bytes past the packed width still influence the hash
-
-
 class TestAttrsTokenizerLaws:
     @given(st.lists(st.from_regex(r"[a-z0-9 ]{1,6}", fullmatch=True), min_size=1, max_size=5))
     @settings(max_examples=200, deadline=None)
@@ -232,191 +196,3 @@ class TestPathUnescapeLaws:
         # decoding is single-pass like Go's: %2541 -> '%41' (NOT 'A')
         assert urlkit.path_unescape("%2541") == "%41"
 
-
-class TestRepetitionLaws:
-    """Randomized cross-check of the JVM column-expr repetition/top-n-gram
-    signals against a direct Python ground truth — one Spark job over a
-    seeded batch of synthetic documents (per-example Spark jobs would make
-    hypothesis unusably slow, so this is a seeded-corpus law test)."""
-
-    def _corpus(self, rng, n_docs=60):
-        vocab = ["spark", "shuffle", "the", "a", "join", "scan", "x1", "y2"]
-        docs = []
-        for _ in range(n_docs):
-            n = int(rng.integers(0, 30))
-            docs.append(" ".join(rng.choice(vocab, size=n)) if n else "")
-        return docs
-
-    def test_top_ngram_matches_python_counter(self, spark):
-        from collections import Counter
-
-        from bbcrawl_spark.operators import textops
-
-        rng = np.random.default_rng(4242)
-        docs = self._corpus(rng)
-        df = spark.createDataFrame(
-            list(enumerate(docs)), "doc_id long, text string"
-        )
-        got = {
-            r["doc_id"]: (r["t_top_token_frac_e4"], r["t_top_bigram_frac_e4"])
-            for r in textops.top_ngram_stats(df).collect()
-        }
-        for i, doc in enumerate(docs):
-            toks = textops.normalized_py(doc).split(" ") if textops.normalized_py(doc) else [""]
-            want_tok = Counter(toks).most_common(1)[0][1] * 10000 // len(toks)
-            bigrams = [f"{a} {b}" for a, b in zip(toks, toks[1:])]
-            want_bi = (
-                Counter(bigrams).most_common(1)[0][1] * 10000 // len(bigrams)
-                if bigrams else 0
-            )
-            assert got[i] == (want_tok, want_bi), (i, doc, got[i], (want_tok, want_bi))
-
-    def test_repetition_stats_match_python(self, spark):
-        from bbcrawl_spark.operators import textops
-
-        rng = np.random.default_rng(77)
-        base = self._corpus(rng, n_docs=40)
-        # inject newlines + duplicate/bullet/ellipsis lines
-        docs = []
-        for i, d in enumerate(base):
-            lines = d.split(" ")[:6] or [""]
-            if i % 3 == 0:
-                lines += lines[:2]  # duplicate lines
-            if i % 4 == 0:
-                lines.append("- bullet")
-            if i % 5 == 0:
-                lines.append("tail...")
-            docs.append("\n".join(lines))
-        df = spark.createDataFrame(
-            list(enumerate(docs)), "doc_id long, text string"
-        )
-        got = {
-            r["doc_id"]: (
-                r["r_n_lines"], r["r_dup_line_frac_e4"],
-                r["r_dup_line_char_frac_e4"], r["r_bullet_line_frac_e4"],
-                r["r_ellipsis_line_frac_e4"],
-            )
-            for r in textops.repetition_stats(df).collect()
-        }
-        for i, doc in enumerate(docs):
-            lines = [x.strip(" ") for x in doc.split("\n")]
-            lines = [x for x in lines if x != ""]
-            n = len(lines)
-            n1 = max(n, 1)
-            uniq = list(dict.fromkeys(lines))
-            c_total = sum(len(x) for x in lines)
-            c_dist = sum(len(x) for x in uniq)
-            want = (
-                n,
-                (n - len(uniq)) * 10000 // n1,
-                (c_total - c_dist) * 10000 // max(c_total, 1),
-                sum(x.startswith(("- ", "* ")) for x in lines) * 10000 // n1,
-                sum(x.endswith("...") for x in lines) * 10000 // n1,
-            )
-            assert got[i] == want, (i, doc, got[i], want)
-
-
-class TestColumnLaws:
-    """Batch-style laws for the new JVM column ops: hypothesis-shaped
-    inputs generated deterministically, ONE Spark job per law (a per-
-    example job would pay session overhead 300x)."""
-
-    def _url_batch(self, spark):
-        from pyspark.sql import functions as F
-
-        # cover: no query / clean query / tracker-only / mixed order /
-        # fragment / '?' inside fragment / multi-value params
-        return spark.range(0, 400).select(
-            F.concat(
-                F.lit("http://h"), (F.col("id") % 23).cast("string"),
-                F.lit(".example.com/p"), (F.col("id") % 7).cast("string"),
-                F.element_at(
-                    F.array(
-                        F.lit(""),
-                        F.lit("?a=1&b=2"),
-                        F.lit("?utm_source=x&gclid=g"),
-                        F.lit("?z=9&utm_campaign=c&a=1"),
-                        F.lit("?b=2&a=1#sec"),
-                        F.lit("#frag?utm_source=x"),
-                        F.lit("?a=1&a=2&jsessionid=s"),
-                    ),
-                    ((F.col("id") % 7) + 1).cast("int"),
-                ),
-            ).alias("u")
-        )
-
-    def test_normalize_query_idempotent_and_tracker_free(self, spark):
-        from pyspark.sql import functions as F
-
-        from bbcrawl_spark.functions import udfs
-
-        df = self._url_batch(spark).select(
-            "u", udfs.normalize_query_col("u").alias("n1")
-        ).select("u", "n1", udfs.normalize_query_col("n1").alias("n2"))
-        bad = df.filter(F.col("n1") != F.col("n2"))
-        assert bad.count() == 0, bad.limit(5).collect()
-        # no tracking param survives in the QUERY part of the output
-        q = F.regexp_extract("n1", r"^[^#]*\?([^#]*)", 1)
-        leaked = df.filter(
-            F.exists(
-                F.split(q, "&"), lambda p: p.rlike(udfs.TRACKING_PARAMS_RE)
-            )
-        )
-        assert leaked.count() == 0, leaked.limit(5).collect()
-
-    def test_registrable_domain_is_a_fixpoint(self, spark):
-        from pyspark.sql import functions as F
-
-        from bbcrawl_spark.operators import linkgraph
-
-        hosts = spark.range(0, 300).select(
-            F.concat(
-                F.element_at(
-                    F.array(F.lit(""), F.lit("www."), F.lit("a.b.")),
-                    ((F.col("id") % 3) + 1).cast("int"),
-                ),
-                F.lit("site"), (F.col("id") % 40).cast("string"),
-                F.element_at(
-                    F.array(
-                        F.lit(".example.com"), F.lit(".co.uk"),
-                        F.lit(".com.au"), F.lit(".org"), F.lit(".gob.mx"),
-                    ),
-                    ((F.col("id") % 5) + 1).cast("int"),
-                ),
-            ).alias("h")
-        )
-        d1 = linkgraph.registrable_domain("h")
-        df = hosts.select("h", d1.alias("d1")).select(
-            "h", "d1", linkgraph.registrable_domain("d1").alias("d2")
-        )
-        bad = df.filter(F.col("d1") != F.col("d2"))
-        assert bad.count() == 0, bad.limit(5).collect()
-
-    def test_recrawl_interval_always_clamped_and_due_consistent(self, spark):
-        from pyspark.sql import functions as F
-
-        from bbcrawl_spark.sources import cdx
-
-        caps = spark.range(0, 2000).select(
-            F.concat(F.lit("s"), (F.col("id") % 97).cast("string")).alias("surt"),
-            F.timestamp_seconds(
-                F.lit(1_700_000_000) + (F.col("id") * 37_123) % 10_000_000
-            ).alias("fetch_ts"),
-            F.md5((F.col("id") % 300).cast("string")).alias("digest"),
-        )
-        sched = cdx.recrawl_schedule(
-            caps, "2023-12-30 00:00:00",
-            min_interval_s=3600, max_interval_s=86_400,
-        )
-        checked = sched.select(
-            ((F.col("interval_s") >= 3600) & (F.col("interval_s") <= 86_400)).alias("clamped"),
-            (
-                F.col("due")
-                == (
-                    F.unix_timestamp("next_due_ts")
-                    <= F.unix_timestamp(F.to_timestamp(F.lit("2023-12-30 00:00:00")))
-                )
-            ).alias("due_ok"),
-        )
-        bad = checked.filter(~F.col("clamped") | ~F.col("due_ok"))
-        assert bad.count() == 0

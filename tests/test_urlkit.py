@@ -119,9 +119,9 @@ class TestHostname:
 
 
 class TestGoEscapeParity:
-    """Go escape-normalization edges (VERDICT r2 item 9): percent-escaped
-    paths / userinfo / IPv6, pinned against what Go's ``url.Parse`` →
-    ``String()`` / ``Hostname()`` / ``fileNameFromURL`` produce. Where this
+    """Go escape-normalization edges: percent-escaped paths / userinfo /
+    IPv6, pinned against what Go's ``url.Parse`` → ``String()`` /
+    ``Hostname()`` / ``fileNameFromURL`` produce. Where this
     engine deliberately deviates, the row says so."""
 
     @pytest.mark.parametrize(
@@ -222,3 +222,354 @@ class TestXXHash64Parity:
         got = {r["s"]: r["h"] for r in df.select("s", F.xxhash64("s").alias("h")).collect()}
         for s in samples:
             assert urlkit.xxhash64(s) == got[s], f"xxhash64 mismatch for {s!r}"
+
+
+class TestParseUrlComponents:
+    """Go-style component split: fragment at the first '#', query at the
+    first '?', host between '//' and the next '/'. Only the scheme is
+    lowercased; every other component is kept verbatim."""
+
+    @pytest.mark.parametrize(
+        "raw,scheme,host,path,query,frag",
+        [
+            ("http://h/a/b?x=1#f", "http", "h", "/a/b", "x=1", "f"),
+            ("HTTPS://Ex.COM/P", "https", "Ex.COM", "/P", "", ""),
+            ("http://h", "http", "h", "", "", ""),
+            ("http://h?q", "http", "h", "", "q", ""),
+            ("http://h#frag", "http", "h", "", "", "frag"),
+            ("/abs/path?x", "", "", "/abs/path", "x", ""),
+            ("rel/path.jpg", "", "", "rel/path.jpg", "", ""),
+            ("//cdn.ex/img.png", "", "cdn.ex", "/img.png", "", ""),
+            ("?only=query", "", "", "", "only=query", ""),
+            ("#only-frag", "", "", "", "", "only-frag"),
+            ("http://h/a?b?c", "http", "h", "/a", "b?c", ""),
+            ("http://h/a#b#c", "http", "h", "/a", "", "b#c"),
+            ("http://h/p?x#y?z", "http", "h", "/p", "x", "y?z"),
+            ("mailto:user@ex.com", "mailto", "", "user@ex.com", "", ""),
+            ("./a:b", "", "", "./a:b", "", ""),
+            ("http://user:pw@h:81/x", "http", "user:pw@h:81", "/x", "", ""),
+            ("http://[::1]:8080/p", "http", "[::1]:8080", "/p", "", ""),
+            ("javascript:void(0)", "javascript", "", "void(0)", "", ""),
+        ],
+    )
+    def test_split(self, raw, scheme, host, path, query, frag):
+        u = urlkit.parse_url(raw)
+        assert (u.scheme, u.host, u.path, u.raw_query, u.fragment) == (
+            scheme, host, path, query, frag,
+        )
+
+    @pytest.mark.parametrize(
+        "raw,has_query",
+        [("http://h/a?", True), ("http://h/a", False), ("http://h/a#?", False)],
+    )
+    def test_empty_query_is_remembered(self, raw, has_query):
+        assert urlkit.parse_url(raw).has_query is has_query
+
+
+class TestRequestURI:
+    """Go ``URL.RequestURI()``: path or '/', plus '?query' when a '?' was
+    present (even an empty one); never the fragment."""
+
+    @pytest.mark.parametrize(
+        "raw,want",
+        [
+            ("http://h", "/"),
+            ("http://h/a/b", "/a/b"),
+            ("http://h/a?x=1", "/a?x=1"),
+            ("http://h?x", "/?x"),
+            ("http://h/a?", "/a?"),
+            ("http://h/a#f", "/a"),
+            ("rel/x?y", "rel/x?y"),
+        ],
+    )
+    def test_request_uri(self, raw, want):
+        assert urlkit.parse_url(raw).request_uri() == want
+
+
+class TestStringRoundTrip:
+    @pytest.mark.parametrize(
+        "raw",
+        [
+            "http://h/a/b?x=1#f",
+            "https://h:8443/p",
+            "http://h",
+            "http://h/?",
+            "/abs?q",
+            "rel/x.png",
+            "//cdn/x",
+            "?q=1",
+        ],
+    )
+    def test_verbatim(self, raw):
+        assert str(urlkit.parse_url(raw)) == raw
+
+
+class TestHostnameEdges:
+    @pytest.mark.parametrize(
+        "url,want",
+        [
+            ("http://H.Example.COM/x", "H.Example.COM"),  # case kept
+            ("http://h:/x", "h"),  # empty port
+            ("http://[fe80::1]/x", "fe80::1"),
+            ("http://[::1/x", "::1"),  # unterminated bracket
+            ("/rel", ""),
+            ("http://a:b@c:d@h:9/x", "h"),  # last '@' ends the userinfo
+        ],
+    )
+    def test_hostname(self, url, want):
+        assert urlkit.parse_url(url).hostname() == want
+
+
+#: (raw, canonical) — the seen-set key contract. Every row is an absolute
+#: http(s) URL, the only kind the crawl hashes.
+CANON_CASES = [
+    ("HTTP://Example.COM/Path", "http://example.com/Path"),  # path case kept
+    ("http://h:80/x", "http://h/x"),
+    ("https://h:443/x", "https://h/x"),
+    ("http://h:443/x", "http://h:443/x"),  # not http's default port
+    ("https://h:80/x", "https://h:80/x"),
+    ("http://h:8080/x", "http://h:8080/x"),
+    ("https://h:4430/x", "https://h:4430/x"),
+    ("http://h", "http://h/"),
+    ("http://h#top", "http://h/"),
+    ("http://h/a?b=1#c", "http://h/a?b=1"),
+    ("http://h/a?", "http://h/a"),  # empty query dropped
+    ("http://h/a?z=1&a=2", "http://h/a?z=1&a=2"),  # query order kept
+    ("http://h/a/../b", "http://h/a/../b"),  # no dot-segment removal
+    ("http://h/%7Euser", "http://h/%7Euser"),  # escapes kept verbatim
+    ("http://h/a/", "http://h/a/"),
+    ("http://H:80", "http://h/"),
+    ("http://user@H/x", "http://user@h/x"),
+    ("http://[::1]:80/x", "http://[::1]/x"),
+    ("http://h/a?b=1?c=2", "http://h/a?b=1?c=2"),  # query starts at the first '?'
+    ("http://h/A#B?c", "http://h/A"),  # '?' inside the fragment
+]
+
+
+class TestCanonicalizeTable:
+    @pytest.mark.parametrize("raw,want", CANON_CASES)
+    def test_canonical(self, raw, want):
+        assert urlkit.canonicalize(raw) == want
+
+    @pytest.mark.parametrize("raw,want", CANON_CASES)
+    def test_fixpoint(self, raw, want):
+        assert urlkit.canonicalize(want) == want
+
+
+@pytest.fixture(scope="module")
+def canon_cols(spark):
+    """canonicalize_col / url_hash_col over CANON_CASES in one Spark job."""
+    from bbcrawl_spark.functions import udfs
+
+    df = spark.createDataFrame([(r,) for r, _ in CANON_CASES], "url string")
+    rows = df.select(
+        "url",
+        udfs.canonicalize_col("url").alias("c"),
+        udfs.url_hash_col("url").alias("h"),
+    ).collect()
+    return {r["url"]: (r["c"], r["h"]) for r in rows}
+
+
+class TestCanonicalizeColParity:
+    """The JVM canonicalizer keys the seen set in the plan, the Python one in
+    the oracle: they must agree on every row or crawl order drifts."""
+
+    @pytest.mark.parametrize("raw,want", CANON_CASES)
+    def test_col_matches_python(self, canon_cols, raw, want):
+        assert canon_cols[raw][0] == urlkit.canonicalize(raw)
+
+    @pytest.mark.parametrize("raw,want", CANON_CASES)
+    def test_hash_col_matches_python(self, canon_cols, raw, want):
+        assert canon_cols[raw][1] == urlkit.url_hash(raw)
+
+
+#: lengths straddle every XXH64 code path: <4 tail bytes, the 4-byte lane,
+#: 8-byte lanes, and the 32-byte stripe loop with each remainder.
+XXH_SAMPLES = (
+    ["a" * n for n in (1, 2, 3, 4, 5, 7, 8, 9, 12, 15, 16, 17, 24, 31, 32, 33, 35,
+                       39, 40, 63, 64, 65, 96, 127, 128, 129)]
+    + ["", "\x00", "\x00" * 33, "ü", "€uro", "日本語のURL", "\U0001f600" * 9]
+    + ["http://ex.com/t/%d/page%d" % (i, i * 7) for i in range(6)]
+)
+
+
+@pytest.fixture(scope="module")
+def spark_xxh(spark):
+    df = spark.createDataFrame([(s,) for s in XXH_SAMPLES], "s string")
+    return {r["s"]: r["h"] for r in df.select("s", F.xxhash64("s").alias("h")).collect()}
+
+
+class TestXXHash64Table:
+    @pytest.mark.parametrize(
+        "s", XXH_SAMPLES, ids=[f"len{len(s.encode())}-{i}" for i, s in enumerate(XXH_SAMPLES)]
+    )
+    def test_matches_spark(self, spark_xxh, s):
+        assert urlkit.xxhash64(s) == spark_xxh[s]
+
+    def test_bytes_and_str_agree(self):
+        for s in XXH_SAMPLES:
+            assert urlkit.xxhash64(s) == urlkit.xxhash64(s.encode("utf-8"))
+
+    def test_seed_changes_hash(self):
+        assert urlkit.xxhash64("abc", seed=42) != urlkit.xxhash64("abc", seed=0)
+
+    def test_result_is_signed_int64(self):
+        for s in XXH_SAMPLES:
+            assert -(1 << 63) <= urlkit.xxhash64(s) < (1 << 63)
+
+
+class TestQueryEscapeTable:
+    @pytest.mark.parametrize(
+        "s,want",
+        [
+            ("", ""),
+            ("abc", "abc"),
+            ("a b", "a+b"),
+            ("a+b", "a%2Bb"),
+            ("~-._", "~-._"),
+            ("a&b=c", "a%26b%3Dc"),
+            ("100%", "100%25"),
+            ("/?#", "%2F%3F%23"),
+            ("é", "%C3%A9"),
+            ("€", "%E2%82%AC"),
+            ("\x00", "%00"),
+            ("A-Z_0.9~", "A-Z_0.9~"),
+        ],
+    )
+    def test_escape(self, s, want):
+        assert urlkit.query_escape(s) == want
+
+
+class TestParseQueryTable:
+    """Go ``url.ParseQuery`` parity, including its lenient handling of
+    malformed escapes (kept literally)."""
+
+    @pytest.mark.parametrize(
+        "qs,want",
+        [
+            ("", {}),
+            ("a=1", {"a": ["1"]}),
+            ("a=1&b=2", {"a": ["1"], "b": ["2"]}),
+            ("a=1&a=2", {"a": ["1", "2"]}),
+            ("a", {"a": [""]}),
+            ("a=", {"a": [""]}),
+            ("=v", {"": ["v"]}),
+            ("a=1&&b=2", {"a": ["1"], "b": ["2"]}),
+            ("q=a+b", {"q": ["a b"]}),
+            ("q=%41%42", {"q": ["AB"]}),
+            ("q=%zz", {"q": ["%zz"]}),
+            ("q=%C3%A9", {"q": ["é"]}),
+            ("k=a=b", {"k": ["a=b"]}),
+            ("q=50%", {"q": ["50%"]}),
+        ],
+    )
+    def test_parse(self, qs, want):
+        assert urlkit.parse_query(qs) == want
+
+
+class TestPathUnescapeTable:
+    @pytest.mark.parametrize(
+        "s,want",
+        [
+            ("abc", "abc"),
+            ("a%20b", "a b"),
+            ("a+b", "a+b"),  # '+' is literal in a path
+            ("%41%42%43", "ABC"),
+            ("%2F", "/"),
+            ("%2f", "/"),
+            ("%C3%A4", "ä"),
+            ("%25", "%"),
+            ("%2541", "%41"),  # one decoding pass only
+            ("%FF", "\udcff"),  # lone byte survives as a surrogate escape
+        ],
+    )
+    def test_decode(self, s, want):
+        assert urlkit.path_unescape(s) == want
+
+    @pytest.mark.parametrize(
+        "s,bad",
+        [("%", "%"), ("%4", "%4"), ("%zz", "%zz"), ("a%g1", "%g1"), ("%%41", "%%4")],
+    )
+    def test_invalid_escape_message(self, s, bad):
+        with pytest.raises(ValueError) as exc:
+            urlkit.path_unescape(s)
+        assert str(exc.value) == f'invalid URL escape "{bad}"'
+
+
+class TestUrlForPager:
+    @pytest.mark.parametrize("addr", ["http://h/x", "https://h", "HTTP://h/x?p=1"])
+    def test_accepts_absolute_http(self, addr):
+        assert urlkit.url_for_pager(addr).scheme in ("http", "https")
+
+    @pytest.mark.parametrize(
+        "addr,msg",
+        [
+            ("/x", "is not an absolute URL"),
+            ("h/x", "is not an absolute URL"),
+            ("//h/x", "is not an absolute URL"),
+            ("ftp://h/x", "is an unsupported url scheme"),
+            ("mailto:a@b", "is an unsupported url scheme"),
+            ("file:///etc/x", "is an unsupported url scheme"),
+        ],
+    )
+    def test_rejects(self, addr, msg):
+        with pytest.raises(ValueError) as exc:
+            urlkit.url_for_pager(addr)
+        assert str(exc.value) == f'"{addr}" {msg}'
+
+
+class TestBaseURLTable:
+    @pytest.mark.parametrize(
+        "url,want",
+        [
+            ("http://h:8080/a/b?q", "http://h"),
+            ("https://user@h/x", "https://h"),
+            ("http://[::1]:9/x", "http://::1"),  # Hostname() drops the brackets
+            ("HTTP://H/x", "http://H"),  # only the scheme is lowercased
+        ],
+    )
+    def test_base(self, url, want):
+        assert urlkit.base_url_only(url) == want
+
+    def test_relative_rejected(self):
+        with pytest.raises(ValueError, match="relative URLs are not supported"):
+            urlkit.base_url_only("/x")
+
+
+class TestRel2AbsQuirks:
+    @pytest.mark.parametrize(
+        "page,link,want",
+        [
+            ("http://h/a/b", "", "http://h/"),
+            # protocol-relative links are not absolute: their host is lost
+            ("http://h/x", "//cdn.ex/i.png", "http://h/i.png"),
+            ("https://u:p@h:8443/t", "x", "https://h/x"),
+            ("http://h/t", "../up.png", "http://h/../up.png"),  # no dot removal
+            ("http://h/t", "./same.png", "http://h/./same.png"),
+            ("http://h/t", "/a%20b.png", "http://h/a%20b.png"),
+            ("http://h/t", "HTTP://Other/X", "http://Other/X"),
+            ("http://h/t/p", "?page=2#c", "http://h/?page=2"),
+        ],
+    )
+    def test_resolve(self, page, link, want):
+        assert urlkit.rel2abs(page, link) == want
+
+    def test_relative_page_rejected(self):
+        with pytest.raises(ValueError, match="domain parameter is relative"):
+            urlkit.rel2abs("/t", "x")
+
+
+class TestFileNameTable:
+    @pytest.mark.parametrize(
+        "url,want",
+        [
+            ("http://h/a/b.tar.gz", "b.tar.gz"),
+            ("http://h/a/b.jpg?x=/y.png", "b.jpg"),  # query is not path
+            ("http://h/a/b.jpg#frag/x", "b.jpg"),
+            ("rel/name.txt", "name.txt"),
+            ("http://h/a//", ""),
+            ("http://h/.hidden", ".hidden"),
+        ],
+    )
+    def test_filename(self, url, want):
+        assert urlkit.file_name_from_url(url) == want

@@ -290,62 +290,3 @@ class TestStreamingFromPaths:
         texts = {r["url"]: r["text"] for r in drv.fetched_texts().collect()}
         assert texts == want.texts
 
-
-class TestReadWetText:
-    """WET extracts (conversion records) -> (url, warc_ts, text), sharing
-    the streamed bounded-batch core with read_warc_pages."""
-
-    TEXTS = {
-        f"http://wet.ex/{i}": f"extracted text {i}\nsecond line — naïve ünïcode {i}"
-        for i in range(7)
-    }
-
-    def _write_dir(self, tmp_path):
-        recs = [(u, DATE, t) for u, t in sorted(self.TEXTS.items())]
-        (tmp_path / "a.warc.wet").write_bytes(warc.build_wet(recs[:3]))
-        (tmp_path / "b.warc.wet.gz").write_bytes(
-            warc.build_wet(recs[3:], gzipped=True)
-        )
-
-    def test_texts_roundtrip_both_modes(self, spark, tmp_path):
-        self._write_dir(tmp_path)
-        for from_paths in (True, False):
-            df = warc.read_wet_text(spark, str(tmp_path), from_paths=from_paths)
-            got = {r["url"]: r["text"] for r in df.collect()}
-            assert got == self.TEXTS
-            assert all(r["warc_ts"] is not None for r in df.collect())
-
-    def test_warcinfo_record_skipped(self, spark, tmp_path):
-        # build_wet prepends a warcinfo record; only conversion records
-        # may become rows.
-        (tmp_path / "one.warc.wet").write_bytes(
-            warc.build_wet([("http://w.ex/a", DATE, "hello")])
-        )
-        df = warc.read_wet_text(spark, str(tmp_path))
-        assert [r["url"] for r in df.collect()] == ["http://w.ex/a"]
-
-    def test_scan_pruned_to_path(self, spark, tmp_path):
-        # Scale pin: same contract as read_warc_pages — from_paths=True
-        # must not ship file content through the binaryFile scan.
-        import re
-        self._write_dir(tmp_path)
-        plan = (
-            warc.read_wet_text(spark, str(tmp_path), from_paths=True)
-            ._jdf.queryExecution().executedPlan().toString()
-        )
-        scans = re.findall(r"ReadSchema: (struct<[^>]*>)", plan)
-        assert scans and all("content" not in s for s in scans), plan
-
-    def test_malformed_utf8_replaced_not_fatal(self, spark, tmp_path):
-        raw = warc.build_wet([("http://w.ex/bad", DATE, "ok")])
-        # corrupt the body bytes without touching Content-Length
-        raw = raw.replace(b"\r\n\r\nok\r\n", b"\r\n\r\n\xffk\r\n")
-        (tmp_path / "bad.warc.wet").write_bytes(raw)
-        df = warc.read_wet_text(spark, str(tmp_path))
-        assert [r["text"] for r in df.collect()] == ["�k"]
-
-    def test_truncated_wet_fails_loudly(self, spark, tmp_path):
-        data = warc.build_wet([(u, DATE, t) for u, t in sorted(self.TEXTS.items())])
-        (tmp_path / "trunc.warc.wet").write_bytes(data[:-20])
-        with pytest.raises(Exception, match="truncated WARC record"):
-            warc.read_wet_text(spark, str(tmp_path)).collect()
