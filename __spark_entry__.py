@@ -255,65 +255,38 @@ def q_redirect_policy(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_robots_prefix_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """P7/J5: per-host Disallow-prefix gate over constructed urls."""
-    u = _events_urls(spark, sf_dir)
-    from bbcrawl_spark.operators.robots import _path_or_root
-
-    host = udfs.host_of("url")
-    path = _path_or_root(F.col("url"))  # '' and NULL both -> '/' (oracle CASE parity)
-    rules = spark.createDataFrame(
-        [("forum1.example.com", "/b0"), ("forum2.example.com", "/b1"),
-         ("cdn1.example.net", "/f/")],
-        "r_host string, disallow_prefix string",
-    )
-    df = u.select("event_id", "url", host.alias("host"), path.alias("path"))
-    blocked = (
-        df.join(F.broadcast(rules), df["host"] == rules["r_host"], "inner")
-        .filter(F.col("path").startswith(F.col("disallow_prefix")))
-        .select("event_id")
-        .distinct()
-    )
-    return df.join(blocked, "event_id", "left_anti").select("event_id", "url")
+#: robots.txt bodies over the synthetic URL table: an Allow carve-out under
+#: a Disallow (longest match wins), '*' wildcards, a '$' end anchor, and a
+#: mixed-case host key and agent line (both compare case-insensitively)
+_ROBOTS_TXTS = {
+    "Forum1.Example.com": "User-agent: *\nDisallow: /b0\nAllow: /b0/t1\n",
+    "forum2.example.com": "User-agent: *\nDisallow: /b*/t1\n",
+    "cdn1.example.net": "USER-AGENT: *\nDisallow: /f/*.jpg\n",
+    "cdn2.example.net": "User-agent: *\nDisallow: /f/9$\n",
+}
 
 
-#: full-REP rules over the synthetic URL table: Allow carve-out under a
-#: Disallow (longest-match precedence), '*' wildcards, '$' end anchor —
-#: the regex column on BOTH engines is generated by robots.robots_regex
-_ROBOTS_FULL_RULES = [
-    ("forum1.example.com", "/b0", False),
-    ("forum1.example.com", "/b0/t1", True),  # longer Allow wins inside /b0
-    ("forum2.example.com", "/b*/t1", False),  # wildcard board
-    ("cdn1.example.net", "/f/*.jpg", False),  # wildcard + literal dot
-    ("cdn2.example.net", "/f/9$", False),  # exactly /f/9, not /f/9x
-]
-
-
-def _robots_full_values() -> str:
-    """DuckDB VALUES rows for the full-REP oracle — regexes from the SAME
-    robots_regex translation the Spark rules table uses (twin lockstep)."""
+def _robots_values() -> str:
+    """DuckDB VALUES rows for the robots oracle — rules from the same parser
+    and regexes from the same robots_regex translation the Spark rules
+    table uses (twin lockstep)."""
     from bbcrawl_spark.operators import robots
 
     return ", ".join(
-        f"('{h}', {str(a).upper()}, {len(p)}, '{robots.robots_regex(p)}')"
-        for h, p, a in _ROBOTS_FULL_RULES
+        f"('{h.lower()}', {str(a).upper()}, {len(p)}, '{robots.robots_regex(p)}')"
+        for h, txt in _ROBOTS_TXTS.items()
+        for p, a in robots.parse_robots_txt(txt)
     )
 
 
-def q_robots_full_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """P7 full REP: Allow/Disallow with longest-match precedence (allow wins
-    ties) and '*'/'$' wildcards, per RFC 9309 / the Google spec."""
+def q_robots_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """P7: Allow/Disallow with longest-match precedence (allow wins ties)
+    and '*'/'$' wildcards, per RFC 9309."""
     from bbcrawl_spark.operators import robots
 
     u = _events_urls(spark, sf_dir)
-    rules = spark.createDataFrame(
-        [
-            (h, p, a, len(p), robots.robots_regex(p))
-            for h, p, a in _ROBOTS_FULL_RULES
-        ],
-        "host string, pattern string, allow boolean, plen int, rx string",
-    )
-    return robots.robots_gate_full(u, rules).select("event_id", "url")
+    rules = robots.robots_table(spark, _ROBOTS_TXTS)
+    return robots.robots_gate(u, rules).select("event_id", "url")
 
 
 def q_header_filename(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -470,8 +443,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "seen_union_growth": q_seen_union_growth,
         "metrics_rollup": q_metrics_rollup,
         "redirect_policy": q_redirect_policy,
-        "robots_prefix_gate": q_robots_prefix_gate,
-        "robots_full_gate": q_robots_full_gate,
+        "robots_gate": q_robots_gate,
         "header_filename": q_header_filename,
         "vb_headername_complete": q_vb_headername_complete,
         "priority_score": q_priority_score,
@@ -574,29 +546,14 @@ def oracle_sql() -> dict[str, str]:
                    CASE WHEN event_id % 13 > 10 THEN 'error' ELSE 'ok' END AS log_status
             FROM events
         """,
-        "robots_prefix_gate": f"""
+        "robots_gate": f"""
             {_URL_CTE},
             d AS (SELECT event_id, url,
                     regexp_replace(lower(regexp_extract(url, '^[A-Za-z][A-Za-z0-9+.\\-]*://([^/?#]*)', 1)), ':[0-9]+$', '') AS host,
                     CASE WHEN regexp_extract(url, '^[A-Za-z][A-Za-z0-9+.\\-]*://[^/?#]*([^?#]*)', 1) = ''
                          THEN '/' ELSE regexp_extract(url, '^[A-Za-z][A-Za-z0-9+.\\-]*://[^/?#]*([^?#]*)', 1) END AS path
                   FROM u),
-            rules AS (SELECT * FROM (VALUES ('forum1.example.com', '/b0'),
-                                            ('forum2.example.com', '/b1'),
-                                            ('cdn1.example.net', '/f/')) AS r(r_host, disallow_prefix))
-            SELECT event_id, url FROM d
-            WHERE event_id NOT IN (
-                SELECT d.event_id FROM d JOIN rules ON d.host = rules.r_host
-                WHERE starts_with(d.path, rules.disallow_prefix))
-        """,
-        "robots_full_gate": f"""
-            {_URL_CTE},
-            d AS (SELECT event_id, url,
-                    regexp_replace(lower(regexp_extract(url, '^[A-Za-z][A-Za-z0-9+.\\-]*://([^/?#]*)', 1)), ':[0-9]+$', '') AS host,
-                    CASE WHEN regexp_extract(url, '^[A-Za-z][A-Za-z0-9+.\\-]*://[^/?#]*([^?#]*)', 1) = ''
-                         THEN '/' ELSE regexp_extract(url, '^[A-Za-z][A-Za-z0-9+.\\-]*://[^/?#]*([^?#]*)', 1) END AS path
-                  FROM u),
-            rules AS (SELECT * FROM (VALUES {_robots_full_values()}) AS r(r_host, allow, plen, rx)),
+            rules AS (SELECT * FROM (VALUES {_robots_values()}) AS r(r_host, allow, plen, rx)),
             m AS (SELECT d.event_id, r.allow,
                          ROW_NUMBER() OVER (PARTITION BY d.event_id
                                             ORDER BY r.plen DESC, r.allow DESC) AS rn

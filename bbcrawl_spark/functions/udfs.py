@@ -6,19 +6,22 @@ JVM-side builtin stays one (``xxhash64``, ``parse_url``, ``regexp_extract``,
 ``format_string``, ``lpad``); Python appears only where Spark genuinely
 lacks the semantics — Go-quirk URL resolution and HTML DOM extraction.
 
-UDF batch sizing: HTML blobs are large; callers should set
-``spark.sql.execution.arrow.maxRecordsPerBatch`` ≈ 256-1024 (see
-plans/session.py) so Arrow batches stay memory-bounded on executors.
+UDF batch sizing: HTML blobs are large, so ``plans/session.py`` caps Arrow
+batches by bytes (``spark.sql.execution.arrow.maxBytesPerBatch`` = 16m) as
+well as rows (``maxRecordsPerBatch`` = 10000): HTML batches stay
+memory-bounded on executors while narrow hash columns batch at full size.
 """
 
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import Column
+import pyarrow as pa
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import (
     ArrayType,
+    DataType,
     IntegerType,
     StringType,
     StructField,
@@ -27,6 +30,17 @@ from pyspark.sql.types import (
 
 from .. import extract
 from ..htmlkit import decode_html, parse_html
+
+
+def local_table(spark: SparkSession, rows: list[tuple], schema: str) -> DataFrame:
+    """A small driver-side table (rules, budgets, excludes) as a local
+    relation. Built through Arrow it plans as ``LocalTableScan``, whose
+    broadcast runs no Spark job; ``createDataFrame`` of a Python list plans
+    ``Scan ExistingRDD`` and launches a job per broadcast."""
+    names = DataType.fromDDL(schema).names
+    cols = [list(c) for c in zip(*rows)] if rows else [[] for _ in names]
+    return spark.createDataFrame(pa.table(dict(zip(names, cols))), schema)
+
 
 # ---------------------------------------------------------------------------
 # Column-expression builders (pure JVM, no Python)

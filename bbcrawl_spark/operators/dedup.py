@@ -7,8 +7,8 @@ scale the Spark-native equivalent is:
 
 1. a **persistent partitioned Bloom filter** over the seen set
    (``url_hash``-keyed, P fixed partitions, blobs on shared storage) applied
-   *map-side* via ``mapInPandas`` — no shuffle, prunes the overwhelmingly
-   common "definitely new" case;
+   *map-side* via a scalar Arrow UDF over ``url_hash`` — no shuffle,
+   prunes the overwhelmingly common "definitely new" case;
 2. an **exact left_anti join** against the seen table for the small
    "maybe seen" remainder — Bloom filters have no false negatives, so the
    combination is exact.

@@ -1,97 +1,114 @@
-"""robots.txt gating (P7/J5) — graft operator required by the north_rule
-(the reference does no robots handling; its politeness is the 5-slot
-dispatcher only).
+"""robots.txt gating (P7/J5) per RFC 9309 — graft operator required by the
+north_rule (the reference does no robots handling).
 
-Model: a small per-host rules table broadcast-joined against the frontier
-(the dimension is tiny relative to a 10^10 frontier). Two depths:
-
-* prefix core (``robots_gate``): one row per Disallow prefix; a URL is
-  blocked when ANY of its host's prefixes prefix-matches its path — the
-  common-crawl-compatible default.
-* full REP (``robots_gate_full``): RFC 9309 / Google-spec semantics —
-  Allow + Disallow, longest-match precedence (allow wins ties), ``*`` and
-  trailing ``$`` wildcards.
-
-``Crawl-delay`` maps to per-host politeness budgets
-(``crawl_delay_budgets`` -> ``rank_fetch_slots(host_budgets=...)``).
+One implementation: ``_group`` walks a body once for the rules and
+Crawl-delay applying to a user agent (``parse_robots_txt`` and
+``parse_crawl_delay`` project it); ``robots_table`` builds the tiny
+``(host, pattern, allow, plen, rx)`` dim as a local relation;
+``robots_gate`` broadcast-joins it against the frontier and keeps a url
+whose longest matching rule is an Allow (Allow wins ties) or that matches
+no rule, with ``*`` any sequence and a trailing ``$`` the end of the path;
+``robots_allowed_py`` is its twin for the oracle. Hosts and user agents
+compare case-insensitively (§2.2.1); path patterns are case-sensitive.
+``crawl_delay_budgets`` maps Crawl-delay to per-host politeness budgets
+(``rank_fetch_slots(host_budgets=...)``).
 """
 
 from __future__ import annotations
 
-import pandas as pd
+import re
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.udfs import host_of
+from ..functions.udfs import host_of, local_table
 
 __all__ = [
     "parse_robots_txt",
+    "parse_crawl_delay",
+    "robots_regex",
     "robots_table",
     "robots_gate",
-    "parse_robots_rules",
-    "parse_crawl_delay",
+    "robots_allowed_py",
     "crawl_delay_budgets",
-    "robots_regex",
-    "robots_rules_table",
-    "robots_gate_full",
-    "robots_allowed_full_py",
 ]
 
-
-def parse_robots_txt(txt: str, user_agent: str = "*") -> list[str]:
-    """Disallow prefixes applying to ``user_agent`` (first matching group
-    wins, per the de-facto standard)."""
-    groups: list[tuple[list[str], list[str]]] = []  # (agents, disallows)
-    agents: list[str] = []
-    disallows: list[str] = []
+def _group(
+    txt: str, user_agent: str
+) -> tuple[list[tuple[str, bool]], float | None]:
+    """(rules, crawl_delay) of the first group naming ``user_agent``, else
+    of the first ``*`` group. A group is a run of User-agent lines plus the
+    records after it; any Allow, Disallow or Crawl-delay record closes the
+    run. Rules keep file order; an empty value is no rule."""
+    groups: list[tuple[set[str], list[tuple[str, bool]], float | None]] = []
+    agents: set[str] = set()
+    rules: list[tuple[str, bool]] = []
+    delay: float | None = None
     in_group = False
     for raw in txt.splitlines():
-        line = raw.split("#", 1)[0].strip()
-        if not line:
-            continue
-        key, _, val = line.partition(":")
+        key, _, val = raw.split("#", 1)[0].partition(":")
         key, val = key.strip().lower(), val.strip()
         if key == "user-agent":
             if in_group:
-                groups.append((agents, disallows))
-                agents, disallows = [], []
-                in_group = False
-            agents.append(val)
-        elif key == "disallow":
+                groups.append((agents, rules, delay))
+                agents, rules, delay, in_group = set(), [], None, False
+            agents.add(val.lower())
+        elif key in ("allow", "disallow"):
             in_group = True
             if val:
-                disallows.append(val)
-        elif key in ("allow", "crawl-delay"):
-            # Recognized records end the user-agent run even though this
-            # parser ignores their values — otherwise 'User-agent: a /
-            # Allow: /x / User-agent: b / Disallow: /y' would merge a and b
-            # into one group (same grouping as parse_crawl_delay).
+                rules.append((val, key == "allow"))
+        elif key == "crawl-delay":
             in_group = True
-    if agents or disallows:
-        groups.append((agents, disallows))
-    for ag, dis in groups:
-        if user_agent in ag:
-            return dis
-    for ag, dis in groups:
-        if "*" in ag:
-            return dis
-    return []
+            try:
+                delay = float(val)
+            except ValueError:
+                pass
+    groups.append((agents, rules, delay))
+    for want in (user_agent.lower(), "*"):
+        for ag, rs, d in groups:
+            if want in ag:
+                return rs, d
+    return [], None
+
+
+def parse_robots_txt(txt: str, user_agent: str = "*") -> list[tuple[str, bool]]:
+    """(pattern, allow) rules applying to ``user_agent``, in file order."""
+    return _group(txt, user_agent)[0]
+
+
+def parse_crawl_delay(txt: str, user_agent: str = "*") -> float | None:
+    """``Crawl-delay:`` seconds applying to ``user_agent``; None when absent
+    or unparseable."""
+    return _group(txt, user_agent)[1]
+
+
+def robots_regex(pattern: str) -> str:
+    """REP path pattern -> anchored regex: ``*`` = any char sequence, a
+    TRAILING ``$`` = end-of-path anchor, everything else literal. The same
+    translation feeds the Spark rules table, the Python twin and the DuckDB
+    oracle VALUES so the twins cannot drift."""
+    anchored_end = pattern.endswith("$")
+    body = pattern[:-1] if anchored_end else pattern
+    return (
+        "^" + ".*".join(re.escape(part) for part in body.split("*"))
+        + ("$" if anchored_end else "")
+    )
 
 
 def robots_table(
     spark: SparkSession, robots_txts: dict[str, str], user_agent: str = "*"
 ) -> DataFrame:
-    """Build the rules table from raw per-host robots.txt bodies."""
+    """Per-host rules dim ``(host, pattern, allow, plen, rx)`` from raw
+    robots.txt bodies: host lowercased, plen the RFC 9309 specificity key
+    (pattern length), rx the anchored regex. A local relation, so its
+    broadcast is a ``LocalTableScan`` and runs no Spark job."""
     rows = [
-        (host, prefix)
+        (host.lower(), pat, allow, len(pat), robots_regex(pat))
         for host, txt in robots_txts.items()
-        for prefix in parse_robots_txt(txt, user_agent)
+        for pat, allow in parse_robots_txt(txt, user_agent)
     ]
-    return spark.createDataFrame(
-        pd.DataFrame(rows, columns=["host", "disallow_prefix"])
-        if rows
-        else pd.DataFrame({"host": pd.Series(dtype="str"),
-                           "disallow_prefix": pd.Series(dtype="str")}),
+    return local_table(
+        spark, rows, "host string, pattern string, allow boolean, plen int, rx string"
     )
 
 
@@ -99,183 +116,25 @@ def _path_or_root(url: F.Column) -> F.Column:
     """URL path, with BOTH null and '' normalized to '/'. ``F.parse_url``
     yields the empty string (not NULL) for a pathless ``http://host``, so a
     bare coalesce never fires and 'Disallow: /' would miss such URLs —
-    ``nullif`` folds '' into the NULL branch, matching the pure-Python twins
+    ``nullif`` folds '' into the NULL branch, matching the pure-Python twin
     (``u.path or '/'``) and the DuckDB oracle."""
     return F.coalesce(
         F.nullif(F.parse_url(url, F.lit("PATH")), F.lit("")), F.lit("/")
     )
 
 
-def robots_gate(frontier: DataFrame, robots: DataFrame, url_col: str = "url") -> DataFrame:
-    """Drop frontier rows disallowed by robots rules.
-
-    Broadcast inner join on host (rules side is small), prefix test on the
-    path, then anti-semantics via a blocked-keys left_anti. All JVM-side.
-    """
-    path = _path_or_root(F.col(url_col))
-    blocked = (
-        frontier.withColumn("_host", host_of(F.col(url_col)))
-        .join(F.broadcast(robots), F.col("_host") == robots["host"], "inner")
-        .filter(path.startswith(F.col("disallow_prefix")))
-        .select(F.col(url_col).alias("_blocked_url"))
-        .distinct()
-    )
-    return frontier.join(
-        blocked, frontier[url_col] == blocked["_blocked_url"], "left_anti"
-    )
-
-
-# ---------------------------------------------------------------------------
-# full REP matching (RFC 9309 / Google spec): Allow + Disallow, longest-match
-# precedence (allow wins ties), '*' any-sequence and '$' end-anchor wildcards
-# ---------------------------------------------------------------------------
-
-
-def parse_robots_rules(
-    txt: str, user_agent: str = "*"
-) -> list[tuple[str, bool]]:
-    """(pattern, allow) rules applying to ``user_agent`` — like
-    ``parse_robots_txt`` but keeping Allow lines and rule order."""
-    groups: list[tuple[list[str], list[tuple[str, bool]]]] = []
-    agents: list[str] = []
-    rules: list[tuple[str, bool]] = []
-    in_group = False
-    for raw in txt.splitlines():
-        line = raw.split("#", 1)[0].strip()
-        if not line:
-            continue
-        key, _, val = line.partition(":")
-        key, val = key.strip().lower(), val.strip()
-        if key == "user-agent":
-            if in_group:
-                groups.append((agents, rules))
-                agents, rules = [], []
-                in_group = False
-            agents.append(val)
-        elif key in ("disallow", "allow"):
-            in_group = True
-            if val:
-                rules.append((val, key == "allow"))
-        elif key == "crawl-delay":
-            # A Crawl-delay record also closes the user-agent run (value
-            # consumed by parse_crawl_delay) — keeps the three parsers'
-            # group boundaries identical.
-            in_group = True
-    if agents or rules:
-        groups.append((agents, rules))
-    for ag, rs in groups:
-        if user_agent in ag:
-            return rs
-    for ag, rs in groups:
-        if "*" in ag:
-            return rs
-    return []
-
-
-def parse_crawl_delay(txt: str, user_agent: str = "*") -> float | None:
-    """``Crawl-delay:`` seconds applying to ``user_agent`` (same group
-    selection as the rule parsers); None when absent or unparseable."""
-    groups: list[tuple[list[str], float | None]] = []
-    agents: list[str] = []
-    delay: float | None = None
-    in_group = False
-    for raw in txt.splitlines():
-        line = raw.split("#", 1)[0].strip()
-        if not line:
-            continue
-        key, _, val = line.partition(":")
-        key, val = key.strip().lower(), val.strip()
-        if key == "user-agent":
-            if in_group:
-                groups.append((agents, delay))
-                agents, delay = [], None
-                in_group = False
-            agents.append(val)
-        elif key in ("disallow", "allow"):
-            in_group = True
-        elif key == "crawl-delay":
-            in_group = True
-            try:
-                delay = float(val)
-            except ValueError:
-                pass
-    if agents or delay is not None or in_group:
-        groups.append((agents, delay))
-    for ag, d in groups:
-        if user_agent in ag:
-            return d
-    for ag, d in groups:
-        if "*" in ag:
-            return d
-    return None
-
-
-def crawl_delay_budgets(
-    spark: SparkSession,
-    robots_txts: dict[str, str],
-    default_budget: int,
-    round_seconds: float,
-    user_agent: str = "*",
-) -> DataFrame:
-    """Map Crawl-delay to this engine's batch politeness: a host asking for
-    D seconds between fetches gets at most ``round_seconds // D`` fetches
-    per round (never more than the default budget). The result is the tiny
-    ``(host, budget)`` dim ``rank_fetch_slots(host_budgets=...)`` consumes;
-    hosts without a delay are omitted and keep the default. A delay longer
-    than the round yields budget 0 — the host waits whole rounds, which is
-    exactly what a D-second gap means when the scheduler only acts once per
-    round."""
-    rows = []
-    for host, txt in robots_txts.items():
-        d = parse_crawl_delay(txt, user_agent)
-        if d is not None and d > 0:
-            rows.append((host, min(default_budget, int(round_seconds // d))))
-    return spark.createDataFrame(rows or [], "host string, budget int")
-
-
-def robots_regex(pattern: str) -> str:
-    """REP path pattern -> anchored regex: ``*`` = any char sequence, a
-    TRAILING ``$`` = end-of-path anchor, everything else literal. The same
-    translation feeds the Spark rules table and the DuckDB oracle VALUES so
-    the twins cannot drift."""
-    import re as _re
-
-    anchored_end = pattern.endswith("$")
-    body = pattern[:-1] if anchored_end else pattern
-    out = "^"
-    for ch in body:
-        out += ".*" if ch == "*" else _re.escape(ch)
-    return out + ("$" if anchored_end else "")
-
-
-def robots_rules_table(
-    spark: SparkSession, robots_txts: dict[str, str], user_agent: str = "*"
-) -> DataFrame:
-    """(host, pattern, allow, plen, rx) — plen is the REP specificity key
-    (pattern length), rx the precompiled anchored regex."""
-    rows = [
-        (host, pat, allow, len(pat), robots_regex(pat))
-        for host, txt in robots_txts.items()
-        for pat, allow in parse_robots_rules(txt, user_agent)
-    ]
-    return spark.createDataFrame(
-        rows or [],
-        "host string, pattern string, allow boolean, plen int, rx string",
-    )
-
-
-def robots_gate_full(
+def robots_gate(
     frontier: DataFrame, rules: DataFrame, url_col: str = "url"
 ) -> DataFrame:
-    """Full-REP gate: keep frontier rows whose most specific matching rule
-    is an Allow (or that match no rule).
+    """Keep frontier rows whose most specific matching rule is an Allow (or
+    that match no rule).
 
     Broadcast join on host (rules are a tiny dim), per-row ``regexp_like``
     on the precompiled patterns, then one aggregation picking the verdict:
     ``max(struct(plen, allow))`` implements longest-match with
     allow-wins-ties ordering (struct compare is lexicographic; true > false).
     All JVM-side; the frontier is scanned once and never shuffled — the agg
-    keys are the blocked minority after the match filter.
+    keys are the matched minority after the match filter.
     """
     matched = (
         frontier.select(F.col(url_col).alias("_u"))
@@ -295,32 +154,42 @@ def robots_gate_full(
     )
 
 
-def robots_allowed_full_py(
+def robots_allowed_py(
     url: str, rules: dict[str, list[tuple[str, bool]]]
 ) -> bool:
-    """Pure-Python twin of ``robots_gate_full`` (oracle parity)."""
-    import re as _re
-
+    """Pure-Python twin of ``robots_gate``; ``rules`` is keyed by lowercase
+    host."""
     from .. import urlkit
 
     u = urlkit.parse_url(url)
     path = u.path or "/"
     best: tuple[int, bool] | None = None
     for pat, allow in rules.get(u.hostname().lower(), []):
-        if _re.match(robots_regex(pat), path):
+        if re.match(robots_regex(pat), path):
             key = (len(pat), allow)
             if best is None or key > best:
                 best = key
     return best is None or best[1]
 
 
-def robots_allowed_py(url: str, rules: dict[str, list[str]]) -> bool:
-    """Pure-Python twin for the sequential oracle."""
-    from .. import urlkit
-
-    u = urlkit.parse_url(url)
-    path = u.path or "/"
-    for prefix in rules.get(u.hostname().lower(), []):
-        if path.startswith(prefix):
-            return False
-    return True
+def crawl_delay_budgets(
+    spark: SparkSession,
+    robots_txts: dict[str, str],
+    default_budget: int,
+    round_seconds: float,
+    user_agent: str = "*",
+) -> DataFrame | None:
+    """Map Crawl-delay to this engine's batch politeness: a host asking for
+    D seconds between fetches gets at most ``round_seconds // D`` fetches
+    per round (never more than the default budget). The result is the tiny
+    local ``(host, budget)`` dim ``rank_fetch_slots(host_budgets=...)``
+    consumes, host lowercased; hosts without a delay are omitted and keep
+    the default, and None means no host has one. A delay longer than the
+    round yields budget 0: that host is never scheduled, and its urls stay
+    deferred in the frontier until the crawl ends."""
+    rows = []
+    for host, txt in robots_txts.items():
+        d = parse_crawl_delay(txt, user_agent)
+        if d is not None and d > 0:
+            rows.append((host.lower(), min(default_budget, int(round_seconds // d))))
+    return local_table(spark, rows, "host string, budget int") if rows else None

@@ -32,7 +32,7 @@ from dataclasses import dataclass, field
 
 from . import extract, urlkit
 from .operators.priority import priority_score_py
-from .operators.robots import robots_allowed_full_py, robots_allowed_py
+from .operators.robots import robots_allowed_py
 
 _PAGE_SUFFIX_RE = re.compile(r"/page([0-9]+)$")
 
@@ -91,8 +91,7 @@ def crawl_oracle(
     pages: dict[str, bytes],
     seeds: list[tuple],  # (url, seed_id, priority[, page_num])
     budget: int,
-    robots: dict[str, list[str]] | None = None,
-    robots_full_rules: dict[str, list[tuple[str, bool]]] | None = None,
+    robots: dict[str, list[tuple[str, bool]]] | None = None,  # parse_robots_txt
     host_budgets: dict[str, int] | None = None,
     excludes: set[str] | None = None,
     max_rounds: int = 100,
@@ -101,7 +100,9 @@ def crawl_oracle(
     redirects: dict[str, int] | None = None,  # url -> redirect count of its GET
     allow_redirect: bool = True,  # True=Log policy (cap 10), False=Deny
 ) -> OracleResult:
-    robots = robots or {}
+    # hosts compare case-insensitively, as in the engine's tables
+    robots = {h.lower(): rs for h, rs in (robots or {}).items()}
+    host_budgets = {h.lower(): b for h, b in (host_budgets or {}).items()}
     excludes = excludes or set()
     content_types = content_types or {}
     redirects = redirects or {}
@@ -116,16 +117,11 @@ def crawl_oracle(
             break
         res.rounds = r + 1
         # 2. gates
-        def _robots_ok(url: str) -> bool:
-            if robots_full_rules is not None:
-                return robots_allowed_full_py(url, robots_full_rules)
-            return robots_allowed_py(url, robots)
-
         candidates = [
             e
             for e in frontier
             if e.url not in excludes
-            and _robots_ok(e.url)
+            and robots_allowed_py(e.url, robots)
             and e.url_hash not in res.seen
         ]
         # 3. per-host budget
@@ -136,7 +132,7 @@ def crawl_oracle(
         deferred: list[FrontierEntry] = []
         for host in by_host:
             ordered = sorted(by_host[host], key=FrontierEntry.order_key)
-            b = (host_budgets or {}).get(host, budget)
+            b = host_budgets.get(host, budget)
             scheduled.extend(ordered[:b])
             deferred.extend(ordered[b:])
         # 7. global order

@@ -21,8 +21,9 @@ Shuffle profile per round (the 100-TB design):
   2. pages join: sort-merge on url (frontier side already deduped; AQE may
      demote to broadcast when a round is small)
   3. new-link dedup: hash exchange on url_hash
-  Everything else is map-side: Bloom seen-check (mapInPandas), excludes +
-  robots (broadcast), extraction (ArrowEvalPython).
+  Everything else is map-side: Bloom seen-check (scalar Arrow UDF over
+  url_hash), excludes + robots (broadcast local tables), extraction
+  (ArrowEvalPython).
 
 State writes are snapshot commits; the round barrier (``commit_round``) is
 written last, making a crashed round invisible and the resume path
@@ -34,6 +35,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 from collections.abc import Iterator
+from functools import reduce
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -44,6 +46,7 @@ from ..functions.udfs import (
     header_filename_field_col,
     header_filename_raw_field_col,
     host_of,
+    local_table,
     make_extract_fused_udf,
     url_hash_col,
 )
@@ -51,13 +54,7 @@ from .. import extract as extract_mod
 from ..operators import dedup
 from ..operators.politeness import rank_fetch_slots
 from ..operators.priority import priority_score_col
-from ..operators.robots import (
-    crawl_delay_budgets,
-    robots_gate,
-    robots_gate_full,
-    robots_rules_table,
-    robots_table,
-)
+from ..operators.robots import crawl_delay_budgets, robots_gate, robots_table
 from ..sources.warehouse import Warehouse
 
 FRONTIER_SCHEMA = (
@@ -80,8 +77,8 @@ class CrawlConfig:
     budget: int = 5  # per-host fetches per round (reference DEFAULT_DL_JOBS)
     # >0: honor robots Crawl-delay — a host asking for D seconds between
     # fetches gets crawl_delay_round_seconds // D fetches per round (capped
-    # at budget). Requires salt_partitions <= 1 (per-host budget columns are
-    # exact only in the flag-style unsalted ranker).
+    # at budget; 0 when D exceeds the round, and then the host is never
+    # scheduled). Composes with salt_partitions.
     crawl_delay_round_seconds: float = 0.0
     max_rounds: int = 100
     follow_links: bool = True
@@ -89,10 +86,10 @@ class CrawlConfig:
     bloom_partitions: int = 0  # >0 enables the persistent Bloom prefilter
     bloom_bits_per_key: int = 10
     excludes: tuple[str, ...] = ()
-    robots: dict[str, str] = field(default_factory=dict)  # host -> robots.txt body
-    # False (default) = Disallow-prefix core; True = full RFC-9309 matching
-    # (Allow lines, longest-match precedence, '*'/'$' wildcards)
-    robots_full: bool = False
+    # host -> robots.txt body, matched per RFC 9309 (Allow/Disallow,
+    # longest match wins, Allow wins ties, '*'/'$' wildcards); hosts and
+    # user_agent compare case-insensitively
+    robots: dict[str, str] = field(default_factory=dict)
     user_agent: str = "*"
     metrics_partitions: int = 16  # per-partition lineage granularity
     # crawler family (reference -crawler flag): '' = text+links only;
@@ -212,26 +209,26 @@ class CrawlDriver:
         self.spark = spark
         self.cfg = cfg
         self.wh = Warehouse(spark, cfg.warehouse_root)
-        if not cfg.robots:
-            self._robots_df = None
-        elif cfg.robots_full:
-            self._robots_df = robots_rules_table(spark, cfg.robots, cfg.user_agent)
-        else:
-            self._robots_df = robots_table(spark, cfg.robots, cfg.user_agent)
-        self._host_budgets_df = None
-        if cfg.crawl_delay_round_seconds > 0 and cfg.robots:
-            # composes with salt_partitions > 1: the salted single-pass
-            # ranker takes per-host budget columns exactly (politeness.py
-            # phase-1 prune / phase-2 regroup are per-host expressions), so
-            # a crawl-delayed hot host keeps both its tiny budget and the
-            # skew defense
-            hb = crawl_delay_budgets(
+        # the gates' and politeness' small dims are local relations: their
+        # broadcasts run no Spark job
+        self._robots_df = (
+            robots_table(spark, cfg.robots, cfg.user_agent) if cfg.robots else None
+        )
+        # composes with salt_partitions > 1: the salted single-pass ranker
+        # takes per-host budget columns exactly (politeness.py phase-1
+        # prune / phase-2 regroup are per-host expressions), so a
+        # crawl-delayed hot host keeps both its tiny budget and the skew
+        # defense. None when no host asks for a delay.
+        self._host_budgets_df = (
+            crawl_delay_budgets(
                 spark, cfg.robots, cfg.budget,
                 cfg.crawl_delay_round_seconds, cfg.user_agent,
             )
-            self._host_budgets_df = hb if hb.count() else None
+            if cfg.crawl_delay_round_seconds > 0
+            else None
+        )
         self._excludes_df = (
-            spark.createDataFrame([(u,) for u in cfg.excludes], "url string")
+            local_table(spark, [(u,) for u in cfg.excludes], "url string")
             if cfg.excludes
             else None
         )
@@ -290,8 +287,7 @@ class CrawlDriver:
         if self._excludes_df is not None:
             cand = cand.join(F.broadcast(self._excludes_df), "url", "left_anti")
         if self._robots_df is not None:
-            gate = robots_gate_full if cfg.robots_full else robots_gate
-            cand = gate(cand, self._robots_df)
+            cand = robots_gate(cand, self._robots_df)
         bloom_spec = None
         if cfg.bloom_partitions > 0 and self.wh.round_snapshot(r - 1, "bloom_dir"):
             bloom_spec = dedup.BloomSpec(
@@ -432,23 +428,20 @@ class CrawlDriver:
         )
 
         # --- per-partition lineage metrics (A5) ---------------------------
+        # one aggregation over the tagged union of the three row sets: a
+        # partition gets a row when any of them has a row there
         P = cfg.metrics_partitions
-        pid = lambda c: F.pmod(F.col(c), F.lit(P)).cast("int").alias("partition_id")
-        m_sched = scheduled.groupBy(pid("url_hash")).agg(F.count("*").alias("n_scheduled"))
-        m_fetch = fetched.groupBy(pid("url_hash")).agg(F.count("*").alias("n_fetched"))
-        m_new = new_entries.groupBy(pid("url_hash")).agg(F.count("*").alias("n_new_links"))
-        metrics = (
-            m_sched.join(m_fetch, "partition_id", "full")
-            .join(m_new, "partition_id", "full")
-            .na.fill(0)
-            .select(
-                F.lit(r).alias("round"),
-                "partition_id",
-                "n_scheduled",
-                "n_fetched",
-                "n_new_links",
+        counted = ("n_scheduled", "n_fetched", "n_new_links")
+        tagged = reduce(DataFrame.union, [
+            df.select(
+                F.pmod(F.col("url_hash"), F.lit(P)).cast("int").alias("partition_id"),
+                F.lit(i).alias("_src"),
             )
-        )
+            for i, df in enumerate((scheduled, fetched, new_entries))
+        ])
+        metrics = tagged.groupBy("partition_id").agg(
+            *[F.count_if(F.col("_src") == i).alias(c) for i, c in enumerate(counted)]
+        ).select(F.lit(r).alias("round"), "partition_id", *counted)
 
         # --- snapshot writes, then the round commit barrier ---------------
         # pin appends to the round-log parent ("" = fresh chain) so a crashed

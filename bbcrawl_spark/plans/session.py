@@ -18,8 +18,8 @@ def build_session(
     * AQE on (runtime re-plan, skew-join splitting, shuffle coalescing)
     * shuffle partitions ∝ cores (overridable; on a real cluster size to
       cluster cores × 2-3)
-    * Arrow enabled with a reduced records-per-batch — HTML blobs are large,
-      keep Arrow batches memory-bounded on executors
+    * Arrow enabled with batches capped at 16 MB as well as 10000 rows —
+      HTML blobs are large, so batches stay memory-bounded on executors
     * runtime Bloom-filter join pruning on (bonus on top of the persistent
       application-level seen Bloom)
     """

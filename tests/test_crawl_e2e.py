@@ -4,6 +4,8 @@ seen set, byte-identical text — plus deterministic resume)."""
 
 from __future__ import annotations
 
+from collections import Counter
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -111,9 +113,16 @@ class TestCrawlEquivalence:
         assert set(m.columns) == {
             "round", "partition_id", "n_scheduled", "n_fetched", "n_new_links"
         }
-        per_round = m.groupby("round")["n_scheduled"].sum().to_dict()
+        per_round = m.groupby("round")[
+            ["n_scheduled", "n_fetched", "n_new_links"]
+        ].sum().to_dict("index")
         for om in want.metrics:
-            assert per_round.get(om["round"], 0) == om["n_scheduled"]
+            got = per_round.get(om["round"], {})
+            for c in ("n_scheduled", "n_fetched", "n_new_links"):
+                assert got.get(c, 0) == om[c], (om["round"], c)
+        # one row per (round, partition) that saw any row, no all-zero rows
+        assert not m.duplicated(["round", "partition_id"]).any()
+        assert (m[["n_scheduled", "n_fetched", "n_new_links"]].sum(axis=1) > 0).all()
 
     def test_bloom_path_identical(self, spark, site, pages_path, tmp_path, want):
         drv = _driver(spark, site, pages_path, tmp_path / "whb", bloom_partitions=4)
@@ -463,11 +472,9 @@ class TestRobotsFullE2E:
     def test_full_rep_crawl_identical_to_oracle(
         self, spark, site, pages_path, tmp_path
     ):
-        """robots_full=True: Allow carve-out under a Disallow + '*' wildcard
-        flow through the round loop and match the sequential oracle's full-REP
-        twin exactly (crawl order + seen set)."""
-        from bbcrawl_spark.operators.robots import parse_robots_rules
-
+        """Default config: an Allow carve-out under a Disallow and a '*'
+        wildcard flow through the round loop and match the sequential
+        oracle exactly (crawl order + seen set)."""
         robots_txts = {
             # block board 1 except thread 0 — the cross-board entry link
             # targets t0, so the carve-out is reachable while its sibling
@@ -478,12 +485,12 @@ class TestRobotsFullE2E:
             "forum1.example": "User-agent: *\nDisallow: /b*/t2\n"
             "Disallow: /b0/secret\n",
         }
-        full_rules = {h: parse_robots_rules(t) for h, t in robots_txts.items()}
+        rules = {h: parse_robots_txt(t) for h, t in robots_txts.items()}
         want = oracle.crawl_oracle(
             pages=site.pages,
             seeds=site.seeds,
             budget=2,
-            robots_full_rules=full_rules,
+            robots=rules,
             excludes=set(site.excludes),
             max_rounds=20,
         )
@@ -495,7 +502,6 @@ class TestRobotsFullE2E:
             max_rounds=20,
             excludes=tuple(site.excludes),
             robots=robots_txts,
-            robots_full=True,
         )
         drv = CrawlDriver(spark, cfg)
         drv.run()
@@ -507,6 +513,61 @@ class TestRobotsFullE2E:
         assert not any("forum0.example/b1/t1" in u for u in urls)
         assert not any("forum0.example/b1/t2" in u for u in urls)
         assert not any("forum1.example" in u and "/t2" in u for u in urls)
+
+    def test_mixed_case_host_and_agent(self, spark, site, pages_path, tmp_path):
+        """Host keys and User-agent tokens match case-insensitively in the
+        engine and the oracle alike: rules and the Crawl-delay budget of
+        'Forum0.Example' apply to forum0.example urls."""
+        robots_txts = {
+            "Forum0.Example": "User-agent: BbCrawl\nDisallow: /b1\n"
+            "Crawl-delay: 45\n",
+        }
+        want = oracle.crawl_oracle(
+            pages=site.pages,
+            seeds=site.seeds,
+            budget=2,
+            robots={h: parse_robots_txt(t, "bbcrawl") for h, t in robots_txts.items()},
+            host_budgets={"Forum0.Example": 1},
+            excludes=set(site.excludes),
+            max_rounds=20,
+        )
+        drv = CrawlDriver(spark, CrawlConfig(
+            pages_path=pages_path,
+            warehouse_root=str(tmp_path / "wh_case"),
+            seeds=site.seeds,
+            budget=2,
+            max_rounds=20,
+            excludes=tuple(site.excludes),
+            robots=robots_txts,
+            user_agent="bbcrawl",
+            crawl_delay_round_seconds=60.0,
+        ))
+        drv.run()
+        assert _order(drv) == want.crawl_order
+        assert {r["url_hash"] for r in drv.seen_set().collect()} == want.seen
+        urls = [u for _, u in want.crawl_order]
+        assert any("forum0.example/b0" in u for u in urls)
+        assert not any("forum0.example/b1" in u for u in urls)
+        per_round = Counter(r for r, u in want.crawl_order if "forum0.example" in u)
+        assert max(per_round.values()) == 1
+
+    def test_small_dims_are_local_relations(self, spark, site, pages_path, tmp_path):
+        """The excludes, robots rules and Crawl-delay budgets tables plan as
+        LocalTableScan, so broadcasting them each round runs no Spark job."""
+        robots_txts = dict(site.robots)
+        robots_txts["forum1.example"] += "Crawl-delay: 45\n"
+        assert site.excludes
+        drv = CrawlDriver(spark, CrawlConfig(
+            pages_path=pages_path,
+            warehouse_root=str(tmp_path / "wh_dims"),
+            seeds=site.seeds,
+            excludes=tuple(site.excludes),
+            robots=robots_txts,
+            crawl_delay_round_seconds=60.0,
+        ))
+        for df in (drv._excludes_df, drv._robots_df, drv._host_budgets_df):
+            plan = df._jdf.queryExecution().executedPlan().toString()
+            assert plan.startswith("LocalTableScan"), plan
 
 
 class TestStreamingAdapter:

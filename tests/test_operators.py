@@ -288,47 +288,35 @@ Disallow: /tmp
 User-agent: evilbot
 Disallow: /
 """
-        assert robots.parse_robots_txt(txt) == ["/private/", "/tmp"]
-        assert robots.parse_robots_txt(txt, "evilbot") == ["/"]
+        assert robots.parse_robots_txt(txt) == [("/private/", False), ("/tmp", False)]
+        assert robots.parse_robots_txt(txt, "evilbot") == [("/", False)]
 
     def test_empty_disallow_allows_all(self):
         assert robots.parse_robots_txt("User-agent: *\nDisallow:\n") == []
 
     def test_nonrule_records_close_group(self):
         # An Allow or Crawl-delay record must end a user-agent run: agent
-        # 'a' must NOT inherit b's Disallow (all three parsers agree).
+        # 'a' must NOT inherit b's Disallow (rules and delay agree).
         txt = "User-agent: a\nCrawl-delay: 5\nUser-agent: b\nDisallow: /x\n"
         assert robots.parse_robots_txt(txt, "a") == []
-        assert robots.parse_robots_txt(txt, "b") == ["/x"]
-        assert robots.parse_robots_rules(txt, "a") == []
-        assert robots.parse_robots_rules(txt, "b") == [("/x", False)]
+        assert robots.parse_robots_txt(txt, "b") == [("/x", False)]
         assert robots.parse_crawl_delay(txt, "a") == 5
         assert robots.parse_crawl_delay(txt, "b") is None
         txt2 = "User-agent: a\nAllow: /ok\nUser-agent: b\nDisallow: /x\n"
-        assert robots.parse_robots_txt(txt2, "a") == []
-        assert robots.parse_robots_txt(txt2, "b") == ["/x"]
+        assert robots.parse_robots_txt(txt2, "a") == [("/ok", True)]
+        assert robots.parse_robots_txt(txt2, "b") == [("/x", False)]
 
     def test_pathless_url_blocked_by_root_disallow(self, spark):
-        # F.parse_url yields '' (not NULL) for http://host — the gates must
+        # F.parse_url yields '' (not NULL) for http://host — the gate must
         # normalize both to '/' so 'Disallow: /' blocks pathless URLs,
-        # matching the python twins (u.path or '/').
+        # matching the python twin (u.path or '/').
         frontier = _url_df(
             spark, ["http://a.ex", "http://a.ex/", "http://b.ex"]
         )
         rules = robots.robots_table(spark, {"a.ex": "User-agent: *\nDisallow: /"})
         got = sorted(r["url"] for r in robots.robots_gate(frontier, rules).collect())
         assert got == ["http://b.ex"]
-        assert not robots.robots_allowed_py("http://a.ex", {"a.ex": ["/"]})
-        full = robots.robots_rules_table(
-            spark, {"a.ex": "User-agent: *\nDisallow: /"}
-        )
-        got_full = sorted(
-            r["url"] for r in robots.robots_gate_full(frontier, full).collect()
-        )
-        assert got_full == ["http://b.ex"]
-        assert not robots.robots_allowed_full_py(
-            "http://a.ex", {"a.ex": [("/", False)]}
-        )
+        assert not robots.robots_allowed_py("http://a.ex", {"a.ex": [("/", False)]})
 
     def test_gate(self, spark):
         frontier = _url_df(
@@ -343,7 +331,7 @@ Disallow: /
         got = sorted(r["url"] for r in robots.robots_gate(frontier, rules).collect())
         assert got == ["http://a.ex/ok/1", "http://b.ex/private/3"]
         # python twin agrees
-        rdict = {"a.ex": ["/private/"]}
+        rdict = {"a.ex": [("/private/", False)]}
         assert robots.robots_allowed_py("http://a.ex/ok/1", rdict)
         assert not robots.robots_allowed_py("http://a.ex/private/2", rdict)
         assert robots.robots_allowed_py("http://b.ex/private/3", rdict)
@@ -363,7 +351,7 @@ Disallow: /dual
 """
 
     def test_parse_keeps_allow_and_order(self):
-        rules = robots.parse_robots_rules(self.TXT)
+        rules = robots.parse_robots_txt(self.TXT)
         assert ("/shop", False) in rules and ("/shop/public", True) in rules
         assert ("/*.pdf", False) in rules and ("/exact$", False) in rules
 
@@ -381,8 +369,8 @@ Disallow: /dual
         ],
     )
     def test_matching_py_twin(self, path, allowed):
-        rules = {"a.ex": robots.parse_robots_rules(self.TXT)}
-        assert robots.robots_allowed_full_py(f"http://a.ex{path}", rules) == allowed
+        rules = {"a.ex": robots.parse_robots_txt(self.TXT)}
+        assert robots.robots_allowed_py(f"http://a.ex{path}", rules) == allowed
 
     def test_gate_full_spark_agrees_with_twin(self, spark):
         paths = [
@@ -390,16 +378,14 @@ Disallow: /dual
             "/exact", "/exactly", "/dual/x", "/elsewhere",
         ]
         frontier = _url_df(spark, [f"http://a.ex{p}" for p in paths])
-        rules = robots.robots_rules_table(
-            spark, {"a.ex": self.TXT}
-        )
+        rules = robots.robots_table(spark, {"a.ex": self.TXT})
         got = sorted(
-            r["url"] for r in robots.robots_gate_full(frontier, rules).collect()
+            r["url"] for r in robots.robots_gate(frontier, rules).collect()
         )
-        pyrules = {"a.ex": robots.parse_robots_rules(self.TXT)}
+        pyrules = {"a.ex": robots.parse_robots_txt(self.TXT)}
         want = sorted(
             u for u in (f"http://a.ex{p}" for p in paths)
-            if robots.robots_allowed_full_py(u, pyrules)
+            if robots.robots_allowed_py(u, pyrules)
         )
         assert got == want
         assert "http://a.ex/shop/public/item" in got
@@ -407,12 +393,13 @@ Disallow: /dual
 
     def test_gate_full_plan_broadcasts_rules(self, spark):
         frontier = _url_df(spark, ["http://a.ex/x"])
-        rules = robots.robots_rules_table(spark, {"a.ex": self.TXT})
+        rules = robots.robots_table(spark, {"a.ex": self.TXT})
         plan = (
-            robots.robots_gate_full(frontier, rules)
+            robots.robots_gate(frontier, rules)
             ._jdf.queryExecution().executedPlan().toString()
         )
         assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan
+        assert "LocalTableScan" in plan  # the rules side
 
 
 PRIORITY_CASES = [
@@ -468,6 +455,13 @@ class TestHostBudgets:
             for r in robots.crawl_delay_budgets(spark, txts, 5, 60.0).collect()
         }
         assert got == {"slow.ex": 2, "glacial.ex": 0}
+
+    def test_crawl_delay_budgets_lowercase_hosts_or_none(self, spark):
+        txts = {"Slow.Ex": "User-agent: BbCrawl\nCrawl-delay: 30\n"}
+        got = robots.crawl_delay_budgets(spark, txts, 5, 60.0, "bbcrawl")
+        assert [tuple(r) for r in got.collect()] == [("slow.ex", 2)]
+        assert robots.crawl_delay_budgets(spark, txts, 5, 60.0) is None
+        assert robots.crawl_delay_budgets(spark, {}, 5, 60.0) is None
 
     def test_override_changes_schedule_only_for_listed_hosts(self, spark):
         rows = [

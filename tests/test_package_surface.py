@@ -79,3 +79,19 @@ def test_every_module_reachable_from_roots():
     assert not unreachable, (
         f"modules not imported by the crawl loop, CLI or inputs: {unreachable}"
     )
+
+
+def test_crawl_config_fields_pinned():
+    """Adding or removing a crawl option must show up as a diff here."""
+    from dataclasses import fields
+
+    from bbcrawl_spark.plans.round import CrawlConfig
+
+    assert [f.name for f in fields(CrawlConfig)] == [
+        "pages_path", "warehouse_root", "seeds", "budget",
+        "crawl_delay_round_seconds", "max_rounds", "follow_links",
+        "salt_partitions", "bloom_partitions", "bloom_bits_per_key",
+        "excludes", "robots", "user_agent", "metrics_partitions", "crawler",
+        "headernames", "allow_redirect", "tags", "attrs", "compact_every",
+        "expire_keep_rounds",
+    ]

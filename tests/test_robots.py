@@ -1,6 +1,6 @@
-"""robots.txt parsing, REP pattern translation and the prefix / full-REP
-gates: pure-Python twins against hand-derived verdicts, and the Spark gates
-against the twins."""
+"""robots.txt parsing, REP pattern translation and the RFC 9309 gate:
+the pure-Python twin against hand-derived verdicts, and the Spark gate
+against the twin."""
 
 from __future__ import annotations
 
@@ -15,44 +15,39 @@ class TestParseRobotsTxt:
     @pytest.mark.parametrize(
         "txt,agent,want",
         [
-            ("User-agent: *\nDisallow: /a\nDisallow: /b", "*", ["/a", "/b"]),
-            (TWO_GROUPS, "bot", ["/x"]),
-            (TWO_GROUPS, "other", ["/y"]),
-            ("User-agent: a\nUser-agent: b\nDisallow: /z", "a", ["/z"]),
-            ("User-agent: a\nUser-agent: b\nDisallow: /z", "b", ["/z"]),
+            ("User-agent: *\nDisallow: /a\nDisallow: /b", "*", [("/a", False), ("/b", False)]),
+            (TWO_GROUPS, "bot", [("/x", False)]),
+            (TWO_GROUPS, "other", [("/y", False)]),
+            ("User-agent: a\nUser-agent: b\nDisallow: /z", "a", [("/z", False)]),
+            ("User-agent: a\nUser-agent: b\nDisallow: /z", "b", [("/z", False)]),
             ("Disallow: /q", "*", []),  # a rule outside any agent group
-            ("# c\nUser-agent: * # all\nDisallow: /p # private", "*", ["/p"]),
-            ("USER-AGENT: *\nDISALLOW: /cap", "*", ["/cap"]),
+            ("# c\nUser-agent: * # all\nDisallow: /p # private", "*", [("/p", False)]),
+            ("USER-AGENT: *\nDISALLOW: /cap", "*", [("/cap", False)]),
             ("", "*", []),
             ("User-agent: bot\nDisallow: /x", "*", []),
-            ("User-agent: *\nAllow: /a\nDisallow: /b", "*", ["/b"]),
+            ("User-agent: *\nAllow: /a\nDisallow: /b", "*", [("/a", True), ("/b", False)]),
             (
                 "User-agent: bot\nDisallow: /1\nUser-agent: *\nDisallow: /2\n"
                 "User-agent: bot\nDisallow: /3",
                 "bot",
-                ["/1"],  # first matching group wins
+                [("/1", False)],  # first matching group wins
             ),
-            ("User-agent: *\r\nDisallow: /crlf\r\n", "*", ["/crlf"]),
-            ("User-agent:*\nDisallow:/tight", "*", ["/tight"]),
-        ],
-    )
-    def test_disallows(self, txt, agent, want):
-        assert robots.parse_robots_txt(txt, agent) == want
-
-
-class TestParseRobotsRules:
-    @pytest.mark.parametrize(
-        "txt,agent,want",
-        [
+            ("User-agent: *\r\nDisallow: /crlf\r\n", "*", [("/crlf", False)]),
+            ("User-agent:*\nDisallow:/tight", "*", [("/tight", False)]),
             ("User-agent: *\nAllow: /a/b\nDisallow: /a", "*", [("/a/b", True), ("/a", False)]),
             ("User-agent: *\nAllow:\nDisallow: /x", "*", [("/x", False)]),
             ("User-agent: a\nAllow: /x\nUser-agent: b\nDisallow: /y", "a", [("/x", True)]),
             ("User-agent: a\nAllow: /x\nUser-agent: b\nDisallow: /y", "b", [("/y", False)]),
             ("User-agent: *\nCrawl-delay: 3\nUser-agent: b\nDisallow: /y", "*", []),
+            # product tokens compare case-insensitively (RFC 9309 §2.2.1)
+            ("User-agent: Googlebot\nDisallow: /g", "googlebot", [("/g", False)]),
+            ("User-agent: googlebot\nDisallow: /g", "GoogleBot", [("/g", False)]),
+            # paths stay case-sensitive
+            ("User-agent: *\nDisallow: /Private", "*", [("/Private", False)]),
         ],
     )
     def test_rules(self, txt, agent, want):
-        assert robots.parse_robots_rules(txt, agent) == want
+        assert robots.parse_robots_txt(txt, agent) == want
 
 
 class TestParseCrawlDelay:
@@ -69,6 +64,7 @@ class TestParseCrawlDelay:
             (DELAYS, "*", 9.0),
             (DELAYS, "other", 9.0),
             ("Crawl-delay: 5", "*", None),
+            (DELAYS, "BOT", 1.0),
         ],
     )
     def test_delay(self, txt, agent, want):
@@ -118,7 +114,8 @@ FULL_CASES = [
     ("http://h/az/shop", False),
 ]
 
-PREFIX_RULES = {"h": ["/private", "/tmp/"]}
+#: Disallow-only rules: plain prefix matching
+PREFIX_RULES = {"h": [("/private", False), ("/tmp/", False)]}
 
 PREFIX_CASES = [
     ("http://h/private", False),
@@ -130,41 +127,75 @@ PREFIX_CASES = [
     ("http://h", True),
 ]
 
+#: ordinary robots.txt lines a literal prefix matcher misreads
+WILDCARD_RULES = {"h": [("/tmp/*", False), ("/a", False), ("/a/ok", True)]}
+
+WILDCARD_CASES = [
+    ("http://h/tmp/x", False),  # '*' is a wildcard, not a literal
+    ("http://h/tmp/", False),  # '*' also matches the empty sequence
+    ("http://h/tmp", True),
+    ("http://h/a/no", False),
+    ("http://h/a/ok/1", True),  # the Allow carve-out
+]
+
+CASE_SETS = {
+    "full": (FULL_RULES, FULL_CASES),
+    "prefix": (PREFIX_RULES, PREFIX_CASES),
+    "wildcard": (WILDCARD_RULES, WILDCARD_CASES),
+}
+
+
+def _body(rules: list[tuple[str, bool]]) -> str:
+    """A robots.txt body that parses back to ``rules``."""
+    return "User-agent: *\n" + "".join(
+        f"{'Allow' if a else 'Disallow'}: {p}\n" for p, a in rules
+    )
+
 
 class TestAllowedTwins:
     @pytest.mark.parametrize("url,allowed", FULL_CASES)
     def test_full_rep(self, url, allowed):
-        assert robots.robots_allowed_full_py(url, FULL_RULES) is allowed
+        assert robots.robots_allowed_py(url, FULL_RULES) is allowed
 
     @pytest.mark.parametrize("url,allowed", PREFIX_CASES)
     def test_prefix(self, url, allowed):
         assert robots.robots_allowed_py(url, PREFIX_RULES) is allowed
 
+    @pytest.mark.parametrize("url,allowed", WILDCARD_CASES)
+    def test_wildcard(self, url, allowed):
+        assert robots.robots_allowed_py(url, WILDCARD_RULES) is allowed
+
+    @pytest.mark.parametrize("name", sorted(CASE_SETS))
+    def test_body_round_trips(self, name):
+        for rules in CASE_SETS[name][0].values():
+            assert robots.parse_robots_txt(_body(rules)) == rules
+
 
 @pytest.fixture(scope="module")
 def spark_kept(spark):
-    """URLs each Spark gate keeps, one job per gate."""
-    full_rules = spark.createDataFrame(
-        [(h, p, a, len(p), robots.robots_regex(p)) for h, rs in FULL_RULES.items() for p, a in rs],
-        "host string, pattern string, allow boolean, plen int, rx string",
-    )
-    prefix_rules = spark.createDataFrame(
-        [(h, p) for h, ps in PREFIX_RULES.items() for p in ps],
-        "host string, disallow_prefix string",
-    )
-    full = spark.createDataFrame([(u,) for u, _ in FULL_CASES], "url string")
-    prefix = spark.createDataFrame([(u,) for u, _ in PREFIX_CASES], "url string")
-    return {
-        "full": {r["url"] for r in robots.robots_gate_full(full, full_rules).collect()},
-        "prefix": {r["url"] for r in robots.robots_gate(prefix, prefix_rules).collect()},
-    }
+    """URLs the Spark gate keeps per case set, one job each; the rules table
+    comes from robots_table over rendered bodies keyed by uppercased hosts."""
+    kept = {}
+    for name, (rules, cases) in CASE_SETS.items():
+        table = robots.robots_table(
+            spark, {h.upper(): _body(rs) for h, rs in rules.items()}
+        )
+        frontier = spark.createDataFrame([(u,) for u, _ in cases], "url string")
+        kept[name] = {r["url"] for r in robots.robots_gate(frontier, table).collect()}
+    return kept
 
 
 class TestSparkGatesMatchTwins:
     @pytest.mark.parametrize("url,allowed", FULL_CASES)
     def test_full_rep(self, spark_kept, url, allowed):
-        assert (url in spark_kept["full"]) is robots.robots_allowed_full_py(url, FULL_RULES)
+        assert (url in spark_kept["full"]) is robots.robots_allowed_py(url, FULL_RULES)
 
     @pytest.mark.parametrize("url,allowed", PREFIX_CASES)
     def test_prefix(self, spark_kept, url, allowed):
         assert (url in spark_kept["prefix"]) is robots.robots_allowed_py(url, PREFIX_RULES)
+
+    @pytest.mark.parametrize("url,allowed", WILDCARD_CASES)
+    def test_wildcard(self, spark_kept, url, allowed):
+        assert (url in spark_kept["wildcard"]) is robots.robots_allowed_py(
+            url, WILDCARD_RULES
+        )
