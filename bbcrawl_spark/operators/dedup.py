@@ -139,6 +139,50 @@ def _check_blob(hashes: np.ndarray, bitmap: np.ndarray, k: int) -> np.ndarray:
     return out
 
 
+_PART_SCHEMA = "partition_id int, n_items long, m_bits long"
+
+
+def _per_partition(df: DataFrame, P: int, hash_col: str, fn, schema: str) -> DataFrame:
+    """Call ``fn(pid, hashes) -> row`` once per Bloom partition present in
+    ``df``, with ALL of that partition's hashes; the rows form a DataFrame
+    of ``schema``.
+
+    The exchange is a hash repartition on the pid column with no explicit
+    count, so AQE sizes it to the data (a 10-key delta runs one task, not
+    P). It never splits a pid: hash partitioning sends every row of a pid
+    to one reducer, and AQE's coalescing only merges whole reducers. So
+    each pid's blob is written by exactly one task.
+    """
+    cols = [c.split()[0] for c in schema.split(",")]
+
+    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        buckets: dict[int, list[np.ndarray]] = {}
+        for pdf in batches:
+            hashes = pdf[hash_col].to_numpy(dtype=np.int64)
+            pids = (hashes % P + P) % P  # pmod parity with Spark
+            for pid in np.unique(pids):
+                buckets.setdefault(int(pid), []).append(hashes[pids == pid])
+        rows = [fn(pid, np.concatenate(chunks)) for pid, chunks in buckets.items()]
+        yield pd.DataFrame(rows, columns=cols)
+
+    pid_col = F.pmod(F.col(hash_col), F.lit(P)).cast("int")
+    return df.select(hash_col).repartition(pid_col).mapInPandas(_run, schema)
+
+
+def _build_partitions(
+    df: DataFrame, path: str, P: int, bits_per_key: int, hash_col: str
+) -> DataFrame:
+    """Build a fresh blob for every pid present in ``df`` at the dir-local
+    ``bloom_{pid}.npy`` path; lazy ``(partition_id, n_items, m_bits)``."""
+
+    def _build(pid: int, hashes: np.ndarray) -> tuple:
+        bitmap = _build_blob(hashes, bits_per_key, _NUM_HASHES)
+        np.save(_default_blob_path(path, pid), bitmap)
+        return pid, len(hashes), len(bitmap) * 8
+
+    return _per_partition(df, P, hash_col, _build, _PART_SCHEMA)
+
+
 def build_partitioned_bloom(
     seen: DataFrame,
     path: str,
@@ -146,13 +190,12 @@ def build_partitioned_bloom(
     bits_per_key: int = 10,
     hash_col: str = "url_hash",
 ) -> DataFrame:
-    """Build P Bloom blobs from the seen table via grouped applyInPandas —
-    Spark's partial-build pattern: each group (= bloom partition) is built
-    by whichever executor owns it, written straight to ``path``.
+    """Build P Bloom blobs from the seen table — Spark's partial-build
+    pattern: each bloom partition is built by the one task that owns it
+    (see ``_per_partition``) and written straight to ``path``.
 
-    Returns the manifest DataFrame ``(partition_id int, n_items long,
-    m_bits long)`` (already materialized; the write happens inside the
-    grouped UDF).
+    Returns the manifest as a local DataFrame ``(partition_id int,
+    n_items long, m_bits long)``; the blobs are written by then.
 
     Blobs always land at the dir-local ``bloom_{pid}.npy`` paths — NEVER
     resolved through a pre-existing manifest. An update-produced manifest's
@@ -162,38 +205,9 @@ def build_partitioned_bloom(
     with local paths and leaves every pointed-at dir untouched.
     """
     os.makedirs(path, exist_ok=True)
-    k = _NUM_HASHES
-
-    def _build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # one task owns whole bloom partitions (explicit repartition on the
-        # pid column); build every pid present in this task's batches
-        buckets: dict[int, list[np.ndarray]] = {}
-        for pdf in batches:
-            hashes = pdf[hash_col].to_numpy(dtype=np.int64)
-            pids = (hashes % num_partitions + num_partitions) % num_partitions
-            for pid in np.unique(pids):
-                buckets.setdefault(int(pid), []).append(hashes[pids == pid])
-        rows = []
-        for pid, chunks in buckets.items():
-            hashes = np.concatenate(chunks)
-            bitmap = _build_blob(hashes, bits_per_key, k)
-            np.save(_default_blob_path(path, pid), bitmap)
-            rows.append((pid, len(hashes), len(bitmap) * 8))
-        yield pd.DataFrame(rows, columns=["partition_id", "n_items", "m_bits"])
-
-    # explicit repartition: a user-specified exchange AQE will not coalesce
-    # away — without it a small seen set collapses to ONE task building all
-    # P blooms serially. repartition on the pid column co-locates each
-    # bloom partition wholly inside one task.
-    pid_col = F.pmod(F.col(hash_col), F.lit(num_partitions)).cast("int")
-    manifest = (
-        seen.select(hash_col)
-        .repartition(num_partitions, pid_col)
-        .mapInPandas(_build, "partition_id int, n_items long, m_bits long")
-    )
-    # materialize so the blobs exist before anyone reads them
-    manifest = manifest.cache()
-    rows = manifest.collect()
+    # collected, not cached: AQE does not coalesce the exchange under a
+    # cached plan, which would run one Python task per shuffle partition
+    rows = _build_partitions(seen, path, num_partitions, bits_per_key, hash_col).collect()
     _write_manifest(
         path,
         {
@@ -205,7 +219,7 @@ def build_partitioned_bloom(
             for r in rows
         },
     )
-    return manifest
+    return seen.sparkSession.createDataFrame(rows, _PART_SCHEMA)
 
 
 @lru_cache(maxsize=256)
@@ -289,48 +303,32 @@ def update_partitioned_bloom(
                 "rebuild it with build_partitioned_bloom first"
             )
 
-    def _delta(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        buckets: dict[int, list[np.ndarray]] = {}
-        for pdf in batches:
-            hashes = pdf[hash_col].to_numpy(dtype=np.int64)
-            pids = (hashes % P + P) % P
-            for pid in np.unique(pids):
-                buckets.setdefault(int(pid), []).append(hashes[pids == pid])
-        rows = []
-        for pid, chunks in buckets.items():
-            hashes = np.concatenate(chunks)
-            entry = prev.get(pid)
-            out_path = _default_blob_path(new_dir, pid)
-            if entry is None:
-                # first keys ever seen in this partition: fresh build
-                bitmap = _build_blob(hashes, bits_per_key, k)
-                np.save(out_path, bitmap)
-                rows.append((pid, len(hashes), len(bitmap) * 8, "built"))
-                continue
-            n_total = int(entry["n_items"]) + len(hashes)
-            if n_total * bits_per_key > int(entry["m_bits"]):
-                # fill budget exceeded: needs a resize = rebuild from seen
-                rows.append((pid, n_total, 0, "rebuild"))
-                continue
-            bitmap = np.load(entry["path"])
-            # same packbits OR-in as _build_blob: unpack once, set the
-            # delta's bits by plain fancy assignment, repack (existing
-            # bits survive the round-trip; byte-identical layout)
-            bits = np.unpackbits(bitmap, bitorder="little")
-            u = hashes.astype(np.uint64)
-            for pos in _bloom_positions(u, len(bitmap) * 8, k):
-                bits[pos] = 1
-            np.save(out_path, np.packbits(bits, bitorder="little"))
-            rows.append((pid, n_total, len(bitmap) * 8, "updated"))
-        yield pd.DataFrame(rows, columns=["partition_id", "n_items", "m_bits", "op"])
+    def _delta(pid: int, hashes: np.ndarray) -> tuple:
+        entry = prev.get(pid)
+        out_path = _default_blob_path(new_dir, pid)
+        if entry is None:
+            # first keys ever seen in this partition: fresh build
+            bitmap = _build_blob(hashes, bits_per_key, k)
+            np.save(out_path, bitmap)
+            return pid, len(hashes), len(bitmap) * 8, "built"
+        n_total = int(entry["n_items"]) + len(hashes)
+        if n_total * bits_per_key > int(entry["m_bits"]):
+            # fill budget exceeded: needs a resize = rebuild from seen
+            return pid, n_total, 0, "rebuild"
+        bitmap = np.load(entry["path"])
+        # same packbits OR-in as _build_blob: unpack once, set the delta's
+        # bits by plain fancy assignment, repack (existing bits survive the
+        # round-trip; byte-identical layout)
+        bits = np.unpackbits(bitmap, bitorder="little")
+        u = hashes.astype(np.uint64)
+        for pos in _bloom_positions(u, len(bitmap) * 8, k):
+            bits[pos] = 1
+        np.save(out_path, np.packbits(bits, bitorder="little"))
+        return pid, n_total, len(bitmap) * 8, "updated"
 
-    pid_col = F.pmod(F.col(hash_col), F.lit(P)).cast("int")
-    delta_rows = (
-        seen_new.select(hash_col)
-        .repartition(P, pid_col)
-        .mapInPandas(_delta, "partition_id int, n_items long, m_bits long, op string")
-        .collect()
-    )
+    delta_rows = _per_partition(
+        seen_new, P, hash_col, _delta, _PART_SCHEMA + ", op string"
+    ).collect()
 
     entries: dict[int, dict] = dict(prev)  # untouched pids: pointer carry
     stats: dict[str, list[int]] = {"updated": [], "built": [], "rebuilt": [], "carried": []}
@@ -353,31 +351,10 @@ def update_partitioned_bloom(
                 f"partitions {rebuild_pids} exceed their fill budget and need a "
                 "rebuild, but no seen_full DataFrame was provided"
             )
-        sub = seen_full.select(hash_col).filter(
+        sub = seen_full.filter(
             F.pmod(F.col(hash_col), F.lit(P)).cast("int").isin(rebuild_pids)
         )
-        spec = BloomSpec(new_dir, P)
-
-        def _rebuild(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            buckets: dict[int, list[np.ndarray]] = {}
-            for pdf in batches:
-                hashes = pdf[hash_col].to_numpy(dtype=np.int64)
-                pids = (hashes % P + P) % P
-                for pid in np.unique(pids):
-                    buckets.setdefault(int(pid), []).append(hashes[pids == pid])
-            rows = []
-            for pid, chunks in buckets.items():
-                hashes = np.concatenate(chunks)
-                bitmap = _build_blob(hashes, bits_per_key, k)
-                np.save(_default_blob_path(new_dir, pid), bitmap)
-                rows.append((pid, len(hashes), len(bitmap) * 8))
-            yield pd.DataFrame(rows, columns=["partition_id", "n_items", "m_bits"])
-
-        for r in (
-            sub.repartition(max(len(rebuild_pids), 1), pid_col)
-            .mapInPandas(_rebuild, "partition_id int, n_items long, m_bits long")
-            .collect()
-        ):
+        for r in _build_partitions(sub, new_dir, P, bits_per_key, hash_col).collect():
             pid = int(r["partition_id"])
             entries[pid] = {
                 "path": _default_blob_path(new_dir, pid),

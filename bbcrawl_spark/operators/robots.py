@@ -133,8 +133,9 @@ def robots_gate(
     on the precompiled patterns, then one aggregation picking the verdict:
     ``max(struct(plen, allow))`` implements longest-match with
     allow-wins-ties ordering (struct compare is lexicographic; true > false).
-    All JVM-side; the frontier is scanned once and never shuffled — the agg
-    keys are the matched minority after the match filter.
+    All JVM-side, but not one scan: the aggregation shuffles the matched
+    rows on url, and the frontier is read again for the anti-join against
+    the blocked urls.
     """
     matched = (
         frontier.select(F.col(url_col).alias("_u"))

@@ -21,8 +21,10 @@ Shuffle profile per round (the 100-TB design):
   2. pages join: sort-merge on url (frontier side already deduped; AQE may
      demote to broadcast when a round is small)
   3. new-link dedup: hash exchange on url_hash
+  4. robots gate: an aggregation exchange on url over the rule-matched
+     rows, then an anti-join of the frontier against the blocked urls
   Everything else is map-side: Bloom seen-check (scalar Arrow UDF over
-  url_hash), excludes + robots (broadcast local tables), extraction
+  url_hash), excludes (broadcast local table), extraction
   (ArrowEvalPython).
 
 State writes are snapshot commits; the round barrier (``commit_round``) is
@@ -35,7 +37,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 from collections.abc import Iterator
-from functools import reduce
+from functools import cached_property, reduce
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -233,6 +235,12 @@ class CrawlDriver:
             else None
         )
 
+    @cached_property
+    def _pages(self) -> DataFrame:
+        """The pages table, read once per driver on first use (one schema-
+        inference job); a driver that runs no round never needs it."""
+        return self.spark.read.parquet(self.cfg.pages_path)
+
     # -- state access (always via round-log-pinned snapshots) -------------
     def _pinned(self, round_no: int, table: str) -> DataFrame:
         sid = self.wh.round_snapshot(round_no, table)
@@ -279,8 +287,11 @@ class CrawlDriver:
 
     def run_round(self, r: int) -> dict[str, Any]:
         cfg = self.cfg
-        frontier = self._pinned(r - 1, "frontier")
-        seen = self._pinned(r - 1, "seen")
+        # the round log is parsed once per round: round r-1's snapshots pin
+        # every read and every append parent below
+        prev = self.wh.round_log().get(str(r - 1), {}).get("tables", {})
+        frontier = self.wh.read("frontier", prev.get("frontier"))
+        seen = self.wh.read("seen", prev.get("seen"))
 
         # --- gates (P1 excludes, P7 robots, P2/J1 seen) -------------------
         cand = frontier
@@ -289,10 +300,8 @@ class CrawlDriver:
         if self._robots_df is not None:
             cand = robots_gate(cand, self._robots_df)
         bloom_spec = None
-        if cfg.bloom_partitions > 0 and self.wh.round_snapshot(r - 1, "bloom_dir"):
-            bloom_spec = dedup.BloomSpec(
-                self.wh.round_snapshot(r - 1, "bloom_dir"), cfg.bloom_partitions
-            )
+        if cfg.bloom_partitions > 0 and prev.get("bloom_dir"):
+            bloom_spec = dedup.BloomSpec(prev["bloom_dir"], cfg.bloom_partitions)
         # persist: the Bloom-gated frontier is consumed by the politeness
         # window (twice under salted single_pass — survivor/loser branches);
         # _bloom_cache additionally pins the FLAGGED frontier so the Bloom
@@ -311,7 +320,7 @@ class CrawlDriver:
         deferred = ranked.filter(~F.col("scheduled")).select(*FRONTIER_COLS)
 
         # --- fetch = join pages (J3) + extraction (H9/H10) ----------------
-        pages = self.spark.read.parquet(cfg.pages_path)
+        pages = self._pages
         has_ct = "content_type" in pages.columns
         has_rd = "n_redirects" in pages.columns
         pcols = ["url", "html"]
@@ -446,7 +455,7 @@ class CrawlDriver:
         # --- snapshot writes, then the round commit barrier ---------------
         # pin appends to the round-log parent ("" = fresh chain) so a crashed
         # round's orphan snapshots never enter the lineage on resume
-        pin = lambda t: self.wh.round_snapshot(r - 1, t) or ""
+        pin = lambda t: prev.get(t) or ""
         fetch_log_r = scheduled.select(
             F.lit(r).alias("round"), "url", "url_hash", "host", "priority",
             "page_num", "seed_id", "fetch_rank", "slot", "wave",
@@ -476,16 +485,24 @@ class CrawlDriver:
         if cfg.follow_links:
             new_entries.unpersist()
 
+        # what this round's writes added, from their snapshot summaries (no
+        # count job); read before compaction replaces the append snapshots
+        added = {}
+        for t, sid in sids.items():
+            s = self.wh.summary(t, sid)
+            added[t] = {k: s[k] for k in ("added_rows", "added_bytes", "added_files")}
+
         # --- incremental Bloom maintenance over the round's NEW hashes ----
         # OR-in only this round's delta; untouched partitions carry forward
         # as manifest pointers (per-round cost ∝ |seen_new|, not |seen| —
         # the O(R·N) full-rebuild pattern was the one true 100x-scale
         # killer). Overflowing partitions alone rebuild from the full table.
+        bloom_stats = None
         if cfg.bloom_partitions > 0:
             bloom_dir = f"{cfg.warehouse_root}/bloom/r{r:05d}"
-            dedup.update_partitioned_bloom(
+            bloom_stats = dedup.update_partitioned_bloom(
                 self.wh.read_delta("seen", sids["seen"]),
-                self.wh.round_snapshot(r - 1, "bloom_dir"),
+                prev.get("bloom_dir"),
                 bloom_dir,
                 cfg.bloom_partitions,
                 cfg.bloom_bits_per_key,
@@ -510,12 +527,14 @@ class CrawlDriver:
                         t, sids[t], meta={"round": r}, partition_by=("round",)
                     )
 
-        n_next = self.wh.read("frontier", sids["frontier"]).count()
-        n_sched = self.wh.read("fetch_log", sids["fetch_log"]).filter(
-            F.col("round") == r
-        ).count()
+        # fetch_log's append holds exactly this round's scheduled rows
+        n_next = added["frontier"]["added_rows"]
+        n_sched = added["fetch_log"]["added_rows"]
         meta = {"round": r, "n_scheduled": n_sched, "n_frontier_next": n_next,
-                "done": n_next == 0 or n_sched == 0}
+                "done": n_next == 0 or n_sched == 0,
+                "n_fetched": added["fetched"]["added_rows"], "added": added}
+        if bloom_stats is not None:
+            meta["bloom"] = bloom_stats
         self.wh.commit_round(r, sids, meta)
         # --- snapshot expiry AFTER the commit barrier: the round log always
         # points at live snapshots; a crash mid-expiry leaves garbage dirs,

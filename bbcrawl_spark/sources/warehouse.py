@@ -24,13 +24,34 @@ Iceberg semantics the crawl loop needs:
   the bottleneck, not the data.
 
 On a real cluster, swap this class for ``spark.read.format("iceberg")`` /
-``df.writeTo(...)`` — the crawl loop only touches the four methods
-``write / append / read / commit_round``.
+``df.writeTo(...)`` — the crawl loop touches ``write / append / read /
+read_delta / summary / compact / expire_snapshots`` and the round log.
 
 Layout:
-    root/<table>/data/s<NNNN>/part-*.parquet   one dir per snapshot's new files
-    root/<table>/_manifest.json                {"current": id, "snapshots": {...}}
-    root/_rounds.json                          round -> {table: snapshot_id}
+    root/<table>/data/s<NNNNN>/part-*.parquet  one dir per snapshot's new files
+    root/<table>/_manifest.json                the table's manifest (below)
+    root/_rounds.json                          round -> {"tables": {table:
+                                               snapshot_id}, "meta": {...}}
+
+Manifest::
+
+    {"current": sid, "next_id": n,
+     "dir_layout": {data_dir: [partition col, ...]},   partitioned dirs only
+     "snapshots": {sid: {"dirs": [data_dir, ...],      parent chain + own dir
+                         "parent": sid | null, "ts": t, "meta": {...},
+                         "summary": {...}}}}
+
+Each snapshot records a summary of what it wrote (Iceberg snapshot
+summaries), in the same atomic manifest swap as the snapshot itself:
+
+* ``schema``: the written DataFrame's schema as JSON. Reads pass it to
+  ``spark.read.schema(...)``, so they run no schema-inference job.
+* ``added_rows``, ``added_files``, ``added_bytes``: summed over the parquet
+  files in the snapshot's own data dir. Row counts come from the parquet
+  footers, read on the driver, so no Spark job runs either.
+
+Snapshots written without a summary (manifests from before summaries)
+are read with schema inference.
 """
 
 from __future__ import annotations
@@ -40,7 +61,9 @@ import os
 import tempfile
 import time
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 __all__ = ["Warehouse"]
 
@@ -52,6 +75,22 @@ def _atomic_write_json(path: str, obj) -> None:
     with os.fdopen(fd, "w") as f:
         json.dump(obj, f, indent=1, sort_keys=True)
     os.replace(tmp, path)  # atomic on POSIX
+
+
+def _summarize(df: DataFrame, data_dir: str) -> dict:
+    """Summary of one snapshot's own data dir, from its parquet footers."""
+    files = [
+        os.path.join(d, f)
+        for d, _, fs in os.walk(data_dir)
+        for f in fs
+        if f.endswith(".parquet") and not f.startswith((".", "_"))
+    ]
+    return {
+        "schema": df.schema.json(),
+        "added_rows": sum(pq.read_metadata(p).num_rows for p in files),
+        "added_files": len(files),
+        "added_bytes": sum(os.path.getsize(p) for p in files),
+    }
 
 
 class Warehouse:
@@ -83,6 +122,11 @@ class Warehouse:
     def current_snapshot(self, table: str) -> str | None:
         return self._manifest(table)["current"]
 
+    def summary(self, table: str, snapshot_id: str) -> dict:
+        """What ``snapshot_id`` wrote (see the module docstring); {} for a
+        snapshot written without a summary."""
+        return self._manifest(table)["snapshots"][snapshot_id].get("summary", {})
+
     # -- write path ------------------------------------------------------
     @staticmethod
     def _next_sid(man: dict) -> str:
@@ -112,6 +156,7 @@ class Warehouse:
             "parent": man["current"],
             "ts": time.time(),
             "meta": meta or {},
+            "summary": _summarize(df, data_dir),
         }
         if partition_by:
             # per-DIR layout: a snapshot's dir list mixes dirs written by
@@ -229,18 +274,28 @@ class Warehouse:
         return {"expired": expired, "removed_dirs": sorted(removed_dirs)}
 
     # -- read path -------------------------------------------------------
+    def _scan(self, snap: dict, dirs: list[str]) -> DataFrame:
+        """Parquet scan of ``dirs`` with the snapshot's recorded schema, so
+        no schema-inference job runs; legacy snapshots infer it."""
+        reader = self.spark.read
+        summary = snap.get("summary")
+        if summary:
+            reader = reader.schema(StructType.fromJson(json.loads(summary["schema"])))
+        return reader.parquet(*dirs)
+
     def read(self, table: str, snapshot_id: str | None = None) -> DataFrame:
         man = self._manifest(table)
         sid = snapshot_id or man["current"]
         if sid is None:
             raise FileNotFoundError(f"table {table!r} has no committed snapshot")
-        dirs = man["snapshots"][sid]["dirs"]
+        snap = man["snapshots"][sid]
+        dirs = snap["dirs"]
         layouts = man.get("dir_layout", {})
         groups: dict[tuple[str, ...], list[str]] = {}
         for d in dirs:
             groups.setdefault(tuple(layouts.get(d, ())), []).append(d)
         if len(groups) == 1:
-            return self.spark.read.parquet(*dirs)
+            return self._scan(snap, dirs)
         # mixed layouts (partitioned compaction + later plain appends):
         # Spark refuses one multi-root read over conflicting directory
         # structures, so read each layout group separately and unionByName
@@ -248,7 +303,7 @@ class Warehouse:
         # realigns). Filters still prune files inside the partitioned group.
         out: DataFrame | None = None
         for key in sorted(groups):
-            part = self.spark.read.parquet(*groups[key])
+            part = self._scan(snap, groups[key])
             out = part if out is None else out.unionByName(part)
         return out
 
@@ -257,8 +312,8 @@ class Warehouse:
         parent chain) — incremental consumers (Bloom maintenance) read the
         per-round delta instead of rescanning the whole table. Iceberg
         equivalent: an incremental read between parent and child snapshots."""
-        man = self._manifest(table)
-        return self.spark.read.parquet(man["snapshots"][snapshot_id]["dirs"][-1])
+        snap = self._manifest(table)["snapshots"][snapshot_id]
+        return self._scan(snap, snap["dirs"][-1:])
 
     # -- round log (atomic multi-table commit point) ----------------------
     def _rounds_path(self) -> str:

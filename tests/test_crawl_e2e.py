@@ -124,11 +124,45 @@ class TestCrawlEquivalence:
         assert not m.duplicated(["round", "partition_id"]).any()
         assert (m[["n_scheduled", "n_fetched", "n_new_links"]].sum(axis=1) > 0).all()
 
+    def test_round_meta_from_snapshot_summaries(self, run, want):
+        """The round meta's counts come from the snapshot summaries and
+        equal the tables' rows; run_round runs no count job for them."""
+        import inspect
+
+        drv = run[0]
+        log = drv.wh.round_log()
+        for om in want.metrics:
+            r = om["round"]
+            meta, sids = log[str(r)]["meta"], log[str(r)]["tables"]
+            assert meta["n_scheduled"] == om["n_scheduled"]
+            assert meta["n_fetched"] == om["n_fetched"]
+            assert meta["n_frontier_next"] == drv.wh.read(
+                "frontier", sids["frontier"]).count()
+            assert set(meta["added"]) == {
+                "frontier", "seen", "fetch_log", "fetched", "metrics"
+            }
+            assert meta["added"]["fetch_log"]["added_rows"] == om["n_scheduled"]
+            assert meta["added"]["seen"]["added_rows"] == om["n_scheduled"]
+            for t, a in meta["added"].items():
+                assert a["added_files"] >= 1 and a["added_bytes"] > 0, (r, t)
+            assert "bloom" not in meta
+        assert ".count()" not in inspect.getsource(CrawlDriver.run_round)
+
     def test_bloom_path_identical(self, spark, site, pages_path, tmp_path, want):
         drv = _driver(spark, site, pages_path, tmp_path / "whb", bloom_partitions=4)
         drv.run()
         assert _order(drv) == want.crawl_order
         assert {r["url_hash"] for r in drv.seen_set().collect()} == want.seen
+        # the round meta keeps update_partitioned_bloom's partition stats:
+        # every pid of the round's Bloom manifest, each under one op
+        from bbcrawl_spark.operators import dedup
+
+        log = drv.wh.round_log()
+        for k in (k for k in log if int(k) >= 0):
+            stats = log[k]["meta"]["bloom"]
+            assert set(stats) == {"updated", "built", "rebuilt", "carried"}
+            manifest = dedup._read_manifest(log[k]["tables"]["bloom_dir"])
+            assert sorted(sum(stats.values(), [])) == sorted(manifest)
 
     def test_salted_politeness_identical(self, spark, site, pages_path, tmp_path, want):
         drv = _driver(spark, site, pages_path, tmp_path / "whs", salt_partitions=4)

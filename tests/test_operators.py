@@ -196,6 +196,42 @@ class TestIncrementalBloom:
         flagged = dedup.bloom_maybe_seen(_url_df(spark, rebuilt_from), spec)
         assert flagged.filter("NOT maybe_seen").count() == 0
 
+    @pytest.mark.parametrize("shuffle_partitions", ["2", "200"])
+    def test_pid_lands_whole_in_one_task(self, spark, tmp_path, shuffle_partitions):
+        """The Bloom exchanges pass no partition count, so AQE sizes them;
+        each pid must still be bucketed by ONE task. Two tasks sharing a pid
+        would each write its blob from part of the keys (false negatives)
+        and report a partial n_items."""
+        from collections import Counter
+
+        base = [f"http://h{i % 16}.ex/t/{i}" for i in range(1000)]
+        delta = [f"http://d{i % 7}.ex/n/{i}" for i in range(300)]
+        d0, d1 = str(tmp_path / "r0"), str(tmp_path / "r1")
+        old = spark.conf.get("spark.sql.shuffle.partitions")
+        spark.conf.set("spark.sql.shuffle.partitions", shuffle_partitions)
+        try:
+            dedup.build_partitioned_bloom(_url_df(spark, base), d0, self.P)
+            full = _url_df(spark, base + delta)
+            stats = dedup.update_partitioned_bloom(
+                _url_df(spark, delta).repartition(24), d0, d1, self.P,
+                seen_full=full,
+            )
+        finally:
+            spark.conf.set("spark.sql.shuffle.partitions", old)
+        assert stats["updated"]
+        spec = dedup.BloomSpec(d1, self.P)
+        assert dedup.bloom_maybe_seen(full, spec).filter("NOT maybe_seen").count() == 0
+        want = Counter(urlkit.url_hash(u) % self.P for u in base + delta)
+        got = {p: e["n_items"] for p, e in dedup._read_manifest(d1).items()}
+        assert got == dict(want)
+
+    def test_bloom_exchange_has_no_fixed_count(self, spark):
+        df = dedup._build_partitions(
+            _url_df(spark, ["http://a.ex/1"]), "/nonexistent", self.P, 10, "url_hash"
+        )
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "REPARTITION_BY_COL" in plan and "REPARTITION_BY_NUM" not in plan, plan
+
 
 class TestPoliteness:
     def _frontier(self, spark):

@@ -2,9 +2,14 @@
 
 from __future__ import annotations
 
+import json
+
 import pytest
+from pyspark.sql import functions as F
 
 from bbcrawl_spark.sources.warehouse import Warehouse
+
+from .conftest import spark_jobs
 
 
 @pytest.fixture()
@@ -231,3 +236,101 @@ class TestPartitionPruning:
         live = {d for s in man["snapshots"].values() for d in s["dirs"]}
         assert set(man.get("dir_layout", {})) <= live
         assert wh.read("t", c2).count() == 2
+
+
+class TestSnapshotSummary:
+    """Every snapshot records what it wrote (schema, rows, files, bytes);
+    reads use the recorded schema and run no Spark job."""
+
+    @staticmethod
+    def _rdf(spark, rnd, vals):
+        return spark.createDataFrame([(rnd, v) for v in vals], "round int, v long")
+
+    @staticmethod
+    def _rows(df):
+        return sorted(tuple(r) for r in df.select(sorted(df.columns)).collect())
+
+    def test_reads_run_no_job(self, spark, wh):
+        s1 = wh.write("t", self._rdf(spark, 0, [1, 2]))
+        s2 = wh.append("t", self._rdf(spark, 1, [3]))
+        with spark_jobs(spark) as jobs:
+            full, delta = wh.read("t", s2), wh.read_delta("t", s2)
+        assert jobs() == 0
+        # the recorded schema is the one inference would find
+        dirs = wh.snapshots("t")[s2]["dirs"]
+        assert full.schema == spark.read.parquet(*dirs).schema
+        assert self._rows(full) == [(0, 1), (0, 2), (1, 3)]
+        assert self._rows(delta) == [(1, 3)]
+        with spark_jobs(spark) as jobs:
+            wh.read("t", s1)
+        assert jobs() == 0
+        # a non-nullable column reads back nullable, as inference gives it
+        s3 = wh.write("n", spark.range(3).select(F.col("id").alias("v")))
+        got = wh.read("n", s3)
+        assert got.schema == spark.read.parquet(*wh.snapshots("n")[s3]["dirs"]).schema
+        assert sorted(r["v"] for r in got.collect()) == [0, 1, 2]
+
+    @pytest.mark.parametrize("op", ["write", "append", "partitioned_compact", "empty"])
+    def test_added_rows_equal_count(self, spark, wh, op):
+        import os
+
+        wh.write("t", self._rdf(spark, 0, [1, 2, 3]))
+        if op == "write":
+            sid = wh.write("t", self._rdf(spark, 1, [4, 5]).repartition(3))
+        elif op == "append":
+            sid = wh.append("t", self._rdf(spark, 1, [4, 5, 6, 7]))
+        elif op == "partitioned_compact":
+            wh.append("t", self._rdf(spark, 1, [4]))
+            sid = wh.compact("t", partition_by=("round",))
+        else:
+            sid = wh.write("t", spark.createDataFrame([], "round int, v long"))
+        s = wh.summary("t", sid)
+        assert s["added_rows"] == wh.read_delta("t", sid).count()
+        files = [
+            os.path.join(d, f)
+            for d, _, fs in os.walk(wh.snapshots("t")[sid]["dirs"][-1])
+            for f in fs
+            if f.endswith(".parquet") and not f.startswith(".")
+        ]
+        assert s["added_files"] == len(files)
+        assert s["added_bytes"] == sum(os.path.getsize(f) for f in files)
+
+    def test_legacy_manifest_without_summaries(self, spark, wh):
+        """Manifests written before summaries (a registered prior template)
+        read the same rows through schema inference."""
+        wh.write("t", self._rdf(spark, 0, [1, 2]))
+        sid = wh.append("t", self._rdf(spark, 1, [3]))
+        assert wh.summary("t", sid)["added_rows"] == 1
+        want, schema = self._rows(wh.read("t")), wh.read("t").schema
+        path = wh._manifest_path("t")
+        with open(path) as f:
+            man = json.load(f)
+        for snap in man["snapshots"].values():
+            del snap["summary"]
+        with open(path, "w") as f:
+            json.dump(man, f)
+        assert wh.summary("t", sid) == {}
+        with spark_jobs(spark) as jobs:
+            legacy = wh.read("t")
+        assert jobs() >= 1  # schema inference
+        assert legacy.schema == schema
+        assert self._rows(legacy) == want
+        assert self._rows(wh.read_delta("t", sid)) == [(1, 3)]
+        # a summarized append onto the legacy chain reads both
+        s3 = wh.append("t", self._rdf(spark, 2, [4]))
+        assert self._rows(wh.read("t", s3)) == want + [(2, 4)]
+
+    def test_mixed_layout_chain_with_summaries(self, spark, wh):
+        for rnd in range(3):
+            wh.append("t", self._rdf(spark, rnd, [rnd, rnd + 10]))
+        wh.compact("t", partition_by=("round",))
+        sid = wh.append("t", self._rdf(spark, 3, [3]))
+        with spark_jobs(spark) as jobs:
+            got = wh.read("t", sid)
+        assert jobs() == 0
+        assert got.columns == ["round", "v"]
+        assert self._rows(got) == [
+            (0, 0), (0, 10), (1, 1), (1, 11), (2, 2), (2, 12), (3, 3)
+        ]
+        assert got.filter("round = 1").count() == 2
+        assert wh.summary("t", sid)["added_rows"] == 1
