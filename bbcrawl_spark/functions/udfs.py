@@ -19,6 +19,7 @@ import pyarrow as pa
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
     ArrayType,
     DataType,
@@ -37,9 +38,11 @@ def local_table(spark: SparkSession, rows: list[tuple], schema: str) -> DataFram
     relation. Built through Arrow it plans as ``LocalTableScan``, whose
     broadcast runs no Spark job; ``createDataFrame`` of a Python list plans
     ``Scan ExistingRDD`` and launches a job per broadcast."""
-    names = DataType.fromDDL(schema).names
-    cols = [list(c) for c in zip(*rows)] if rows else [[] for _ in names]
-    return spark.createDataFrame(pa.table(dict(zip(names, cols))), schema)
+    st = DataType.fromDDL(schema)
+    cols = [list(c) for c in zip(*rows)] if rows else [[] for _ in st.names]
+    # an explicit Arrow schema: pyarrow cannot infer a struct column from
+    # tuples, and the Spark schema fixes the field order
+    return spark.createDataFrame(pa.table(cols, schema=to_arrow_schema(st)), st)
 
 
 # ---------------------------------------------------------------------------

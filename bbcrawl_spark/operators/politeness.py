@@ -31,68 +31,59 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-__all__ = ["rank_fetch_slots", "DEFAULT_ORDER_COLS", "DEFAULT_CONCURRENCY"]
+__all__ = ["rank_fetch_slots", "DEFAULT_ORDER_COLS", "CONCURRENCY", "HOST_COL"]
 
 #: deterministic crawl-order key replacing every racy reference counter
 #: (A1 global download id, goroutine completion order): priority score
 #: first (W3), then pager page order, then stable hash tiebreak.
 DEFAULT_ORDER_COLS = ("priority", "page_num", "url_hash")
 
-#: the reference's DEFAULT_DL_JOBS (libcrawl/api.go:17)
-DEFAULT_CONCURRENCY = 5
+#: dispatcher slots per host: the reference's DEFAULT_DL_JOBS
+#: (libcrawl/api.go:17)
+CONCURRENCY = 5
+
+#: the politeness partition key of every frontier
+HOST_COL = "host"
 
 
 def rank_fetch_slots(
     frontier: DataFrame,
     budget: int,
-    host_col: str = "host",
     order_cols: tuple[str, ...] = DEFAULT_ORDER_COLS,
     salt_partitions: int = 0,
-    concurrency: int = DEFAULT_CONCURRENCY,
-    mode: str = "single_pass",
     key_col: str = "url_hash",
     host_budgets: DataFrame | None = None,
 ) -> DataFrame:
     """Add scheduling columns to a round's frontier.
 
-    Output columns added:
+    Output columns added (flag-style: every input row is output once):
       fetch_rank  per-host rank in deterministic crawl order (1-based;
-                  0 on unscheduled rows except in full_rank mode)
+                  0 on unscheduled rows)
       scheduled   fetch_rank <= budget (this round) vs spill to next round
-      slot        (fetch_rank-1) % concurrency — the reference's dispatcher
-                  slot the fetch would have occupied
-      wave        (fetch_rank-1) / concurrency — dispatch wave within the
-                  round (the reference's "≤5 in flight" progression)
+      slot        (fetch_rank-1) % CONCURRENCY — the reference's dispatcher
+                  slot the fetch would have occupied (-1 unscheduled)
+      wave        (fetch_rank-1) / CONCURRENCY — dispatch wave within the
+                  round, the reference's "≤5 in flight" progression (-1
+                  unscheduled)
 
-    ``mode``:
-      'single_pass' (default, the 10^10-scale path) — rank once per host and
-        FLAG scheduled/deferred: one scan of the frontier, one exchange.
-        With ``salt_partitions > 1`` the rank runs per (host, salt) first —
-        balanced partitions kill hot-host reducer skew — and only the
-        ≤ S·budget survivors per host re-rank; salted-out rows are flagged
-        unscheduled directly (provably outside the top-budget), never
-        reconstructed via a join.
-      'full_rank' — exact rank for EVERY row (unscheduled included). Ignores
-        ``salt_partitions``: a salted pre-rank cannot produce exact global
-        ranks beyond the budget without re-ranking everything, and silently
-        wrong ranks in (budget, S·B] are worse than a full sort.
-
-    The scheduled set and its ranks are provably identical in both modes —
-    asserted by tests.
+    Rank once per host and FLAG scheduled/deferred: one scan of the
+    frontier, one exchange. With ``salt_partitions > 1`` the rank runs per
+    (host, salt) first — balanced partitions kill hot-host reducer skew —
+    and only the ≤ S·budget survivors per host re-rank; salted-out rows are
+    flagged unscheduled directly (provably outside the top-budget), never
+    reconstructed via a join. Both give the same schedule.
     """
     order = [F.col(c) for c in order_cols]
-    w = Window.partitionBy(host_col).orderBy(*order)
-    rank = F.row_number().over(w)
 
     # per-host budget overrides (robots Crawl-delay, host reputation, ...):
     # a tiny broadcast dim (host, budget); hosts not listed keep the default.
-    # Both modes compare rank against this COLUMN, exactly. That INCLUDES
-    # the salted single-pass ranker: its phase-1 prune and phase-2
-    # regroup are per-host expressions, and b(h) is constant within a host,
-    # so the pigeonhole argument (a row in the host's true top-b(h) is in
-    # its salt's top-b(h)) holds per host with the broadcast column exactly
-    # as it does with the literal. A crawl-delayed hot host therefore keeps
-    # BOTH its tiny budget and the salted skew defense.
+    # Both paths compare rank against this COLUMN, exactly. That INCLUDES
+    # the salted ranker: its phase-1 prune and phase-2 regroup are per-host
+    # expressions, and b(h) is constant within a host, so the pigeonhole
+    # argument (a row in the host's true top-b(h) is in its salt's
+    # top-b(h)) holds per host with the broadcast column exactly as it does
+    # with the literal. A crawl-delayed hot host therefore keeps BOTH its
+    # tiny budget and the salted skew defense.
     budget_col: Column = F.lit(budget)
     if host_budgets is not None:
         hb = host_budgets.select(
@@ -100,43 +91,16 @@ def rank_fetch_slots(
             F.col("budget").cast("int").alias("_hb_budget"),
         )
         frontier = frontier.join(
-            F.broadcast(hb), frontier[host_col] == hb["_hb_host"], "left"
+            F.broadcast(hb), frontier[HOST_COL] == hb["_hb_host"], "left"
         ).drop("_hb_host")
         budget_col = F.coalesce(F.col("_hb_budget"), F.lit(budget))
 
-    def _flag(df: DataFrame, r: Column) -> DataFrame:
-        """Rank column -> the four scheduling columns, flag-style (rank 0 /
-        slot -1 / wave -1 on unscheduled rows)."""
+    if salt_partitions <= 1:
+        w = Window.partitionBy(HOST_COL).orderBy(*order)
+        ranked = frontier.withColumn("_r", F.row_number().over(w))
+        r = F.col("_r")
         sched = r <= budget_col
-        return (
-            df.withColumn("fetch_rank", F.when(sched, r).otherwise(F.lit(0)))
-            .withColumn("scheduled", sched)
-            .withColumn(
-                "slot",
-                F.when(sched, ((r - 1) % concurrency)).otherwise(F.lit(-1)).cast("int"),
-            )
-            .withColumn(
-                "wave",
-                F.when(sched, F.floor((r - 1) / concurrency))
-                .otherwise(F.lit(-1))
-                .cast("int"),
-            )
-        )
-
-    def _finalize(df: DataFrame) -> DataFrame:
-        """full_rank style: exact rank everywhere."""
-        return (
-            df.withColumn("fetch_rank", rank)
-            .withColumn("scheduled", F.col("fetch_rank") <= budget_col)
-            .withColumn("slot", ((F.col("fetch_rank") - 1) % concurrency).cast("int"))
-            .withColumn(
-                "wave", F.floor((F.col("fetch_rank") - 1) / concurrency).cast("int")
-            )
-        )
-
-    if mode == "single_pass":
-        if salt_partitions <= 1:
-            return _flag(frontier, rank).drop("_hb_budget")
+    else:
         # Salted, as ONE linear plan (no branch -> the phase-1 window is
         # never recomputed; no union; no join):
         #   phase 1: rank per (host, salt) — S balanced partitions per host
@@ -151,34 +115,27 @@ def rank_fetch_slots(
         salted = frontier.withColumn(
             "_salt", F.pmod(F.col(key_col), F.lit(salt_partitions)).cast("int")
         )
-        w1 = Window.partitionBy(host_col, "_salt").orderBy(*order)
+        w1 = Window.partitionBy(HOST_COL, "_salt").orderBy(*order)
         pre = salted.withColumn("_r1", F.row_number().over(w1))
-        regroup = F.when(F.col("_r1") <= budget_col, F.col(host_col)).otherwise(
-            F.concat(F.col(host_col), F.lit("\x00"), F.col("_salt").cast("string"))
+        regroup = F.when(F.col("_r1") <= budget_col, F.col(HOST_COL)).otherwise(
+            F.concat(F.col(HOST_COL), F.lit("\x00"), F.col("_salt").cast("string"))
         )
         w2 = Window.partitionBy("_h2").orderBy(*order)
-        pre = pre.withColumn("_h2", regroup).withColumn(
-            "_r2", F.row_number().over(w2)
+        ranked = pre.withColumn("_h2", regroup).withColumn(
+            "_r", F.row_number().over(w2)
         )
-        sched = (F.col("_r1") <= budget_col) & (F.col("_r2") <= budget_col)
-        r2 = F.col("_r2")
-        out = (
-            pre.withColumn("fetch_rank", F.when(sched, r2).otherwise(F.lit(0)))
-            .withColumn("scheduled", sched)
-            .withColumn(
-                "slot",
-                F.when(sched, (r2 - 1) % concurrency).otherwise(F.lit(-1)).cast("int"),
-            )
-            .withColumn(
-                "wave",
-                F.when(sched, F.floor((r2 - 1) / concurrency))
-                .otherwise(F.lit(-1))
-                .cast("int"),
-            )
+        r = F.col("_r")
+        sched = (F.col("_r1") <= budget_col) & (r <= budget_col)
+
+    return (
+        ranked.withColumn("fetch_rank", F.when(sched, r).otherwise(F.lit(0)))
+        .withColumn("scheduled", sched)
+        .withColumn(
+            "slot", F.when(sched, (r - 1) % CONCURRENCY).otherwise(F.lit(-1)).cast("int")
         )
-        return out.drop("_salt", "_r1", "_h2", "_r2", "_hb_budget")
-
-    if mode != "full_rank":
-        raise ValueError(f"unknown mode: {mode!r}")
-    return _finalize(frontier).drop("_hb_budget")
-
+        .withColumn(
+            "wave",
+            F.when(sched, F.floor((r - 1) / CONCURRENCY)).otherwise(F.lit(-1)).cast("int"),
+        )
+        .drop("_r", "_salt", "_r1", "_h2", "_hb_budget")
+    )

@@ -4,10 +4,11 @@ north_rule (the reference does no robots handling).
 One implementation: ``_group`` walks a body once for the rules and
 Crawl-delay applying to a user agent (``parse_robots_txt`` and
 ``parse_crawl_delay`` project it); ``robots_table`` builds the tiny
-``(host, pattern, allow, plen, rx)`` dim as a local relation;
+``(host, rules)`` dim, one row per host, as a local relation;
 ``robots_gate`` broadcast-joins it against the frontier and keeps a url
 whose longest matching rule is an Allow (Allow wins ties) or that matches
-no rule, with ``*`` any sequence and a trailing ``$`` the end of the path;
+no rule, with ``*`` any sequence and a trailing ``$`` the end of the path —
+a per-row verdict, so the gate is one map-side pass;
 ``robots_allowed_py`` is its twin for the oracle. Hosts and user agents
 compare case-insensitively (§2.2.1); path patterns are case-sensitive.
 ``crawl_delay_budgets`` maps Crawl-delay to per-host politeness budgets
@@ -36,39 +37,37 @@ __all__ = [
 def _group(
     txt: str, user_agent: str
 ) -> tuple[list[tuple[str, bool]], float | None]:
-    """(rules, crawl_delay) of the first group naming ``user_agent``, else
-    of the first ``*`` group. A group is a run of User-agent lines plus the
-    records after it; any Allow, Disallow or Crawl-delay record closes the
-    run. Rules keep file order; an empty value is no rule."""
-    groups: list[tuple[set[str], list[tuple[str, bool]], float | None]] = []
+    """(rules, crawl_delay) for ``user_agent`` (RFC 9309 §2.2.1): the
+    groups naming the agent merged in file order, else every ``*`` group
+    merged. A group is a run of User-agent lines plus the records after
+    it; any Allow, Disallow or Crawl-delay record closes the run. An empty
+    value is no rule; the delay is the first parseable one merged."""
+    want = user_agent.lower()
+    merged: dict[str, tuple[list, list]] = {want: ([], []), "*": ([], [])}
+    named: set[str] = set()
     agents: set[str] = set()
-    rules: list[tuple[str, bool]] = []
-    delay: float | None = None
     in_group = False
     for raw in txt.splitlines():
         key, _, val = raw.split("#", 1)[0].partition(":")
         key, val = key.strip().lower(), val.strip()
         if key == "user-agent":
             if in_group:
-                groups.append((agents, rules, delay))
-                agents, rules, delay, in_group = set(), [], None, False
+                agents, in_group = set(), False
             agents.add(val.lower())
-        elif key in ("allow", "disallow"):
+            named |= agents & merged.keys()
+        elif key in ("allow", "disallow", "crawl-delay"):
             in_group = True
-            if val:
-                rules.append((val, key == "allow"))
-        elif key == "crawl-delay":
-            in_group = True
-            try:
-                delay = float(val)
-            except ValueError:
-                pass
-    groups.append((agents, rules, delay))
-    for want in (user_agent.lower(), "*"):
-        for ag, rs, d in groups:
-            if want in ag:
-                return rs, d
-    return [], None
+            for rules, delays in (merged[a] for a in agents & merged.keys()):
+                if key != "crawl-delay":
+                    if val:
+                        rules.append((val, key == "allow"))
+                else:
+                    try:
+                        delays.append(float(val))
+                    except ValueError:
+                        pass
+    rules, delays = merged[want if want in named else "*"]
+    return rules, (delays[0] if delays else None)
 
 
 def parse_robots_txt(txt: str, user_agent: str = "*") -> list[tuple[str, bool]]:
@@ -98,17 +97,20 @@ def robots_regex(pattern: str) -> str:
 def robots_table(
     spark: SparkSession, robots_txts: dict[str, str], user_agent: str = "*"
 ) -> DataFrame:
-    """Per-host rules dim ``(host, pattern, allow, plen, rx)`` from raw
-    robots.txt bodies: host lowercased, plen the RFC 9309 specificity key
-    (pattern length), rx the anchored regex. A local relation, so its
-    broadcast is a ``LocalTableScan`` and runs no Spark job."""
-    rows = [
-        (host.lower(), pat, allow, len(pat), robots_regex(pat))
-        for host, txt in robots_txts.items()
-        for pat, allow in parse_robots_txt(txt, user_agent)
-    ]
+    """Rules dim ``(host, rules array<struct<plen, allow, rx>>)`` from raw
+    robots.txt bodies, one row per lowercased host with rules: plen is the
+    RFC 9309 specificity key (pattern length), rx the anchored regex. A
+    local relation, so its broadcast is a ``LocalTableScan`` and runs no
+    Spark job."""
+    by_host: dict[str, list[tuple[int, bool, str]]] = {}
+    for host, txt in robots_txts.items():
+        for pat, allow in parse_robots_txt(txt, user_agent):
+            by_host.setdefault(host.lower(), []).append(
+                (len(pat), allow, robots_regex(pat))
+            )
     return local_table(
-        spark, rows, "host string, pattern string, allow boolean, plen int, rx string"
+        spark, list(by_host.items()),
+        "host string, rules array<struct<plen int, allow boolean, rx string>>",
     )
 
 
@@ -129,29 +131,24 @@ def robots_gate(
     """Keep frontier rows whose most specific matching rule is an Allow (or
     that match no rule).
 
-    Broadcast join on host (rules are a tiny dim), per-row ``regexp_like``
-    on the precompiled patterns, then one aggregation picking the verdict:
-    ``max(struct(plen, allow))`` implements longest-match with
-    allow-wins-ties ordering (struct compare is lexicographic; true > false).
-    All JVM-side, but not one scan: the aggregation shuffles the matched
-    rows on url, and the frontier is read again for the anti-join against
-    the blocked urls.
+    One map-side pass: a broadcast left join brings each url its host's
+    rules array, and the verdict is a per-row expression —
+    ``array_max`` over the rules whose ``rx`` matches the path picks the
+    longest match with Allow winning ties (struct order is lexicographic,
+    ``plen`` first, and true > false); no match is NULL, which allows.
+    All JVM-side: no aggregation, no anti-join, one read of the frontier.
     """
-    matched = (
-        frontier.select(F.col(url_col).alias("_u"))
-        .withColumn("_host", host_of(F.col("_u")))
-        .withColumn("_path", _path_or_root(F.col("_u")))
-        .join(F.broadcast(rules), F.col("_host") == rules["host"], "inner")
-        .filter(F.regexp_like(F.col("_path"), F.col("rx")))
+    dim = rules.select(F.col("host").alias("_rh"), F.col("rules").alias("_rules"))
+    # the path is a column below the join, so it is parsed once per url,
+    # not once per rule inside the lambda
+    best = F.array_max(
+        F.filter("_rules", lambda x: F.regexp_like(F.col("_path"), x["rx"]))
     )
-    verdict = matched.groupBy("_u").agg(
-        F.max(F.struct(F.col("plen"), F.col("allow"))).alias("_best")
-    )
-    blocked = verdict.filter(~F.col("_best.allow")).select(
-        F.col("_u").alias("_blocked_url")
-    )
-    return frontier.join(
-        blocked, frontier[url_col] == blocked["_blocked_url"], "left_anti"
+    return (
+        frontier.withColumn("_path", _path_or_root(F.col(url_col)))
+        .join(F.broadcast(dim), host_of(F.col(url_col)) == F.col("_rh"), "left")
+        .filter(F.coalesce(best["allow"], F.lit(True)))
+        .drop("_path", "_rh", "_rules")
     )
 
 

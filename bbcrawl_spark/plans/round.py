@@ -21,11 +21,10 @@ Shuffle profile per round (the 100-TB design):
   2. pages join: sort-merge on url (frontier side already deduped; AQE may
      demote to broadcast when a round is small)
   3. new-link dedup: hash exchange on url_hash
-  4. robots gate: an aggregation exchange on url over the rule-matched
-     rows, then an anti-join of the frontier against the blocked urls
-  Everything else is map-side: Bloom seen-check (scalar Arrow UDF over
-  url_hash), excludes (broadcast local table), extraction
-  (ArrowEvalPython).
+  Everything else is map-side: the robots gate (broadcast local rules
+  array per host, a per-row longest-match verdict), Bloom seen-check
+  (scalar Arrow UDF over url_hash), excludes (broadcast local table),
+  extraction (ArrowEvalPython).
 
 State writes are snapshot commits; the round barrier (``commit_round``) is
 written last, making a crashed round invisible and the resume path
@@ -302,8 +301,7 @@ class CrawlDriver:
         bloom_spec = None
         if cfg.bloom_partitions > 0 and prev.get("bloom_dir"):
             bloom_spec = dedup.BloomSpec(prev["bloom_dir"], cfg.bloom_partitions)
-        # persist: the Bloom-gated frontier is consumed by the politeness
-        # window (twice under salted single_pass — survivor/loser branches);
+        # persist: the gated frontier feeds the politeness window;
         # _bloom_cache additionally pins the FLAGGED frontier so the Bloom
         # membership UDF evaluates once, not once per split branch
         _bloom_cache: list = []
@@ -397,24 +395,18 @@ class CrawlDriver:
                 downloads = complete_headernames(downloads, pages)
         elif cfg.crawler == "file":
             # every frontier url IS the download (crawlers.go:191-212)
+            name = F.regexp_extract(
+                F.coalesce(F.parse_url(F.col("url"), F.lit("PATH")), F.lit("")),
+                r"/([^/]+)$", 1,
+            )
             downloads = scheduled.select(
                 F.lit(r).alias("round"), F.col("url").alias("page_url"),
                 "page_num", F.lit("file").alias("kind"), F.col("url").alias("link"),
                 F.col("url").alias("abs_url"),
                 # "{page} - {name}"; empty name -> dispatcher temp-name case
                 # (downloader.go:261-264), marked by an empty out_name here
-                F.when(
-                    F.regexp_extract(
-                        F.coalesce(F.parse_url(F.col("url"), F.lit("PATH")), F.lit("")),
-                        r"/([^/]+)$", 1) == "",
-                    F.lit(""),
-                ).otherwise(
-                    F.concat(
-                        F.col("page_num").cast("string"), F.lit(" - "),
-                        F.regexp_extract(
-                            F.coalesce(F.parse_url(F.col("url"), F.lit("PATH")), F.lit("")),
-                            r"/([^/]+)$", 1),
-                    )
+                F.when(name == "", F.lit("")).otherwise(
+                    F.concat(F.col("page_num").cast("string"), F.lit(" - "), name)
                 ).alias("out_name"),
                 F.lit("").alias("dir_rel"), F.lit("").alias("post_id"),
                 F.lit(0).alias("att_id"), F.lit(-1).alias("element_index"),

@@ -4,6 +4,7 @@
 from __future__ import annotations
 
 import random
+from collections import Counter
 
 import pytest
 from pyspark.sql import functions as F
@@ -233,6 +234,33 @@ class TestIncrementalBloom:
         assert "REPARTITION_BY_COL" in plan and "REPARTITION_BY_NUM" not in plan, plan
 
 
+def _expected_schedule(frontier, budget, host_budgets=None):
+    """Oracle step 3 in Python: per host, sort by (priority, page_num,
+    url_hash) and schedule the first ``budget`` rows (a host's override
+    from ``host_budgets`` when listed). Keyed by url_hash: (fetch_rank,
+    scheduled, slot, wave), flag-style on unscheduled rows."""
+    by_host: dict[str, list] = {}
+    for r in frontier.collect():
+        by_host.setdefault(r["host"], []).append(r)
+    want = {}
+    for host, rows in by_host.items():
+        b = (host_budgets or {}).get(host, budget)
+        rows.sort(key=lambda r: (r["priority"], r["page_num"], r["url_hash"]))
+        for i, r in enumerate(rows, 1):
+            want[r["url_hash"]] = (
+                (i, True, (i - 1) % 5, (i - 1) // 5) if i <= b else (0, False, -1, -1)
+            )
+    return want
+
+
+def _schedule(ranked):
+    """``rank_fetch_slots`` output in ``_expected_schedule``'s shape."""
+    return {
+        r["url_hash"]: (r["fetch_rank"], r["scheduled"], r["slot"], r["wave"])
+        for r in ranked.collect()
+    }
+
+
 class TestPoliteness:
     def _frontier(self, spark):
         rows = []
@@ -259,39 +287,22 @@ class TestPoliteness:
         # order key is (priority, page_num, url_hash): page_num ascending here
         assert [r["page_num"] for r in rows] == [0, 1, 2, 3, 4]
 
-    def test_modes_identical(self, spark):
-        # single_pass (default), salted single_pass and full_rank all
-        # produce the same scheduled set/ranks and the same unscheduled
-        # membership
+    @pytest.mark.parametrize("salt", [0, 4])
+    def test_schedule_matches_expectation(self, spark, salt):
+        # every input row is output once, scheduled or flagged deferred
         f = self._frontier(spark)
-        variants = {
-            "single_pass": politeness.rank_fetch_slots(f, budget=5),
-            "single_pass_salted": politeness.rank_fetch_slots(
-                f, budget=5, salt_partitions=4
-            ),
-            "full_rank": politeness.rank_fetch_slots(f, budget=5, mode="full_rank"),
-        }
-        sched = lambda df: sorted(
-            (r["url"], r["fetch_rank"], r["slot"], r["wave"])
-            for r in df.filter("scheduled").collect()
-        )
-        unsched = lambda df: sorted(
-            r["url"] for r in df.filter("NOT scheduled").collect()
-        )
-        want_s, want_u = sched(variants["full_rank"]), unsched(variants["full_rank"])
-        for name, df in variants.items():
-            assert sched(df) == want_s, name
-            assert unsched(df) == want_u, name
-            assert df.count() == f.count(), name
+        ranked = politeness.rank_fetch_slots(f, budget=5, salt_partitions=salt)
+        assert ranked.count() == f.count()
+        assert _schedule(ranked) == _expected_schedule(f, 5)
 
-    def test_salted_identical_schedule(self, spark):
+    @pytest.mark.parametrize("budget", [1, 12, 50])
+    def test_salted_identical_schedule(self, spark, budget):
         f = self._frontier(spark)
-        key = lambda df: sorted(
-            (r["url"], r["fetch_rank"]) for r in df.filter("scheduled").collect()
-        )
-        want = key(politeness.rank_fetch_slots(f, budget=5, mode="full_rank"))
-        assert key(politeness.rank_fetch_slots(f, budget=5)) == want
-        assert key(politeness.rank_fetch_slots(f, budget=5, salt_partitions=8)) == want
+        want = _expected_schedule(f, budget)
+        assert _schedule(politeness.rank_fetch_slots(f, budget=budget)) == want
+        assert _schedule(
+            politeness.rank_fetch_slots(f, budget=budget, salt_partitions=8)
+        ) == want
 
     def test_slots_and_waves(self, spark):
         ranked = politeness.rank_fetch_slots(self._frontier(spark), budget=12)
@@ -300,7 +311,7 @@ class TestPoliteness:
         assert [r["wave"] for r in rows[:7]] == [0, 0, 0, 0, 0, 1, 1]
 
     def test_single_pass_plan_has_one_exchange_no_join(self, spark):
-        """The default mode's whole point: ONE shuffle over the frontier,
+        """The unsalted ranker's whole point: ONE shuffle over the frontier,
         no anti-join reconstructing the deferred complement."""
         ranked = politeness.rank_fetch_slots(self._frontier(spark), budget=5)
         plan = ranked._jdf.queryExecution().executedPlan().toString()
@@ -524,16 +535,13 @@ class TestHostBudgets:
         assert "c.ex" not in sched               # override 0: fully deferred
         assert "_hb_budget" not in out.columns
 
-    def test_unknown_mode_rejected(self, spark):
+    def test_mode_parameter_removed(self, spark):
+        # one ranking path: there is no exact-rank mode to select
         f = spark.createDataFrame(
             [("a.ex", 0, 0, 1)], "host string, priority int, page_num int, url_hash long"
         )
-        budgets = spark.createDataFrame([("a.ex", 1)], "host string, budget int")
-        for mode in ("broadcast_topk", "group_limit"):
-            with pytest.raises(ValueError, match="unknown mode"):
-                politeness.rank_fetch_slots(
-                    f, budget=2, mode=mode, host_budgets=budgets
-                )
+        with pytest.raises(TypeError, match="mode"):
+            politeness.rank_fetch_slots(f, budget=2, mode="full_rank")
 
     def test_override_composes_with_salting(self, spark):
         # Crawl-delay × skew defense (round-3 verdict item 5): the salted
@@ -555,21 +563,12 @@ class TestHostBudgets:
             [("a.ex", 1), ("c.ex", 0), ("d.ex", 4)], "host string, budget int"
         )
 
-        def key(df):
-            return sorted(
-                (r["host"], r["url_hash"], r["fetch_rank"], r["scheduled"],
-                 r["slot"], r["wave"])
-                for r in df.collect()
-            )
-
-        plain = key(politeness.rank_fetch_slots(f, budget=2, host_budgets=budgets))
-        for s in (2, 4, 16):
-            salted = key(politeness.rank_fetch_slots(
+        want = _expected_schedule(f, 2, {"a.ex": 1, "c.ex": 0, "d.ex": 4})
+        for s in (0, 2, 4, 16):
+            got = _schedule(politeness.rank_fetch_slots(
                 f, budget=2, salt_partitions=s, host_budgets=budgets
             ))
-            assert salted == plain, f"salt_partitions={s} diverged"
-        n_by_host = {
-            h: len([k for k in plain if k[0] == h and k[3]]) for h in
-            ("a.ex", "b.ex", "c.ex", "d.ex")
-        }
-        assert n_by_host == {"a.ex": 1, "b.ex": 2, "c.ex": 0, "d.ex": 4}
+            assert got == want, f"salt_partitions={s} diverged"
+        hosts = ["a.ex", "b.ex", "c.ex", "d.ex"]
+        n_by_host = Counter(hosts[k // 100] for k, v in want.items() if v[1])
+        assert n_by_host == {"a.ex": 1, "b.ex": 2, "d.ex": 4}

@@ -95,3 +95,21 @@ def test_crawl_config_fields_pinned():
         "headernames", "allow_redirect", "tags", "attrs", "compact_every",
         "expire_keep_rounds",
     ]
+
+
+def test_gate_and_ranker_parameters_pinned():
+    """Adding or removing a knob of the robots gate or the politeness
+    ranker must show up as a diff here."""
+    from inspect import signature
+
+    from bbcrawl_spark.operators import politeness, robots
+
+    def params(fn):
+        return list(signature(fn).parameters)
+
+    assert params(politeness.rank_fetch_slots) == [
+        "frontier", "budget", "order_cols", "salt_partitions", "key_col",
+        "host_budgets",
+    ]
+    assert params(robots.robots_gate) == ["frontier", "rules", "url_col"]
+    assert params(robots.robots_table) == ["spark", "robots_txts", "user_agent"]
