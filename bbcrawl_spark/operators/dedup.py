@@ -3,7 +3,8 @@
 The reference dedups by checking whether the output file already exists
 before each GET (``/root/reference/libcrawl/download/downloader.go:103-115,
 267-273``) — an O(1) point lookup against local disk.  At 10^10-URL frontier
-scale the Spark-native equivalent is:
+scale the Spark-native equivalent, run once per url on the links a round
+discovers (the frontier is kept disjoint from the seen set), is:
 
 1. a **persistent partitioned Bloom filter** over the seen set
    (``url_hash``-keyed, P fixed partitions, blobs on shared storage) applied
@@ -13,8 +14,8 @@ scale the Spark-native equivalent is:
    "maybe seen" remainder — Bloom filters have no false negatives, so the
    combination is exact.
 
-Why map-side: a naive ``frontier LEFT ANTI JOIN seen`` shuffles *both*
-sides every round; the Bloom pass reduces the frontier side to its
+Why map-side: a naive ``links LEFT ANTI JOIN seen`` shuffles *both*
+sides every round; the Bloom pass reduces the links side to its
 maybe-seen fraction (≈ fpp of new URLs + genuinely-seen URLs) before any
 exchange happens.  Spark's own runtime bloom pruning
 (``spark.sql.optimizer.runtime.bloomFilter.enabled``) is a bonus on the
@@ -49,13 +50,22 @@ __all__ = [
     "dedup_against_seen",
 ]
 
-_NUM_HASHES = 7  # with 10 bits/key -> ~0.8% false-positive rate
+BITS_PER_KEY = 10
+_NUM_HASHES = 7  # with BITS_PER_KEY -> ~0.8% false-positive rate
 
 _MANIFEST = "manifest.json"
 
 
 def _default_blob_path(path: str, pid: int) -> str:
     return os.path.join(path, f"bloom_{pid:05d}.npy")
+
+
+def _local_entry(path: str, row) -> dict:
+    """Manifest entry of a ``(partition_id, n_items, m_bits)`` row whose blob
+    was written at its dir-local path under ``path``."""
+    pid = int(row["partition_id"])
+    return {"path": _default_blob_path(path, pid),
+            "n_items": int(row["n_items"]), "m_bits": int(row["m_bits"])}
 
 
 def _read_manifest(path: str) -> dict[int, dict]:
@@ -187,7 +197,7 @@ def build_partitioned_bloom(
     seen: DataFrame,
     path: str,
     num_partitions: int,
-    bits_per_key: int = 10,
+    bits_per_key: int = BITS_PER_KEY,
     hash_col: str = "url_hash",
 ) -> DataFrame:
     """Build P Bloom blobs from the seen table — Spark's partial-build
@@ -208,17 +218,7 @@ def build_partitioned_bloom(
     # collected, not cached: AQE does not coalesce the exchange under a
     # cached plan, which would run one Python task per shuffle partition
     rows = _build_partitions(seen, path, num_partitions, bits_per_key, hash_col).collect()
-    _write_manifest(
-        path,
-        {
-            int(r["partition_id"]): {
-                "path": _default_blob_path(path, int(r["partition_id"])),
-                "n_items": int(r["n_items"]),
-                "m_bits": int(r["m_bits"]),
-            }
-            for r in rows
-        },
-    )
+    _write_manifest(path, {int(r["partition_id"]): _local_entry(path, r) for r in rows})
     return seen.sparkSession.createDataFrame(rows, _PART_SCHEMA)
 
 
@@ -262,7 +262,7 @@ def update_partitioned_bloom(
     prev_dir: str | None,
     new_dir: str,
     num_partitions: int,
-    bits_per_key: int = 10,
+    bits_per_key: int = BITS_PER_KEY,
     hash_col: str = "url_hash",
     seen_full: DataFrame | None = None,
 ) -> dict[str, list[int]]:
@@ -338,11 +338,7 @@ def update_partitioned_bloom(
         if op == "rebuild":
             rebuild_pids.append(pid)
             continue
-        entries[pid] = {
-            "path": _default_blob_path(new_dir, pid),
-            "n_items": int(r["n_items"]),
-            "m_bits": int(r["m_bits"]),
-        }
+        entries[pid] = _local_entry(new_dir, r)
         stats[op].append(pid)
 
     if rebuild_pids:
@@ -355,13 +351,8 @@ def update_partitioned_bloom(
             F.pmod(F.col(hash_col), F.lit(P)).cast("int").isin(rebuild_pids)
         )
         for r in _build_partitions(sub, new_dir, P, bits_per_key, hash_col).collect():
-            pid = int(r["partition_id"])
-            entries[pid] = {
-                "path": _default_blob_path(new_dir, pid),
-                "n_items": int(r["n_items"]),
-                "m_bits": int(r["m_bits"]),
-            }
-            stats["rebuilt"].append(pid)
+            entries[int(r["partition_id"])] = _local_entry(new_dir, r)
+            stats["rebuilt"].append(int(r["partition_id"]))
 
     touched = set(stats["updated"]) | set(stats["built"]) | set(stats["rebuilt"])
     stats["carried"] = sorted(set(prev) - touched)
@@ -391,12 +382,13 @@ def dedup_against_seen(
     shuffle; definitely-new rows pass through map-side. Exactness is
     preserved (no false negatives + exact confirm).
 
-    ``cache``: pass a list to have the internally FLAGGED frontier persisted
-    and appended to it (caller unpersists after its sinks materialize).
-    Without it, the definitely-new / maybe-seen split is two plan branches
-    and the Bloom membership UDF would evaluate TWICE over the full
-    frontier — at 10^10 URLs that doubles the dominant map-side CPU cost of
-    the round. The round loop always passes one.
+    ``cache``: pass a list to have the internally FLAGGED candidates
+    persisted and appended to it (caller unpersists after its sinks
+    materialize). Without it, the definitely-new / maybe-seen split is two
+    plan branches and the Bloom membership UDF would evaluate TWICE over
+    the candidates, and the optimizer copies the UDF predicate onto the
+    seen scan, so Python runs over every seen row. The round loop always
+    passes one.
     """
     if bloom is None:
         return candidates.join(seen.select(hash_col), on=hash_col, how="left_anti")

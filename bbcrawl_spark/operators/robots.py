@@ -5,9 +5,9 @@ One implementation: ``_group`` walks a body once for the rules and
 Crawl-delay applying to a user agent (``parse_robots_txt`` and
 ``parse_crawl_delay`` project it); ``robots_table`` builds the tiny
 ``(host, rules)`` dim, one row per host, as a local relation;
-``robots_gate`` broadcast-joins it against the frontier and keeps a url
-whose longest matching rule is an Allow (Allow wins ties) or that matches
-no rule, with ``*`` any sequence and a trailing ``$`` the end of the path —
+``robots_gate`` broadcast-anti-joins it against the frontier and keeps a
+url whose longest matching rule is an Allow (Allow wins ties) or that
+matches no rule, with ``*`` any sequence and a trailing ``$`` the end of the path —
 a per-row verdict, so the gate is one map-side pass;
 ``robots_allowed_py`` is its twin for the oracle. Hosts and user agents
 compare case-insensitively (§2.2.1); path patterns are case-sensitive.
@@ -131,12 +131,14 @@ def robots_gate(
     """Keep frontier rows whose most specific matching rule is an Allow (or
     that match no rule).
 
-    One map-side pass: a broadcast left join brings each url its host's
-    rules array, and the verdict is a per-row expression —
+    One map-side pass: a broadcast left anti join drops each url whose
+    host's rules array gives a Disallow verdict, a per-row expression —
     ``array_max`` over the rules whose ``rx`` matches the path picks the
     longest match with Allow winning ties (struct order is lexicographic,
     ``plen`` first, and true > false); no match is NULL, which allows.
-    All JVM-side: no aggregation, no anti-join, one read of the frontier.
+    All JVM-side: no aggregation, no shuffle, one read of the frontier,
+    and sized at most the frontier (a left join's product-of-sides
+    estimate flipped the build side of the pages join downstream).
     """
     dim = rules.select(F.col("host").alias("_rh"), F.col("rules").alias("_rules"))
     # the path is a column below the join, so it is parsed once per url,
@@ -144,11 +146,12 @@ def robots_gate(
     best = F.array_max(
         F.filter("_rules", lambda x: F.regexp_like(F.col("_path"), x["rx"]))
     )
+    allowed = F.coalesce(best["allow"], F.lit(True))
+    disallowed = (host_of(F.col(url_col)) == F.col("_rh")) & ~allowed
     return (
         frontier.withColumn("_path", _path_or_root(F.col(url_col)))
-        .join(F.broadcast(dim), host_of(F.col(url_col)) == F.col("_rh"), "left")
-        .filter(F.coalesce(best["allow"], F.lit(True)))
-        .drop("_path", "_rh", "_rules")
+        .join(F.broadcast(dim), disallowed, "left_anti")
+        .drop("_path")
     )
 
 

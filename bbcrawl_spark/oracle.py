@@ -10,9 +10,12 @@ north_star correctness gate, asserted in tests/test_crawl_e2e.py.
 
 Round contract (shared, normative — plans/round.py implements the same):
 
-1. candidates = frontier rows of round r
+1. candidates = frontier rows of round r; round 0's frontier is the seeds,
+   deduped by url_hash as in step 6
 2. drop: url ∈ excludes (exact string, P1), robots-disallowed (P7),
-   url_hash ∈ seen (P2/J1)
+   url_hash ∈ seen (P2/J1). Steps 1 and 6 keep every frontier unique by
+   url_hash and disjoint from seen: the engine runs no seen gate, and this
+   check is the reference that catches a break of that invariant
 3. per host, order by (priority, page_num, url_hash); first `budget` rows
    are *scheduled*, the rest are *deferred* to round r+1 unchanged (W1)
 4. seen ∪= scheduled url_hashes (an attempted fetch is "seen")
@@ -87,6 +90,14 @@ def entry_for(
     )
 
 
+def _dedup(entries) -> list[FrontierEntry]:
+    """Steps 1 and 6: one entry per url_hash, the min ``dedup_key``."""
+    best: dict[int, FrontierEntry] = {}
+    for e in sorted(entries, key=FrontierEntry.dedup_key):
+        best.setdefault(e.url_hash, e)
+    return list(best.values())
+
+
 def crawl_oracle(
     pages: dict[str, bytes],
     seeds: list[tuple],  # (url, seed_id, priority[, page_num])
@@ -108,9 +119,9 @@ def crawl_oracle(
     redirects = redirects or {}
     redirect_cap = 10 if allow_redirect else 0
     res = OracleResult()
-    frontier = [
+    frontier = _dedup(
         entry_for(t[0], t[1], t[2], -1, t[3] if len(t) > 3 else None) for t in seeds
-    ]
+    )
 
     for r in range(max_rounds):
         if not frontier:
@@ -173,12 +184,7 @@ def crawl_oracle(
                 if ne.url_hash not in res.seen:
                     new_entries.append(ne)
         # 6. dedup deferred ∪ new by url_hash, min dedup_key
-        merged: dict[int, FrontierEntry] = {}
-        for e in deferred + new_entries:
-            cur = merged.get(e.url_hash)
-            if cur is None or e.dedup_key() < cur.dedup_key():
-                merged[e.url_hash] = e
-        frontier = list(merged.values())
+        frontier = _dedup(deferred + new_entries)
         res.metrics.append(
             {
                 "round": r,

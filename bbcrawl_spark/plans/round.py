@@ -5,14 +5,19 @@ Spark-native re-expression of the reference's sequential loop
 contract in ``bbcrawl_spark.oracle`` (the two must match exactly — tested in
 tests/test_crawl_e2e.py):
 
-    frontier_r --anti-join--> gates (excludes, robots, seen w/ Bloom)
+    frontier_r --anti-join--> gates (excludes, robots)
               --window------> politeness budget per host (scheduled/deferred)
+              --append------> seen ∪ scheduled, then its Bloom
               --join--------> pages (the "fetch"; pre-crawled Common-Crawl-
                               style table replaces live HTTP)
               --pandas UDF--> link + text extraction (Arrow batches)
-              --explode-----> score / canonicalize / hash -> new frontier
+              --anti-join---> links not in seen (w/ Bloom) -> frontier_{r+1}
               --write-------> fetched_r, fetch_log_r, frontier_{r+1},
-                              seen ∪ scheduled, metrics_r   [round commit]
+                              metrics_r   [round commit]
+
+Invariant: every committed frontier is unique by url_hash and disjoint from
+seen (deduped seeds; step 6 dedup; only unseen links enter), so the frontier
+gets no seen gate and membership is checked once per url.
 
 Shuffle profile per round (the 100-TB design):
   1. politeness window: ONE sort exchange on host (single-pass flag-style
@@ -21,10 +26,10 @@ Shuffle profile per round (the 100-TB design):
   2. pages join: sort-merge on url (frontier side already deduped; AQE may
      demote to broadcast when a round is small)
   3. new-link dedup: hash exchange on url_hash
-  Everything else is map-side: the robots gate (broadcast local rules
-  array per host, a per-row longest-match verdict), Bloom seen-check
-  (scalar Arrow UDF over url_hash), excludes (broadcast local table),
-  extraction (ArrowEvalPython).
+  Everything else is map-side: the robots gate (broadcast anti-join to a
+  local rules array per host, a per-row longest-match verdict), Bloom
+  seen-check (scalar Arrow UDF over url_hash), excludes (broadcast local
+  table), extraction (ArrowEvalPython).
 
 State writes are snapshot commits; the round barrier (``commit_round``) is
 written last, making a crashed round invisible and the resume path
@@ -58,11 +63,8 @@ from ..operators.priority import priority_score_col
 from ..operators.robots import crawl_delay_budgets, robots_gate, robots_table
 from ..sources.warehouse import Warehouse
 
-FRONTIER_SCHEMA = (
-    "url string, url_hash long, host string, priority int, page_num int, "
-    "seed_id long, discovered_in int"
-)
 FRONTIER_COLS = ["url", "url_hash", "host", "priority", "page_num", "seed_id", "discovered_in"]
+METRICS_PARTITIONS = 16  # per-partition lineage granularity
 
 
 @dataclass
@@ -85,14 +87,12 @@ class CrawlConfig:
     follow_links: bool = True
     salt_partitions: int = 0  # >1 enables two-phase salted politeness top-k
     bloom_partitions: int = 0  # >0 enables the persistent Bloom prefilter
-    bloom_bits_per_key: int = 10
     excludes: tuple[str, ...] = ()
     # host -> robots.txt body, matched per RFC 9309 (Allow/Disallow,
     # longest match wins, Allow wins ties, '*'/'$' wildcards); hosts and
     # user_agent compare case-insensitively
     robots: dict[str, str] = field(default_factory=dict)
     user_agent: str = "*"
-    metrics_partitions: int = 16  # per-partition lineage granularity
     # crawler family (reference -crawler flag): '' = text+links only;
     # 'vb-attachments' / 'src' additionally emit the downloads table the
     # reference would have fetched (its primary output)
@@ -146,6 +146,20 @@ def frontier_from_urls(df: DataFrame, discovered_in: int) -> DataFrame:
         pn.alias("page_num"),
         F.col("seed_id").cast("long").alias("seed_id"),
         F.lit(discovered_in).cast("int").alias("discovered_in"),
+    )
+
+
+def dedup_frontier(df: DataFrame) -> DataFrame:
+    """One row per ``url_hash``, the min (priority, page_num, discovered_in,
+    seed_id, url): oracle steps 1 and 6. 'url' completes the tiebreak, as
+    ':80' / '#frag' variants share a url_hash and may tie on the rest."""
+    w = Window.partitionBy("url_hash").orderBy(
+        "priority", "page_num", "discovered_in", "seed_id", "url"
+    )
+    return (
+        df.withColumn("_rn", F.row_number().over(w))
+        .filter(F.col("_rn") == 1)
+        .drop("_rn")
     )
 
 
@@ -252,7 +266,10 @@ class CrawlDriver:
             [(t[0], t[1], t[2], t[3] if len(t) > 3 else -1) for t in self.cfg.seeds],
             "url string, seed_id long, priority int, page_num int",
         )
-        f_sid = self.wh.write("frontier", frontier_from_urls(seeds_df, -1))
+        # seen starts empty: deduped seeds satisfy the frontier invariant
+        f_sid = self.wh.write(
+            "frontier", dedup_frontier(frontier_from_urls(seeds_df, -1))
+        )
         s_sid = self.wh.write(
             "seen", self.spark.createDataFrame([], "url_hash long")
         )
@@ -287,27 +304,18 @@ class CrawlDriver:
     def run_round(self, r: int) -> dict[str, Any]:
         cfg = self.cfg
         # the round log is parsed once per round: round r-1's snapshots pin
-        # every read and every append parent below
+        # every read and every append parent below ("" = fresh chain), so a
+        # crashed round's orphan snapshots never enter the lineage on resume
         prev = self.wh.round_log().get(str(r - 1), {}).get("tables", {})
+        pin = lambda t: prev.get(t) or ""
         frontier = self.wh.read("frontier", prev.get("frontier"))
-        seen = self.wh.read("seen", prev.get("seen"))
 
-        # --- gates (P1 excludes, P7 robots, P2/J1 seen) -------------------
+        # --- gates (P1 excludes, P7 robots; no seen gate: the invariant) --
         cand = frontier
         if self._excludes_df is not None:
             cand = cand.join(F.broadcast(self._excludes_df), "url", "left_anti")
         if self._robots_df is not None:
             cand = robots_gate(cand, self._robots_df)
-        bloom_spec = None
-        if cfg.bloom_partitions > 0 and prev.get("bloom_dir"):
-            bloom_spec = dedup.BloomSpec(prev["bloom_dir"], cfg.bloom_partitions)
-        # persist: the gated frontier feeds the politeness window;
-        # _bloom_cache additionally pins the FLAGGED frontier so the Bloom
-        # membership UDF evaluates once, not once per split branch
-        _bloom_cache: list = []
-        cand = dedup.dedup_against_seen(
-            cand, seen, bloom_spec, cache=_bloom_cache
-        ).persist()
 
         # --- politeness window (W1) ---------------------------------------
         ranked = rank_fetch_slots(
@@ -316,6 +324,23 @@ class CrawlDriver:
         ).persist()
         scheduled = ranked.filter(F.col("scheduled"))
         deferred = ranked.filter(~F.col("scheduled")).select(*FRONTIER_COLS)
+
+        # --- seen ∪= scheduled (oracle step 4), then its Bloom ------------
+        sids = {"seen": self.wh.append(
+            "seen", scheduled.select("url_hash"), parent_snapshot=pin("seen")
+        )}
+        seen_next = self.wh.read("seen", sids["seen"])
+        # incremental Bloom: OR-in only this round's delta, carry untouched
+        # partitions as manifest pointers (per-round cost ∝ the delta, not
+        # |seen|); overflowing partitions alone rebuild from the full table
+        bloom_next = bloom_stats = None
+        if cfg.bloom_partitions > 0:
+            bloom_dir = f"{cfg.warehouse_root}/bloom/r{r:05d}"
+            bloom_stats = dedup.update_partitioned_bloom(
+                self.wh.read_delta("seen", sids["seen"]), prev.get("bloom_dir"),
+                bloom_dir, cfg.bloom_partitions, seen_full=seen_next,
+            )
+            bloom_next = dedup.BloomSpec(bloom_dir, cfg.bloom_partitions)
 
         # --- fetch = join pages (J3) + extraction (H9/H10) ----------------
         pages = self._pages
@@ -361,14 +386,14 @@ class CrawlDriver:
             F.col("_ex.text").alias("text"),
         )
 
-        seen_new = scheduled.select("url_hash")
+        _bloom_cache: list = []  # the Bloom-flagged links, persisted
         if cfg.follow_links:
             links = fetched.select(
                 F.col("url").alias("page_url"),
                 F.col("seed_id"),
                 F.explode("_ex.links").alias("l"),
             ).select("page_url", "seed_id", F.col("l.abs_url").alias("url"))
-            new_entries = links.select(
+            entries = links.select(
                 "url",
                 url_hash_col("url").alias("url_hash"),
                 host_of("url").alias("host"),
@@ -377,12 +402,12 @@ class CrawlDriver:
                 F.col("seed_id"),
                 F.lit(r).cast("int").alias("discovered_in"),
             )
-            # not in seen' = seen ∪ scheduled-this-round
-            new_entries = new_entries.join(
-                seen.select("url_hash").unionByName(seen_new), "url_hash", "left_anti"
+            # the one seen check a url gets: links not in seen ∪ scheduled
+            new_entries = dedup.dedup_against_seen(
+                entries, seen_next, bloom_next, cache=_bloom_cache
             ).persist()
         else:
-            new_entries = self.spark.createDataFrame([], FRONTIER_SCHEMA)
+            new_entries = deferred.limit(0)
 
         # --- crawler-family downloads (the reference's primary output) ----
         downloads = None
@@ -414,24 +439,12 @@ class CrawlDriver:
             )
 
         # --- merge deferred ∪ new, dedup by url_hash (oracle step 6) ------
-        merged = deferred.unionByName(new_entries)
-        # 'url' completes the tiebreak: two raw urls can share a url_hash
-        # (':80' / '#frag' variants canonicalize identically) and tie on the
-        # other keys; without a total order the surviving raw url — which
-        # drives the pages join and crawl_order output — is nondeterministic
-        dw = Window.partitionBy("url_hash").orderBy(
-            "priority", "page_num", "discovered_in", "seed_id", "url"
-        )
-        frontier_next = (
-            merged.withColumn("_rn", F.row_number().over(dw))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn")
-        )
+        frontier_next = dedup_frontier(deferred.unionByName(new_entries))
 
         # --- per-partition lineage metrics (A5) ---------------------------
         # one aggregation over the tagged union of the three row sets: a
         # partition gets a row when any of them has a row there
-        P = cfg.metrics_partitions
+        P = METRICS_PARTITIONS
         counted = ("n_scheduled", "n_fetched", "n_new_links")
         tagged = reduce(DataFrame.union, [
             df.select(
@@ -445,16 +458,12 @@ class CrawlDriver:
         ).select(F.lit(r).alias("round"), "partition_id", *counted)
 
         # --- snapshot writes, then the round commit barrier ---------------
-        # pin appends to the round-log parent ("" = fresh chain) so a crashed
-        # round's orphan snapshots never enter the lineage on resume
-        pin = lambda t: prev.get(t) or ""
         fetch_log_r = scheduled.select(
             F.lit(r).alias("round"), "url", "url_hash", "host", "priority",
             "page_num", "seed_id", "fetch_rank", "slot", "wave",
         )
-        sids = {
+        sids.update({
             "frontier": self.wh.write("frontier", frontier_next),
-            "seen": self.wh.append("seen", seen_new, parent_snapshot=pin("seen")),
             "fetch_log": self.wh.append(
                 "fetch_log", fetch_log_r, parent_snapshot=pin("fetch_log")
             ),
@@ -464,18 +473,16 @@ class CrawlDriver:
             "metrics": self.wh.append(
                 "metrics", metrics, parent_snapshot=pin("metrics")
             ),
-        }
+        })
         if downloads is not None:
             sids["downloads"] = self.wh.append(
                 "downloads", downloads, parent_snapshot=pin("downloads")
             )
         ranked.unpersist()
-        cand.unpersist()
         for df in _bloom_cache:
             df.unpersist()
         fetched.unpersist()
-        if cfg.follow_links:
-            new_entries.unpersist()
+        new_entries.unpersist()
 
         # what this round's writes added, from their snapshot summaries (no
         # count job); read before compaction replaces the append snapshots
@@ -484,22 +491,7 @@ class CrawlDriver:
             s = self.wh.summary(t, sid)
             added[t] = {k: s[k] for k in ("added_rows", "added_bytes", "added_files")}
 
-        # --- incremental Bloom maintenance over the round's NEW hashes ----
-        # OR-in only this round's delta; untouched partitions carry forward
-        # as manifest pointers (per-round cost ∝ |seen_new|, not |seen| —
-        # the O(R·N) full-rebuild pattern was the one true 100x-scale
-        # killer). Overflowing partitions alone rebuild from the full table.
-        bloom_stats = None
-        if cfg.bloom_partitions > 0:
-            bloom_dir = f"{cfg.warehouse_root}/bloom/r{r:05d}"
-            bloom_stats = dedup.update_partitioned_bloom(
-                self.wh.read_delta("seen", sids["seen"]),
-                prev.get("bloom_dir"),
-                bloom_dir,
-                cfg.bloom_partitions,
-                cfg.bloom_bits_per_key,
-                seen_full=self.wh.read("seen", sids["seen"]),
-            )
+        if bloom_next is not None:
             sids["bloom_dir"] = bloom_dir
 
         # --- small-file compaction (must run AFTER Bloom maintenance: the

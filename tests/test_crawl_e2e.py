@@ -44,11 +44,11 @@ def _driver(spark, site, pages_path, wh_root, **kw):
     cfg = CrawlConfig(
         pages_path=pages_path,
         warehouse_root=str(wh_root),
-        seeds=site.seeds,
+        seeds=kw.pop("seeds", site.seeds),
         budget=kw.pop("budget", 2),
         max_rounds=kw.pop("max_rounds", 20),
         excludes=tuple(site.excludes),
-        robots=site.robots,
+        robots=kw.pop("robots", site.robots),
         **kw,
     )
     return CrawlDriver(spark, cfg)
@@ -759,3 +759,141 @@ class TestCrawlDelayE2E:
         drv.run()
         assert _order(drv) == want.crawl_order
         assert {r["url_hash"] for r in drv.seen_set().collect()} == want.seen
+
+
+# u and u#frag share a url_hash; budget 1 splits the pair, so a frontier
+# that kept both would defer one while the other enters seen
+DUP_SEEDS = [
+    ("http://forum0.example/b0/t0", 0, 0),
+    ("http://forum0.example/b0/t0#frag", 1, 0),
+    ("http://forum1.example/b0/t0", 2, 0),
+]
+
+
+class TestFrontierInvariant:
+    """Every committed frontier is unique by url_hash and disjoint from the
+    round's seen snapshot, so a round needs no seen gate over it."""
+
+    @pytest.mark.parametrize("case", [
+        "default", "bloom", "salted_compacted", "crawl_delay", "dup_seeds",
+    ])
+    def test_frontier_unique_and_unseen(self, spark, site, pages_path, tmp_path, case):
+        # forum1 asks for 45 s between fetches: budget 1 at 60 s rounds
+        delayed = {**site.robots, "forum1.example": site.robots["forum1.example"]
+                   + "Crawl-delay: 45\n"}
+        kw = {
+            "default": {},
+            "bloom": {"bloom_partitions": 4},
+            "salted_compacted": {"salt_partitions": 4, "compact_every": 2},
+            "crawl_delay": {"robots": delayed, "crawl_delay_round_seconds": 60.0},
+            "dup_seeds": {"seeds": DUP_SEEDS, "budget": 1, "max_rounds": 6},
+        }[case]
+        drv = _driver(spark, site, pages_path, tmp_path / "wh", **kw)
+        drv.run()
+        log = drv.wh.round_log()
+        assert len(log) > 2
+        for k, entry in log.items():
+            tables = entry["tables"]
+            frontier = [x["url_hash"] for x in drv.wh.read(
+                "frontier", tables["frontier"]).select("url_hash").collect()]
+            seen = {x["url_hash"] for x in drv.wh.read(
+                "seen", tables["seen"]).collect()}
+            assert len(frontier) == len(set(frontier)), (case, k)
+            assert not set(frontier) & seen, (case, k)
+
+    def test_duplicate_hash_seeds_match_oracle(self, spark, site, pages_path, tmp_path):
+        robots = {h: parse_robots_txt(t) for h, t in site.robots.items()}
+        want = oracle.crawl_oracle(
+            pages=site.pages, seeds=DUP_SEEDS, budget=1, robots=robots,
+            excludes=set(site.excludes), max_rounds=6,
+        )
+        drv = _driver(spark, site, pages_path, tmp_path / "wh",
+                      seeds=DUP_SEEDS, budget=1, max_rounds=6)
+        drv.run()
+        assert _order(drv) == want.crawl_order
+        # the pair is scheduled once, as the seed with the lower seed_id
+        assert sorted(u for r, u in want.crawl_order if r == 0) == [
+            "http://forum0.example/b0/t0", "http://forum1.example/b0/t0",
+        ]
+        assert {r["url_hash"] for r in drv.seen_set().collect()} == want.seen
+        got_texts = {r["url"]: r["text"] for r in drv.fetched_texts().collect()}
+        assert got_texts == want.texts
+
+
+def _plan_nodes(node):
+    yield node
+    kids = node.children()
+    for i in range(kids.size()):
+        yield from _plan_nodes(kids.apply(i))
+
+
+def _scans_seen(node) -> bool:
+    return node.getClass().getSimpleName() == "LogicalRelation" and (
+        "/seen/data/" in node.relation().location().rootPaths().toString()
+    )
+
+
+def _bloom_udf_over_seen_scan(df) -> bool:
+    """True when an ArrowEvalPython node (the Bloom UDF) sits above a scan
+    of the seen table in ``df``'s optimized plan."""
+    return any(
+        node.nodeName() == "ArrowEvalPython" and any(map(_scans_seen, _plan_nodes(node)))
+        for node in _plan_nodes(df._jdf.queryExecution().optimizedPlan())
+    )
+
+
+class TestOneSeenCheck:
+    """A round checks seen-membership once: its own discovered links, with
+    the Bloom when it is on, against the seen set that already holds the
+    round's scheduled urls."""
+
+    def test_one_check_per_round_on_its_links(
+        self, spark, site, pages_path, tmp_path, want, monkeypatch
+    ):
+        from bbcrawl_spark.operators import dedup
+
+        calls = []
+        orig = dedup.dedup_against_seen
+
+        def spy(candidates, seen, bloom=None, **kw):
+            calls.append({
+                x["discovered_in"]
+                for x in candidates.select("discovered_in").distinct().collect()
+            })
+            return orig(candidates, seen, bloom, **kw)
+
+        monkeypatch.setattr(dedup, "dedup_against_seen", spy)
+        drv = _driver(spark, site, pages_path, tmp_path / "wh", bloom_partitions=4)
+        checked = []
+        for meta in drv.rounds():
+            assert len(calls) == 1, (meta["round"], calls)
+            checked.append(calls.pop())
+        assert checked[:3] == [{0}, {1}, {2}]
+        assert all(c <= {r} for r, c in enumerate(checked)), checked
+        assert _order(drv) == want.crawl_order
+
+    def test_no_bloom_udf_over_the_seen_scan(
+        self, spark, site, pages_path, tmp_path, monkeypatch
+    ):
+        """The UDF-predicate hazard: without the persisted flagged frame the
+        optimizer copies the Bloom UDF predicate onto the seen scan, and
+        Python runs over every seen row."""
+        from bbcrawl_spark.operators import dedup
+
+        plans = []
+        orig = dedup.dedup_against_seen
+
+        def spy(candidates, seen, bloom=None, cache=None, **kw):
+            assert bloom is not None and cache is not None
+            # the same check without the cache shows the hazard; it runs
+            # first, as the cached plan would stand in for the uncached one
+            bare = _bloom_udf_over_seen_scan(orig(candidates, seen, bloom, **kw))
+            out = orig(candidates, seen, bloom, cache=cache, **kw)
+            plans.append((_bloom_udf_over_seen_scan(out), bare))
+            return out
+
+        monkeypatch.setattr(dedup, "dedup_against_seen", spy)
+        drv = _driver(spark, site, pages_path, tmp_path / "wh",
+                      bloom_partitions=4, max_rounds=2)
+        drv.run()
+        assert plans == [(False, True)] * 2

@@ -90,8 +90,8 @@ def test_crawl_config_fields_pinned():
     assert [f.name for f in fields(CrawlConfig)] == [
         "pages_path", "warehouse_root", "seeds", "budget",
         "crawl_delay_round_seconds", "max_rounds", "follow_links",
-        "salt_partitions", "bloom_partitions", "bloom_bits_per_key",
-        "excludes", "robots", "user_agent", "metrics_partitions", "crawler",
+        "salt_partitions", "bloom_partitions",
+        "excludes", "robots", "user_agent", "crawler",
         "headernames", "allow_redirect", "tags", "attrs", "compact_every",
         "expire_keep_rounds",
     ]

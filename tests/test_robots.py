@@ -277,8 +277,8 @@ class TestSparkGatesMatchTwins:
 
 
 class TestGatePlan:
-    """The gate is one map-side pass: a broadcast left join to the local
-    rules dim and a per-row verdict, with no shuffle."""
+    """The gate is one map-side pass: a broadcast left anti join to the
+    local rules dim on a per-row Disallow verdict, with no shuffle."""
 
     @pytest.fixture
     def gated(self, spark):
@@ -295,10 +295,24 @@ class TestGatePlan:
     def test_plan_is_one_map_side_pass(self, gated):
         plan = gated._jdf.queryExecution().executedPlan().toString()
         assert "Exchange hashpartitioning" not in plan, plan
-        assert "Aggregate" not in plan and "LeftAnti" not in plan, plan
+        assert "Aggregate" not in plan, plan
         assert plan.count("Range (") == 1, plan  # the frontier is read once
-        assert "BroadcastHashJoin" in plan and "LeftOuter" in plan, plan
+        assert "BroadcastHashJoin" in plan and "LeftAnti" in plan, plan
         assert "LocalTableScan" in plan, plan  # the rules side
+
+    def test_size_estimate_at_most_the_frontier(self, spark):
+        # a left outer join is sized as the product of its sides, which
+        # flipped the build side of the round's pages join downstream
+        rules = robots.robots_table(spark, BODIES["full"])
+        frontier = spark.range(64).select(
+            F.concat(F.lit("http://h/shop/"), F.col("id").cast("string")).alias("url")
+        )
+
+        def size(df):
+            stats = df._jdf.queryExecution().optimizedPlan().stats()
+            return int(stats.sizeInBytes())
+
+        assert size(robots.robots_gate(frontier, rules)) <= size(frontier)
 
     def test_count_runs_three_jobs(self, spark, gated):
         # the aggregate + anti-join gate this replaced ran 5
