@@ -1,4 +1,4 @@
-"""Seen-set dedup: partitioned Bloom prefilter + exact anti-join confirm.
+"""Seen-set dedup: partitioned Bloom prefilter + bounded exact probe.
 
 The reference dedups by checking whether the output file already exists
 before each GET (``/root/reference/libcrawl/download/downloader.go:103-115,
@@ -8,19 +8,18 @@ discovers (the frontier is kept disjoint from the seen set), is:
 
 1. a **persistent partitioned Bloom filter** over the seen set
    (``url_hash``-keyed, P fixed partitions, blobs on shared storage) applied
-   *map-side* via a scalar Arrow UDF over ``url_hash`` — no shuffle,
-   prunes the overwhelmingly common "definitely new" case;
-2. an **exact left_anti join** against the seen table for the small
-   "maybe seen" remainder — Bloom filters have no false negatives, so the
-   combination is exact.
+   *map-side* over ``url_hash`` — no shuffle, settles the overwhelmingly
+   common "definitely new" case;
+2. an **exact probe** of the seen table for the few "maybe seen" keys
+   (``dedup_against_seen``) — Bloom filters have no false negatives, so
+   the combination is exact.
 
-Why map-side: a naive ``links LEFT ANTI JOIN seen`` shuffles *both*
-sides every round; the Bloom pass reduces the links side to its
-maybe-seen fraction (≈ fpp of new URLs + genuinely-seen URLs) before any
-exchange happens.  Spark's own runtime bloom pruning
-(``spark.sql.optimizer.runtime.bloomFilter.enabled``) is a bonus on the
-anti-join itself, not a replacement: ours is *application state* that
-persists across rounds and survives restarts.
+Why a probe: a plain ``links LEFT ANTI JOIN seen`` exchanges the whole
+seen table every round; the probe costs what the round's links cost.
+Spark's own runtime bloom pruning
+(``spark.sql.optimizer.runtime.bloomFilter.enabled``) is no replacement:
+ours is *application state* that persists across rounds and survives
+restarts.
 
 Blobs are stored one file per partition under a directory (local in the
 sandbox; DBFS/S3/HDFS on a cluster) and lazily loaded + LRU-cached per
@@ -40,7 +39,9 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import BooleanType, StructField, StructType
+from pyspark.sql.types import BooleanType
+
+from ..functions.udfs import local_table
 
 __all__ = [
     "BloomSpec",
@@ -54,6 +55,10 @@ BITS_PER_KEY = 10
 _NUM_HASHES = 7  # with BITS_PER_KEY -> ~0.8% false-positive rate
 
 _MANIFEST = "manifest.json"
+
+#: most maybe-seen keys the probe collects; past it the seen check falls
+#: back to the shuffled anti-join
+PROBE_MAX_KEYS = 1 << 16
 
 
 def _default_blob_path(path: str, pid: int) -> str:
@@ -283,7 +288,7 @@ def update_partitioned_bloom(
     Exactness is untouched: OR-ing new keys into an existing blob can never
     introduce a false negative, and overflow only ever degrades the
     false-positive rate (caught by the rebuild threshold), never
-    correctness — the exact anti-join confirm stays downstream.
+    correctness — the exact seen probe stays downstream.
 
     Returns {"updated": [...], "built": [...], "rebuilt": [...],
     "carried": [...]} partition ids (driver-side; P is small).
@@ -364,9 +369,32 @@ def bloom_maybe_seen(df: DataFrame, spec: BloomSpec, hash_col: str = "url_hash")
     """Add ``maybe_seen: boolean`` map-side (scalar Arrow UDF, zero shuffle).
 
     False means *definitely not seen* (Bloom has no false negatives);
-    True must be confirmed by the exact anti-join.
+    True must be confirmed against the seen table.
     """
     return df.withColumn("maybe_seen", make_bloom_udf(spec)(F.col(hash_col)))
+
+
+def _maybe_seen_keys(candidates: DataFrame, bloom: BloomSpec, hash_col: str) -> set | None:
+    """The distinct ``hash_col`` values of ``candidates`` the Bloom flags as
+    maybe-seen, collected in one job; None when there are more than
+    ``PROBE_MAX_KEYS``. Each task stops at ``PROBE_MAX_KEYS + 1`` keys
+    (``limit(n).collect()`` would plan ``CollectLimit``, which scans
+    partitions over several jobs)."""
+    paths, P, k = bloom.paths, bloom.num_partitions, bloom.num_hashes
+    cap = PROBE_MAX_KEYS
+
+    def _flagged(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        keys = np.empty(0, dtype=np.int64)
+        for pdf in batches:
+            h = pdf[hash_col].to_numpy(dtype=np.int64)
+            keys = np.union1d(keys, h[_bloom_check_arrays(h, paths, P, k)])
+            if len(keys) > cap:
+                break
+        yield pd.DataFrame({hash_col: keys[: cap + 1]})
+
+    rows = candidates.select(hash_col).mapInPandas(_flagged, f"{hash_col} long").collect()
+    keys = {r[0] for r in rows}
+    return keys if len(keys) <= cap else None
 
 
 def dedup_against_seen(
@@ -378,26 +406,29 @@ def dedup_against_seen(
 ) -> DataFrame:
     """P2/J1: rows of ``candidates`` whose ``url_hash`` is NOT in ``seen``.
 
-    With a Bloom spec, only the maybe-seen fraction reaches the anti-join
-    shuffle; definitely-new rows pass through map-side. Exactness is
-    preserved (no false negatives + exact confirm).
+    Without a Bloom: the exact shuffled ``candidates LEFT ANTI JOIN seen``.
+    With one, an eager probe that runs jobs now:
 
-    ``cache``: pass a list to have the internally FLAGGED candidates
-    persisted and appended to it (caller unpersists after its sinks
-    materialize). Without it, the definitely-new / maybe-seen split is two
-    plan branches and the Bloom membership UDF would evaluate TWICE over
-    the candidates, and the optimizer copies the UDF predicate onto the
-    seen scan, so Python runs over every seen row. The round loop always
-    passes one.
+    1. collect the distinct maybe-seen keys (one job over ``candidates``);
+    2. none (the common case): return ``candidates`` — ``seen`` is not read;
+    3. at most ``PROBE_MAX_KEYS``: collect the seen keys among them in one
+       map-side pass (``seen ⋉ broadcast(keys)``, no exchange) and return
+       ``candidates ▷ broadcast(hits)``, a plan that no longer reads ``seen``;
+    4. more: the shuffled anti-join, as without a Bloom.
+
+    The keys are collected rather than filtered inside a join, because
+    constraint inference would copy the deterministic Bloom UDF onto the
+    seen scan and run Python over every seen row.
+
+    ``cache`` is accepted and unused (nothing stays persisted).
     """
-    if bloom is None:
+    keys = None if bloom is None else _maybe_seen_keys(candidates, bloom, hash_col)
+    if keys is None:
         return candidates.join(seen.select(hash_col), on=hash_col, how="left_anti")
-    flagged = bloom_maybe_seen(candidates, bloom, hash_col)
-    if cache is not None:
-        flagged = flagged.persist()
-        cache.append(flagged)
-    definitely_new = flagged.filter(~F.col("maybe_seen")).drop("maybe_seen")
-    maybe = flagged.filter(F.col("maybe_seen")).drop("maybe_seen")
-    confirmed_new = maybe.join(seen.select(hash_col), on=hash_col, how="left_anti")
-    return definitely_new.unionByName(confirmed_new)
-
+    if not keys:
+        return candidates
+    spark, schema = candidates.sparkSession, f"{hash_col} long"
+    probe = F.broadcast(local_table(spark, [(h,) for h in keys], schema))
+    hits = seen.select(hash_col).join(probe, hash_col, "left_semi").collect()
+    known = F.broadcast(local_table(spark, [tuple(r) for r in hits], schema))
+    return candidates.join(known, hash_col, "left_anti")

@@ -11,7 +11,7 @@ tests/test_crawl_e2e.py):
               --join--------> pages (the "fetch"; pre-crawled Common-Crawl-
                               style table replaces live HTTP)
               --pandas UDF--> link + text extraction (Arrow batches)
-              --anti-join---> links not in seen (w/ Bloom) -> frontier_{r+1}
+              --Bloom+probe-> links not in seen -> frontier_{r+1}
               --write-------> fetched_r, fetch_log_r, frontier_{r+1},
                               metrics_r   [round commit]
 
@@ -25,11 +25,12 @@ Shuffle profile per round (the 100-TB design):
      optional salted pre-rank kills hot-host reducer skew)
   2. pages join: sort-merge on url (frontier side already deduped; AQE may
      demote to broadcast when a round is small)
-  3. new-link dedup: hash exchange on url_hash
   Everything else is map-side: the robots gate (broadcast anti-join to a
-  local rules array per host, a per-row longest-match verdict), Bloom
-  seen-check (scalar Arrow UDF over url_hash), excludes (broadcast local
-  table), extraction (ArrowEvalPython).
+  local rules array per host, a per-row longest-match verdict), the
+  new-link seen check (Bloom over url_hash, then a broadcast probe of seen
+  for the few maybe-seen keys; a hash exchange on url_hash only without a
+  Bloom or past the probe cap), excludes (broadcast local table),
+  extraction (ArrowEvalPython).
 
 State writes are snapshot commits; the round barrier (``commit_round``) is
 written last, making a crashed round invisible and the resume path
@@ -386,7 +387,6 @@ class CrawlDriver:
             F.col("_ex.text").alias("text"),
         )
 
-        _bloom_cache: list = []  # the Bloom-flagged links, persisted
         if cfg.follow_links:
             links = fetched.select(
                 F.col("url").alias("page_url"),
@@ -403,9 +403,8 @@ class CrawlDriver:
                 F.lit(r).cast("int").alias("discovered_in"),
             )
             # the one seen check a url gets: links not in seen ∪ scheduled
-            new_entries = dedup.dedup_against_seen(
-                entries, seen_next, bloom_next, cache=_bloom_cache
-            ).persist()
+            # (with the Bloom its probe runs jobs here, materializing fetched)
+            new_entries = dedup.dedup_against_seen(entries, seen_next, bloom_next).persist()
         else:
             new_entries = deferred.limit(0)
 
@@ -479,8 +478,6 @@ class CrawlDriver:
                 "downloads", downloads, parent_snapshot=pin("downloads")
             )
         ranked.unpersist()
-        for df in _bloom_cache:
-            df.unpersist()
         fetched.unpersist()
         new_entries.unpersist()
 

@@ -828,7 +828,8 @@ def _plan_nodes(node):
 
 
 def _scans_seen(node) -> bool:
-    return node.getClass().getSimpleName() == "LogicalRelation" and (
+    """A logical or physical scan of the seen table."""
+    return node.getClass().getSimpleName() in ("LogicalRelation", "FileSourceScanExec") and (
         "/seen/data/" in node.relation().location().rootPaths().toString()
     )
 
@@ -839,6 +840,19 @@ def _bloom_udf_over_seen_scan(df) -> bool:
     return any(
         node.nodeName() == "ArrowEvalPython" and any(map(_scans_seen, _plan_nodes(node)))
         for node in _plan_nodes(df._jdf.queryExecution().optimizedPlan())
+    )
+
+
+def _exchange_over_seen(df) -> bool:
+    """True when a shuffle exchange sits above a scan of the seen table in
+    ``df``'s physical plan (for AQE, its current plan: before it runs, the
+    initial plan with its exchanges)."""
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        plan = plan.executedPlan()
+    return any(
+        node.nodeName() == "Exchange" and any(map(_scans_seen, _plan_nodes(node)))
+        for node in _plan_nodes(plan)
     )
 
 
@@ -875,25 +889,35 @@ class TestOneSeenCheck:
     def test_no_bloom_udf_over_the_seen_scan(
         self, spark, site, pages_path, tmp_path, monkeypatch
     ):
-        """The UDF-predicate hazard: without the persisted flagged frame the
-        optimizer copies the Bloom UDF predicate onto the seen scan, and
-        Python runs over every seen row."""
+        """The Bloom seen check never runs the Bloom UDF over the seen scan
+        nor shuffles seen, and a round whose links are all Bloom-negative
+        gets back its links' own plan: seen is not read at all."""
         from bbcrawl_spark.operators import dedup
 
-        plans = []
+        rounds = []
         orig = dedup.dedup_against_seen
 
-        def spy(candidates, seen, bloom=None, cache=None, **kw):
-            assert bloom is not None and cache is not None
-            # the same check without the cache shows the hazard; it runs
-            # first, as the cached plan would stand in for the uncached one
-            bare = _bloom_udf_over_seen_scan(orig(candidates, seen, bloom, **kw))
-            out = orig(candidates, seen, bloom, cache=cache, **kw)
-            plans.append((_bloom_udf_over_seen_scan(out), bare))
+        def spy(candidates, seen, bloom=None, **kw):
+            assert bloom is not None
+            out = orig(candidates, seen, bloom, **kw)
+            n_maybe = dedup.bloom_maybe_seen(candidates, bloom).filter("maybe_seen").count()
+            reads_seen = any(map(_scans_seen, _plan_nodes(
+                out._jdf.queryExecution().optimizedPlan()
+            )))
+            assert not _bloom_udf_over_seen_scan(out)
+            assert not _exchange_over_seen(out)
+            assert (out is candidates) == (n_maybe == 0)
+            rounds.append((n_maybe, reads_seen))
             return out
 
         monkeypatch.setattr(dedup, "dedup_against_seen", spy)
-        drv = _driver(spark, site, pages_path, tmp_path / "wh",
-                      bloom_partitions=4, max_rounds=2)
-        drv.run()
-        assert plans == [(False, True)] * 2
+        drv = _driver(spark, site, pages_path, tmp_path / "wh", bloom_partitions=4)
+        # seen as if too large to broadcast: a plain anti-join would shuffle it
+        old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        try:
+            drv.run()
+        finally:
+            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+        assert rounds and not any(reads for _, reads in rounds), rounds
+        assert any(n == 0 for n, _ in rounds) and any(n > 0 for n, _ in rounds), rounds

@@ -1,16 +1,20 @@
-"""Dedup (bloom + anti-join), politeness windows, robots, priority
+"""Dedup (Bloom + seen probe), politeness windows, robots, priority
 (SURVEY.md §2.3-2.7)."""
 
 from __future__ import annotations
 
 import random
+import re
 from collections import Counter
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
 from bbcrawl_spark import urlkit
 from bbcrawl_spark.operators import dedup, politeness, priority, robots
+
+from .conftest import spark_jobs
 
 
 @pytest.fixture(scope="module")
@@ -22,6 +26,28 @@ def _url_df(spark, urls):
     return spark.createDataFrame(
         [(u, urlkit.url_hash(u)) for u in urls], "url string, url_hash long"
     )
+
+
+def _scans(df, path: str) -> bool:
+    """True when ``df``'s optimized plan reads the parquet dir ``path``."""
+
+    def nodes(n):
+        yield n
+        for i in range(n.children().size()):
+            yield from nodes(n.children().apply(i))
+
+    return any(
+        n.getClass().getSimpleName() == "LogicalRelation"
+        and path in n.relation().location().rootPaths().toString()
+        for n in nodes(df._jdf.queryExecution().optimizedPlan())
+    )
+
+
+def _shuffles(df) -> bool:
+    """True when ``df``'s executed plan holds a non-broadcast exchange."""
+    df.collect()  # final AQE plan
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return re.search(r"(?<!Broadcast)Exchange ", plan) is not None
 
 
 class TestBloomDedup:
@@ -55,6 +81,60 @@ class TestBloomDedup:
         cands = _url_df(spark, [f"http://h/{i}" for i in range(50, 150)])
         got = sorted(r["url"] for r in dedup.dedup_against_seen(cands, seen).collect())
         assert got == sorted(f"http://h/{i}" for i in range(100, 150))
+
+    # the Bloom path is a bounded probe: its cost follows the candidates'
+    # maybe-seen keys, not the seen table
+
+    @pytest.fixture(scope="class")
+    def state(self, spark, tmp_path_factory):
+        rng = random.Random(7)
+        seen_urls = [f"http://h{rng.randrange(20)}.ex/t/{i}" for i in range(2000)]
+        d = tmp_path_factory.mktemp("probe")
+        seen_path, bloom_dir = str(d / "seen"), str(d / "bloom")
+        _url_df(spark, seen_urls).write.parquet(seen_path)
+        seen = spark.read.parquet(seen_path)
+        dedup.build_partitioned_bloom(seen, bloom_dir, num_partitions=8)
+        return seen_urls, seen, seen_path, dedup.BloomSpec(bloom_dir, 8)
+
+    @staticmethod
+    def _bloom_negative(spec, urls):
+        hashes = np.array([urlkit.url_hash(u) for u in urls], dtype=np.int64)
+        maybe = dedup._bloom_check_arrays(
+            hashes, spec.paths, spec.num_partitions, spec.num_hashes
+        )
+        return [u for u, m in zip(urls, maybe) if not m]
+
+    def test_no_maybe_keys_skip_the_seen_scan(self, spark, state):
+        _, seen, seen_path, spec = state
+        new = self._bloom_negative(spec, [f"http://n.ex/{i}" for i in range(300)])
+        cands = _url_df(spark, new)
+        with spark_jobs(spark) as jobs:
+            out = dedup.dedup_against_seen(cands, seen, spec)
+        assert jobs() <= 1
+        assert out is cands and not _scans(out, seen_path)
+
+    def test_mixed_matches_the_anti_join_without_a_shuffle(self, spark, state):
+        seen_urls, seen, seen_path, spec = state
+        cands = _url_df(spark, seen_urls[:40] + [f"http://n.ex/{i}" for i in range(300)])
+        # seen as if too large to broadcast: a plain anti-join would shuffle
+        old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        try:
+            out = dedup.dedup_against_seen(cands, seen, spec)
+            want = cands.join(seen.select("url_hash"), "url_hash", "left_anti")
+            assert sorted(out.collect()) == sorted(want.collect())
+            assert _shuffles(want)
+            assert not _scans(out, seen_path) and not _shuffles(out)
+        finally:
+            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+
+    def test_over_the_cap_falls_back_exactly(self, spark, state, monkeypatch):
+        seen_urls, seen, seen_path, spec = state
+        monkeypatch.setattr(dedup, "PROBE_MAX_KEYS", 2)
+        new = [f"http://n.ex/{i}" for i in range(100)]
+        out = dedup.dedup_against_seen(_url_df(spark, seen_urls[:5] + new), seen, spec)
+        assert _scans(out, seen_path)  # the shuffled anti-join against seen
+        assert sorted(r["url"] for r in out.collect()) == sorted(new)
 
 
 class TestIncrementalBloom:
