@@ -42,6 +42,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import BooleanType
 
 from ..functions.udfs import local_table
+from ..sources.warehouse import _atomic_write_json
 
 __all__ = [
     "BloomSpec",
@@ -87,10 +88,10 @@ def _write_manifest(path: str, entries: dict[int, dict]) -> None:
     """Atomic (tmp+rename): a crashed round never leaves a readable but
     partial manifest — the round-log barrier then makes the whole dir
     invisible to resume."""
-    tmp = os.path.join(path, _MANIFEST + ".tmp")
-    with open(tmp, "w") as f:
-        json.dump({"partitions": {str(k): v for k, v in entries.items()}}, f)
-    os.replace(tmp, os.path.join(path, _MANIFEST))
+    _atomic_write_json(
+        os.path.join(path, _MANIFEST),
+        {"partitions": {str(k): v for k, v in entries.items()}},
+    )
 
 
 class BloomSpec:
@@ -106,10 +107,10 @@ class BloomSpec:
     UDF; at very large P ship it via a broadcast variable instead.
     """
 
-    def __init__(self, path: str, num_partitions: int, num_hashes: int = _NUM_HASHES):
+    def __init__(self, path: str, num_partitions: int):
         self.path = path
         self.num_partitions = num_partitions
-        self.num_hashes = num_hashes
+        self.num_hashes = _NUM_HASHES
         manifest = _read_manifest(path)
         self.paths: dict[int, str] = {
             pid: manifest[pid]["path"] if pid in manifest
@@ -157,7 +158,7 @@ def _check_blob(hashes: np.ndarray, bitmap: np.ndarray, k: int) -> np.ndarray:
 _PART_SCHEMA = "partition_id int, n_items long, m_bits long"
 
 
-def _per_partition(df: DataFrame, P: int, hash_col: str, fn, schema: str) -> DataFrame:
+def _per_partition(df: DataFrame, P: int, fn, schema: str) -> DataFrame:
     """Call ``fn(pid, hashes) -> row`` once per Bloom partition present in
     ``df``, with ALL of that partition's hashes; the rows form a DataFrame
     of ``schema``.
@@ -173,38 +174,30 @@ def _per_partition(df: DataFrame, P: int, hash_col: str, fn, schema: str) -> Dat
     def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         buckets: dict[int, list[np.ndarray]] = {}
         for pdf in batches:
-            hashes = pdf[hash_col].to_numpy(dtype=np.int64)
+            hashes = pdf["url_hash"].to_numpy(dtype=np.int64)
             pids = (hashes % P + P) % P  # pmod parity with Spark
             for pid in np.unique(pids):
                 buckets.setdefault(int(pid), []).append(hashes[pids == pid])
         rows = [fn(pid, np.concatenate(chunks)) for pid, chunks in buckets.items()]
         yield pd.DataFrame(rows, columns=cols)
 
-    pid_col = F.pmod(F.col(hash_col), F.lit(P)).cast("int")
-    return df.select(hash_col).repartition(pid_col).mapInPandas(_run, schema)
+    pid_col = F.pmod(F.col("url_hash"), F.lit(P)).cast("int")
+    return df.select("url_hash").repartition(pid_col).mapInPandas(_run, schema)
 
 
-def _build_partitions(
-    df: DataFrame, path: str, P: int, bits_per_key: int, hash_col: str
-) -> DataFrame:
+def _build_partitions(df: DataFrame, path: str, P: int) -> DataFrame:
     """Build a fresh blob for every pid present in ``df`` at the dir-local
     ``bloom_{pid}.npy`` path; lazy ``(partition_id, n_items, m_bits)``."""
 
     def _build(pid: int, hashes: np.ndarray) -> tuple:
-        bitmap = _build_blob(hashes, bits_per_key, _NUM_HASHES)
+        bitmap = _build_blob(hashes, BITS_PER_KEY, _NUM_HASHES)
         np.save(_default_blob_path(path, pid), bitmap)
         return pid, len(hashes), len(bitmap) * 8
 
-    return _per_partition(df, P, hash_col, _build, _PART_SCHEMA)
+    return _per_partition(df, P, _build, _PART_SCHEMA)
 
 
-def build_partitioned_bloom(
-    seen: DataFrame,
-    path: str,
-    num_partitions: int,
-    bits_per_key: int = BITS_PER_KEY,
-    hash_col: str = "url_hash",
-) -> DataFrame:
+def build_partitioned_bloom(seen: DataFrame, path: str, num_partitions: int) -> DataFrame:
     """Build P Bloom blobs from the seen table — Spark's partial-build
     pattern: each bloom partition is built by the one task that owns it
     (see ``_per_partition``) and written straight to ``path``.
@@ -222,7 +215,7 @@ def build_partitioned_bloom(
     os.makedirs(path, exist_ok=True)
     # collected, not cached: AQE does not coalesce the exchange under a
     # cached plan, which would run one Python task per shuffle partition
-    rows = _build_partitions(seen, path, num_partitions, bits_per_key, hash_col).collect()
+    rows = _build_partitions(seen, path, num_partitions).collect()
     _write_manifest(path, {int(r["partition_id"]): _local_entry(path, r) for r in rows})
     return seen.sparkSession.createDataFrame(rows, _PART_SCHEMA)
 
@@ -267,8 +260,6 @@ def update_partitioned_bloom(
     prev_dir: str | None,
     new_dir: str,
     num_partitions: int,
-    bits_per_key: int = BITS_PER_KEY,
-    hash_col: str = "url_hash",
     seen_full: DataFrame | None = None,
 ) -> dict[str, list[int]]:
     """Incrementally maintain the partitioned Bloom: OR the round's NEW
@@ -279,7 +270,7 @@ def update_partitioned_bloom(
     touched blobs); untouched partitions are carried forward as manifest
     POINTERS to their existing files — zero read, zero write. A partition is
     rebuilt from the full seen table only when its fill would exceed the
-    ``bits_per_key`` FPP budget; blob sizes double on rebuild (power-of-two
+    ``BITS_PER_KEY`` FPP budget; blob sizes double on rebuild (power-of-two
     sizing in ``_build_blob``), so each key is rebuilt O(log N) times over
     the crawl — amortized O(N log N) total versus O(R·N) for per-round full
     rebuilds. Matches the reference's O(1)-per-URL ``Exists()`` semantics
@@ -313,11 +304,11 @@ def update_partitioned_bloom(
         out_path = _default_blob_path(new_dir, pid)
         if entry is None:
             # first keys ever seen in this partition: fresh build
-            bitmap = _build_blob(hashes, bits_per_key, k)
+            bitmap = _build_blob(hashes, BITS_PER_KEY, k)
             np.save(out_path, bitmap)
             return pid, len(hashes), len(bitmap) * 8, "built"
         n_total = int(entry["n_items"]) + len(hashes)
-        if n_total * bits_per_key > int(entry["m_bits"]):
+        if n_total * BITS_PER_KEY > int(entry["m_bits"]):
             # fill budget exceeded: needs a resize = rebuild from seen
             return pid, n_total, 0, "rebuild"
         bitmap = np.load(entry["path"])
@@ -331,9 +322,7 @@ def update_partitioned_bloom(
         np.save(out_path, np.packbits(bits, bitorder="little"))
         return pid, n_total, len(bitmap) * 8, "updated"
 
-    delta_rows = _per_partition(
-        seen_new, P, hash_col, _delta, _PART_SCHEMA + ", op string"
-    ).collect()
+    delta_rows = _per_partition(seen_new, P, _delta, _PART_SCHEMA + ", op string").collect()
 
     entries: dict[int, dict] = dict(prev)  # untouched pids: pointer carry
     stats: dict[str, list[int]] = {"updated": [], "built": [], "rebuilt": [], "carried": []}
@@ -353,9 +342,9 @@ def update_partitioned_bloom(
                 "rebuild, but no seen_full DataFrame was provided"
             )
         sub = seen_full.filter(
-            F.pmod(F.col(hash_col), F.lit(P)).cast("int").isin(rebuild_pids)
+            F.pmod(F.col("url_hash"), F.lit(P)).cast("int").isin(rebuild_pids)
         )
-        for r in _build_partitions(sub, new_dir, P, bits_per_key, hash_col).collect():
+        for r in _build_partitions(sub, new_dir, P).collect():
             entries[int(r["partition_id"])] = _local_entry(new_dir, r)
             stats["rebuilt"].append(int(r["partition_id"]))
 
@@ -365,17 +354,17 @@ def update_partitioned_bloom(
     return stats
 
 
-def bloom_maybe_seen(df: DataFrame, spec: BloomSpec, hash_col: str = "url_hash") -> DataFrame:
+def bloom_maybe_seen(df: DataFrame, spec: BloomSpec) -> DataFrame:
     """Add ``maybe_seen: boolean`` map-side (scalar Arrow UDF, zero shuffle).
 
     False means *definitely not seen* (Bloom has no false negatives);
     True must be confirmed against the seen table.
     """
-    return df.withColumn("maybe_seen", make_bloom_udf(spec)(F.col(hash_col)))
+    return df.withColumn("maybe_seen", make_bloom_udf(spec)(F.col("url_hash")))
 
 
-def _maybe_seen_keys(candidates: DataFrame, bloom: BloomSpec, hash_col: str) -> set | None:
-    """The distinct ``hash_col`` values of ``candidates`` the Bloom flags as
+def _maybe_seen_keys(candidates: DataFrame, bloom: BloomSpec) -> set | None:
+    """The distinct ``url_hash`` values of ``candidates`` the Bloom flags as
     maybe-seen, collected in one job; None when there are more than
     ``PROBE_MAX_KEYS``. Each task stops at ``PROBE_MAX_KEYS + 1`` keys
     (``limit(n).collect()`` would plan ``CollectLimit``, which scans
@@ -386,13 +375,13 @@ def _maybe_seen_keys(candidates: DataFrame, bloom: BloomSpec, hash_col: str) -> 
     def _flagged(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         keys = np.empty(0, dtype=np.int64)
         for pdf in batches:
-            h = pdf[hash_col].to_numpy(dtype=np.int64)
+            h = pdf["url_hash"].to_numpy(dtype=np.int64)
             keys = np.union1d(keys, h[_bloom_check_arrays(h, paths, P, k)])
             if len(keys) > cap:
                 break
-        yield pd.DataFrame({hash_col: keys[: cap + 1]})
+        yield pd.DataFrame({"url_hash": keys[: cap + 1]})
 
-    rows = candidates.select(hash_col).mapInPandas(_flagged, f"{hash_col} long").collect()
+    rows = candidates.select("url_hash").mapInPandas(_flagged, "url_hash long").collect()
     keys = {r[0] for r in rows}
     return keys if len(keys) <= cap else None
 
@@ -401,7 +390,6 @@ def dedup_against_seen(
     candidates: DataFrame,
     seen: DataFrame,
     bloom: BloomSpec | None = None,
-    hash_col: str = "url_hash",
     cache: list | None = None,
 ) -> DataFrame:
     """P2/J1: rows of ``candidates`` whose ``url_hash`` is NOT in ``seen``.
@@ -422,13 +410,13 @@ def dedup_against_seen(
 
     ``cache`` is accepted and unused (nothing stays persisted).
     """
-    keys = None if bloom is None else _maybe_seen_keys(candidates, bloom, hash_col)
+    keys = None if bloom is None else _maybe_seen_keys(candidates, bloom)
     if keys is None:
-        return candidates.join(seen.select(hash_col), on=hash_col, how="left_anti")
+        return candidates.join(seen.select("url_hash"), on="url_hash", how="left_anti")
     if not keys:
         return candidates
-    spark, schema = candidates.sparkSession, f"{hash_col} long"
+    spark, schema = candidates.sparkSession, "url_hash long"
     probe = F.broadcast(local_table(spark, [(h,) for h in keys], schema))
-    hits = seen.select(hash_col).join(probe, hash_col, "left_semi").collect()
+    hits = seen.select("url_hash").join(probe, "url_hash", "left_semi").collect()
     known = F.broadcast(local_table(spark, [tuple(r) for r in hits], schema))
-    return candidates.join(known, hash_col, "left_anti")
+    return candidates.join(known, "url_hash", "left_anti")

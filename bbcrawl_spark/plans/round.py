@@ -284,12 +284,11 @@ class CrawlDriver:
         micro-batch) resumes from a new driver over the same warehouse."""
         self.bootstrap()
         cap = max_rounds if max_rounds is not None else self.cfg.max_rounds
-        last = self.wh.last_committed_round()
         log = self.wh.round_log()
-        if last is not None and log.get(str(last), {}).get("meta", {}).get("done"):
+        last = max(int(k) for k in log)  # bootstrap committed round -1
+        if log[str(last)]["meta"].get("done"):
             return
-        start = (last if last is not None else -1) + 1
-        for r in range(start, cap):
+        for r in range(last + 1, cap):
             meta = self.run_round(r)
             yield meta
             if meta["done"]:
@@ -498,15 +497,7 @@ class CrawlDriver:
         if cfg.compact_every > 0 and (r + 1) % cfg.compact_every == 0:
             for t in ("seen", "fetch_log", "fetched", "metrics", "downloads"):
                 if t in sids:  # frontier is a full overwrite (1 dir) already
-                    # round-partitioned rewrite: the append chain is already
-                    # round-clustered (one dir per round); partitioning the
-                    # merged rewrite keeps per-round FILE pruning for round-
-                    # filtered readers (result readers, resume paths) after
-                    # compaction erases the dir-per-round layout. Tables
-                    # without a round column compact unpartitioned.
-                    sids[t] = self.wh.compact(
-                        t, sids[t], meta={"round": r}, partition_by=("round",)
-                    )
+                    sids[t] = self.wh.compact(t, sids[t], meta={"round": r})
 
         # fetch_log's append holds exactly this round's scheduled rows
         n_next = added["frontier"]["added_rows"]
@@ -646,9 +637,10 @@ class CrawlDriver:
     def _summary(self) -> dict[str, Any]:
         log = self.wh.round_log()
         rounds = sorted(int(k) for k in log if int(k) >= 0)
+        last = log[str(rounds[-1])] if rounds else None
         return {
             "rounds": len(rounds),
             "last_round": rounds[-1] if rounds else None,
-            "n_seen": self._last("seen").count() if rounds else 0,
-            "done": bool(rounds) and log[str(rounds[-1])]["meta"].get("done", False),
+            "n_seen": self.wh.read("seen", last["tables"]["seen"]).count() if last else 0,
+            "done": last is not None and last["meta"].get("done", False),
         }

@@ -15,8 +15,8 @@ Iceberg semantics the crawl loop needs:
 * atomic multi-table round commit: the crawl driver records
   {table -> snapshot_id} per round in a separate round log, committed
   last — the Iceberg equivalent of tagging per-round snapshots;
-* maintenance: ``compact`` rewrites a snapshot's dir chain into ONE dir
-  (Iceberg ``rewrite_data_files``) and ``expire_snapshots`` drops old
+* maintenance: ``compact`` rewrites a snapshot's dir chain into ONE plain
+  dir (Iceberg ``rewrite_data_files``) and ``expire_snapshots`` drops old
   snapshots + deletes data dirs no kept snapshot references (Iceberg
   ``expire_snapshots`` + orphan-file cleanup). Without both, an
   append-per-round chain grows one parquet dir per round forever — at
@@ -27,7 +27,8 @@ On a real cluster, swap this class for ``spark.read.format("iceberg")`` /
 ``df.writeTo(...)`` — the crawl loop touches ``write / append / read /
 read_delta / summary / compact / expire_snapshots`` and the round log.
 
-Layout:
+Layout (no hive partition dirs: every snapshot dir is one plain parquet
+dir, so a read is one scan over the snapshot's dir list):
     root/<table>/data/s<NNNNN>/part-*.parquet  one dir per snapshot's new files
     root/<table>/_manifest.json                the table's manifest (below)
     root/_rounds.json                          round -> {"tables": {table:
@@ -36,7 +37,6 @@ Layout:
 Manifest::
 
     {"current": sid, "next_id": n,
-     "dir_layout": {data_dir: [partition col, ...]},   partitioned dirs only
      "snapshots": {sid: {"dirs": [data_dir, ...],      parent chain + own dir
                          "parent": sid | null, "ts": t, "meta": {...},
                          "summary": {...}}}}
@@ -80,9 +80,8 @@ def _atomic_write_json(path: str, obj) -> None:
 def _summarize(df: DataFrame, data_dir: str) -> dict:
     """Summary of one snapshot's own data dir, from its parquet footers."""
     files = [
-        os.path.join(d, f)
-        for d, _, fs in os.walk(data_dir)
-        for f in fs
+        os.path.join(data_dir, f)
+        for f in os.listdir(data_dir)
         if f.endswith(".parquet") and not f.startswith((".", "_"))
     ]
     return {
@@ -142,15 +141,11 @@ class Warehouse:
         return f"s{nid:05d}"
 
     def _new_snapshot(self, table: str, df: DataFrame, parent_dirs: list[str],
-                      meta: dict | None,
-                      partition_by: tuple[str, ...] = ()) -> str:
+                      meta: dict | None) -> str:
         man = self._manifest(table)
         sid = self._next_sid(man)
         data_dir = os.path.join(self._table_dir(table), "data", sid)
-        w = df.write.mode("overwrite")
-        if partition_by:
-            w = w.partitionBy(*partition_by)
-        w.parquet(data_dir)
+        df.write.mode("overwrite").parquet(data_dir)
         man["snapshots"][sid] = {
             "dirs": parent_dirs + [data_dir],
             "parent": man["current"],
@@ -158,22 +153,14 @@ class Warehouse:
             "meta": meta or {},
             "summary": _summarize(df, data_dir),
         }
-        if partition_by:
-            # per-DIR layout: a snapshot's dir list mixes dirs written by
-            # different snapshots; each dir's layout is fixed at ITS write
-            # time, so the reader groups by layout (see read())
-            man.setdefault("dir_layout", {})[data_dir] = list(partition_by)
         man["current"] = sid
         _atomic_write_json(self._manifest_path(table), man)
         return sid
 
-    def write(self, table: str, df: DataFrame, meta: dict | None = None,
-              partition_by: tuple[str, ...] = ()) -> str:
+    def write(self, table: str, df: DataFrame, meta: dict | None = None) -> str:
         """Overwrite: new snapshot containing only df (old snapshots remain
-        readable via time travel until expired). ``partition_by`` writes
-        hive-style partition dirs so round/bucket filters prune FILES, not
-        just manifest dirs (Iceberg partition-pruning analogue)."""
-        return self._new_snapshot(table, df, [], meta, partition_by)
+        readable via time travel until expired)."""
+        return self._new_snapshot(table, df, [], meta)
 
     def append(
         self,
@@ -201,32 +188,20 @@ class Warehouse:
 
     # -- maintenance (Iceberg rewrite_data_files / expire_snapshots) -------
     def compact(self, table: str, snapshot_id: str | None = None,
-                meta: dict | None = None,
-                partition_by: tuple[str, ...] = ()) -> str:
-        """Rewrite a snapshot's dir chain into ONE data dir (same rows).
+                meta: dict | None = None) -> str:
+        """Rewrite a snapshot's dir chain into ONE plain data dir (same rows).
 
         The new snapshot is a normal child of ``current``; appends chain off
         it afterwards, so a crawl that compacts every K rounds reads any
         table through O(K) dirs instead of O(rounds). Old snapshots stay
         readable until expired.
-
-        ``partition_by`` re-clusters the rewrite into hive partition dirs
-        (Iceberg ``rewrite_data_files`` with a partition spec): the append
-        chain arrives naturally round-clustered (one dir per round), and a
-        round-partitioned rewrite PRESERVES per-round file pruning after the
-        dirs merge — a filter on the partition column reads only its
-        partition's files (pinned by plan assertion in tests). Columns not
-        present in the table are ignored so one call site can cover tables
-        with heterogeneous schemas.
         """
         man = self._manifest(table)
         sid = snapshot_id or man["current"]
         if sid is None:
             raise FileNotFoundError(f"table {table!r} has no committed snapshot")
-        df = self.read(table, sid)
-        part = tuple(c for c in partition_by if c in df.columns)
         return self._new_snapshot(
-            table, df, [], {**(meta or {}), "compaction_of": sid}, part
+            table, self.read(table, sid), [], {**(meta or {}), "compaction_of": sid}
         )
 
     def expire_snapshots(self, table: str, keep: set[str]) -> dict:
@@ -266,8 +241,6 @@ class Warehouse:
         for snap in man["snapshots"].values():
             if snap.get("parent") not in man["snapshots"]:
                 snap["parent"] = None  # expired ancestor: lineage root now
-        for d in removed_dirs:
-            man.get("dir_layout", {}).pop(d, None)
         _atomic_write_json(self._manifest_path(table), man)
         for d in removed_dirs:
             shutil.rmtree(d, ignore_errors=True)
@@ -289,23 +262,7 @@ class Warehouse:
         if sid is None:
             raise FileNotFoundError(f"table {table!r} has no committed snapshot")
         snap = man["snapshots"][sid]
-        dirs = snap["dirs"]
-        layouts = man.get("dir_layout", {})
-        groups: dict[tuple[str, ...], list[str]] = {}
-        for d in dirs:
-            groups.setdefault(tuple(layouts.get(d, ())), []).append(d)
-        if len(groups) == 1:
-            return self._scan(snap, dirs)
-        # mixed layouts (partitioned compaction + later plain appends):
-        # Spark refuses one multi-root read over conflicting directory
-        # structures, so read each layout group separately and unionByName
-        # (partitioned reads surface partition cols LAST; unionByName
-        # realigns). Filters still prune files inside the partitioned group.
-        out: DataFrame | None = None
-        for key in sorted(groups):
-            part = self._scan(snap, groups[key])
-            out = part if out is None else out.unionByName(part)
-        return out
+        return self._scan(snap, snap["dirs"])
 
     def read_delta(self, table: str, snapshot_id: str) -> DataFrame:
         """Only the rows ADDED by ``snapshot_id`` (its own data dir, not the

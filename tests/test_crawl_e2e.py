@@ -66,9 +66,33 @@ def _order(drv):
     return [(r["round"], r["url"]) for r in drv.crawl_order().orderBy("rank").collect()]
 
 
+def _count_round_log_reads(drv, monkeypatch):
+    calls = {"n": 0}
+    real = drv.wh.round_log
+
+    def counted():
+        calls["n"] += 1
+        return real()
+
+    monkeypatch.setattr(drv.wh, "round_log", counted)
+    return calls
+
+
 class TestCrawlEquivalence:
     def test_done(self, run):
         assert run[1]["done"]
+
+    def test_finished_rounds_parse_round_log_once(self, run, monkeypatch):
+        """A finished crawl's ``rounds()`` yields nothing and reads the round
+        log once beyond bootstrap's own check."""
+        calls = _count_round_log_reads(run[0], monkeypatch)
+        assert list(run[0].rounds()) == []
+        assert calls["n"] == 2  # bootstrap + rounds
+
+    def test_summary_parses_round_log_once(self, run, monkeypatch):
+        calls = _count_round_log_reads(run[0], monkeypatch)
+        assert run[0]._summary() == run[1]
+        assert calls["n"] == 1
 
     def test_crawl_order_matches_oracle(self, run, want):
         assert _order(run[0]) == want.crawl_order
@@ -460,6 +484,17 @@ class TestResume:
         man = drv.wh._manifest("seen")
         cur_dirs = man["snapshots"][man["current"]]["dirs"]
         assert len(cur_dirs) <= 2
+        # compaction bounds the real fan-out: every round-bearing table's
+        # current snapshot keeps its parquet files in ≤ compact_every leaf dirs
+        for t in ("fetch_log", "fetched", "metrics"):
+            tm = drv.wh._manifest(t)
+            leaves = {
+                d
+                for root in tm["snapshots"][tm["current"]]["dirs"]
+                for d, _, fs in os.walk(root)
+                if any(f.endswith(".parquet") for f in fs)
+            }
+            assert 0 < len(leaves) <= 2, (t, sorted(leaves))
         # pre-retention snapshots expired (round 0's pin no longer readable)
         old_sid = drv.wh.round_snapshot(0, "seen")
         assert old_sid not in man["snapshots"]

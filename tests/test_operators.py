@@ -230,6 +230,21 @@ class TestIncrementalBloom:
                 _url_df(spark, ["http://x.ex/1"]), d0, d1, self.P
             )
 
+    def test_manifest_replace_is_atomic(self, tmp_path):
+        """A rewrite replaces the manifest whole; one that fails midway
+        leaves the previous manifest readable."""
+        import os
+
+        d = str(tmp_path / "m")
+        os.makedirs(d)
+        dedup._write_manifest(d, {0: {"path": "a", "n_items": 1, "m_bits": 8}})
+        dedup._write_manifest(d, {1: {"path": "b", "n_items": 2, "m_bits": 16}})
+        assert dedup._read_manifest(d) == {1: {"path": "b", "n_items": 2, "m_bits": 16}}
+        assert os.listdir(d) == ["manifest.json"]
+        with pytest.raises(TypeError):
+            dedup._write_manifest(d, {2: {"path": object()}})
+        assert dedup._read_manifest(d) == {1: {"path": "b", "n_items": 2, "m_bits": 16}}
+
     def test_rebuild_without_seen_full_raises(self, spark, tmp_path):
         d0, d1 = str(tmp_path / "r0"), str(tmp_path / "r1")
         small = [f"http://s.ex/{i}" for i in range(24)]
@@ -307,9 +322,7 @@ class TestIncrementalBloom:
         assert got == dict(want)
 
     def test_bloom_exchange_has_no_fixed_count(self, spark):
-        df = dedup._build_partitions(
-            _url_df(spark, ["http://a.ex/1"]), "/nonexistent", self.P, 10, "url_hash"
-        )
+        df = dedup._build_partitions(_url_df(spark, ["http://a.ex/1"]), "/nonexistent", self.P)
         plan = df._jdf.queryExecution().executedPlan().toString()
         assert "REPARTITION_BY_COL" in plan and "REPARTITION_BY_NUM" not in plan, plan
 

@@ -113,3 +113,32 @@ def test_gate_and_ranker_parameters_pinned():
     ]
     assert params(robots.robots_gate) == ["frontier", "rules", "url_col"]
     assert params(robots.robots_table) == ["spark", "robots_txts", "user_agent"]
+
+
+def test_warehouse_and_dedup_parameters_pinned():
+    """Adding or removing a knob of the warehouse's write path or of the
+    public seen-set dedup functions must show up as a diff here."""
+    from inspect import signature
+
+    from bbcrawl_spark.operators import dedup
+    from bbcrawl_spark.sources.warehouse import Warehouse
+
+    def params(fn):
+        return list(signature(fn).parameters)
+
+    assert params(Warehouse.write) == ["self", "table", "df", "meta"]
+    assert params(Warehouse.append) == [
+        "self", "table", "df", "meta", "parent_snapshot",
+    ]
+    assert params(Warehouse.compact) == ["self", "table", "snapshot_id", "meta"]
+    assert params(dedup.BloomSpec) == ["path", "num_partitions"]
+    assert params(dedup.build_partitioned_bloom) == [
+        "seen", "path", "num_partitions",
+    ]
+    assert params(dedup.update_partitioned_bloom) == [
+        "seen_new", "prev_dir", "new_dir", "num_partitions", "seen_full",
+    ]
+    assert params(dedup.bloom_maybe_seen) == ["df", "spec"]
+    assert params(dedup.dedup_against_seen) == [
+        "candidates", "seen", "bloom", "cache",
+    ]

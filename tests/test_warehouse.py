@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import json
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -118,6 +119,51 @@ class TestMaintenance:
         assert s2 not in man["snapshots"]
         assert sorted(r["v"] for r in wh.read("t").collect()) == [1, 2, 3]
 
+    def test_manifest_and_data_dirs_stay_plain(self, spark, wh):
+        """No write path records a per-dir layout or writes partition
+        subdirs: every data dir on disk holds parquet files only."""
+        wh.write("t", _df(spark, [1]))
+        wh.append("t", _df(spark, [2]))
+        c = wh.compact("t")
+        wh.append("t", _df(spark, [3]))
+        wh.expire_snapshots("t", keep={c})
+        man = wh._manifest("t")
+        assert set(man) == {"current", "next_id", "snapshots"}
+        for snap in man["snapshots"].values():
+            assert set(snap) == {"dirs", "parent", "ts", "meta", "summary"}
+        data = os.path.join(wh._table_dir("t"), "data")
+        for d in os.listdir(data):
+            assert not any(
+                os.path.isdir(os.path.join(data, d, f))
+                for f in os.listdir(os.path.join(data, d))
+            ), d
+
+    def test_compacted_dir_keeps_round_column_in_files(self, spark, wh):
+        """With no ``round=k/`` dir names, a compacted dir read on its own
+        still carries every row's round value."""
+        for rnd in range(3):
+            wh.append("t", spark.createDataFrame(
+                [(rnd, rnd * 10)], "round int, v long"
+            ))
+        c = wh.compact("t")
+        (d,) = wh.snapshots("t")[c]["dirs"]
+        got = spark.read.parquet(d)
+        assert got.columns == ["round", "v"]
+        assert sorted(tuple(r) for r in got.collect()) == [(0, 0), (1, 10), (2, 20)]
+
+    def test_expire_after_compaction_leaves_one_dir(self, spark, wh):
+        for v in (1, 2, 3, 4):
+            wh.append("t", _df(spark, [v]))
+        c = wh.compact("t")
+        res = wh.expire_snapshots("t", keep={c})
+        assert len(res["removed_dirs"]) == 4
+        data = os.path.join(wh._table_dir("t"), "data")
+        assert os.listdir(data) == [c]
+        got = wh.read("t")
+        plan = got._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("FileScan parquet") == 1, plan
+        assert sorted(r["v"] for r in got.collect()) == [1, 2, 3, 4]
+
 
 class TestRoundLog:
     def test_commit_and_query(self, spark, wh):
@@ -135,107 +181,6 @@ class TestRoundLog:
         assert wh.last_committed_round() == 0
         pinned = wh.round_snapshot(0, "frontier")
         assert [r["v"] for r in wh.read("frontier", pinned).collect()] == [1]
-
-
-class TestPartitionPruning:
-    """Partition/bucket pruning as EXERCISED code paths (round-2 judge:
-    the PLANS.md claims were design statements). A round-partitioned
-    compaction keeps per-round FILE pruning after the dir-per-round append
-    layout merges; a bucket-partitioned seen rewrite prunes point lookups."""
-
-    @staticmethod
-    def _rdf(spark, rnd, vals):
-        from pyspark.sql import functions as F
-
-        return (
-            spark.createDataFrame([(v,) for v in vals], "v long")
-            .withColumn("round", F.lit(rnd).cast("int"))
-        )
-
-    @staticmethod
-    def _plan(df) -> str:
-        return df._jdf.queryExecution().executedPlan().toString()
-
-    @staticmethod
-    def _files_read(df) -> int:
-        """'number of files read' from the executed scan node — inputFiles()
-        lists the whole FileIndex regardless of filters, so only this metric
-        (populated by the action) evidences pruning."""
-        plan = df._jdf.queryExecution().executedPlan()
-        leaves = plan.collectLeaves()
-        total = 0
-        for i in range(leaves.size()):
-            m = leaves.apply(i).metrics()
-            if m.contains("numFiles"):
-                total += m.apply("numFiles").value()
-        return total
-
-    def test_partitioned_compact_same_rows_and_prunes(self, spark, wh):
-        for rnd in range(4):
-            wh.append("t", self._rdf(spark, rnd, range(rnd * 10, rnd * 10 + 5)))
-        sid = wh.compact("t", partition_by=("round",))
-        got = wh.read("t", sid)
-        assert got.count() == 20
-        pruned = got.filter("round = 2")
-        assert sorted(r["v"] for r in pruned.collect()) == list(range(20, 25))
-        plan = self._plan(pruned)
-        assert "PartitionFilters" in plan and "round" in plan.split("PartitionFilters")[1].split("]")[0]
-        # the action's scan metric proves pruning: fewer files read than the
-        # unfiltered scan touches (inputFiles() would list ALL of them)
-        full = wh.read("t", sid)
-        full.collect()  # execute THIS df's plan so its scan metric populates
-        assert self._files_read(pruned) < self._files_read(full)
-
-    def test_mixed_layout_chain_unions(self, spark, wh):
-        """Appends chained AFTER a partitioned compaction produce a snapshot
-        whose dirs mix hive-partitioned and plain layouts — Spark refuses a
-        single multi-root read over that, so read() groups by layout."""
-        for rnd in range(3):
-            wh.append("t", self._rdf(spark, rnd, [rnd]))
-        wh.compact("t", partition_by=("round",))
-        wh.append("t", self._rdf(spark, 3, [3]))
-        got = wh.read("t")
-        assert sorted((r["round"], r["v"]) for r in got.collect()) == [
-            (0, 0), (1, 1), (2, 2), (3, 3)
-        ]
-        assert got.filter("round = 3").count() == 1
-
-    def test_nonexistent_partition_col_ignored(self, spark, wh):
-        wh.write("t", _df(spark, [1, 2]))
-        sid = wh.compact("t", partition_by=("round",))  # no such column
-        assert sorted(r["v"] for r in wh.read("t", sid).collect()) == [1, 2]
-
-    def test_bucket_partitioned_seen_point_lookup(self, spark, wh):
-        """The url_hash-bucket claim: rewrite seen partitioned by a derived
-        bucket column; a membership point-lookup filters to ONE bucket's
-        files (PartitionFilters), not a full scan."""
-        from pyspark.sql import functions as F
-
-        seen = spark.range(0, 1000).select(
-            F.xxhash64("id").alias("url_hash")
-        ).withColumn("bucket", F.pmod("url_hash", F.lit(8)).cast("int"))
-        wh.write("seen_b", seen, partition_by=("bucket",))
-        probe = 12345
-        got = wh.read("seen_b").filter(
-            (F.col("bucket") == F.lit(probe % 8)) & (F.col("url_hash") == probe)
-        )
-        got.collect()
-        plan = self._plan(got)
-        assert "PartitionFilters" in plan and "bucket" in plan.split("PartitionFilters")[1].split("]")[0]
-        full = wh.read("seen_b")
-        full.collect()  # execute THIS df's plan so its scan metric populates
-        assert self._files_read(got) < self._files_read(full)
-
-    def test_expiry_drops_dir_layout_entries(self, spark, wh):
-        for rnd in range(2):
-            wh.append("t", self._rdf(spark, rnd, [rnd]))
-        c1 = wh.compact("t", partition_by=("round",))
-        c2 = wh.compact("t", partition_by=("round",))
-        wh.expire_snapshots("t", keep={c2})
-        man = wh._manifest("t")
-        live = {d for s in man["snapshots"].values() for d in s["dirs"]}
-        assert set(man.get("dir_layout", {})) <= live
-        assert wh.read("t", c2).count() == 2
 
 
 class TestSnapshotSummary:
@@ -270,18 +215,16 @@ class TestSnapshotSummary:
         assert got.schema == spark.read.parquet(*wh.snapshots("n")[s3]["dirs"]).schema
         assert sorted(r["v"] for r in got.collect()) == [0, 1, 2]
 
-    @pytest.mark.parametrize("op", ["write", "append", "partitioned_compact", "empty"])
+    @pytest.mark.parametrize("op", ["write", "append", "compact", "empty"])
     def test_added_rows_equal_count(self, spark, wh, op):
-        import os
-
         wh.write("t", self._rdf(spark, 0, [1, 2, 3]))
         if op == "write":
             sid = wh.write("t", self._rdf(spark, 1, [4, 5]).repartition(3))
         elif op == "append":
             sid = wh.append("t", self._rdf(spark, 1, [4, 5, 6, 7]))
-        elif op == "partitioned_compact":
+        elif op == "compact":
             wh.append("t", self._rdf(spark, 1, [4]))
-            sid = wh.compact("t", partition_by=("round",))
+            sid = wh.compact("t")
         else:
             sid = wh.write("t", spark.createDataFrame([], "round int, v long"))
         s = wh.summary("t", sid)
@@ -320,17 +263,25 @@ class TestSnapshotSummary:
         s3 = wh.append("t", self._rdf(spark, 2, [4]))
         assert self._rows(wh.read("t", s3)) == want + [(2, 4)]
 
-    def test_mixed_layout_chain_with_summaries(self, spark, wh):
+    def test_compacted_then_appended_chain_with_summaries(self, spark, wh):
+        """Compaction rewrites the chain into one plain dir; an append onto it
+        reads both dirs in one parquet scan with the recorded schema."""
         for rnd in range(3):
             wh.append("t", self._rdf(spark, rnd, [rnd, rnd + 10]))
-        wh.compact("t", partition_by=("round",))
+        c = wh.compact("t")
         sid = wh.append("t", self._rdf(spark, 3, [3]))
+        dirs = wh.snapshots("t")[sid]["dirs"]
+        assert dirs[0] == wh.snapshots("t")[c]["dirs"][0] and len(dirs) == 2
+        for d in dirs:  # plain dirs: parquet files only, no partition subdirs
+            assert all(os.path.isfile(os.path.join(d, f)) for f in os.listdir(d))
         with spark_jobs(spark) as jobs:
             got = wh.read("t", sid)
         assert jobs() == 0
+        plan = got._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("FileScan parquet") == 1, plan
         assert got.columns == ["round", "v"]
         assert self._rows(got) == [
             (0, 0), (0, 10), (1, 1), (1, 11), (2, 2), (2, 12), (3, 3)
         ]
-        assert got.filter("round = 1").count() == 2
+        assert wh.summary("t", c)["added_rows"] == 6
         assert wh.summary("t", sid)["added_rows"] == 1
