@@ -96,21 +96,29 @@ _CANON_SQL = """
 # ---------------------------------------------------------------------------
 
 
+def _pager_rows(spark: SparkSession, spec: pagers.PagerSpec) -> DataFrame:
+    return udfs.local_table(
+        spark,
+        [(0, o, p, u) for o, p, u in pagers.pager_sequence(spec)],
+        "seed_id long, ord long, page_num int, url string",
+    )
+
+
 def q_frontier_cutter(spark: SparkSession, sf_dir: str) -> DataFrame:
     spec = pagers.CutterPagerSpec(
         url="http://www.example.net/1/test", start=1, end=100, cut=(24, 1), digits=5
     )
-    return pagers.cutter_frontier(spark, spec)
+    return _pager_rows(spark, spec)
 
 
 def q_frontier_vb4(spark: SparkSession, sf_dir: str) -> DataFrame:
     spec = pagers.VB4PagerSpec(url="http://forum.example.net/threads/42", start=1, end=50)
-    return pagers.vb4_frontier(spark, spec)
+    return _pager_rows(spark, spec)
 
 
 def q_frontier_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     spec = pagers.QueryPagerSpec(url="http://h.example/f?z=9&a=1", start=2, end=60)
-    return pagers.query_frontier(spark, spec)
+    return _pager_rows(spark, spec)
 
 
 def q_url_canonicalize(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -16,7 +16,7 @@ import os
 import re
 from dataclasses import dataclass, field
 
-from . import urlkit
+from . import pagers, urlkit
 
 __all__ = [
     "Product",
@@ -298,11 +298,9 @@ def _parse_flagset(flags: list[str], spec: dict[str, bool]) -> dict[str, str]:
 def parse_command(cmdln: list[str]):
     """Full reference command line -> (PagerSpec, CrawlerSpec, globals).
 
-    The pager spec plugs into ``pagers.frontier_for``; the crawler spec
+    The pager spec plugs into ``pagers.pager_sequence``; the crawler spec
     selects/configures the extraction UDF family (vb/src/file).
     """
-    from . import pagers  # local import to avoid pyspark import at module load
-
     p = partition(cmdln)
 
     g = _parse_flagset(p.global_flags, {"o": True, "cookie-file": True, "loglevel": True})

@@ -361,8 +361,6 @@ def extract_text_from_doc(doc: Node) -> str:
 class ExtractedLink:
     link: str
     abs_url: str
-    element_index: int
-    anchor_text: str = ""
 
 
 def extract_links(html_text: str, page_url: str) -> list[ExtractedLink]:
@@ -383,14 +381,7 @@ def extract_links_from_doc(doc: Node, page_url: str) -> list[ExtractedLink]:
         abs_url, err = _resolve(page_url, href)
         if err or not abs_url:
             continue
-        out.append(
-            ExtractedLink(
-                link=href,
-                abs_url=abs_url,
-                element_index=a.index,
-                anchor_text=extract_text_of(a),
-            )
-        )
+        out.append(ExtractedLink(link=href, abs_url=abs_url))
     return out
 
 
@@ -448,15 +439,3 @@ def file_crawler_name(url: str, page_num: int, dl_id: int | None = None) -> str:
         return f"{page_num} - {name}"
     return f"{dl_id}.download" if dl_id is not None else ""
 
-
-def extract_text_of(n: Node) -> str:
-    parts: list[str] = []
-
-    def walk(node: Node) -> None:
-        if node.type == htmlkit.TEXT:
-            parts.append(node.data)
-        for c in node.children:
-            walk(c)
-
-    walk(n)
-    return "".join(parts)

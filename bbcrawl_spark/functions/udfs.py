@@ -97,16 +97,8 @@ def url_hash_col(url: Column | str) -> Column:
 CT_DEFAULT = "text/html; charset=utf-8"
 
 
-LINK_SCHEMA = ArrayType(
-    StructType(
-        [
-            StructField("link", StringType()),
-            StructField("abs_url", StringType()),
-            StructField("element_index", IntegerType()),
-            StructField("anchor_text", StringType()),
-        ]
-    )
-)
+#: the loop reads only the resolved url of a link (``l.abs_url``)
+LINK_SCHEMA = ArrayType(StructType([StructField("abs_url", StringType())]))
 
 
 EXTRACTED_FILE_SCHEMA = ArrayType(
@@ -159,7 +151,6 @@ def make_extract_fused_udf(
     headernames: bool = False,
     tags: tuple[str, ...] = extract.SRC_TAGS,
     attrs: list[tuple[str, str]] | None = None,
-    want_text: bool = True,
     want_links: bool = True,
 ):
     """Fused page extraction: decode + parse each fetched page ONCE, then run
@@ -171,7 +162,8 @@ def make_extract_fused_udf(
 
     ``crawler`` selects the downloads walk ('' / 'file' -> none here — the
     file crawler derives downloads from the frontier row itself, see
-    plans/round.py); ``want_text``/``want_links`` skip walks no sink consumes.
+    plans/round.py); ``want_links=False`` skips the link walk when the crawl
+    follows no links.
     """
 
     def _files(doc, u, p) -> list[dict]:
@@ -184,15 +176,7 @@ def make_extract_fused_udf(
         return []
 
     def _links(doc, u) -> list[dict]:
-        return [
-            {
-                "link": l.link,
-                "abs_url": l.abs_url,
-                "element_index": l.element_index,
-                "anchor_text": l.anchor_text,
-            }
-            for l in extract.extract_links_from_doc(doc, u)
-        ]
+        return [{"abs_url": l.abs_url} for l in extract.extract_links_from_doc(doc, u)]
 
     @pandas_udf(PAGE_EXTRACT_SCHEMA)
     def extract_fused(
@@ -208,7 +192,7 @@ def make_extract_fused_udf(
                 files.append([])
                 continue
             doc = parse_html(decode_html(bytes(b), ct or CT_DEFAULT))
-            texts.append(extract.extract_text_from_doc(doc) if want_text else "")
+            texts.append(extract.extract_text_from_doc(doc))
             links.append(_links(doc, u) if want_links else [])
             files.append(_files(doc, u, p))
         return pd.DataFrame({"text": texts, "links": links, "files": files})

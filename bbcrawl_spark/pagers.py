@@ -1,20 +1,17 @@
-"""Pagers as frontier DataFrame generators.
+"""Pagers: the seed URL sequences of the reference's ``-pager`` options.
 
-The reference's pagers (``/root/reference/libcrawl/pagers.go``) are lazy
-one-URL-at-a-time stateful generators; the entire emitted sequence is a pure
-function of (blueprint URL, flags).  Spark-first, each pager therefore
-becomes a *declarative* DataFrame: ``spark.range`` over the page interval
-plus JVM-side column expressions (``format_string``, ``lpad``, ``concat``)
-— no Python in the hot path, fully parallel, and Catalyst can prune/push
-into it.  Emission order is carried explicitly in the ``ord`` column since
-Spark provides no implicit row order.
+The reference's pagers (``libcrawl/pagers.go``) are lazy one-URL-at-a-time
+stateful generators, but the whole emitted sequence is a pure function of
+(blueprint URL, flags). Each pager here is therefore a validated spec with a
+``page_url(page)`` rule, and ``pager_sequence`` lists what the Go pager
+emits, in order, as ``(ord, page_num, url)`` tuples:
 
-Frontier schema produced by every pager
----------------------------------------
-    seed_id   long    which seed/pager instance produced the row
-    ord       long    0-based emission index (exact reference order)
-    page_num  int     the value PageNum() reports while crawling this row
-    url       string  the URL, byte-identical to the Go pager's output
+    ord       0-based emission index (exact reference order)
+    page_num  the value PageNum() reports while crawling this row
+    url       the URL, byte-identical to the Go pager's output
+
+The sequence is built on the driver: the CLI turns it into
+``CrawlConfig.seeds``, which the crawl and its oracle both start from.
 
 Validation errors raised here mirror the reference's ``SetOptions`` /
 ``SetUrl`` messages (``pagers.go:54-101, 137-209, 254-281``).
@@ -24,16 +21,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import Column, DataFrame, SparkSession
-from pyspark.sql import functions as F
-
 from . import urlkit
-
-FRONTIER_COLS = ["seed_id", "ord", "page_num", "url"]
-
-PAGER_VB4 = "vb4"
-PAGER_QUERY = "query"
-PAGER_URLCUT = "cutter"
 
 
 # ---------------------------------------------------------------------------
@@ -49,7 +37,6 @@ class QueryPagerSpec:
     start: int
     end: int
     name: str = "page"
-    seed_id: int = 0
 
     base: str = field(init=False)
     query: dict = field(init=False)
@@ -72,9 +59,6 @@ class QueryPagerSpec:
         q[self.name] = [str(page)]
         return f"{self.base}?{urlkit.query_encode(q)}"
 
-    def num_pages(self) -> int:
-        return self.end - self.start + 1
-
 
 @dataclass
 class CutterPagerSpec:
@@ -94,7 +78,6 @@ class CutterPagerSpec:
     digits: int = 0
     startpage: str = ""
     adjust: int = 0
-    seed_id: int = 0
 
     left: str = field(init=False)
     right: str = field(init=False)
@@ -133,9 +116,6 @@ class CutterPagerSpec:
         num = str(n).zfill(self.digits) if self.digits > 0 else str(n)
         return f"{self.left}{num}{self.right}"
 
-    def num_pages(self) -> int:
-        return self.end - self.start + 1 + (1 if self.startpage else 0)
-
 
 @dataclass
 class VB4PagerSpec:
@@ -146,7 +126,6 @@ class VB4PagerSpec:
     url: str
     start: int
     end: int
-    seed_id: int = 0
 
     def __post_init__(self) -> None:
         if self.start < 1:
@@ -161,123 +140,12 @@ class VB4PagerSpec:
         sep = "" if self.url.endswith("/") else "/"
         return f"{self.url}{sep}page{page}"
 
-    def num_pages(self) -> int:
-        return self.end - self.start + 1
-
 
 PagerSpec = QueryPagerSpec | CutterPagerSpec | VB4PagerSpec
 
 
-# ---------------------------------------------------------------------------
-# DataFrame generators (all JVM-side expressions; no UDFs)
-# ---------------------------------------------------------------------------
-
-
-def _range(spark: SparkSession, start: int, end: int, parallelism: int | None) -> DataFrame:
-    # numPartitions scales frontier generation across executors; at 1e10-URL
-    # scale spark.range splits the interval without materializing anything
-    # on the driver.
-    if parallelism:
-        return spark.range(start, end + 1, 1, parallelism)
-    return spark.range(start, end + 1)
-
-
-def _num_expr(value: Column, digits: int) -> Column:
-    if digits > 0:
-        return F.lpad(value.cast("string"), digits, "0")
-    return value.cast("string")
-
-
-def query_frontier(
-    spark: SparkSession, spec: QueryPagerSpec, parallelism: int | None = None
-) -> DataFrame:
-    """S1: QueryPager.Next as a DataFrame (``pagers.go:36-48``).
-
-    The rebuilt query string (Go ``url.Values.Encode``: sorted keys,
-    QueryEscape) is precomputed on the driver as a left/right template —
-    only the page counter varies per row, so the whole column stays a
-    JVM-side ``concat``.
-    """
-    # Build the encoded query with a placeholder page value, then split
-    # around it; Encode's key-sorting makes the split position fixed.
-    sentinel = "\x00BBCRAWL_PAGE\x00"
-    q = {k: list(v) for k, v in spec.query.items()}
-    q[spec.name] = [sentinel]
-    encoded = urlkit.query_encode(q)
-    left, _, right = encoded.partition(urlkit.query_escape(sentinel))
-    df = _range(spark, spec.start, spec.end, parallelism)
-    return df.select(
-        F.lit(spec.seed_id).cast("long").alias("seed_id"),
-        (F.col("id") - spec.start).alias("ord"),
-        F.col("id").cast("int").alias("page_num"),
-        F.concat(
-            F.lit(spec.base + "?" + left), F.col("id").cast("string"), F.lit(right)
-        ).alias("url"),
-    )
-
-
-def cutter_frontier(
-    spark: SparkSession, spec: CutterPagerSpec, parallelism: int | None = None
-) -> DataFrame:
-    """S3: URLCuttingPager.Next as a DataFrame (``pagers.go:115-131``).
-
-    PageNum during the crawl of emitted page p is ``p + adjust``
-    (``pagers.go:133-135``: the counter was already incremented); the
-    startpage row reports ``start - 1 + adjust`` and precedes everything.
-    """
-    df = _range(spark, spec.start, spec.end, parallelism)
-    has_sp = 1 if spec.startpage else 0
-    pages = df.select(
-        F.lit(spec.seed_id).cast("long").alias("seed_id"),
-        (F.col("id") - spec.start + has_sp).alias("ord"),
-        (F.col("id") + spec.adjust).cast("int").alias("page_num"),
-        F.concat(
-            F.lit(spec.left),
-            _num_expr(F.col("id") * spec.step, spec.digits),
-            F.lit(spec.right),
-        ).alias("url"),
-    )
-    if spec.startpage:
-        sp = spark.createDataFrame(
-            [(spec.seed_id, 0, spec.start - 1 + spec.adjust, spec.startpage)],
-            "seed_id long, ord long, page_num int, url string",
-        )
-        pages = sp.unionByName(pages)
-    return pages
-
-
-def vb4_frontier(
-    spark: SparkSession, spec: VB4PagerSpec, parallelism: int | None = None
-) -> DataFrame:
-    """S5: VB4Pager.Next as a DataFrame (``pagers.go:223-248``)."""
-    df = _range(spark, spec.start, spec.end, parallelism)
-    sep = "" if spec.url.endswith("/") else "/"
-    return df.select(
-        F.lit(spec.seed_id).cast("long").alias("seed_id"),
-        (F.col("id") - spec.start).alias("ord"),
-        F.col("id").cast("int").alias("page_num"),
-        F.when(F.col("id") == 1, F.lit(spec.url))
-        .otherwise(F.concat(F.lit(spec.url + sep + "page"), F.col("id").cast("string")))
-        .alias("url"),
-    )
-
-
-def frontier_for(
-    spark: SparkSession, spec: PagerSpec, parallelism: int | None = None
-) -> DataFrame:
-    """Pager registry dispatch (reference ``libcrawl/api.go:21-25``)."""
-    if isinstance(spec, QueryPagerSpec):
-        return query_frontier(spark, spec, parallelism)
-    if isinstance(spec, CutterPagerSpec):
-        return cutter_frontier(spark, spec, parallelism)
-    if isinstance(spec, VB4PagerSpec):
-        return vb4_frontier(spark, spec, parallelism)
-    raise ValueError(f"Pager not found: {spec!r}")
-
-
 def pager_sequence(spec: PagerSpec) -> list[tuple[int, int, str]]:
-    """Sequential oracle: the exact (ord, page_num, url) sequence the Go
-    pager emits — used by tests and the pure-Python crawl oracle."""
+    """The exact (ord, page_num, url) sequence the Go pager emits."""
     out: list[tuple[int, int, str]] = []
     ord_ = 0
     if isinstance(spec, CutterPagerSpec) and spec.startpage:

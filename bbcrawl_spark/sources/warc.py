@@ -176,7 +176,7 @@ def _warc_date_to_ts(date: str) -> datetime.datetime | None:
 
 
 def open_warc_stream(path: str):
-    """Default opener for :func:`read_warc_pages` streaming mode: open a
+    """Default opener for :func:`read_warc_pages`: open a
     local ``.warc`` / ``.warc.gz`` file (plain path or the ``file:`` URI
     Spark's FileIndex emits) as a record-streamable binary file object.
     Gzip is detected by magic bytes and wrapped in a streaming
@@ -230,15 +230,11 @@ def _record_rows(records: Iterator[dict]) -> Iterator[dict]:
         }
 
 
-def _records_df(
-    spark: SparkSession, path: str, from_paths: bool, opener
-) -> DataFrame:
-    """WARC ingest core: list files with ``binaryFile``, explode each
-    segment's ``response`` records into pages rows (``_record_rows``) in
-    bounded Arrow batches. ``from_paths=True`` prunes the scan to ``path``
-    and streams each file worker-side (peak O(read buffer + one batch));
-    ``from_paths=False`` ships whole file contents through the scan for
-    filesystems workers cannot open directly."""
+def _records_df(spark: SparkSession, path: str, opener) -> DataFrame:
+    """WARC ingest core: list files with ``binaryFile``, keep only the
+    ``path`` column, and let each worker stream its files' ``response``
+    records into pages rows (``_record_rows``) in bounded Arrow batches
+    (peak O(read buffer + one batch))."""
     import pandas as pd
 
     files = spark.read.format("binaryFile").load(path)
@@ -267,24 +263,10 @@ def _records_df(
                 finally:
                     f.close()
 
-    def _explode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for blob in pdf["content"]:
-                rows.extend(_record_rows(parse_warc(bytes(blob))))
-            yield pd.DataFrame(rows, columns=_PAGES_COLS)
-
-    if from_paths:
-        return files.select("path").mapInPandas(_explode_paths, _PAGES_SCHEMA)
-    return files.select("content").mapInPandas(_explode, _PAGES_SCHEMA)
+    return files.select("path").mapInPandas(_explode_paths, _PAGES_SCHEMA)
 
 
-def read_warc_pages(
-    spark: SparkSession,
-    path: str,
-    from_paths: bool = True,
-    opener=None,
-) -> DataFrame:
+def read_warc_pages(spark: SparkSession, path: str, opener=None) -> DataFrame:
     """Read ``.warc`` / ``.warc.gz`` files under ``path`` into the pages
     table shape the crawl loop consumes:
 
@@ -297,19 +279,17 @@ def read_warc_pages(
     body. ``text``/``lang`` are empty — the engine derives text itself
     (byte-identical contract).
 
-    ``from_paths=True`` (default) is the 100-TB shape: the ``binaryFile``
-    scan is pruned to the ``path`` column only (no file CONTENT crosses
-    the scan — plan-pinned), and each worker opens its files itself via
-    ``opener`` (default :func:`open_warc_stream`), so peak memory per
-    task is O(read buffer + one record) instead of one whole ~1 GB
-    compressed segment. ``from_paths=False`` keeps the whole-file
-    ``binaryFile`` content read for filesystems where workers cannot open
-    paths directly and no opener is available.
+    The ``binaryFile`` scan is pruned to the ``path`` column only (no file
+    CONTENT crosses the scan — plan-pinned), and each worker opens its
+    files itself via ``opener`` (default :func:`open_warc_stream`), so peak
+    memory per task is O(read buffer + one record) instead of one whole
+    ~1 GB compressed segment. Pass an ``opener`` for filesystems that plain
+    ``open`` cannot reach, such as object stores.
     """
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
-    recs = _records_df(spark, path, from_paths, opener)
+    recs = _records_df(spark, path, opener)
     # redirect-hop evidence: count this url's 3xx records; keep the last
     # 200 row per url (WARC order within a crawl = fetch order; ties broken
     # by warc_ts then content hash for determinism)

@@ -165,8 +165,6 @@ class TestLinks:
         assert [l.abs_url for l in links] == [
             "http://h/b/t2", "http://h/page2", "http://other.example/z",
         ]
-        assert links[0].anchor_text == "thread"
-        assert links[0].element_index < links[1].element_index < links[2].element_index
 
 
 class TestCharset:
@@ -276,14 +274,8 @@ class TestFusedExtraction:
                 for r in files.collect()
             ]
             assert got_files == want_files
-            want_links = [
-                (l.link, l.abs_url, l.element_index)
-                for l in extract.extract_links(VB4_PAGE, page_url)
-            ]
-            got_links = [
-                (r["link"], r["abs_url"], r["element_index"]) for r in links.collect()
-            ]
-            assert got_links == want_links
+            want_links = [l.abs_url for l in extract.extract_links(VB4_PAGE, page_url)]
+            assert [r["abs_url"] for r in links.collect()] == want_links
         finally:
             fetched.unpersist()
 
@@ -296,11 +288,11 @@ class TestFusedExtraction:
             [("http://h/t", bytearray(b"<a href='/x'>y</a>"), 0)],
             "url string, html binary, page_num int",
         )
-        fused = make_extract_fused_udf("", want_text=False, want_links=False)
+        fused = make_extract_fused_udf("", want_links=False)
         row = df.select(
             fused("html", "url", "page_num", F.lit(CT_DEFAULT)).alias("_ex")
         ).first()["_ex"]
-        assert row["text"] == "" and row["links"] == [] and row["files"] == []
+        assert row["text"] == "y" and row["links"] == [] and row["files"] == []
 
 
 
@@ -436,24 +428,23 @@ class TestLinksTable:
     @pytest.mark.parametrize(
         "html,page,want",
         [
-            ('<a href="/x">X</a>', "http://h/p", [("/x", "http://h/x", "X")]),
+            ('<a href="/x">X</a>', "http://h/p", [("/x", "http://h/x")]),
             ('<a>no</a><a href="">e</a>', "http://h/p", []),
-            ('<a href="http://o/y">Y</a>', "http://h/p", [("http://o/y", "http://o/y", "Y")]),
+            ('<a href="http://o/y">Y</a>', "http://h/p", [("http://o/y", "http://o/y")]),
             (
                 '<a href="r.html"><b>bold</b> t</a>',
                 "http://h:81/d/p",
-                [("r.html", "http://h/r.html", "bold t")],
+                [("r.html", "http://h/r.html")],
             ),
-            ('<a href="#frag">f</a>', "http://h/p", [("#frag", "http://h/", "f")]),
+            ('<a href="#frag">f</a>', "http://h/p", [("#frag", "http://h/")]),
             (
                 '<a name="n">x</a><a href="/a">1</a><a href="/b">2</a>',
                 "http://h/p",
-                [("/a", "http://h/a", "1"), ("/b", "http://h/b", "2")],
+                [("/a", "http://h/a"), ("/b", "http://h/b")],
             ),
-            ('<A HREF="/Up">U</A>', "http://h/p", [("/Up", "http://h/Up", "U")]),
+            ('<A HREF="/Up">U</A>', "http://h/p", [("/Up", "http://h/Up")]),
         ],
     )
     def test_links(self, html, page, want):
         got = extract.extract_links(html, page)
-        assert [(x.link, x.abs_url, x.anchor_text) for x in got] == want
-        assert [x.element_index for x in got] == sorted(x.element_index for x in got)
+        assert [(x.link, x.abs_url) for x in got] == want

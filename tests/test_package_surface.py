@@ -142,3 +142,40 @@ def test_warehouse_and_dedup_parameters_pinned():
     assert params(dedup.dedup_against_seen) == [
         "candidates", "seen", "bloom", "cache",
     ]
+
+
+def test_warc_reader_parameters_pinned():
+    """The WARC reader has one ingest path: a new mode must show up here."""
+    from inspect import signature
+
+    from bbcrawl_spark.sources import warc
+
+    assert list(signature(warc.read_warc_pages).parameters) == [
+        "spark", "path", "opener",
+    ]
+
+
+def test_extraction_udf_surface_pinned():
+    """The fused extraction UDF takes no knob the loop does not set and
+    emits only the link field the loop reads (``l.abs_url``)."""
+    from inspect import signature
+
+    from bbcrawl_spark.functions import udfs
+
+    assert list(signature(udfs.make_extract_fused_udf).parameters) == [
+        "crawler", "headernames", "tags", "attrs", "want_links",
+    ]
+    assert udfs.LINK_SCHEMA.elementType.fieldNames() == ["abs_url"]
+
+
+def test_pagers_import_no_pyspark():
+    """Pagers are the driver-side seed sequences; the module stays pure
+    Python."""
+    path = Path(bbcrawl_spark.__file__).parent / "pagers.py"
+    mods = set()
+    for node in ast.walk(ast.parse(path.read_text(), str(path))):
+        if isinstance(node, ast.Import):
+            mods.update(a.name for a in node.names)
+        elif isinstance(node, ast.ImportFrom) and not node.level:
+            mods.add(node.module or "")
+    assert not {m for m in mods if m.split(".")[0] == "pyspark"}, mods

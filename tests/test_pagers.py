@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import pytest
 
+import __spark_entry__ as entry_mod
 from bbcrawl_spark import pagers
 from bbcrawl_spark.pagers import CutterPagerSpec, QueryPagerSpec, VB4PagerSpec
 
@@ -50,42 +51,47 @@ def _expected_urls(fmt: str, flags: dict) -> list[str]:
     return urls
 
 
-def _collect_urls(df) -> list[str]:
-    return [r["url"] for r in df.orderBy("ord").collect()]
+def _urls(spec) -> list[str]:
+    return [u for _, _, u in pagers.pager_sequence(spec)]
+
+
+def _table_rows(spark, spec) -> list[tuple]:
+    """(ord, page_num, url) of the seed table the entry queries build."""
+    rows = entry_mod._pager_rows(spark, spec).orderBy("ord").collect()
+    return [(r["ord"], r["page_num"], r["url"]) for r in rows]
 
 
 class TestCutterGolden:
     @pytest.mark.parametrize("addr,fmt,flags", CUTTER_GOLDEN)
     def test_spark_sequence(self, spark, addr, fmt, flags):
         spec = CutterPagerSpec(url=addr, **flags)
-        assert _collect_urls(pagers.cutter_frontier(spark, spec)) == _expected_urls(fmt, flags)
+        assert [u for _, _, u in _table_rows(spark, spec)] == _expected_urls(fmt, flags)
 
     @pytest.mark.parametrize("addr,fmt,flags", CUTTER_GOLDEN)
     def test_oracle_sequence(self, addr, fmt, flags):
         spec = CutterPagerSpec(url=addr, **flags)
-        assert [u for _, _, u in pagers.pager_sequence(spec)] == _expected_urls(fmt, flags)
+        assert _urls(spec) == _expected_urls(fmt, flags)
 
-    def test_step_and_adjust(self, spark):
+    def test_step_and_adjust(self):
         # step multiplies the substituted number (pagers.go:125: page*step);
         # adjust shifts PageNum only (pagers.go:133-135)
         spec = CutterPagerSpec(
             url="http://h/1/x", start=1, end=4, cut=(10, 1), step=10, adjust=5
         )
-        rows = pagers.cutter_frontier(spark, spec).orderBy("ord").collect()
-        assert [r["url"] for r in rows] == [
+        rows = pagers.pager_sequence(spec)
+        assert [u for _, _, u in rows] == [
             "http://h/10/x", "http://h/20/x", "http://h/30/x", "http://h/40/x"
         ]
-        assert [r["page_num"] for r in rows] == [6, 7, 8, 9]
+        assert [pn for _, pn, _ in rows] == [6, 7, 8, 9]
 
-    def test_startpage_page_num(self, spark):
+    def test_startpage_page_num(self):
         # while crawling the startpage the Go pager reports start-1+adjust
         spec = CutterPagerSpec(
             url="http://h/1/", start=1, end=2, cut=(10, 1), startpage="http://h"
         )
-        rows = pagers.cutter_frontier(spark, spec).orderBy("ord").collect()
-        assert rows[0]["url"] == "http://h"
-        assert rows[0]["page_num"] == 0
-        assert [r["page_num"] for r in rows[1:]] == [1, 2]
+        rows = pagers.pager_sequence(spec)
+        assert rows[0] == (0, 0, "http://h")
+        assert [pn for _, pn, _ in rows[1:]] == [1, 2]
 
     def test_validation_errors(self):
         with pytest.raises(ValueError, match="cannot be 0"):
@@ -101,73 +107,69 @@ class TestCutterGolden:
 
 
 class TestQueryPager:
-    def test_sequence_sorted_keys(self, spark):
+    def test_sequence_sorted_keys(self):
         # Go url.Values.Encode sorts keys: existing params stay, page var set
         spec = QueryPagerSpec(
             url="http://h/forum?z=9&a=1", start=2, end=4, name="page"
         )
-        urls = _collect_urls(pagers.query_frontier(spark, spec))
+        urls = _urls(spec)
         assert urls == [
             "http://h/forum?a=1&page=2&z=9",
             "http://h/forum?a=1&page=3&z=9",
             "http://h/forum?a=1&page=4&z=9",
         ]
 
-    def test_no_existing_query(self, spark):
+    def test_no_existing_query(self):
         spec = QueryPagerSpec(url="http://h/t", start=1, end=2)
-        assert _collect_urls(pagers.query_frontier(spark, spec)) == [
+        assert _urls(spec) == [
             "http://h/t?page=1",
             "http://h/t?page=2",
         ]
 
-    def test_page_var_replaced(self, spark):
+    def test_page_var_replaced(self):
         # query.Set replaces any pre-existing value of the page var
         spec = QueryPagerSpec(url="http://h/t?page=77&b=2", start=1, end=1)
-        assert _collect_urls(pagers.query_frontier(spark, spec)) == [
+        assert _urls(spec) == [
             "http://h/t?b=2&page=1"
         ]
 
-    def test_escaped_values(self, spark):
+    def test_escaped_values(self):
         spec = QueryPagerSpec(url="http://h/t?q=a b", start=1, end=1)
-        assert _collect_urls(pagers.query_frontier(spark, spec)) == [
+        assert _urls(spec) == [
             "http://h/t?page=1&q=a+b"
         ]
 
     def test_oracle_matches_spark(self, spark):
         spec = QueryPagerSpec(url="http://h/f?x=1", start=3, end=7, name="p")
-        assert [u for _, _, u in pagers.pager_sequence(spec)] == _collect_urls(
-            pagers.query_frontier(spark, spec)
-        )
+        assert _table_rows(spark, spec) == pagers.pager_sequence(spec)
 
 
 class TestVB4Pager:
-    def test_page1_bare(self, spark):
+    def test_page1_bare(self):
         spec = VB4PagerSpec(url="http://h/threads/42-topic", start=1, end=3)
-        assert _collect_urls(pagers.vb4_frontier(spark, spec)) == [
+        assert _urls(spec) == [
             "http://h/threads/42-topic",
             "http://h/threads/42-topic/page2",
             "http://h/threads/42-topic/page3",
         ]
 
-    def test_trailing_slash_no_double(self, spark):
+    def test_trailing_slash_no_double(self):
         spec = VB4PagerSpec(url="http://h/t/", start=2, end=3)
-        assert _collect_urls(pagers.vb4_frontier(spark, spec)) == [
+        assert _urls(spec) == [
             "http://h/t/page2",
             "http://h/t/page3",
         ]
 
-    def test_start_after_one(self, spark):
+    def test_start_after_one(self):
         spec = VB4PagerSpec(url="http://h/t", start=5, end=6)
-        assert _collect_urls(pagers.vb4_frontier(spark, spec)) == [
+        assert _urls(spec) == [
             "http://h/t/page5",
             "http://h/t/page6",
         ]
 
     def test_oracle_matches_spark(self, spark):
         spec = VB4PagerSpec(url="http://h/t", start=1, end=5)
-        assert [u for _, _, u in pagers.pager_sequence(spec)] == _collect_urls(
-            pagers.vb4_frontier(spark, spec)
-        )
+        assert _table_rows(spark, spec) == pagers.pager_sequence(spec)
 
 
 class TestPagerValidationTable:
@@ -261,22 +263,24 @@ class TestPageUrlTable:
 
 
 SPECS = [
-    QueryPagerSpec(url="http://h/b?z=1&a=x+y", start=3, end=7, seed_id=1),
-    QueryPagerSpec(url="http://h/b", start=1, end=4, name="p", seed_id=2),
-    CutterPagerSpec(url="http://h/t/1/x", start=0, end=5, cut=(-3, 1), step=3, digits=2, seed_id=3),
-    CutterPagerSpec(url="http://h/t/1/x", start=2, end=4, cut=(12, 1), startpage="http://h/t/", adjust=2, seed_id=4),
-    VB4PagerSpec(url="http://h/t/5", start=1, end=4, seed_id=5),
-    VB4PagerSpec(url="http://h/t/5/", start=3, end=6, seed_id=6),
+    QueryPagerSpec(url="http://h/b?z=1&a=x+y", start=3, end=7),
+    QueryPagerSpec(url="http://h/b", start=1, end=4, name="p"),
+    CutterPagerSpec(url="http://h/t/1/x", start=0, end=5, cut=(-3, 1), step=3, digits=2),
+    CutterPagerSpec(url="http://h/t/1/x", start=2, end=4, cut=(12, 1), startpage="http://h/t/", adjust=2),
+    VB4PagerSpec(url="http://h/t/5", start=1, end=4),
+    VB4PagerSpec(url="http://h/t/5/", start=3, end=6),
 ]
 
 
-class TestFrontierForMatchesSequence:
-    """The Spark frontier carries exactly the oracle sequence: same ord,
-    page_num and url, and the spec's seed_id on every row."""
+class TestSeedTableMatchesSequence:
+    """The Spark seed table carries exactly the oracle sequence: same ord,
+    page_num and url, seed_id 0 on every row, and the declared types."""
 
-    @pytest.mark.parametrize("spec", SPECS, ids=[f"seed{s.seed_id}" for s in SPECS])
+    @pytest.mark.parametrize("spec", SPECS, ids=[f"seed{i}" for i in range(1, len(SPECS) + 1)])
     def test_rows(self, spark, spec):
-        rows = pagers.frontier_for(spark, spec, parallelism=2).orderBy("ord").collect()
-        assert [(r["ord"], r["page_num"], r["url"]) for r in rows] == pagers.pager_sequence(spec)
-        assert {r["seed_id"] for r in rows} == {spec.seed_id}
-        assert spec.num_pages() == len(rows)
+        df = entry_mod._pager_rows(spark, spec)
+        assert df.dtypes == [
+            ("seed_id", "bigint"), ("ord", "bigint"), ("page_num", "int"), ("url", "string")
+        ]
+        assert _table_rows(spark, spec) == pagers.pager_sequence(spec)
+        assert {r["seed_id"] for r in df.collect()} == {0}

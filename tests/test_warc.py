@@ -166,9 +166,8 @@ class TestReadWarcPages:
 
 
 class TestStreamingFromPaths:
-    """from_paths=True (the 100-TB default): workers stream each segment
-    from its path — no file content crosses the binaryFile scan, peak
-    memory is O(read buffer + one Arrow batch)."""
+    """Workers stream each segment from its path — no file content crosses
+    the binaryFile scan, peak memory is O(read buffer + one Arrow batch)."""
 
     def _write_mixed_dir(self, tmp_path, n_plain=3, n_gz=4):
         plain = [
@@ -187,27 +186,20 @@ class TestStreamingFromPaths:
 
     def test_paths_mode_equals_content_mode(self, spark, tmp_path):
         urls = self._write_mixed_dir(tmp_path)
-        by_path = warc.read_warc_pages(spark, str(tmp_path), from_paths=True)
-        by_blob = warc.read_warc_pages(spark, str(tmp_path), from_paths=False)
-        key = lambda r: (r["url"], bytes(r["html"]), r["content_type"], r["n_redirects"])
-        assert sorted(map(key, by_path.collect())) == sorted(map(key, by_blob.collect()))
+        by_path = warc.read_warc_pages(spark, str(tmp_path))
         assert {r["url"] for r in by_path.collect()} == urls
 
     def test_content_column_pruned_from_scan(self, spark, tmp_path):
-        # Scale pin: the binaryFile scan under from_paths=True must read
-        # ONLY the path column — if `content` appears in the ReadSchema the
-        # whole ~1 GB segment ships through the scan and the mode is
-        # pointless.
+        # Scale pin: the binaryFile scan must read ONLY the path column —
+        # if `content` appears in the ReadSchema the whole ~1 GB segment
+        # ships through the scan.
         self._write_mixed_dir(tmp_path)
-        df = warc.read_warc_pages(spark, str(tmp_path), from_paths=True)
+        df = warc.read_warc_pages(spark, str(tmp_path))
         plan = df._jdf.queryExecution().executedPlan().toString()
         import re
         scans = re.findall(r"ReadSchema: (struct<[^>]*>)", plan)
         assert scans, plan
         assert all("content" not in s for s in scans), scans
-        old = warc.read_warc_pages(spark, str(tmp_path), from_paths=False)
-        old_plan = old._jdf.queryExecution().executedPlan().toString()
-        assert any("content" in s for s in re.findall(r"ReadSchema: (struct<[^>]*>)", old_plan))
 
     def test_many_records_cross_batch_boundary(self, spark, tmp_path):
         # >512 records in one file exercises the bounded-batch flush path;
@@ -218,7 +210,7 @@ class TestStreamingFromPaths:
             for i in range(n)
         ]
         (tmp_path / "big.warc.gz").write_bytes(warc.build_warc(recs, gzipped=True))
-        df = warc.read_warc_pages(spark, str(tmp_path), from_paths=True)
+        df = warc.read_warc_pages(spark, str(tmp_path))
         got = {r["url"] for r in df.collect()}
         assert got == {f"http://m.ex/{i}" for i in range(n)}
         assert df.count() == n
@@ -235,9 +227,7 @@ class TestStreamingFromPaths:
                 fh.write(json.dumps(p) + "\n")
             return warc.open_warc_stream(p)
 
-        df = warc.read_warc_pages(
-            spark, str(tmp_path), from_paths=True, opener=logging_opener
-        )
+        df = warc.read_warc_pages(spark, str(tmp_path), opener=logging_opener)
         assert df.count() == 7
         opened = {json.loads(l) for l in seen_log.read_text().splitlines()}
         assert {p.rsplit("/", 1)[-1] for p in opened} == {"a.warc", "b.warc.gz"}
@@ -258,7 +248,7 @@ class TestStreamingFromPaths:
 
     def test_crawl_over_streamed_warc_matches_oracle(self, spark, tmp_path):
         # e2e: the streamed-ingest pages table drives a crawl byte-identical
-        # to the sequential oracle (same contract the content-mode e2e pins).
+        # to the sequential oracle.
         from bbcrawl_spark import oracle
         from bbcrawl_spark.operators.robots import parse_robots_txt
         from bbcrawl_spark.plans.round import CrawlConfig, CrawlDriver
@@ -270,7 +260,7 @@ class TestStreamingFromPaths:
             for url, body in sorted(site.pages.items())
         ]
         (tmp_path / "site.warc.gz").write_bytes(warc.build_warc(recs, gzipped=True))
-        pages_df = warc.read_warc_pages(spark, str(tmp_path), from_paths=True)
+        pages_df = warc.read_warc_pages(spark, str(tmp_path))
         pages_path = str(tmp_path / "pages_pq")
         pages_df.write.parquet(pages_path)
 
