@@ -32,6 +32,7 @@ from __future__ import annotations
 import json
 import math
 import os
+import shutil
 from collections.abc import Iterator
 from functools import lru_cache
 
@@ -50,6 +51,7 @@ __all__ = [
     "update_partitioned_bloom",
     "bloom_maybe_seen",
     "dedup_against_seen",
+    "expire_bloom_dirs",
 ]
 
 BITS_PER_KEY = 10
@@ -62,64 +64,57 @@ _MANIFEST = "manifest.json"
 PROBE_MAX_KEYS = 1 << 16
 
 
-def _default_blob_path(path: str, pid: int) -> str:
+def _blob_path(path: str, pid: int) -> str:
     return os.path.join(path, f"bloom_{pid:05d}.npy")
 
 
-def _local_entry(path: str, row) -> dict:
-    """Manifest entry of a ``(partition_id, n_items, m_bits)`` row whose blob
-    was written at its dir-local path under ``path``."""
-    pid = int(row["partition_id"])
-    return {"path": _default_blob_path(path, pid),
-            "n_items": int(row["n_items"]), "m_bits": int(row["m_bits"])}
+def _read_manifest(path: str, num_partitions: int | None = None) -> dict[int, dict] | None:
+    """pid -> {path, n_items, m_bits}; None when the manifest records a
+    partition count other than ``num_partitions`` (its pids then belong to
+    another ``url_hash mod P``). A manifest without the field is taken as
+    built for ``num_partitions``; a dir without a manifest raises
+    ``FileNotFoundError``."""
+    with open(os.path.join(path, _MANIFEST)) as f:
+        raw = json.load(f)
+    recorded = raw.get("num_partitions", num_partitions)
+    if num_partitions is not None and recorded != num_partitions:
+        return None
+    return {int(k): v for k, v in raw["partitions"].items()}
 
 
-def _read_manifest(path: str) -> dict[int, dict]:
-    """pid -> {path, n_items, m_bits}; {} when no manifest exists."""
-    mp = os.path.join(path, _MANIFEST)
-    if not os.path.exists(mp):
-        return {}
-    with open(mp) as f:
-        raw = json.load(f)["partitions"]
-    return {int(k): v for k, v in raw.items()}
-
-
-def _write_manifest(path: str, entries: dict[int, dict]) -> None:
+def _write_manifest(path: str, entries: dict[int, dict], num_partitions: int) -> None:
     """Atomic (tmp+rename): a crashed round never leaves a readable but
     partial manifest — the round-log barrier then makes the whole dir
     invisible to resume."""
     _atomic_write_json(
         os.path.join(path, _MANIFEST),
-        {"partitions": {str(k): v for k, v in entries.items()}},
+        {"num_partitions": num_partitions,
+         "partitions": {str(k): v for k, v in entries.items()}},
     )
 
 
 class BloomSpec:
-    """Addressing for the partitioned Bloom state.
-
-    Blob paths resolve through the dir's manifest, so an incrementally
-    maintained dir can *reference* untouched blobs in earlier rounds' dirs
-    instead of copying them — per-round I/O stays proportional to the
-    partitions actually touched by new keys. Falls back to local
-    ``bloom_{pid}.npy`` files for manifest-less dirs.
+    """Addressing for the partitioned Bloom state: the blob paths of the
+    dir's manifest, the only way a blob is found. An incrementally
+    maintained manifest *references* untouched blobs in earlier rounds' dirs
+    instead of copying them, so per-round I/O follows the partitions new
+    keys touch. A pid with no entry holds no keys; a dir with no manifest,
+    or one built for another partition count, raises.
 
     The pid->path dict is tiny (P entries) and closes over the membership
     UDF; at very large P ship it via a broadcast variable instead.
     """
 
     def __init__(self, path: str, num_partitions: int):
-        self.path = path
+        manifest = _read_manifest(path, num_partitions)
+        if manifest is None:
+            raise ValueError(
+                f"bloom dir {path!r} was built for another partition count "
+                f"than {num_partitions}"
+            )
         self.num_partitions = num_partitions
         self.num_hashes = _NUM_HASHES
-        manifest = _read_manifest(path)
-        self.paths: dict[int, str] = {
-            pid: manifest[pid]["path"] if pid in manifest
-            else _default_blob_path(path, pid)
-            for pid in range(num_partitions)
-        }
-
-    def blob_path(self, pid: int) -> str:
-        return self.paths[pid]
+        self.paths: dict[int, str] = {pid: e["path"] for pid, e in manifest.items()}
 
 
 def _bloom_positions(hashes: np.ndarray, m_bits: int, k: int) -> Iterator[np.ndarray]:
@@ -131,19 +126,20 @@ def _bloom_positions(hashes: np.ndarray, m_bits: int, k: int) -> Iterator[np.nda
         yield ((h1 + np.uint64(i) * h2) % np.uint64(m_bits)).astype(np.int64)
 
 
+def _set_bits(bits: np.ndarray, hashes: np.ndarray, k: int) -> np.ndarray:
+    """Set ``hashes``' bits in the unpacked array ``bits`` and pack it. A plain
+    fancy assignment (duplicate positions are fine) instead of unbuffered
+    np.bitwise_or.at scatters: ~1.8x on the 312k-key partition kernel;
+    little bit order == the (pos & 7) shift layout _check_blob reads."""
+    for pos in _bloom_positions(hashes.astype(np.uint64), len(bits), k):
+        bits[pos] = True
+    return np.packbits(bits, bitorder="little")
+
+
 def _build_blob(hashes: np.ndarray, bits_per_key: int, k: int) -> np.ndarray:
     n = max(len(hashes), 1)
     m_bits = 1 << max(6, math.ceil(math.log2(n * bits_per_key)))
-    # set bits through a bool array + packbits instead of unbuffered
-    # np.bitwise_or.at scatters (duplicate positions are fine on a plain
-    # fancy assignment): ~1.8x on the 312k-key partition kernel, byte-
-    # identical blobs (little bit order == the (pos & 7) shift layout
-    # _check_blob reads).
-    bits = np.zeros(m_bits, dtype=bool)
-    u = hashes.astype(np.uint64)
-    for pos in _bloom_positions(u, m_bits, k):
-        bits[pos] = True
-    return np.packbits(bits, bitorder="little")
+    return _set_bits(np.zeros(m_bits, dtype=bool), hashes, k)
 
 
 def _check_blob(hashes: np.ndarray, bitmap: np.ndarray, k: int) -> np.ndarray:
@@ -158,10 +154,22 @@ def _check_blob(hashes: np.ndarray, bitmap: np.ndarray, k: int) -> np.ndarray:
 _PART_SCHEMA = "partition_id int, n_items long, m_bits long"
 
 
-def _per_partition(df: DataFrame, P: int, fn, schema: str) -> DataFrame:
-    """Call ``fn(pid, hashes) -> row`` once per Bloom partition present in
-    ``df``, with ALL of that partition's hashes; the rows form a DataFrame
-    of ``schema``.
+def _pid_col(P: int) -> F.Column:
+    return F.pmod(F.col("url_hash"), F.lit(P)).cast("int")
+
+
+def _write_partitions(keys: DataFrame, prev: dict[int, dict], path: str, P: int) -> DataFrame:
+    """The one Bloom blob writer: for every pid present in ``keys``, with
+    ALL of that pid's hashes, write ``path``'s dir-local blob. Lazy
+    ``(partition_id, n_items, m_bits, op)``, one row per pid:
+
+    - ``built``: ``prev`` has no entry, a fresh blob of the keys;
+    - ``updated``: the keys fit ``prev``'s fill budget
+      (``BITS_PER_KEY``), ORed into a copy of its blob;
+    - ``rebuild``: they do not; nothing is written (``m_bits`` 0).
+
+    Blobs never go through ``prev``'s paths: those may point into earlier
+    rounds' dirs, whose blobs must stay as they are.
 
     The exchange is a hash repartition on the pid column with no explicit
     count, so AQE sizes it to the data (a 10-key delta runs one task, not
@@ -169,7 +177,6 @@ def _per_partition(df: DataFrame, P: int, fn, schema: str) -> DataFrame:
     to one reducer, and AQE's coalescing only merges whole reducers. So
     each pid's blob is written by exactly one task.
     """
-    cols = [c.split()[0] for c in schema.split(",")]
 
     def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         buckets: dict[int, list[np.ndarray]] = {}
@@ -178,45 +185,47 @@ def _per_partition(df: DataFrame, P: int, fn, schema: str) -> DataFrame:
             pids = (hashes % P + P) % P  # pmod parity with Spark
             for pid in np.unique(pids):
                 buckets.setdefault(int(pid), []).append(hashes[pids == pid])
-        rows = [fn(pid, np.concatenate(chunks)) for pid, chunks in buckets.items()]
-        yield pd.DataFrame(rows, columns=cols)
+        rows = []
+        for pid, chunks in buckets.items():
+            hashes, entry = np.concatenate(chunks), prev.get(pid)
+            if entry is None:
+                n, op = len(hashes), "built"
+                bitmap = _build_blob(hashes, BITS_PER_KEY, _NUM_HASHES)
+            else:
+                n = int(entry["n_items"]) + len(hashes)
+                if n * BITS_PER_KEY > int(entry["m_bits"]):
+                    rows.append((pid, n, 0, "rebuild"))  # needs a resize
+                    continue
+                op = "updated"
+                bits = np.unpackbits(np.load(entry["path"]), bitorder="little")
+                bitmap = _set_bits(bits, hashes, _NUM_HASHES)
+            np.save(_blob_path(path, pid), bitmap)
+            rows.append((pid, n, len(bitmap) * 8, op))
+        yield pd.DataFrame(rows, columns=["partition_id", "n_items", "m_bits", "op"])
 
-    pid_col = F.pmod(F.col("url_hash"), F.lit(P)).cast("int")
-    return df.select("url_hash").repartition(pid_col).mapInPandas(_run, schema)
+    schema = _PART_SCHEMA + ", op string"
+    return keys.select("url_hash").repartition(_pid_col(P)).mapInPandas(_run, schema)
 
 
-def _build_partitions(df: DataFrame, path: str, P: int) -> DataFrame:
-    """Build a fresh blob for every pid present in ``df`` at the dir-local
-    ``bloom_{pid}.npy`` path; lazy ``(partition_id, n_items, m_bits)``."""
-
-    def _build(pid: int, hashes: np.ndarray) -> tuple:
-        bitmap = _build_blob(hashes, BITS_PER_KEY, _NUM_HASHES)
-        np.save(_default_blob_path(path, pid), bitmap)
-        return pid, len(hashes), len(bitmap) * 8
-
-    return _per_partition(df, P, _build, _PART_SCHEMA)
+def _entry(path: str, pid: int, n_items: int, m_bits: int) -> dict:
+    return {"path": _blob_path(path, pid), "n_items": n_items, "m_bits": m_bits}
 
 
 def build_partitioned_bloom(seen: DataFrame, path: str, num_partitions: int) -> DataFrame:
     """Build P Bloom blobs from the seen table — Spark's partial-build
     pattern: each bloom partition is built by the one task that owns it
-    (see ``_per_partition``) and written straight to ``path``.
+    (see ``_write_partitions``) and written straight to ``path``.
 
     Returns the manifest as a local DataFrame ``(partition_id int,
-    n_items long, m_bits long)``; the blobs are written by then.
-
-    Blobs always land at the dir-local ``bloom_{pid}.npy`` paths — NEVER
-    resolved through a pre-existing manifest. An update-produced manifest's
-    entries forward to earlier rounds' dirs; writing through those pointers
-    would silently overwrite older rounds' blob files and corrupt their
-    bloom state. A rebuild into such a dir therefore replaces the manifest
-    with local paths and leaves every pointed-at dir untouched.
+    n_items long, m_bits long)``; the blobs are written by then. A
+    manifest already in ``path`` is replaced whole.
     """
     os.makedirs(path, exist_ok=True)
     # collected, not cached: AQE does not coalesce the exchange under a
     # cached plan, which would run one Python task per shuffle partition
-    rows = _build_partitions(seen, path, num_partitions).collect()
-    _write_manifest(path, {int(r["partition_id"]): _local_entry(path, r) for r in rows})
+    written = _write_partitions(seen, {}, path, num_partitions).collect()
+    rows = [tuple(r)[:3] for r in written]
+    _write_manifest(path, {r[0]: _entry(path, *r) for r in rows}, num_partitions)
     return seen.sparkSession.createDataFrame(rows, _PART_SCHEMA)
 
 
@@ -226,7 +235,7 @@ def _load_blob(path: str):
     tasks via lru_cache — each executor python worker loads a blob once).
     Path-keyed so manifest entries forwarding to earlier rounds' untouched
     blobs keep hitting the same cache slot across rounds."""
-    return np.load(path) if os.path.exists(path) else None
+    return np.load(path)
 
 
 def _bloom_check_arrays(
@@ -235,24 +244,10 @@ def _bloom_check_arrays(
     pids = (hashes % P + P) % P  # pmod parity with Spark
     maybe = np.zeros(len(hashes), dtype=bool)
     for pid in np.unique(pids):
-        blob = _load_blob(paths[int(pid)])
-        if blob is None:
-            continue  # empty partition -> nothing seen there
-        sel = pids == pid
-        maybe[sel] = _check_blob(hashes[sel], blob, k)
+        if int(pid) in paths:  # no entry: nothing seen in that partition
+            sel = pids == pid
+            maybe[sel] = _check_blob(hashes[sel], _load_blob(paths[int(pid)]), k)
     return maybe
-
-
-def make_bloom_udf(spec: BloomSpec):
-    """Scalar pandas UDF ``url_hash -> maybe_seen`` — Arrow transfers only
-    the 8-byte hash column, never the full row (a mapInPandas variant
-    round-tripped every column and was ~5x slower on wide frontiers)."""
-    paths, P, k = spec.paths, spec.num_partitions, spec.num_hashes
-
-    def _maybe_seen(h: pd.Series) -> pd.Series:
-        return pd.Series(_bloom_check_arrays(h.to_numpy(dtype=np.int64), paths, P, k))
-
-    return F.pandas_udf(_maybe_seen, BooleanType())
 
 
 def update_partitioned_bloom(
@@ -260,7 +255,7 @@ def update_partitioned_bloom(
     prev_dir: str | None,
     new_dir: str,
     num_partitions: int,
-    seen_full: DataFrame | None = None,
+    seen_full: DataFrame,
 ) -> dict[str, list[int]]:
     """Incrementally maintain the partitioned Bloom: OR the round's NEW
     hashes into the previous round's blobs instead of rebuilding everything
@@ -269,12 +264,17 @@ def update_partitioned_bloom(
     Per-round cost is proportional to ``|seen_new|`` (+ the size of the
     touched blobs); untouched partitions are carried forward as manifest
     POINTERS to their existing files — zero read, zero write. A partition is
-    rebuilt from the full seen table only when its fill would exceed the
+    rebuilt from ``seen_full`` only when its fill would exceed the
     ``BITS_PER_KEY`` FPP budget; blob sizes double on rebuild (power-of-two
     sizing in ``_build_blob``), so each key is rebuilt O(log N) times over
     the crawl — amortized O(N log N) total versus O(R·N) for per-round full
     rebuilds. Matches the reference's O(1)-per-URL ``Exists()`` semantics
     (download/downloader.go:103-115) in aggregate cost.
+
+    With nothing to extend — no ``prev_dir``, or one built for another
+    partition count — every partition is built from ``seen_full``: a delta
+    alone would drop the keys seen before it. A ``prev_dir`` without a
+    manifest raises.
 
     Exactness is untouched: OR-ing new keys into an existing blob can never
     introduce a false negative, and overflow only ever degrades the
@@ -284,73 +284,27 @@ def update_partitioned_bloom(
     Returns {"updated": [...], "built": [...], "rebuilt": [...],
     "carried": [...]} partition ids (driver-side; P is small).
     """
+    P = num_partitions
+    prev = _read_manifest(prev_dir, P) if prev_dir else None
+    keys = seen_new
+    if prev is None:
+        prev, keys = {}, seen_full
     os.makedirs(new_dir, exist_ok=True)
-    P, k = num_partitions, _NUM_HASHES
-    prev = _read_manifest(prev_dir) if prev_dir else {}
-    if prev_dir and not prev:
-        import glob as _glob
-
-        if _glob.glob(os.path.join(prev_dir, "bloom_*.npy")):
-            # blobs without a manifest: updating blind would rebuild
-            # partitions from the delta alone and silently DROP the old
-            # keys — a false-negative factory. Refuse loudly.
-            raise ValueError(
-                f"previous bloom dir {prev_dir!r} has blobs but no manifest; "
-                "rebuild it with build_partitioned_bloom first"
-            )
-
-    def _delta(pid: int, hashes: np.ndarray) -> tuple:
-        entry = prev.get(pid)
-        out_path = _default_blob_path(new_dir, pid)
-        if entry is None:
-            # first keys ever seen in this partition: fresh build
-            bitmap = _build_blob(hashes, BITS_PER_KEY, k)
-            np.save(out_path, bitmap)
-            return pid, len(hashes), len(bitmap) * 8, "built"
-        n_total = int(entry["n_items"]) + len(hashes)
-        if n_total * BITS_PER_KEY > int(entry["m_bits"]):
-            # fill budget exceeded: needs a resize = rebuild from seen
-            return pid, n_total, 0, "rebuild"
-        bitmap = np.load(entry["path"])
-        # same packbits OR-in as _build_blob: unpack once, set the delta's
-        # bits by plain fancy assignment, repack (existing bits survive the
-        # round-trip; byte-identical layout)
-        bits = np.unpackbits(bitmap, bitorder="little")
-        u = hashes.astype(np.uint64)
-        for pos in _bloom_positions(u, len(bitmap) * 8, k):
-            bits[pos] = 1
-        np.save(out_path, np.packbits(bits, bitorder="little"))
-        return pid, n_total, len(bitmap) * 8, "updated"
-
-    delta_rows = _per_partition(seen_new, P, _delta, _PART_SCHEMA + ", op string").collect()
+    rows = [tuple(r) for r in _write_partitions(keys, prev, new_dir, P).collect()]
+    rebuild = [pid for pid, _, _, op in rows if op == "rebuild"]
+    if rebuild:
+        sub = seen_full.filter(_pid_col(P).isin(rebuild))
+        rebuilt = _write_partitions(sub, {}, new_dir, P).collect()
+        rows += [(*r[:3], "rebuilt") for r in rebuilt]
 
     entries: dict[int, dict] = dict(prev)  # untouched pids: pointer carry
     stats: dict[str, list[int]] = {"updated": [], "built": [], "rebuilt": [], "carried": []}
-    rebuild_pids: list[int] = []
-    for r in delta_rows:
-        pid, op = int(r["partition_id"]), r["op"]
-        if op == "rebuild":
-            rebuild_pids.append(pid)
-            continue
-        entries[pid] = _local_entry(new_dir, r)
-        stats[op].append(pid)
-
-    if rebuild_pids:
-        if seen_full is None:
-            raise ValueError(
-                f"partitions {rebuild_pids} exceed their fill budget and need a "
-                "rebuild, but no seen_full DataFrame was provided"
-            )
-        sub = seen_full.filter(
-            F.pmod(F.col("url_hash"), F.lit(P)).cast("int").isin(rebuild_pids)
-        )
-        for r in _build_partitions(sub, new_dir, P).collect():
-            entries[int(r["partition_id"])] = _local_entry(new_dir, r)
-            stats["rebuilt"].append(int(r["partition_id"]))
-
-    touched = set(stats["updated"]) | set(stats["built"]) | set(stats["rebuilt"])
-    stats["carried"] = sorted(set(prev) - touched)
-    _write_manifest(new_dir, entries)
+    for pid, n, m, op in rows:
+        if op != "rebuild":
+            entries[pid] = _entry(new_dir, pid, n, m)
+            stats[op].append(pid)
+    stats["carried"] = sorted(set(prev) - set(stats["updated"]) - set(stats["rebuilt"]))
+    _write_manifest(new_dir, entries, P)
     return stats
 
 
@@ -358,9 +312,34 @@ def bloom_maybe_seen(df: DataFrame, spec: BloomSpec) -> DataFrame:
     """Add ``maybe_seen: boolean`` map-side (scalar Arrow UDF, zero shuffle).
 
     False means *definitely not seen* (Bloom has no false negatives);
-    True must be confirmed against the seen table.
+    True must be confirmed against the seen table. Arrow transfers only the
+    8-byte hash column, never the full row (a mapInPandas variant
+    round-tripped every column and was ~5x slower on wide frontiers).
     """
-    return df.withColumn("maybe_seen", make_bloom_udf(spec)(F.col("url_hash")))
+    paths, P, k = spec.paths, spec.num_partitions, spec.num_hashes
+
+    def _maybe_seen(h: pd.Series) -> pd.Series:
+        return pd.Series(_bloom_check_arrays(h.to_numpy(dtype=np.int64), paths, P, k))
+
+    udf = F.pandas_udf(_maybe_seen, BooleanType())
+    return df.withColumn("maybe_seen", udf(F.col("url_hash")))
+
+
+def expire_bloom_dirs(base: str, keep: set[str]) -> None:
+    """Delete every Bloom round dir under ``base`` that is not in ``keep``
+    and that no manifest in ``keep`` points into. Age says nothing here:
+    an incrementally maintained manifest FORWARDS untouched partitions to
+    earlier rounds' blob files, so an old dir stays live while any kept
+    manifest resolves a blob inside it."""
+    live = {os.path.abspath(d) for d in keep}
+    for d in keep:
+        live.update(os.path.abspath(os.path.dirname(e["path"]))
+                    for e in _read_manifest(d).values())
+    if os.path.isdir(base):
+        for name in os.listdir(base):
+            p = os.path.abspath(os.path.join(base, name))
+            if os.path.isdir(p) and p not in live:
+                shutil.rmtree(p, ignore_errors=True)
 
 
 def _maybe_seen_keys(candidates: DataFrame, bloom: BloomSpec) -> set | None:

@@ -332,7 +332,8 @@ class CrawlDriver:
         seen_next = self.wh.read("seen", sids["seen"])
         # incremental Bloom: OR-in only this round's delta, carry untouched
         # partitions as manifest pointers (per-round cost ∝ the delta, not
-        # |seen|); overflowing partitions alone rebuild from the full table
+        # |seen|); overflowing partitions alone rebuild from the full table,
+        # and so does every partition when round r-1 left no Bloom of this P
         bloom_next = bloom_stats = None
         if cfg.bloom_partitions > 0:
             bloom_dir = f"{cfg.warehouse_root}/bloom/r{r:05d}"
@@ -517,42 +518,21 @@ class CrawlDriver:
 
     def _expire_old_rounds(self, r: int) -> None:
         """Keep only the last ``expire_keep_rounds`` rounds' snapshots (plus
-        each table's current) and the Bloom dirs they reference.
-
-        Bloom round dirs need reference counting, not age: an incrementally
-        maintained manifest FORWARDS untouched partitions to earlier rounds'
-        blob files (pointer-carry), so an old dir is deletable only when no
-        kept round's manifest resolves a blob inside it.
-        """
-        import os
-        import shutil
-
+        each table's current) and the Bloom dirs they reference."""
         cutoff = r - self.cfg.expire_keep_rounds + 1
         log = self.wh.round_log()
-        kept = [k for k in log if int(k) >= cutoff]
+        kept = [log[k]["tables"] for k in log if int(k) >= cutoff]
         per_table: dict[str, set] = {}
-        for k in kept:
-            for t, sid in log[k]["tables"].items():
+        for tables in kept:
+            for t, sid in tables.items():
                 if t != "bloom_dir":
                     per_table.setdefault(t, set()).add(sid)
         for t, keep in per_table.items():
             self.wh.expire_snapshots(t, keep)
-        if self.cfg.bloom_partitions > 0:
-            kept_dirs = {
-                log[k]["tables"]["bloom_dir"]
-                for k in kept
-                if "bloom_dir" in log[k]["tables"]
-            }
-            live = {os.path.abspath(d) for d in kept_dirs}
-            for d in kept_dirs:
-                for entry in dedup._read_manifest(d).values():
-                    live.add(os.path.abspath(os.path.dirname(entry["path"])))
-            base = os.path.join(self.cfg.warehouse_root, "bloom")
-            if os.path.isdir(base):
-                for name in os.listdir(base):
-                    p = os.path.abspath(os.path.join(base, name))
-                    if os.path.isdir(p) and p not in live:
-                        shutil.rmtree(p, ignore_errors=True)
+        dedup.expire_bloom_dirs(
+            f"{self.cfg.warehouse_root}/bloom",
+            {t["bloom_dir"] for t in kept if "bloom_dir" in t},
+        )
 
     # -- result readers ----------------------------------------------------
     def _last(self, table: str) -> DataFrame:
@@ -566,14 +546,13 @@ class CrawlDriver:
         driver-bottleneck shape the engine bans; dead at 10^10 rows). Now:
         range-partition + sort within partitions (a normal parallel sort),
         take per-partition counts (one tiny agg — P rows to the driver),
-        and add each partition's cumulative offset to a per-partition local
-        row number computed by a streaming ``mapInPandas`` counter (no
-        further exchange; batch order inside a partition is the sorted
-        order). ``localCheckpoint`` pins the sorted layout so the count and
-        numbering passes see identical partitions; its blocks free on GC.
+        and add each partition's cumulative offset to its local row number.
+        ``monotonically_increasing_id`` is ``partition index << 33`` plus the
+        row's position in its partition, so the position is read on the JVM
+        with no further exchange. ``localCheckpoint`` pins the sorted layout
+        so the count and numbering passes see identical partitions; its
+        blocks free on GC.
         """
-        from pyspark.sql.types import LongType, StructField, StructType
-
         keys = ["round", "priority", "page_num", "url_hash"]
         base = self._last("fetch_log").select(
             "round", "url", "priority", "page_num", "url_hash"
@@ -599,23 +578,12 @@ class CrawlDriver:
             if offsets
             else F.create_map()
         )
-        schema = StructType(
-            list(ranged.schema.fields) + [StructField("_lrn", LongType())]
-        )
-
-        def _number(batches):
-            i = 0
-            for pdf in batches:
-                pdf = pdf.copy()
-                pdf["_lrn"] = range(i + 1, i + 1 + len(pdf))
-                i += len(pdf)
-                yield pdf
-
-        return ranged.mapInPandas(_number, schema).select(
+        lrn = F.monotonically_increasing_id() - F.col("_pid") * (1 << 33) + 1
+        return ranged.select(
             # long, not int: the whole point of this rewrite is 10^10-row
-            # fetch logs, where offset+_lrn exceeds 2^31 and an int cast
+            # fetch logs, where offset+lrn exceeds 2^31 and an int cast
             # silently wraps to wrong/negative ranks.
-            (F.coalesce(off_map[F.col("_pid")], F.lit(0)) + F.col("_lrn"))
+            (F.coalesce(off_map[F.col("_pid")], F.lit(0)) + lrn)
             .cast("long")
             .alias("rank"),
             "round", "url", "priority", "page_num", "url_hash",

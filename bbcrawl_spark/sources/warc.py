@@ -30,9 +30,7 @@ from collections.abc import Iterator
 from pyspark.sql import DataFrame, SparkSession
 
 __all__ = [
-    "parse_warc",
     "parse_warc_stream",
-    "build_warc",
     "http_response_parts",
     "open_warc_stream",
     "read_warc_pages",
@@ -119,53 +117,6 @@ def parse_warc_stream(f) -> Iterator[dict]:
             "headers": hdrs,
             "block": block,
         }
-
-
-def parse_warc(data: bytes) -> Iterator[dict]:
-    """Yield one dict per WARC record: ``{type, uri, date, headers,
-    block}``. Accepts plain or gzip input. Gzip is decompressed with a
-    STREAMING reader (``gzip.GzipFile`` walks Common Crawl's per-record
-    multi-member framing transparently), so decoded bytes never exceed one
-    record — the former whole-file ``gzip.decompress`` held the entire
-    ~4-5 GB decompressed segment in the Python worker at once."""
-    if data[:2] == b"\x1f\x8b":
-        f = gzip.GzipFile(fileobj=io.BytesIO(data))
-    else:
-        f = io.BytesIO(data)
-    yield from parse_warc_stream(f)
-
-
-def build_warc(
-    records: list[tuple[str, str, bytes, dict[str, str] | None]],
-    gzipped: bool = False,
-) -> bytes:
-    """Test/fixture writer: ``(uri, iso_date, body, http_headers)`` tuples
-    -> a valid WARC byte stream of ``response`` records (per-record gzip
-    members when ``gzipped``, like Common Crawl)."""
-    out_members: list[bytes] = []
-    for uri, date, body, http_headers in records:
-        hdr_lines = [b"HTTP/1.1 200 OK"]
-        for k, v in (http_headers or {}).items():
-            hdr_lines.append(f"{k}: {v}".encode("latin-1"))
-        http = _CRLF.join(hdr_lines) + _CRLF + _CRLF + body
-        warc_head = _CRLF.join(
-            [
-                b"WARC/1.0",
-                b"WARC-Type: response",
-                f"WARC-Target-URI: {uri}".encode(),
-                f"WARC-Date: {date}".encode(),
-                b"Content-Type: application/http; msgtype=response",
-                f"Content-Length: {len(http)}".encode(),
-            ]
-        )
-        rec = warc_head + _CRLF + _CRLF + http + _CRLF + _CRLF
-        out_members.append(rec)
-    if not gzipped:
-        return b"".join(out_members)
-    out = io.BytesIO()
-    for rec in out_members:
-        out.write(gzip.compress(rec))
-    return out.getvalue()
 
 
 def _warc_date_to_ts(date: str) -> datetime.datetime | None:

@@ -109,6 +109,23 @@ class TestCrawlEquivalence:
         assert "Window" not in plan, plan
         assert "SinglePartition" not in plan, plan
 
+    def test_crawl_order_numbers_rows_on_the_jvm(self, run, spark, want):
+        # ranks come from monotonically_increasing_id over the checkpointed
+        # range partitions: no Python numbering pass, and exact across
+        # several partitions (AQE coalescing off keeps all of them)
+        key = "spark.sql.adaptive.coalescePartitions.enabled"
+        old = spark.conf.get(key)
+        spark.conf.set(key, "false")
+        try:
+            df = run[0].crawl_order()
+            plan = df._jdf.queryExecution().executedPlan().toString()
+            rows = df.orderBy("rank").collect()
+        finally:
+            spark.conf.set(key, old)
+        assert "MapInPandas" not in plan, plan
+        assert [r["rank"] for r in rows] == list(range(1, len(rows) + 1))
+        assert [(r["round"], r["url"]) for r in rows] == want.crawl_order
+
     def test_seen_set_matches_oracle(self, run, want):
         got_seen = {r["url_hash"] for r in run[0].seen_set().collect()}
         assert got_seen == want.seen
@@ -421,15 +438,19 @@ class TestResume:
         assert _order(d2) == want.crawl_order
         assert {r["url_hash"] for r in d2.seen_set().collect()} == want.seen
 
+    @pytest.mark.parametrize("first_partitions", [0, 4, 8])
     def test_kill_and_resume_with_incremental_bloom(
-        self, spark, site, pages_path, tmp_path, want
+        self, spark, site, pages_path, tmp_path, want, first_partitions
     ):
         """Resume must continue the incremental Bloom chain from the
-        round-log-pinned bloom_dir (manifest pointers across round dirs)."""
+        round-log-pinned bloom_dir (manifest pointers across round dirs)
+        when its partition count matches, and otherwise build the Bloom
+        from the whole seen table: a delta alone, or pids of another
+        ``url_hash mod P``, would let seen urls back into the frontier."""
         wh = tmp_path / "whrb"
-        d1 = _driver(spark, site, pages_path, wh, bloom_partitions=4)
+        d1 = _driver(spark, site, pages_path, wh, bloom_partitions=first_partitions)
         d1.run(max_rounds=2)
-        d2 = _driver(spark, site, pages_path, wh, bloom_partitions=4)
+        d2 = _driver(spark, site, pages_path, wh, bloom_partitions=8)
         d2.run()
         assert _order(d2) == want.crawl_order
         assert {r["url_hash"] for r in d2.seen_set().collect()} == want.seen

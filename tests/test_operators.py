@@ -170,7 +170,8 @@ class TestIncrementalBloom:
         ]
         keep_pids = sorted(keep_pids)
         stats = dedup.update_partitioned_bloom(
-            _url_df(spark, delta_urls), d0, d1, self.P
+            _url_df(spark, delta_urls), d0, d1, self.P,
+            seen_full=_url_df(spark, base + delta_urls),
         )
         assert sorted(stats["updated"] + stats["built"]) == keep_pids
         assert not stats["rebuilt"]
@@ -178,10 +179,10 @@ class TestIncrementalBloom:
 
         spec = dedup.BloomSpec(d1, self.P)
         for pid in stats["carried"]:
-            assert spec.blob_path(pid).startswith(d0)  # pointer, not a copy
+            assert spec.paths[pid].startswith(d0)  # pointer, not a copy
             assert not os.path.exists(os.path.join(d1, f"bloom_{pid:05d}.npy"))
         for pid in keep_pids:
-            assert spec.blob_path(pid).startswith(d1)
+            assert spec.paths[pid].startswith(d1)
 
         # zero false negatives over base ∪ delta through the updated spec
         flagged = dedup.bloom_maybe_seen(_url_df(spark, base + delta_urls), spec)
@@ -218,17 +219,16 @@ class TestIncrementalBloom:
     def test_manifestless_prev_dir_refused(self, spark, tmp_path):
         """Blobs without a manifest must be refused — updating blind would
         drop the old keys (false negatives)."""
-        import numpy as np
-
-        d0, d1 = str(tmp_path / "r0"), str(tmp_path / "r1")
         import os
 
+        d0, d1 = str(tmp_path / "r0"), str(tmp_path / "r1")
         os.makedirs(d0)
         np.save(os.path.join(d0, "bloom_00000.npy"), np.zeros(8, dtype=np.uint8))
-        with pytest.raises(ValueError, match="no manifest"):
-            dedup.update_partitioned_bloom(
-                _url_df(spark, ["http://x.ex/1"]), d0, d1, self.P
-            )
+        keys = _url_df(spark, ["http://x.ex/1"])
+        with pytest.raises(FileNotFoundError):
+            dedup.update_partitioned_bloom(keys, d0, d1, self.P, seen_full=keys)
+        with pytest.raises(FileNotFoundError):
+            dedup.BloomSpec(d0, self.P)
 
     def test_manifest_replace_is_atomic(self, tmp_path):
         """A rewrite replaces the manifest whole; one that fails midway
@@ -237,21 +237,75 @@ class TestIncrementalBloom:
 
         d = str(tmp_path / "m")
         os.makedirs(d)
-        dedup._write_manifest(d, {0: {"path": "a", "n_items": 1, "m_bits": 8}})
-        dedup._write_manifest(d, {1: {"path": "b", "n_items": 2, "m_bits": 16}})
+        dedup._write_manifest(d, {0: {"path": "a", "n_items": 1, "m_bits": 8}}, 2)
+        dedup._write_manifest(d, {1: {"path": "b", "n_items": 2, "m_bits": 16}}, 2)
         assert dedup._read_manifest(d) == {1: {"path": "b", "n_items": 2, "m_bits": 16}}
         assert os.listdir(d) == ["manifest.json"]
         with pytest.raises(TypeError):
-            dedup._write_manifest(d, {2: {"path": object()}})
+            dedup._write_manifest(d, {2: {"path": object()}}, 2)
         assert dedup._read_manifest(d) == {1: {"path": "b", "n_items": 2, "m_bits": 16}}
 
-    def test_rebuild_without_seen_full_raises(self, spark, tmp_path):
+    def test_nothing_to_extend_builds_from_seen_full(self, spark, tmp_path):
+        """With no previous dir, or one built for another partition count,
+        the update builds every partition from the full seen table: built
+        from the delta alone, or ORed into pids of another ``url_hash mod
+        P``, the Bloom would miss keys seen before it."""
+        base = [f"http://h{i % 16}.ex/t/{i}" for i in range(400)]
+        delta = [f"http://d.ex/n/{i}" for i in range(40)]
+        d4 = str(tmp_path / "p4")
+        dedup.build_partitioned_bloom(_url_df(spark, base), d4, 4)
+        with pytest.raises(ValueError, match="another partition count"):
+            dedup.BloomSpec(d4, self.P)
+        full = _url_df(spark, base + delta)
+        want = Counter(urlkit.url_hash(u) % self.P for u in base + delta)
+        for i, prev_dir in enumerate((None, d4)):
+            d1 = str(tmp_path / f"r{i}")
+            stats = dedup.update_partitioned_bloom(
+                _url_df(spark, delta), prev_dir, d1, self.P, seen_full=full
+            )
+            assert sorted(stats["built"]) == sorted(want)
+            assert not stats["carried"] and not stats["updated"]
+            got = {p: e["n_items"] for p, e in dedup._read_manifest(d1).items()}
+            assert got == dict(want)
+            spec = dedup.BloomSpec(d1, self.P)
+            assert dedup.bloom_maybe_seen(full, spec).filter("NOT maybe_seen").count() == 0
+
+    def test_manifest_without_partition_count_is_extended(self, spark, tmp_path):
+        """A manifest that records no partition count (written before the
+        field existed) is read as built for the P it is used with."""
+        import json
+        import os
+
+        base = [f"http://h{i % 16}.ex/t/{i}" for i in range(400)]
         d0, d1 = str(tmp_path / "r0"), str(tmp_path / "r1")
-        small = [f"http://s.ex/{i}" for i in range(24)]
-        dedup.build_partitioned_bloom(_url_df(spark, small), d0, self.P)
-        grow = [f"http://g.ex/big/{i}" for i in range(3000)]
-        with pytest.raises(ValueError, match="fill budget"):
-            dedup.update_partitioned_bloom(_url_df(spark, grow), d0, d1, self.P)
+        dedup.build_partitioned_bloom(_url_df(spark, base), d0, self.P)
+        mp = os.path.join(d0, "manifest.json")
+        with open(mp) as f:
+            raw = json.load(f)
+        del raw["num_partitions"]
+        with open(mp, "w") as f:
+            json.dump(raw, f)
+        assert dedup.BloomSpec(d0, self.P).paths
+        stats = dedup.update_partitioned_bloom(
+            _url_df(spark, ["http://h9.ex/new/0"]), d0, d1, self.P,
+            seen_full=_url_df(spark, base + ["http://h9.ex/new/0"]),
+        )
+        assert len(stats["carried"]) == self.P - 1
+
+    def test_missing_blob_fails_loudly(self, spark, tmp_path):
+        """A blob the manifest names but that is gone raises: read as "no
+        keys", every url of its pid would come back as new. The dir is fresh,
+        so no worker has the blob cached."""
+        import os
+
+        seen_urls = [f"http://h{i % 16}.ex/t/{i}" for i in range(400)]
+        d = str(tmp_path / "gone")
+        dedup.build_partitioned_bloom(_url_df(spark, seen_urls), d, self.P)
+        url = seen_urls[0]
+        os.remove(dedup._read_manifest(d)[urlkit.url_hash(url) % self.P]["path"])
+        seen = _url_df(spark, seen_urls)
+        with pytest.raises(Exception, match="No such file"):
+            dedup.dedup_against_seen(_url_df(spark, [url]), seen, dedup.BloomSpec(d, self.P))
 
     def test_rebuild_into_pointer_dir_never_writes_through_pointers(
         self, spark, tmp_path
@@ -267,7 +321,10 @@ class TestIncrementalBloom:
         delta = ["http://h9.ex/new/0"]
         d0, d1 = str(tmp_path / "r0"), str(tmp_path / "r1")
         dedup.build_partitioned_bloom(_url_df(spark, base), d0, self.P)
-        dedup.update_partitioned_bloom(_url_df(spark, delta), d0, d1, self.P)
+        dedup.update_partitioned_bloom(
+            _url_df(spark, delta), d0, d1, self.P,
+            seen_full=_url_df(spark, base + delta),
+        )
         # d1's manifest carries pointers into d0 for untouched partitions
         assert any(
             e["path"].startswith(d0) for e in dedup._read_manifest(d1).values()
@@ -322,7 +379,9 @@ class TestIncrementalBloom:
         assert got == dict(want)
 
     def test_bloom_exchange_has_no_fixed_count(self, spark):
-        df = dedup._build_partitions(_url_df(spark, ["http://a.ex/1"]), "/nonexistent", self.P)
+        df = dedup._write_partitions(
+            _url_df(spark, ["http://a.ex/1"]), {}, "/nonexistent", self.P
+        )
         plan = df._jdf.queryExecution().executedPlan().toString()
         assert "REPARTITION_BY_COL" in plan and "REPARTITION_BY_NUM" not in plan, plan
 

@@ -138,10 +138,29 @@ def test_warehouse_and_dedup_parameters_pinned():
     assert params(dedup.update_partitioned_bloom) == [
         "seen_new", "prev_dir", "new_dir", "num_partitions", "seen_full",
     ]
+    # with nothing to extend the update builds from the full seen table, so
+    # a caller can never leave it out
+    seen_full = signature(dedup.update_partitioned_bloom).parameters["seen_full"]
+    assert seen_full.default is seen_full.empty
     assert params(dedup.bloom_maybe_seen) == ["df", "spec"]
     assert params(dedup.dedup_against_seen) == [
         "candidates", "seen", "bloom", "cache",
     ]
+
+
+def test_round_uses_only_public_dedup_names():
+    """The crawl loop reaches the Bloom state only through ``dedup``'s
+    public functions; its manifests and blob paths stay inside dedup."""
+    path = Path(bbcrawl_spark.__file__).parent / "plans" / "round.py"
+    private = sorted(
+        node.attr
+        for node in ast.walk(ast.parse(path.read_text(), str(path)))
+        if isinstance(node, ast.Attribute)
+        and isinstance(node.value, ast.Name)
+        and node.value.id == "dedup"
+        and node.attr.startswith("_")
+    )
+    assert not private, private
 
 
 def test_warc_reader_parameters_pinned():

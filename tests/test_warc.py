@@ -3,12 +3,52 @@ and pages-table equivalence with a crawl on top."""
 
 from __future__ import annotations
 
+import gzip
+import io
+
 import pytest
 
 from bbcrawl_spark.sources import warc
 from bbcrawl_spark.sources.boardsite import make_board_site
 
 DATE = "2024-01-01T00:00:00Z"
+_CRLF = b"\r\n"
+
+
+def build_warc(
+    records: list[tuple[str, str, bytes, dict[str, str] | None]],
+    gzipped: bool = False,
+) -> bytes:
+    """``(uri, iso_date, body, http_headers)`` tuples -> a valid WARC byte
+    stream of ``response`` records (per-record gzip members when
+    ``gzipped``, like Common Crawl)."""
+    members: list[bytes] = []
+    for uri, date, body, http_headers in records:
+        hdr_lines = [b"HTTP/1.1 200 OK"]
+        for k, v in (http_headers or {}).items():
+            hdr_lines.append(f"{k}: {v}".encode("latin-1"))
+        http = _CRLF.join(hdr_lines) + _CRLF + _CRLF + body
+        warc_head = _CRLF.join(
+            [
+                b"WARC/1.0",
+                b"WARC-Type: response",
+                f"WARC-Target-URI: {uri}".encode(),
+                f"WARC-Date: {date}".encode(),
+                b"Content-Type: application/http; msgtype=response",
+                f"Content-Length: {len(http)}".encode(),
+            ]
+        )
+        members.append(warc_head + _CRLF + _CRLF + http + _CRLF + _CRLF)
+    return b"".join(gzip.compress(m) if gzipped else m for m in members)
+
+
+def _parse(data: bytes):
+    """The records of plain or gzipped WARC bytes, through the streaming
+    parser the ingest uses (gzip read member by member, never whole)."""
+    f = io.BytesIO(data)
+    if data[:2] == b"\x1f\x8b":
+        f = gzip.GzipFile(fileobj=f)
+    return warc.parse_warc_stream(f)
 
 
 class TestFraming:
@@ -18,46 +58,42 @@ class TestFraming:
             ("http://a.ex/2", DATE, b"\x00\xffbinary", {"Content-Type": "image/gif"}),
         ]
         for gz in (False, True):
-            data = warc.build_warc(recs, gzipped=gz)
-            got = list(warc.parse_warc(data))
+            data = build_warc(recs, gzipped=gz)
+            got = list(_parse(data))
             assert [r["uri"] for r in got] == ["http://a.ex/1", "http://a.ex/2"]
             bodies = [warc.http_response_parts(r["block"])[2] for r in got]
             assert bodies == [b"<html>one</html>", b"\x00\xffbinary"]
 
     def test_non_warc_raises(self):
         with pytest.raises(ValueError, match="not a WARC record"):
-            list(warc.parse_warc(b"HTTP/1.1 200 OK\r\n\r\n"))
+            list(_parse(b"HTTP/1.1 200 OK\r\n\r\n"))
 
     def test_truncated_record_fails_loudly(self):
         # A partial segment download must raise, not yield a silently short
         # final page body (or desync the header loop into the payload).
         recs = [("http://a.ex/1", DATE, b"X" * 100, {"Content-Type": "text/html"})]
-        data = warc.build_warc(recs)
+        data = build_warc(recs)
         with pytest.raises(ValueError, match="truncated WARC record"):
-            list(warc.parse_warc(data[:-60]))
+            list(_parse(data[:-60]))
         # same contract through the gzip path (truncate the DECOMPRESSED
         # stream semantics by rebuilding a gzip of the cut bytes)
-        import gzip as _gzip
-
         with pytest.raises(ValueError, match="truncated WARC record"):
-            list(warc.parse_warc(_gzip.compress(data[:-60])))
+            list(_parse(gzip.compress(data[:-60])))
 
     def test_gzip_never_decompressed_whole(self, monkeypatch):
         # Scale pin: a ~1 GB CC segment decompresses to ~4-5 GB — the parser
         # must stream per-member (GzipFile), never gzip.decompress the file.
-        import gzip as _gzip
-
         recs = [
             (f"http://a.ex/{i}", DATE, f"<html>{i}</html>".encode(), None)
             for i in range(5)
         ]
-        data = warc.build_warc(recs, gzipped=True)
+        data = build_warc(recs, gzipped=True)
 
         def _boom(*a, **k):  # pragma: no cover - failure path
             raise AssertionError("whole-file gzip.decompress called")
 
-        monkeypatch.setattr(_gzip, "decompress", _boom)
-        got = list(warc.parse_warc(data))
+        monkeypatch.setattr(gzip, "decompress", _boom)
+        got = list(_parse(data))
         assert [r["uri"] for r in got] == [f"http://a.ex/{i}" for i in range(5)]
 
     def test_parse_is_record_at_a_time(self):
@@ -66,8 +102,8 @@ class TestFraming:
         # O(record) peak-memory contract in iterator form.
         recs = [("http://a.ex/1", DATE, b"<html>1</html>", None),
                 ("http://a.ex/2", DATE, b"<html>2</html>", None)]
-        data = warc.build_warc(recs) + b"GARBAGE-NOT-A-RECORD\r\n\r\n"
-        it = warc.parse_warc(data)
+        data = build_warc(recs) + b"GARBAGE-NOT-A-RECORD\r\n\r\n"
+        it = _parse(data)
         assert next(it)["uri"] == "http://a.ex/1"
         assert next(it)["uri"] == "http://a.ex/2"
         with pytest.raises(ValueError, match="not a WARC record"):
@@ -80,8 +116,8 @@ class TestFraming:
             (f"http://a.ex/{i}", DATE, b"x" * (100 + i), {"Content-Type": "text/html"})
             for i in range(4)
         ]
-        plain = list(warc.parse_warc(warc.build_warc(recs)))
-        gzipped = list(warc.parse_warc(warc.build_warc(recs, gzipped=True)))
+        plain = list(_parse(build_warc(recs)))
+        gzipped = list(_parse(build_warc(recs, gzipped=True)))
         assert plain == gzipped
 
     def test_http_parts_headers_and_status(self):
@@ -105,7 +141,7 @@ class TestFraming:
 class TestReadWarcPages:
     def test_pages_shape_and_redirect_hops(self, spark, tmp_path):
         # two fetches of /r: a 302 hop then the 200 — n_redirects must be 1
-        raw = warc.build_warc(
+        raw = build_warc(
             [("http://a.ex/x", DATE, b"<html>x</html>",
               {"Content-Type": "text/html; charset=utf-8"})]
         )
@@ -117,7 +153,7 @@ class TestReadWarcPages:
         )
         http302 = b"HTTP/1.1 302 Found\r\nLocation: http://a.ex/r2\r\n\r\n"
         rec302 = hop + f"Content-Length: {len(http302)}".encode() + b"\r\n\r\n" + http302 + b"\r\n\r\n"
-        final = warc.build_warc(
+        final = build_warc(
             [("http://a.ex/r", "2024-01-01T00:00:02Z", b"<html>r</html>",
               {"Content-Type": "text/html"})]
         )
@@ -143,7 +179,7 @@ class TestReadWarcPages:
             (url, DATE, body, {"Content-Type": site.content_types.get(url, "text/html; charset=utf-8")})
             for url, body in sorted(site.pages.items())
         ]
-        (tmp_path / "site.warc.gz").write_bytes(warc.build_warc(recs, gzipped=True))
+        (tmp_path / "site.warc.gz").write_bytes(build_warc(recs, gzipped=True))
         pages_df = warc.read_warc_pages(spark, str(tmp_path))
         pages_path = str(tmp_path / "pages_pq")
         pages_df.write.parquet(pages_path)
@@ -180,8 +216,8 @@ class TestStreamingFromPaths:
              {"Content-Type": "text/html"})
             for i in range(n_gz)
         ]
-        (tmp_path / "a.warc").write_bytes(warc.build_warc(plain))
-        (tmp_path / "b.warc.gz").write_bytes(warc.build_warc(gz, gzipped=True))
+        (tmp_path / "a.warc").write_bytes(build_warc(plain))
+        (tmp_path / "b.warc.gz").write_bytes(build_warc(gz, gzipped=True))
         return {u for u, *_ in plain} | {u for u, *_ in gz}
 
     def test_paths_mode_equals_content_mode(self, spark, tmp_path):
@@ -209,7 +245,7 @@ class TestStreamingFromPaths:
             (f"http://m.ex/{i}", DATE, f"<html>{i}</html>".encode(), None)
             for i in range(n)
         ]
-        (tmp_path / "big.warc.gz").write_bytes(warc.build_warc(recs, gzipped=True))
+        (tmp_path / "big.warc.gz").write_bytes(build_warc(recs, gzipped=True))
         df = warc.read_warc_pages(spark, str(tmp_path))
         got = {r["url"] for r in df.collect()}
         assert got == {f"http://m.ex/{i}" for i in range(n)}
@@ -235,9 +271,9 @@ class TestStreamingFromPaths:
     def test_open_warc_stream_file_uri_and_gzip_magic(self, tmp_path):
         recs = [("http://u.ex/1", DATE, b"<html>u</html>", None)]
         f1 = tmp_path / "x.warc"
-        f1.write_bytes(warc.build_warc(recs))
+        f1.write_bytes(build_warc(recs))
         f2 = tmp_path / "y.warc.gz"
-        f2.write_bytes(warc.build_warc(recs, gzipped=True))
+        f2.write_bytes(build_warc(recs, gzipped=True))
         for p in (str(f1), f"file://{f1}", str(f2), f"file://{f2}"):
             fobj = warc.open_warc_stream(p)
             try:
@@ -259,7 +295,7 @@ class TestStreamingFromPaths:
              {"Content-Type": site.content_types.get(url, "text/html; charset=utf-8")})
             for url, body in sorted(site.pages.items())
         ]
-        (tmp_path / "site.warc.gz").write_bytes(warc.build_warc(recs, gzipped=True))
+        (tmp_path / "site.warc.gz").write_bytes(build_warc(recs, gzipped=True))
         pages_df = warc.read_warc_pages(spark, str(tmp_path))
         pages_path = str(tmp_path / "pages_pq")
         pages_df.write.parquet(pages_path)
