@@ -22,7 +22,6 @@ __all__ = [
     "Product",
     "partition",
     "parse_bool",
-    "parse_int_range",
     "parse_int_tuple",
     "parse_url_collection",
     "parse_fs_directory",
@@ -135,16 +134,6 @@ def parse_url_collection(s: str) -> list[str]:
     """URLCollection (flags.go:92-107): comma-separated raw URLs (parse
     validated, kept verbatim — the exclude filter compares exact strings)."""
     return [str(urlkit.parse_url(raw)) for raw in s.split(",")]
-
-
-def parse_int_range(s: str) -> tuple[int, int]:
-    parts = s.split(",")
-    if len(parts) != 2:
-        raise ValueError("IntRange needs 2 values")
-    a, b = (int(p.strip()) for p in parts)
-    if b < a:
-        raise ValueError("the second integer must be greater or equal than the first")
-    return a, b
 
 
 def parse_int_tuple(s: str) -> list[int]:

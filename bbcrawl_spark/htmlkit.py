@@ -10,8 +10,7 @@ helpers 1:1:
     element_by_id            libhtml.go:55-68   (first match in doc order)
     elements_by_attr_match   libhtml.go:70-74   (attr regex, doc order)
     elements_by_tag          libhtml.go:76-89
-    elements_by_tag_and_attrs libhtml.go:91-113
-    attr_val / has_attr      libhtml.go:46-53, 115-122  (first attr wins)
+    attr_val                 libhtml.go:46-53   (first attr wins)
     match_attrs              libhtml.go:124-142 (ALL (k,v) pairs present)
 
 This runs *inside Arrow-batched pandas UDFs* on executors — one Python call
@@ -31,9 +30,7 @@ __all__ = [
     "element_by_id",
     "elements_by_attr_match",
     "elements_by_tag",
-    "elements_by_tag_and_attrs",
     "attr_val",
-    "has_attr",
     "match_attrs",
     "decode_html",
 ]
@@ -145,10 +142,6 @@ def attr_val(node: Node, attribute: str) -> str:
     return ""
 
 
-def has_attr(node: Node, attribute: str) -> bool:
-    return any(k == attribute for k, _ in node.attrs)
-
-
 def element_by_id(n: Node, id_: str) -> Node | None:
     """First node in document order with id == id_ (libhtml.go:55-68);
     aborts the walk at the first match like the reference."""
@@ -188,22 +181,6 @@ def elements_by_tag(n: Node, *tags: str) -> list[Node]:
 
     def match(node: Node) -> bool:
         if node.type == ELEMENT and node.tag in tagset:
-            out.append(node)
-        return True
-
-    walk_tree(n, match, None)
-    return out
-
-
-def elements_by_tag_and_attrs(n: Node, tag: str, attrs: list[tuple[str, str]]) -> list[Node]:
-    """Tag match + every (k,v) pair present exactly (libhtml.go:91-113)."""
-    out: list[Node] = []
-
-    def match(node: Node) -> bool:
-        if node.type == ELEMENT and node.tag == tag:
-            for pair in attrs:
-                if pair not in node.attrs:
-                    return True
             out.append(node)
         return True
 

@@ -34,6 +34,7 @@ import re
 from dataclasses import dataclass, field
 
 from . import extract, urlkit
+from .htmlkit import decode_html
 from .operators.priority import priority_score_py
 from .operators.robots import robots_allowed_py
 
@@ -163,8 +164,6 @@ def crawl_oracle(
                 # fetched, url stays seen (the attempt happened)
                 continue
             n_fetched += 1
-            from .htmlkit import decode_html
-
             html = decode_html(
                 body, content_types.get(e.url, "text/html; charset=utf-8")
             )
@@ -172,14 +171,8 @@ def crawl_oracle(
             if not follow_links:
                 continue
             for link in extract.extract_links(html, e.url):
-                ne = FrontierEntry(
-                    url=link.abs_url,
-                    url_hash=urlkit.xxhash64(urlkit.canonicalize(link.abs_url)),
-                    host=urlkit.parse_url(link.abs_url).hostname().lower(),
-                    priority=priority_score_py(e.url, link.abs_url),
-                    page_num=link_page_num(link.abs_url),
-                    seed_id=e.seed_id,
-                    discovered_in=r,
+                ne = entry_for(
+                    link.abs_url, e.seed_id, priority_score_py(e.url, link.abs_url), r
                 )
                 if ne.url_hash not in res.seen:
                     new_entries.append(ne)

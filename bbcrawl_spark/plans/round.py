@@ -49,6 +49,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.udfs import (
+    CT_DEFAULT,
     header_filename_col,
     header_filename_field_col,
     header_filename_raw_field_col,
@@ -101,7 +102,7 @@ class CrawlConfig:
     headernames: bool = False  # vb -names-from-header
     # reference -redirect flag (crawlers.go:155-162): True -> redirect.Log
     # (error past 10 redirects), False -> redirect.Deny (error on any);
-    # consulted when the pages table carries an n_redirects column
+    # a pages table without an n_redirects column reads as 0 redirects
     allow_redirect: bool = True
     tags: tuple[str, ...] = ("audio", "img", "video")  # src -tags
     attrs: tuple[tuple[str, str], ...] = ()  # src -attrs pairs
@@ -176,14 +177,9 @@ def complete_headernames(downloads: DataFrame, pages: DataFrame) -> DataFrame:
     matched-but-bad field -> "malformed filename ..." (both surface as err
     rows like the reference's RenameError, with out_name='').
     """
-    if "content_disposition" in pages.columns:
-        hdrs = pages.select(
-            F.col("url").alias("abs_url"), F.col("content_disposition").alias("_cd")
-        )
-    else:  # pages table carries no headers: every completion fails loudly
-        hdrs = pages.select(
-            F.col("url").alias("abs_url"), F.lit(None).cast("string").alias("_cd")
-        )
+    hdrs = pages.select(
+        F.col("url").alias("abs_url"), F.col("content_disposition").alias("_cd")
+    )
     cols = downloads.columns
     joined = downloads.join(hdrs, "abs_url", "left")
     field = header_filename_field_col("_cd")
@@ -252,8 +248,24 @@ class CrawlDriver:
     @cached_property
     def _pages(self) -> DataFrame:
         """The pages table, read once per driver on first use (one schema-
-        inference job); a driver that runs no round never needs it."""
-        return self.spark.read.parquet(self.cfg.pages_path)
+        inference job); a driver that runs no round never needs it.
+
+        Its shape is decided here: ``url, html`` plus the optional columns,
+        each filled with a literal default when the table lacks it (no
+        headers: every header completion fails loudly). A literal folds in
+        the optimizer, so the redirect cap over a table without
+        ``n_redirects`` plans no Filter and its scan reads only ``url, html``.
+        """
+        pages = self.spark.read.parquet(self.cfg.pages_path)
+        defaults = {
+            "content_type": F.lit(CT_DEFAULT),
+            "n_redirects": F.lit(0),
+            "content_disposition": F.lit(None).cast("string"),
+        }
+        return pages.select("url", "html", *[
+            F.col(c) if c in pages.columns else v.alias(c)
+            for c, v in defaults.items()
+        ])
 
     # -- state access (always via round-log-pinned snapshots) -------------
     def _pinned(self, round_no: int, table: str) -> DataFrame:
@@ -344,21 +356,16 @@ class CrawlDriver:
             bloom_next = dedup.BloomSpec(bloom_dir, cfg.bloom_partitions)
 
         # --- fetch = join pages (J3) + extraction (H9/H10) ----------------
-        pages = self._pages
-        has_ct = "content_type" in pages.columns
-        has_rd = "n_redirects" in pages.columns
-        pcols = ["url", "html"]
-        pcols += ["content_type"] if has_ct else []
-        pcols += ["n_redirects"] if has_rd else []
-        joined = scheduled.join(pages.select(*pcols), "url", "inner")
-        if has_rd:
-            # P6 redirect policy (redirect.go:16-33): Deny errors on ANY
-            # redirect, Log past the cap of 10 — a failed GET means the page
-            # is NOT fetched (no text, no links, no downloads) but the url
-            # stays seen: the attempt happened.
-            joined = joined.filter(
-                F.col("n_redirects") <= (10 if cfg.allow_redirect else 0)
-            )
+        # content_disposition stays out of the persisted fetched frame: only
+        # the header completion reads it, from the pages table directly
+        pages = self._pages.select("url", "html", "content_type", "n_redirects")
+        # P6 redirect policy (redirect.go:16-33): Deny errors on ANY
+        # redirect, Log past the cap of 10 — a failed GET means the page is
+        # NOT fetched (no text, no links, no downloads) but the url stays
+        # seen: the attempt happened.
+        joined = scheduled.join(pages, "url", "inner").filter(
+            F.col("n_redirects") <= (10 if cfg.allow_redirect else 0)
+        )
         # Fused extraction: ONE ArrowEvalPython stage decodes + parses each
         # page once and emits struct(text, links, files); the text sink, the
         # frontier link growth and the crawler-family downloads are three
@@ -366,7 +373,6 @@ class CrawlDriver:
         # UDF = 2-3 decode+parse passes per page — the dominant 100-TB CPU
         # multiplier). html is dropped before the persist: nothing downstream
         # needs the raw blob once _ex is computed.
-        ct = F.col("content_type") if has_ct else F.lit("text/html; charset=utf-8")
         fused = make_extract_fused_udf(
             cfg.crawler,
             cfg.headernames,
@@ -375,7 +381,9 @@ class CrawlDriver:
             want_links=cfg.follow_links,
         )
         fetched = (
-            joined.withColumn("_ex", fused("html", "url", "page_num", ct))
+            joined.withColumn(
+                "_ex", fused("html", "url", "page_num", "content_type")
+            )
             .drop("html")
             .persist()
         )
@@ -393,15 +401,10 @@ class CrawlDriver:
                 F.col("seed_id"),
                 F.explode("_ex.links").alias("l"),
             ).select("page_url", "seed_id", F.col("l.abs_url").alias("url"))
-            entries = links.select(
-                "url",
-                url_hash_col("url").alias("url_hash"),
-                host_of("url").alias("host"),
+            entries = frontier_from_urls(links.select(
+                "url", "seed_id",
                 priority_score_col("page_url", "url").alias("priority"),
-                page_num_col("url").alias("page_num"),
-                F.col("seed_id"),
-                F.lit(r).cast("int").alias("discovered_in"),
-            )
+            ), r)
             # the one seen check a url gets: links not in seen ∪ scheduled
             # (with the Bloom its probe runs jobs here, materializing fetched)
             new_entries = dedup.dedup_against_seen(entries, seen_next, bloom_next).persist()
@@ -416,11 +419,13 @@ class CrawlDriver:
                 "page_num", F.explode("_ex.files").alias("f"),
             ).select("round", "page_url", "page_num", "f.*")
             if cfg.crawler == "vb-attachments" and cfg.headernames:
-                downloads = complete_headernames(downloads, pages)
+                downloads = complete_headernames(downloads, self._pages)
         elif cfg.crawler == "file":
-            # every frontier url IS the download (crawlers.go:191-212)
+            # every frontier url IS the download (crawlers.go:191-212),
+            # named from Go's decoded url.Path, where '+' stays literal
+            path = F.coalesce(F.parse_url(F.col("url"), F.lit("PATH")), F.lit(""))
             name = F.regexp_extract(
-                F.coalesce(F.parse_url(F.col("url"), F.lit("PATH")), F.lit("")),
+                F.try_url_decode(F.regexp_replace(path, r"\+", "%2B")),
                 r"/([^/]+)$", 1,
             )
             downloads = scheduled.select(

@@ -31,7 +31,6 @@ __all__ = [
     "url_for_pager",
     "smallest_substr_right",
     "file_name_from_url",
-    "base_url_only",
     "rel2abs",
     "parse_query",
     "query_encode",
@@ -217,16 +216,6 @@ def file_name_from_url(u: GoURL | str) -> str:
     if "/" in name:  # os.PathSeparator check; unreachable post-split on unix
         return ""
     return name
-
-
-def base_url_only(u: GoURL | str) -> str:
-    """Reference ``baseURLOnly`` (``libcrawl/util_url.go:23-28``):
-    ``scheme://hostname`` — port, path, query all dropped."""
-    if isinstance(u, str):
-        u = parse_url(u)
-    if not u.hostname():
-        raise ValueError("relative URLs are not supported!")
-    return f"{u.scheme}://{u.hostname()}"
 
 
 def rel2abs(page_url: GoURL | str, link: GoURL | str) -> str:

@@ -47,15 +47,6 @@ class TestFlagTypes:
             with pytest.raises(ValueError):
                 cmdline.parse_bool(s)
 
-    def test_int_range(self):
-        assert cmdline.parse_int_range("3,3") == (3, 3)
-        assert cmdline.parse_int_range("23,42") == (23, 42)
-        assert cmdline.parse_int_range("-1,2") == (-1, 2)
-        with pytest.raises(ValueError):
-            cmdline.parse_int_range("4,3")
-        with pytest.raises(ValueError):
-            cmdline.parse_int_range("4")
-
     def test_start_end_page(self):
         with pytest.raises(ValueError):
             cmdline.parse_start_page("0")
@@ -255,23 +246,6 @@ class TestFlagValueTables:
     def test_bool_rejects(self, s):
         with pytest.raises(ValueError, match="Invalid input for Boolean flag"):
             cmdline.parse_bool(s)
-
-    @pytest.mark.parametrize("s,want", [("1,2", (1, 2)), (" 3 , 3 ", (3, 3)), ("-2,0", (-2, 0))])
-    def test_int_range(self, s, want):
-        assert cmdline.parse_int_range(s) == want
-
-    @pytest.mark.parametrize(
-        "s,msg",
-        [
-            ("2,1", "greater or equal"),
-            ("1", "needs 2 values"),
-            ("1,2,3", "needs 2 values"),
-            ("a,b", "invalid literal"),
-        ],
-    )
-    def test_int_range_rejects(self, s, msg):
-        with pytest.raises(ValueError, match=msg):
-            cmdline.parse_int_range(s)
 
     def test_int_tuple(self):
         assert cmdline.parse_int_tuple("1, 2,3") == [1, 2, 3]

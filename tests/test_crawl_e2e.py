@@ -210,6 +210,88 @@ class TestCrawlEquivalence:
         drv.run()
         assert _order(drv) == want.crawl_order
 
+    def test_input_hint_columns_only(
+        self, spark, site, pages_path, tmp_path, want, monkeypatch
+    ):
+        """A pages table with only the ``input_hint`` columns crawls like the
+        full one: its optional columns take their defaults when it is read,
+        and the literal redirect count folds the redirect cap out of the
+        plan (the full table's plan keeps it)."""
+        hint = str(tmp_path / "hint.parquet")
+        spark.read.parquet(pages_path).select(
+            "url", "warc_ts", "html", "text", "lang"
+        ).write.parquet(hint)
+        plans = _fetch_plans(monkeypatch, spark)
+        drv = _driver(spark, site, hint, tmp_path / "whi")
+        drv.run()
+        assert _order(drv) == want.crawl_order
+        assert {r["url_hash"] for r in drv.seen_set().collect()} == want.seen
+        assert {r["url"]: r["text"] for r in drv.fetched_texts().collect()} == want.texts
+        assert plans and not any(_redirect_filter(p) for p in plans)
+        assert all("ReadSchema: struct<url:string,html:binary>" in p for p in plans)
+
+        plans.clear()
+        full = _driver(spark, site, pages_path, tmp_path / "whf")
+        full.bootstrap()
+        full.run_round(0)
+        assert plans and all(_redirect_filter(p) for p in plans)
+
+
+def _fetch_plans(monkeypatch, spark) -> list[str]:
+    """Collects the plan of every persisted frame that reads the pages
+    table (a round's ``fetched``): optimized logical plan, then physical."""
+    plans: list[str] = []
+    cls = type(spark.range(1))
+    persist = cls.persist
+
+    def recorded(df, *a, **kw):
+        qe = df._jdf.queryExecution()
+        plan = f"{qe.optimizedPlan()}\n{qe.executedPlan()}"
+        if "html" in plan:
+            plans.append(plan)
+        return persist(df, *a, **kw)
+
+    monkeypatch.setattr(cls, "persist", recorded)
+    return plans
+
+
+def _redirect_filter(plan: str) -> bool:
+    return any(
+        "Filter" in line and "n_redirects" in line for line in plan.splitlines()
+    )
+
+
+FILE_NAME_URLS = [
+    "http://h.ex/a/report.pdf", "http://h.ex/a/x%20y.pdf",
+    "http://h.ex/a/a%2Fb.jpg", "http://h.ex/a/f+g.zip",
+    "http://h.ex/a/f%2Bg.zip", "http://h.ex/a/%C3%A4.jpg",
+    "http://h.ex/a/", "http://h.ex/a/f.zip?x=1",
+]
+
+
+class TestFileCrawlerNames:
+    """Download names come from the decoded url.Path ('+' literal), as in
+    ``extract.file_crawler_name``."""
+
+    @pytest.fixture(scope="class")
+    def names(self, spark, site, pages_path, tmp_path_factory):
+        drv = _driver(
+            spark, site, pages_path, tmp_path_factory.mktemp("whn"),
+            crawler="file", follow_links=False, budget=len(FILE_NAME_URLS),
+            robots={}, seeds=[(u, i, 0, 3) for i, u in enumerate(FILE_NAME_URLS)],
+        )
+        drv.run()
+        return {r["page_url"]: r["out_name"] for r in drv.downloads().collect()}
+
+    def test_every_url_downloaded(self, names):
+        assert sorted(names) == sorted(FILE_NAME_URLS)
+
+    @pytest.mark.parametrize("url", FILE_NAME_URLS)
+    def test_name_matches_twin(self, names, url):
+        from bbcrawl_spark import extract
+
+        assert names[url] == extract.file_crawler_name(url, 3)
+
 
 class TestCrawlerFamilies:
     def test_vb_downloads_table(self, spark, site, pages_path, tmp_path, want):

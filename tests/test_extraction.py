@@ -362,6 +362,12 @@ class TestFileCrawlerNameTable:
         [
             ("http://h/a/f.zip", 3, None, "3 - f.zip"),
             ("http://h/a/x%20y.pdf", 1, None, "1 - x y.pdf"),
+            # Go decodes url.Path before taking its last segment; '+' stays
+            ("http://h/a/a%2Fb.jpg", 1, None, "1 - b.jpg"),
+            ("http://h/a/f+g.zip", 1, None, "1 - f+g.zip"),
+            ("http://h/a/f%2Bg.zip", 1, None, "1 - f+g.zip"),
+            ("http://h/a/%C3%A4.jpg", 1, None, "1 - \u00e4.jpg"),
+            ("http://h/a/f.zip?x=1", 1, None, "1 - f.zip"),
             ("http://h/a/", 3, 7, "7.download"),
             ("http://h/a/", 3, None, ""),
         ],

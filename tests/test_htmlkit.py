@@ -48,9 +48,7 @@ class TestTreeShape:
     def test_valueless_attribute(self):
         doc = htmlkit.parse_html("<input disabled>")
         (inp,) = htmlkit.elements_by_tag(doc, "input")
-        assert htmlkit.has_attr(inp, "disabled")
         assert htmlkit.attr_val(inp, "disabled") == ""
-        assert not htmlkit.has_attr(inp, "value")
 
 
 class TestWalkTree:
@@ -108,16 +106,6 @@ class TestSelectors:
         doc = htmlkit.parse_html(self.HTML)
         got = htmlkit.elements_by_attr_match(doc, "class", re.compile("^b$"))
         assert [htmlkit.attr_val(n, "id") for n in got] == ["y"]
-
-    def test_tag_and_attrs_require_exact_pairs(self):
-        doc = htmlkit.parse_html(self.HTML)
-        got = htmlkit.elements_by_tag_and_attrs(doc, "span", [("class", "b")])
-        assert [htmlkit.attr_val(n, "id") for n in got] == ["y"]
-        assert htmlkit.elements_by_tag_and_attrs(doc, "span", [("class", "b"), ("id", "x")]) == []
-
-    def test_tag_and_no_attrs_matches_every_tag(self):
-        doc = htmlkit.parse_html(self.HTML)
-        assert len(htmlkit.elements_by_tag_and_attrs(doc, "span", [])) == 2
 
 
 class TestDecodeHtml:

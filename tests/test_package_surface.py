@@ -1,6 +1,7 @@
-"""Package-surface guard: every module under ``bbcrawl_spark`` must be
+"""Package-surface guards: every module under ``bbcrawl_spark`` must be
 reachable, through static imports, from the crawl loop, its CLI or its
-inputs. A module nothing on those paths imports is dead weight in the
+inputs, and every public function or class must be named by code outside
+the tests. A module or helper only tests reach is dead weight in the
 ``--py-files`` zip; delete it instead of keeping it "for later"."""
 
 from __future__ import annotations
@@ -9,6 +10,8 @@ import ast
 import importlib.util
 import pkgutil
 from pathlib import Path
+
+import pytest
 
 import bbcrawl_spark
 
@@ -19,7 +22,6 @@ ROOTS = (
     "plans.round",
     "__main__",
     "oracle",
-    "sources.warc",
     "sources.boardsite",
     "plans.session",
 )
@@ -79,6 +81,84 @@ def test_every_module_reachable_from_roots():
     assert not unreachable, (
         f"modules not imported by the crawl loop, CLI or inputs: {unreachable}"
     )
+
+
+#: pure-Python references the tests compare the engine's Spark twins against
+REFERENCE_TWINS = {
+    "extract_vb_attachments", "extract_srcs", "complete_headername",
+    "file_crawler_name",
+}
+
+
+def _public_definitions(mods: dict[str, Path]) -> list[tuple[str, str]]:
+    """(module, name) of each public top-level function and class."""
+    return [
+        (mod, node.name)
+        for mod, path in mods.items()
+        for node in ast.parse(path.read_text(), str(path)).body
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef))
+        and not node.name.startswith("_")
+    ]
+
+
+def _names(paths) -> set[str]:
+    """Every AST ``Name`` id and ``Attribute`` attr in ``paths``."""
+    named: set[str] = set()
+    for path in paths:
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            if isinstance(node, ast.Name):
+                named.add(node.id)
+            elif isinstance(node, ast.Attribute):
+                named.add(node.attr)
+    return named
+
+
+def _unnamed(mods: dict[str, Path], users) -> list[str]:
+    """Public definitions of ``mods`` that neither ``mods`` nor ``users``
+    name, bar the reference twins."""
+    named = _names([*mods.values(), *users])
+    return sorted(
+        f"{mod}.{n}" for mod, n in _public_definitions(mods)
+        if n not in named and n not in REFERENCE_TWINS
+    )
+
+
+def test_every_public_definition_named_outside_tests():
+    """Each public top-level function and class of the package is named (an
+    AST ``Name`` or ``Attribute``) in the package, ``__spark_entry__.py``,
+    ``scripts/`` or ``crawlbench/``."""
+    repo = Path(bbcrawl_spark.__file__).parent.parent
+    users = [
+        repo / "__spark_entry__.py",
+        *(repo / "scripts").rglob("*.py"), *(repo / "crawlbench").rglob("*.py"),
+    ]
+    unnamed = _unnamed(_modules(), users)
+    assert not unnamed, f"public definitions only tests name: {unnamed}"
+
+
+def test_unnamed_guard_flags_a_test_only_helper(tmp_path):
+    """The guard sees through a helper that only its own module defines,
+    and counts a call, an attribute access or a reference twin as a use."""
+    lib = tmp_path / "lib.py"
+    lib.write_text(
+        "def used(): pass\n"
+        "def via_attr(): pass\n"
+        "def orphan(): pass\n"
+        "def _private(): pass\n"
+        "def file_crawler_name(): pass\n"
+        "class Orphaned: pass\n"
+    )
+    user = tmp_path / "user.py"
+    user.write_text("import lib\nused()\nlib.via_attr()\n")
+    assert _unnamed({"lib": lib}, [user]) == ["lib.Orphaned", "lib.orphan"]
+
+
+@pytest.mark.parametrize("twin", sorted(REFERENCE_TWINS))
+def test_reference_twin_is_compared_by_a_test(twin):
+    """An allow-listed twin is a package definition that some test still
+    names; one no test compares against is a test-only helper to delete."""
+    assert twin in {n for _, n in _public_definitions(_modules())}
+    assert twin in _names(Path(__file__).parent.glob("test_*.py"))
 
 
 def test_crawl_config_fields_pinned():
@@ -161,17 +241,6 @@ def test_round_uses_only_public_dedup_names():
         and node.attr.startswith("_")
     )
     assert not private, private
-
-
-def test_warc_reader_parameters_pinned():
-    """The WARC reader has one ingest path: a new mode must show up here."""
-    from inspect import signature
-
-    from bbcrawl_spark.sources import warc
-
-    assert list(signature(warc.read_warc_pages).parameters) == [
-        "spark", "path", "opener",
-    ]
 
 
 def test_extraction_udf_surface_pinned():

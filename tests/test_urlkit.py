@@ -78,9 +78,6 @@ class TestQueryEncode:
 
 
 class TestBaseURL:
-    def test_base_url_only(self):
-        assert urlkit.base_url_only("https://ex.com:444/p?q=1") == "https://ex.com"
-
     def test_url_for_pager_rejects(self):
         with pytest.raises(ValueError):
             urlkit.url_for_pager("ftp://h/x")
@@ -516,24 +513,6 @@ class TestUrlForPager:
         with pytest.raises(ValueError) as exc:
             urlkit.url_for_pager(addr)
         assert str(exc.value) == f'"{addr}" {msg}'
-
-
-class TestBaseURLTable:
-    @pytest.mark.parametrize(
-        "url,want",
-        [
-            ("http://h:8080/a/b?q", "http://h"),
-            ("https://user@h/x", "https://h"),
-            ("http://[::1]:9/x", "http://::1"),  # Hostname() drops the brackets
-            ("HTTP://H/x", "http://H"),  # only the scheme is lowercased
-        ],
-    )
-    def test_base(self, url, want):
-        assert urlkit.base_url_only(url) == want
-
-    def test_relative_rejected(self):
-        with pytest.raises(ValueError, match="relative URLs are not supported"):
-            urlkit.base_url_only("/x")
 
 
 class TestRel2AbsQuirks:
